@@ -1,9 +1,5 @@
 package graft.encode
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.time.ZoneOffset
-import java.time.format.DateTimeFormatter
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -13,66 +9,40 @@ import org.apache.spark.sql.types._
   * (opaque bytes gain nothing from Catalyst columns).
   */
 trait ExampleEncoder extends Serializable {
-  def encode(schema: StructType, row: Row): Array[Byte]
+  /** The writer for `schema`, compiled once — field order, serialized
+    * keys and one value writer per column type are fixed here — and
+    * reused for every row of a partition (one writer per thread).
+    * Duplicate column names fail here; a column type with no
+    * tf.train.Feature representation fails on its first non-NULL
+    * value. */
+  def compile(schema: StructType): Row => Array[Byte]
+
+  /** One row, through a writer compiled for this call alone. */
+  final def encode(schema: StructType, row: Row): Array[Byte] = compile(schema)(row)
+}
+
+object ExampleEncoder {
+  /** Two columns of one name would serialize as one feature key (the
+    * last silently winning); Feast refuses such collisions too. */
+  def requireDistinctNames(schema: StructType): Unit = {
+    val dups = schema.fieldNames.groupBy(identity).collect {
+      case (name, occurrences) if occurrences.length > 1 => name
+    }.toSeq.sorted
+    require(dups.isEmpty,
+      s"duplicate column names ${dups.mkString("'", "', '", "'")}: each would be " +
+        "ONE tf.train.Feature key; rename or drop the duplicates before encoding " +
+        "(a feature named like an entity column needs fullFeatureNames = true)")
+  }
 }
 
 /** Row → serialized `tf.train.Example`, with the reference's type
   * mapping (`converters.py:50-53` via tfx `row_to_example`; table in
-  * SURVEY.md §1.2):
-  *
-  *   - integer/boolean       → int64_list (bool as 0/1)
-  *   - float/double          → float_list (lossy float32, like the reference)
-  *   - string                → bytes_list (UTF-8)
-  *   - binary                → bytes_list
-  *   - timestamp             → bytes_list of ISO-8601 UTC (documented choice)
-  *   - date                  → bytes_list of yyyy-MM-dd
-  *   - array<primitive>      → flattened into the same Feature's value list
-  *   - NULL                  → feature present but empty (key kept)
-  *   - struct/map/decimal…   → rejected (unsupported in the reference path too)
+  * SURVEY.md §1.2 and at [[ValueWriter]]): array<primitive> columns
+  * flatten into their Feature's value list, NULL → feature present but
+  * empty (key kept), NULL array elements drop, keys sort by name.
   */
 object TfExampleEncoder extends ExampleEncoder {
-  import TfExample._
-
-  private val TsFmt =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").withZone(ZoneOffset.UTC)
-
-  def encode(schema: StructType, row: Row): Array[Byte] = {
-    val features = schema.fields.zipWithIndex.map { case (field, i) =>
-      val value: FeatureValue =
-        if (row.isNullAt(i)) Empty
-        else field.dataType match {
-          case ArrayType(elem, _) =>
-            encodeSeq(elem, row.getSeq[Any](i).filter(_ != null), field.name)
-          case dt => encodeSeq(dt, Seq(row.get(i)), field.name)
-        }
-      field.name -> value
-    }.toMap
-    TfExample.encode(features)
-  }
-
-  private[encode] def encodeSeq(dt: DataType, vs: Seq[Any], name: String): FeatureValue = dt match {
-    case LongType    => Int64s(vs.map(_.asInstanceOf[Long]))
-    case IntegerType => Int64s(vs.map(_.asInstanceOf[Int].toLong))
-    case ShortType   => Int64s(vs.map(_.asInstanceOf[Short].toLong))
-    case ByteType    => Int64s(vs.map(_.asInstanceOf[Byte].toLong))
-    case BooleanType => Int64s(vs.map(v => if (v.asInstanceOf[Boolean]) 1L else 0L))
-    case DoubleType  => Floats(vs.map(_.asInstanceOf[Double].toFloat))
-    case FloatType   => Floats(vs.map(_.asInstanceOf[Float]))
-    case StringType  => Bytes(vs.map(_.asInstanceOf[String].getBytes(UTF_8)))
-    case BinaryType  => Bytes(vs.map(_.asInstanceOf[Array[Byte]]))
-    case TimestampType =>
-      Bytes(vs.map(v => TsFmt.format(v.asInstanceOf[java.sql.Timestamp].toInstant).getBytes(UTF_8)))
-    case TimestampNTZType => // wall-clock without zone: rendered as-if UTC
-      Bytes(vs.map(v =>
-        TsFmt.format(v.asInstanceOf[java.time.LocalDateTime].toInstant(ZoneOffset.UTC)).getBytes(UTF_8)))
-    case DateType =>
-      Bytes(vs.map(v => v.asInstanceOf[java.sql.Date].toString.getBytes(UTF_8)))
-    case other =>
-      throw new IllegalArgumentException(
-        s"column '$name': type $other is not representable as tf.train.Feature " +
-          "(supported: int/long/bool -> int64_list, float/double -> float_list, " +
-          "string/binary/timestamp/date -> bytes_list, plus arrays thereof)")
-  }
+  def compile(schema: StructType): Row => Array[Byte] = new ExampleWriter(schema).write
 }
 
 /** Row → serialized `tf.train.SequenceExample`. The reference declares
@@ -88,37 +58,5 @@ object TfExampleEncoder extends ExampleEncoder {
   *   - NULL                         → empty context feature / empty list
   */
 object TfSequenceExampleEncoder extends ExampleEncoder {
-  import TfExample._
-
-  def encode(schema: StructType, row: Row): Array[Byte] = {
-    var context = Map.empty[String, FeatureValue]
-    var lists = Map.empty[String, Seq[FeatureValue]]
-    schema.fields.zipWithIndex.foreach { case (field, i) =>
-      field.dataType match {
-        case ArrayType(ArrayType(inner, _), _) =>
-          val steps =
-            if (row.isNullAt(i)) Seq.empty[FeatureValue]
-            else row.getSeq[Seq[Any]](i).map { innerVals =>
-              if (innerVals == null) Empty
-              else TfExampleEncoder.encodeSeq(
-                inner, innerVals.filter(_ != null), field.name)
-            }
-          lists += field.name -> steps
-        case ArrayType(elem, _) =>
-          val steps =
-            if (row.isNullAt(i)) Seq.empty[FeatureValue]
-            else row.getSeq[Any](i).map { v =>
-              if (v == null) Empty
-              else TfExampleEncoder.encodeSeq(elem, Seq(v), field.name)
-            }
-          lists += field.name -> steps
-        case dt =>
-          val value: FeatureValue =
-            if (row.isNullAt(i)) Empty
-            else TfExampleEncoder.encodeSeq(dt, Seq(row.get(i)), field.name)
-          context += field.name -> value
-      }
-    }
-    TfExample.encodeSequence(context, lists)
-  }
+  def compile(schema: StructType): Row => Array[Byte] = new SequenceExampleWriter(schema).write
 }

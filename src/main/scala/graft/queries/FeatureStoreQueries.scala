@@ -474,8 +474,9 @@ object FeatureStoreQueries {
           StructField("odate_iso", StringType)))
         val enc = org.apache.spark.sql.Encoders.row(out)
         src.mapPartitions { rows =>
+          val write = TfExampleEncoder.compile(schema)
           rows.map { r =>
-            val decoded = TfExample.decode(TfExampleEncoder.encode(schema, r))
+            val decoded = TfExample.decode(write(r))
             val TfExample.Int64s(Seq(k)) = decoded("o_orderkey")
             val TfExample.Floats(Seq(p)) = decoded("o_totalprice")
             val TfExample.Bytes(Seq(st)) = decoded("o_orderstatus")

@@ -1761,8 +1761,9 @@ object PipelineQueries {
           StructField("last_v", FloatType)))
         val enc = org.apache.spark.sql.Encoders.row(out)
         src.mapPartitions { rows =>
+          val write = TfSequenceExampleEncoder.compile(schema)
           rows.map { r =>
-            val bytes = TfSequenceExampleEncoder.encode(schema, r)
+            val bytes = write(r)
             val (ctx, lists) = TfExample.decodeSequence(bytes)
             val TfExample.Int64s(Seq(id)) = ctx("vec_id")
             val steps = lists("embedding")

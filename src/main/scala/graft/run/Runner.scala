@@ -81,13 +81,24 @@ object Runner {
 
   /** Register every parquet table in `dataDir` as a temp view so the
     * entity SQL can reference them by name (the reference sends its SQL
-    * to BigQuery's catalog; ours is the session catalog). */
-  def registerTables(spark: SparkSession, dataDir: String): Unit =
-    graft.sources.ParquetTables.registerAll(spark, dataDir)
+    * to BigQuery's catalog; ours is the session catalog). Returns the
+    * registered (name, frame) pairs. */
+  def registerTables(spark: SparkSession, dataDir: String): Seq[(String, DataFrame)] =
+    graft.sources.ParquetTables.registerFrames(spark, dataDir)
 
   /** Resolve feature refs against the registry into concrete
     * [[ResolvedView]]s, grouped per view in ref order. */
-  def resolveViews(spark: SparkSession, job: JobConfig): Seq[ResolvedView] = {
+  def resolveViews(spark: SparkSession, job: JobConfig): Seq[ResolvedView] =
+    resolveViews(spark, job, Map.empty)
+
+  /** [[resolveViews]] over already-loaded frames (source path → frame):
+    * each source path is loaded at most once, so views sharing a source
+    * share one frame (one footer read, one schema-inference job). */
+  private def resolveViews(
+      spark: SparkSession,
+      job: JobConfig,
+      loaded: Map[String, DataFrame]): Seq[ResolvedView] = {
+    val frames = collection.mutable.Map(loaded.toSeq: _*)
     val refs = job.registry.resolve(job.features)
     val byView = refs.groupBy(_.view)
     refs.map(_.view).distinct.map { viewName =>
@@ -95,7 +106,8 @@ object Runner {
       val wanted = byView(viewName).map(_.feature)
       val sourcePath =
         if (v.source.startsWith("/")) v.source else s"${job.dataDir}/${v.source}"
-      val raw = graft.sources.ParquetTables.load(spark, sourcePath)
+      val raw = frames.getOrElseUpdate(sourcePath,
+        graft.sources.ParquetTables.load(spark, sourcePath))
       // Dimension/static feature tables carry no event time (FIXTURES.md
       // customer_features): synthesize a constant epoch timestamp so the
       // as-of predicate always admits them.
@@ -118,9 +130,10 @@ object Runner {
   /** The retrieval half: entity SQL → PIT join. Returns the joined
     * DataFrame (entity columns + requested features). */
   def retrieve(spark: SparkSession, job: JobConfig, entitySql: String): DataFrame = {
-    registerTables(spark, job.dataDir)
+    val tables = registerTables(spark, job.dataDir)
     val entity = spark.sql(substitute(entitySql, job.rangeParams))
-    val views = resolveViews(spark, job)
+    val views = resolveViews(spark, job,
+      tables.map { case (name, df) => s"${job.dataDir}/$name.parquet" -> df }.toMap)
     // A job with NO feature refs is a pure CORPUS-PREP job: the entity
     // SQL is the corpus, the transform chain (clean → gates →
     // tokenize_against → pack_sequences) is the work, and the output
@@ -352,9 +365,12 @@ object Runner {
       case None => flattenMaps(structFlat)
     }
     val schema = flat.schema
+    ExampleEncoder.requireDistinctNames(schema) // fails before any task runs
     val enc = format.encoder
-    flat.mapPartitions(rows => rows.map(enc.encode(schema, _)))(
-      org.apache.spark.sql.Encoders.BINARY)
+    flat.mapPartitions { rows =>
+      val write = enc.compile(schema)
+      rows.map(write)
+    }(org.apache.spark.sql.Encoders.BINARY)
   }
 
   /** Deterministic output-split partition (X2): bucket by xxhash64 of

@@ -66,11 +66,18 @@ object ParquetTables {
     }
   }
 
-  /** Register every `<dir>/<name>.parquet` as temp view `<name>`. */
-  def registerAll(spark: SparkSession, dir: String): Seq[String] = {
-    val names = Option(new java.io.File(dir).list()).getOrElse(Array.empty)
+  /** Register every `<dir>/<name>.parquet` as temp view `<name>`;
+    * returns the (name, frame) pairs in name order. */
+  def registerFrames(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
+    Option(new java.io.File(dir).list()).getOrElse(Array.empty)
       .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).toSeq.sorted
-    names.foreach(t => load(spark, s"$dir/$t.parquet").createOrReplaceTempView(t))
-    names
-  }
+      .map { t =>
+        val df = load(spark, s"$dir/$t.parquet")
+        df.createOrReplaceTempView(t)
+        t -> df
+      }
+
+  /** Register every `<dir>/<name>.parquet` as temp view `<name>`. */
+  def registerAll(spark: SparkSession, dir: String): Seq[String] =
+    registerFrames(spark, dir).map(_._1)
 }

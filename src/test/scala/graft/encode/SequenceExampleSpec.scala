@@ -50,4 +50,25 @@ class SequenceExampleSpec extends AnyFunSuite {
     assert(ls("vals") == Seq(Int64s(Seq(1L)), Empty, Int64s(Seq(3L))))
     assert(ls("gone") == Seq.empty)
   }
+
+  test("row encoder bytes are pinned for the rows above") {
+    def hex(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02x").mkString
+    val nested = StructType(Seq(
+      StructField("uid", LongType),
+      StructField("name", StringType),
+      StructField("scores", ArrayType(DoubleType)),
+      StructField("token_ids", ArrayType(ArrayType(IntegerType)))))
+    assert(hex(TfSequenceExampleEncoder.encode(nested,
+      Row(7L, "doc", Seq(0.5, 1.5), Seq(Seq(1, 2), Seq(3))))) ==
+      "0a1f0a0f0a046e616d6512070a050a03646f630a0c0a0375696412051a030a0107123e0a1e0a06" +
+        "73636f72657312140a0812060a040000003f0a0812060a040000c03f0a1c0a09746f6b656e5f" +
+        "696473120f0a061a040a0201020a051a030a0103")
+    val nulls = StructType(Seq(
+      StructField("uid", LongType),
+      StructField("vals", ArrayType(LongType)),
+      StructField("gone", ArrayType(StringType))))
+    assert(hex(TfSequenceExampleEncoder.encode(nulls, Row(null, Seq(1L, null, 3L), null))) ==
+      "0a090a070a03756964120012240a080a04676f6e6512000a180a0476616c7312100a051a030a01" +
+        "010a000a051a030a0103")
+  }
 }
