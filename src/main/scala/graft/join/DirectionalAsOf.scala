@@ -27,16 +27,17 @@ import org.apache.spark.sql.functions._
   *     no window sort. Spine ids are unique so the shuffle cannot skew.
   *   - Unmatched spine rows come back NULL via a left stitch join on
   *     the unique row id (never by re-joining the raw entity).
+  *   - The plan is the backward join's ([[PointInTimeJoin.asOf]]) with
+  *     the window on the other side and `min` for `max`.
   */
 /** One member of a multi-view directional as-of join
-  * ([[DirectionalAsOf.forwardMulti]] /
-  * [[DirectionalAsOf.forwardMultiFused]] and the nearest twins): a
-  * view's source, timestamp, keys, projected features, its OWN
+  * ([[DirectionalAsOf.forwardMulti]] / [[DirectionalAsOf.nearestMulti]]):
+  * a view's source, timestamp, keys, projected features, its OWN
   * horizon/tolerance, and an optional row predicate. As with
   * [[ResolvedView]], keeping the predicate SEPARATE from a
-  * pre-filtered source is what lets the fused path recognize views
-  * that differ only by predicate as one source and share a single
-  * scan. `outputPrefix` disambiguates feature columns across views
+  * pre-filtered source is what lets views that differ only by
+  * predicate be recognized as one source and share a single scan.
+  * `outputPrefix` disambiguates feature columns across views
   * (`p__name`). */
 final case class DirectionalView(
     name: String,
@@ -51,10 +52,7 @@ final case class DirectionalView(
 }
 
 object DirectionalAsOf {
-
-  private val RowId = "__graft_asof_row_id"
-  private val Vts = "__graft_asof_view_ts"
-  private val Packed = "__graft_asof_packed"
+  import PointInTimeJoin.{Direction, Forward, Nearest}
 
   /** For each entity row, the EARLIEST view row with
     * `viewTs in [entityTs, entityTs + horizonSeconds]` (both inclusive).
@@ -73,8 +71,8 @@ object DirectionalAsOf {
       horizonSeconds: Long,
       rowIdCol: String,
       keepViewTs: Boolean = false): DataFrame =
-    directional(entity, entityTs, view, viewTs, joinKeys, features,
-      horizonSeconds, rowIdCol, keepViewTs, nearestMode = false)
+    single(entity, entityTs, view, viewTs, joinKeys, features,
+      horizonSeconds, rowIdCol, keepViewTs, Forward)
 
   /** For each entity row, the view row with the smallest
     * `|viewTs - entityTs|`, admitted only within `toleranceSeconds`
@@ -89,10 +87,27 @@ object DirectionalAsOf {
       toleranceSeconds: Long,
       rowIdCol: String,
       keepViewTs: Boolean = false): DataFrame =
-    directional(entity, entityTs, view, viewTs, joinKeys, features,
-      toleranceSeconds, rowIdCol, keepViewTs, nearestMode = true)
+    single(entity, entityTs, view, viewTs, joinKeys, features,
+      toleranceSeconds, rowIdCol, keepViewTs, Nearest)
 
-  private def directional(
+  /** Multi-view FORWARD as-of join: per view, exactly the single-view
+    * operator's semantics (own horizon, predicate, ties on (viewTs,
+    * features…)), features emitted under [[DirectionalView.outName]].
+    * Views sharing a source run one candidate join over one scan
+    * (the multi-label shape: N label views over one event table). */
+  def forwardMulti(
+      entity: DataFrame, entityTs: String,
+      views: Seq[DirectionalView], rowIdCol: String): DataFrame =
+    multi(entity, entityTs, views, rowIdCol, Forward)
+
+  /** Multi-view NEAREST as-of join ([[nearest]] per view;
+    * `windowSeconds` is each view's tolerance). */
+  def nearestMulti(
+      entity: DataFrame, entityTs: String,
+      views: Seq[DirectionalView], rowIdCol: String): DataFrame =
+    multi(entity, entityTs, views, rowIdCol, Nearest)
+
+  private def single(
       entity: DataFrame, entityTs: String,
       view: DataFrame, viewTs: String,
       joinKeys: Seq[(String, String)],
@@ -100,224 +115,33 @@ object DirectionalAsOf {
       windowSeconds: Long,
       rowIdCol: String,
       keepViewTs: Boolean,
-      nearestMode: Boolean): DataFrame = {
+      dir: Direction): DataFrame = {
     require(joinKeys.nonEmpty, "directional as-of needs equi-join keys")
     require(windowSeconds > 0, "horizon/tolerance must be positive")
-
-    // Widen the probe side: if the planner broadcasts the (pruned) view,
-    // probe parallelism is inherited from the entity scan's input splits.
-    val spine = graft.ops.OpsUtil.widen(entity).withColumn(RowId, col(rowIdCol))
-
-    // Bounded-scan pruning — one 2-value driver aggregate, pushed into
-    // the view's parquet row-group filters by Catalyst.
-    val bounds = spine.agg(min(col(entityTs)), max(col(entityTs))).head()
-    if (bounds.isNullAt(0))
-      return spine.drop(RowId) // empty spine: nothing to stitch
-
-    val horizon = expr(s"INTERVAL $windowSeconds SECONDS")
-    val (lo, hi) =
-      if (nearestMode) (lit(bounds.get(0)).cast("timestamp") - horizon,
-        lit(bounds.get(1)).cast("timestamp") + horizon)
-      else (lit(bounds.get(0)).cast("timestamp"),
-        lit(bounds.get(1)).cast("timestamp") + horizon)
-    val pruned = view
-      .filter(col(viewTs) >= lo && col(viewTs) <= hi)
-      .select(((viewTs +: joinKeys.map(_._2)) ++ features).distinct.map(col): _*)
-      .withColumnRenamed(viewTs, Vts)
-
-    val left = spine.select(
-      (Seq(RowId, entityTs) ++ joinKeys.map(_._1)).distinct.map(col): _*)
-    val keyCond = joinKeys.map { case (e, v) => left(e) === pruned(v) }.reduce(_ && _)
-    val rangeCond =
-      if (nearestMode)
-        pruned(Vts) >= left(entityTs) - horizon && pruned(Vts) <= left(entityTs) + horizon
-      else
-        pruned(Vts) >= left(entityTs) && pruned(Vts) <= left(entityTs) + horizon
-
-    val candidates = left.join(pruned, keyCond && rangeCond, "inner")
-
-    // Reduction key: (|Δt|,) viewTs, features… — lexicographic struct
-    // min == the documented pick order, with map-side partial agg.
-    val orderFields: Seq[Column] =
-      (if (nearestMode)
-        Seq(abs(unix_micros(col(Vts)) - unix_micros(col(entityTs))).as("__graft_diff"))
-      else Nil) ++ (col(Vts) +: features.map(col))
-    val reduced = candidates
-      .groupBy(RowId)
-      .agg(min(struct(orderFields: _*)).as(Packed))
-    val keep =
-      (if (keepViewTs) Seq(col(Packed)(Vts).as(viewTs)) else Nil) ++
-        features.map(f => col(Packed)(f).as(f))
-
-    spine
-      .join(reduced.select(col(RowId) +: keep: _*), Seq(RowId), "left")
-      .drop(RowId)
+    PointInTimeJoin.asOf(spine(entity, rowIdCol), entityTs,
+      Seq(ResolvedView("view", view, joinKeys, viewTs, features = features,
+        ttlSeconds = Some(windowSeconds))),
+      dir, if (keepViewTs) Some(viewTs) else None)
   }
 
-  /** Multi-view FORWARD as-of join, unfused reference: one
-    * [[forward]] per view, features emitted under each view's
-    * [[DirectionalView.outName]]. Semantics per view are exactly the
-    * single-view operator's (per-view horizon, predicate as a source
-    * pre-filter, ties on (viewTs, features…)); N views never multiply
-    * each other's fan-out (every view reduces to one row per spine id
-    * independently, the PIT stitch argument). */
-  def forwardMulti(
-      entity: DataFrame, entityTs: String,
-      views: Seq[DirectionalView], rowIdCol: String): DataFrame =
-    multiFold(entity, entityTs, views, rowIdCol, nearestMode = false)
-
-  /** Multi-view NEAREST as-of join, unfused reference ([[nearest]]
-    * per view; `windowSeconds` is each view's tolerance). */
-  def nearestMulti(
-      entity: DataFrame, entityTs: String,
-      views: Seq[DirectionalView], rowIdCol: String): DataFrame =
-    multiFold(entity, entityTs, views, rowIdCol, nearestMode = true)
-
-  /** FUSED multi-view forward join — IDENTICAL output to
-    * [[forwardMulti]], collapsed physical shape (the
-    * [[PointInTimeJoin.joinFused]] fusions applied to the forward
-    * direction): views sharing a (canonicalized source, joinKeys,
-    * tsCol) identity run ONE candidate join over one scan under the
-    * group's WIDEST horizon, each view's own horizon + predicate
-    * gating its ordered struct inside a `min(when(...))` aggregate —
-    * candidate scan+join O(distinct sources), aggregations and stitch
-    * joins O(groups), never O(views). The multi-label shape ("what
-    * did the user do next, per label definition" over one event
-    * table) is exactly the regime where this pays: N label views = N
-    * scans unfused, 1 fused. */
-  def forwardMultiFused(
-      entity: DataFrame, entityTs: String,
-      views: Seq[DirectionalView], rowIdCol: String): DataFrame =
-    multiFused(entity, entityTs, views, rowIdCol, nearestMode = false)
-
-  /** Fused multi-view nearest join ([[nearestMulti]]'s plan twin). */
-  def nearestMultiFused(
-      entity: DataFrame, entityTs: String,
-      views: Seq[DirectionalView], rowIdCol: String): DataFrame =
-    multiFused(entity, entityTs, views, rowIdCol, nearestMode = true)
-
-  private def multiFold(
+  private def multi(
       entity: DataFrame, entityTs: String,
       views: Seq[DirectionalView], rowIdCol: String,
-      nearestMode: Boolean): DataFrame = {
-    require(views.nonEmpty, "multi-view as-of needs at least one view")
-    views.foldLeft(entity) { (acc, v) =>
-      val joined = directional(acc, entityTs, v.sourceFiltered, v.tsCol,
-        v.joinKeys, v.features, v.windowSeconds, rowIdCol,
-        keepViewTs = false, nearestMode = nearestMode)
-      v.features.foldLeft(joined)((d, f) =>
-        if (v.outName(f) == f) d else d.withColumnRenamed(f, v.outName(f)))
-    }
-  }
-
-  private implicit class ViewOps(private val v: DirectionalView) {
-    def sourceFiltered: DataFrame =
-      v.predicate.fold(v.source)(p => v.source.filter(p))
-  }
-
-  private def multiFused(
-      entity: DataFrame, entityTs: String,
-      views: Seq[DirectionalView], rowIdCol: String,
-      nearestMode: Boolean): DataFrame = {
+      dir: Direction): DataFrame = {
     require(views.nonEmpty, "multi-view as-of needs at least one view")
     views.foreach { v =>
       require(v.joinKeys.nonEmpty, s"view ${v.name}: equi-join keys required")
       require(v.windowSeconds > 0, s"view ${v.name}: horizon/tolerance must be positive")
     }
-    val unorderable = views.filterNot(v => v.features.forall { f =>
-      org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(v.source.schema(f).dataType)
-    })
-    require(unorderable.isEmpty,
-      "fused directional join requires min(struct)-orderable feature types; " +
-        s"views ${unorderable.map(_.name).mkString(", ")} carry an unorderable " +
-        "feature (e.g. MAP) — use the unfused multi path")
-
-    val spine = graft.ops.OpsUtil.widen(entity).withColumn(RowId, col(rowIdCol))
-    val bounds = spine.agg(min(col(entityTs)), max(col(entityTs))).head()
-    if (bounds.isNullAt(0))
-      return spine.drop(RowId) // empty spine (the single-view contract)
-    val Ets = "__graft_asof_entity_ts"
-
-    val vCol = views.indices.map(i => s"__graft_dv$i")
-    // Group by source identity (canonicalized plan), keys, timestamp —
-    // the fusion contract, same as PointInTimeJoin.fusionGroups.
-    val groups = views.zipWithIndex
-      .groupBy { case (v, _) =>
-        (v.source.queryExecution.logical.canonicalized, v.joinKeys, v.tsCol)
-      }
-      .values.map(_.map(_._2).toSeq).toSeq.sortBy(_.head)
-
-    val groupAggs: Seq[DataFrame] = groups.map { idxs =>
-      val rep = views(idxs.head)
-      val keyAliases =
-        rep.joinKeys.zipWithIndex.map { case (_, i) => s"__graft_k_$i" }
-      // Weakest admission across the group: the WIDEST window; each
-      // view's own window is re-gated inside its when() below.
-      val maxW = idxs.map(i => views(i).windowSeconds).max
-      val horizon = expr(s"INTERVAL $maxW SECONDS")
-      val (lo, hi) =
-        if (nearestMode) (lit(bounds.get(0)).cast("timestamp") - horizon,
-          lit(bounds.get(1)).cast("timestamp") + horizon)
-        else (lit(bounds.get(0)).cast("timestamp"),
-          lit(bounds.get(1)).cast("timestamp") + horizon)
-      // Scan-level predicate pre-filter: only sound when EVERY member
-      // has one (a predicate-free member admits all rows).
-      val anyPred: Option[Column] = {
-        val ps = idxs.map(i => views(i).predicate)
-        if (ps.forall(_.isDefined))
-          Some(ps.flatten.map(p => coalesce(p, lit(false))).reduce(_ || _))
-        else None
-      }
-      val rawFeats = idxs.flatMap(i => views(i).features).distinct
-      val predCols = idxs.flatMap(i => views(i).predicate.map(p =>
-        coalesce(p, lit(false)).as(s"__graft_p_$i")))
-      val viewCols =
-        rep.joinKeys.map(_._2).zip(keyAliases).map { case (c, a) => col(c).as(a) } ++
-          Seq(col(rep.tsCol).as(Vts)) ++ rawFeats.map(col) ++ predCols
-      val base = anyPred.fold(rep.source)(p => rep.source.filter(p))
-      val pruned = base
-        .filter(col(rep.tsCol) >= lo && col(rep.tsCol) <= hi)
-        .select(viewCols: _*)
-
-      val left = spine.select(
-        col(RowId) +: col(entityTs).as(Ets) +: rep.joinKeys.map(k => col(k._1)): _*)
-      val keyCond = rep.joinKeys.zip(keyAliases)
-        .map { case ((e, _), a) => left(e) === pruned(a) }.reduce(_ && _)
-      val rangeCond =
-        if (nearestMode)
-          pruned(Vts) >= left(Ets) - horizon && pruned(Vts) <= left(Ets) + horizon
-        else
-          pruned(Vts) >= left(Ets) && pruned(Vts) <= left(Ets) + horizon
-      val joined = left.join(pruned, keyCond && rangeCond, "inner")
-
-      // Every member view's arg-MIN in ONE aggregation over the narrow
-      // joined row (the joinFused shape with min for the forward /
-      // nearest pick order): per-view window + predicate gate inside
-      // the when(), ordered struct exists only in aggregate buffers.
-      val aggExprs = idxs.map { j =>
-        val w = views(j)
-        val diff = abs(unix_micros(col(Vts)) - unix_micros(col(Ets)))
-        val inWin =
-          if (nearestMode) diff <= w.windowSeconds * 1000000L
-          else col(Vts) <= col(Ets) + expr(s"INTERVAL ${w.windowSeconds} SECONDS")
-        val orderFields: Seq[Column] =
-          (if (nearestMode) Seq(diff.as("__graft_diff")) else Nil) ++
-            (col(Vts).as("__graft_vts") +:
-              w.features.map(f => col(f).as(w.outName(f))))
-        val vPred = w.predicate.map(_ => col(s"__graft_p_$j")).getOrElse(lit(true))
-        min(when(vPred && inWin, struct(orderFields: _*))).as(vCol(j))
-      }
-      joined.groupBy(col(RowId)).agg(aggExprs.head, aggExprs.tail: _*)
-    }
-
-    val stitched = groupAggs.foldLeft(spine) { (acc, g) =>
-      acc.join(g, Seq(RowId), "left")
-    }
-    def q(name: String): Column = col(s"`${name.replace("`", "``")}`")
-    val spineCols = spine.columns.toSeq.filter(_ != RowId)
-    stitched.select(spineCols.map(q) ++ views.zipWithIndex.flatMap { case (v, i) =>
-      v.features.map(f => col(vCol(i)).getField(v.outName(f)).as(v.outName(f)))
-    }: _*)
+    PointInTimeJoin.asOf(spine(entity, rowIdCol), entityTs,
+      views.map(v => ResolvedView(v.name, v.source, v.joinKeys, v.tsCol,
+        features = v.features, ttlSeconds = Some(v.windowSeconds),
+        outputPrefix = v.outputPrefix, predicate = v.predicate)),
+      dir)
   }
+
+  /** Widen the probe side: if the planner broadcasts the (pruned) view,
+    * probe parallelism is inherited from the entity scan's input splits. */
+  private def spine(entity: DataFrame, rowIdCol: String): DataFrame =
+    graft.ops.OpsUtil.widen(entity).withColumn(PointInTimeJoin.RowId, col(rowIdCol))
 }

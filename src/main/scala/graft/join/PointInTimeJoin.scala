@@ -1,9 +1,8 @@
 package graft.join
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types._
 
 /** A feature view resolved to a concrete DataFrame, ready to join.
   *
@@ -25,10 +24,10 @@ import org.apache.spark.sql.types._
   *                  (Feast's `full_feature_names=True` shape)
   * @param predicate optional row filter over `source` columns.
   *                  Semantically identical to pre-filtering `source`,
-  *                  but keeping it SEPARATE lets [[PointInTimeJoin
-  *                  .joinFused]] recognize views that differ only by
-  *                  predicate as sharing one source and fuse their
-  *                  candidate joins into a single scan — at 100 TB,
+  *                  but keeping it SEPARATE lets [[PointInTimeJoin]]
+  *                  recognize views that differ only by predicate as
+  *                  sharing one source and run their candidate joins
+  *                  over a single scan — at 100 TB,
   *                  "scan the feature table once however many views
   *                  are defined over it" is the dominant saving.
   */
@@ -45,30 +44,17 @@ final case class ResolvedView(
   def outName(f: String): String = outputPrefix.fold(f)(p => s"${p}__$f")
 }
 
-/** Physical dial for the point-in-time join: [[PointInTimeJoin.join]]
-  * (foldLeft reference) vs [[PointInTimeJoin.joinFused]]. Semantics
-  * are identical in every mode — this only picks the plan shape;
-  * `pit_manyviews_fused` shares the unfused oracle verbatim. Consumed
-  * by `JobConfig.fusedJoin` and the streaming PIT wrapper. */
-sealed trait FusionMode
-/** Fuse exactly when it pays ([[PointInTimeJoin.shouldFuse]]):
-  * ≥ 2 views share a (canonicalized source, keys, timestamp) identity
-  * and every view's features are MaxByAgg-orderable. Otherwise the
-  * foldLeft reference path runs — so a registry with one view per
-  * table keeps its exact historical plan. */
-case object FuseAuto extends FusionMode
-/** Always fuse (fails fast on unorderable feature types). */
-case object FuseOn extends FusionMode
-/** Never fuse: the per-view foldLeft reference path. */
-case object FuseOff extends FusionMode
-
 /** Point-in-time (as-of) left join of an entity spine against N feature
   * views — the engine's core operator (SURVEY.md §2.3 J1).
   *
   * Spark-first design, scale notes (100 TB posture):
-  *   - The entity spine gets a unique row id; each view is reduced to
-  *     one row per spine id INDEPENDENTLY, then stitched back with left
-  *     joins on the id. N views never multiply each other's fan-out.
+  *   - The entity spine gets a unique row id; views are reduced to one
+  *     row per spine id, then stitched back with left joins on the id.
+  *     N views never multiply each other's fan-out.
+  *   - Views sharing a (canonicalized source, keys, timestamp) identity
+  *     run ONE candidate join over one scan, and every member reduces in
+  *     one aggregation: scans, aggregations and stitch joins are
+  *     O(distinct sources), not O(views).
   *   - TTL scan pruning: the entity's [min(ts), max(ts)] is computed
   *     once (a 2-value aggregate — the only driver-side collect in the
   *     engine) and every view scan is pre-filtered to
@@ -76,26 +62,31 @@ case object FuseOff extends FusionMode
   *     row-group filter, the single most important physical
   *     optimization here (mirrors the bounded scan CTE Feast generates;
   *     see SURVEY.md §4).
-  *   - Dedup-to-latest runs as `max_by`-style `max(struct(...))`
-  *     aggregation by default: it gets map-side partial aggregation
-  *     (one shuffle of pre-combined rows) where a window would shuffle
-  *     and sort every candidate row. `WindowRowNumber` is kept for
-  *     features whose types are not orderable inside a struct.
+  *   - Dedup-to-latest runs as a `max(struct(...))` aggregate: it gets
+  *     map-side partial aggregation (one shuffle of pre-combined rows)
+  *     where a window would shuffle and sort every candidate row.
   *   - Spine ids are unique, so the dedup shuffle cannot skew; join-key
   *     skew on hot entities is left to AQE skew-join handling.
   */
 object PointInTimeJoin {
 
-  sealed trait DedupStrategy
-  /** groupBy(rowId).agg(max(struct(ts, createdTs, features…))) — partial-agg friendly. */
-  case object MaxByAgg extends DedupStrategy
-  /** row_number() over (partition by rowId order by ts desc, createdTs desc) == 1. */
-  case object WindowRowNumber extends DedupStrategy
-
-  private val RowId = "__graft_row_id"
+  private[join] val RowId = "__graft_row_id"
   private val Ets = "__graft_entity_ts"
   private val Vts = "__graft_view_ts"
   private val Vcts = "__graft_view_created_ts"
+
+  /** Which side of the entity timestamp admits view rows, and which
+    * admitted row wins. A view's `ttlSeconds` is its window: the TTL
+    * (None/0 = unbounded) backward, the horizon forward, the tolerance
+    * either side for nearest. */
+  private[join] sealed trait Direction
+  /** Latest row at or before the entity ts (ties: greatest created ts,
+    * then greatest features). */
+  private[join] case object Backward extends Direction
+  /** Earliest row at or after the entity ts (ties: least features). */
+  private[join] case object Forward extends Direction
+  /** Smallest |Δt| either side (ties: earlier row, then least features). */
+  private[join] case object Nearest extends Direction
 
   /** As-of join `entity` against `views`.
     *
@@ -130,94 +121,86 @@ object PointInTimeJoin {
       entity: DataFrame,
       entityTs: String,
       views: Seq[ResolvedView],
-      strategy: DedupStrategy = MaxByAgg,
       rowIdCol: Option[String] = None,
-      spineScratchDir: Option[String] = None): DataFrame = {
+      spineScratchDir: Option[String] = None): DataFrame =
+    asOf(buildSpine(entity, rowIdCol, spineScratchDir), entityTs, views, Backward)
+
+  /** The one as-of plan behind [[join]] and every [[DirectionalAsOf]]
+    * entry point. `spine` carries a unique [[RowId]]; the output is the
+    * spine's other columns, then (when `keepViewTs` names it) the first
+    * view's matched timestamp, then every view's features under
+    * [[ResolvedView.outName]]. Three steps:
+    *
+    *  1. **Candidate join per group**: views sharing (canonicalized
+    *     source, joinKeys, tsCol, createdTs) — e.g. N views over one
+    *     feature table differing only by [[ResolvedView.predicate]] /
+    *     window / feature list — run ONE candidate join over one scan,
+    *     under the widest window of the group.
+    *  2. **One aggregation per group**: each member's pick is a
+    *     `max|min(when(pred && window, orderedStruct))` aggregate over
+    *     the NARROW joined row — the structs exist only inside the
+    *     aggregate buffers (a union-then-aggregate variant measured
+    *     2-3× slower: its aggregation sorted rows carrying one struct
+    *     copy per view), and `max`/`min` skip the `when`'s NULLs, so
+    *     each view reduces over exactly its admissible rows. A view
+    *     whose features are not orderable (a MAP, read from the
+    *     source schema) reduces with `max_by|min_by(struct, gated
+    *     order key)` instead: same winner, except that ties on the
+    *     order key pick an arbitrary row.
+    *  3. **One stitch per group**: a left join on the row id.
+    */
+  private[join] def asOf(
+      spine: DataFrame,
+      entityTs: String,
+      views: Seq[ResolvedView],
+      dir: Direction,
+      keepViewTs: Option[String] = None): DataFrame = {
     require(views.nonEmpty, "at least one feature view required")
-    val spine = buildSpine(entity, rowIdCol, spineScratchDir)
+    def q(name: String): Column = col(s"`${name.replace("`", "``")}`")
+    val spineCols = spine.columns.toSeq.filter(_ != RowId).map(q)
+    def typeOf(v: ResolvedView, c: String) = v.source.schema(c).dataType
     // Bounded-scan pruning: one tiny job, two values on the driver
     // (reads the checkpointed spine when one was just materialized).
     val bounds = spine.agg(min(col(entityTs)), max(col(entityTs))).head()
-    val empty = bounds.isNullAt(0)
-
-    val withFeatures = views.foldLeft(spine) { (acc, v) =>
-      val reduced =
-        if (empty) emptyViewResult(spine, v)
-        else reduceView(spine, entityTs, v, strategy, bounds.get(0), bounds.get(1))
-      acc.join(reduced, Seq(RowId), "left")
-    }
-    withFeatures.drop(RowId)
-  }
-
-  /** Fused multi-view as-of join — IDENTICAL semantics to [[join]]
-    * under [[MaxByAgg]] (the default), collapsed physical shape.
-    * Two fusions stack:
-    *
-    *  1. **Candidate fusion** (the big one): views sharing
-    *     (source, joinKeys, tsCol, createdTs) — e.g. N views over one
-    *     feature table differing only by [[ResolvedView.predicate]] /
-    *     TTL / feature list — run ONE candidate join over one scan,
-    *     under the weakest admission window of the group; each view's
-    *     own predicate + TTL gate its ordered struct inside a `when`.
-    *     At 100 TB the feature-table scan+join dominates everything:
-    *     this makes it O(distinct sources), not O(views).
-    *  2. **Aggregation/stitch fusion**: each group runs ONE
-    *     `groupBy(rowId)` computing every member view's argmax as a
-    *     `max(when(pred && ttl, orderedStruct))` aggregate — the
-    *     structs are built INSIDE the aggregate expressions, so the
-    *     agg's sort/shuffle moves the NARROW joined row, not N
-    *     pre-projected struct copies (`max` skips the `when`'s NULLs,
-    *     so each view reduces over exactly its admissible rows).
-    *     Aggs and stitch joins are O(groups), not O(views).
-    *
-    * Views keep fully independent predicates / TTLs / feature lists /
-    * created-ts tie-breaks; only the (source, keys, ts) identity
-    * (compared on the CANONICALIZED logical plan, so re-loads of the
-    * same table fuse too) decides grouping. The unfused [[join]]
-    * remains the oracle-checked reference implementation (and the
-    * only home of [[WindowRowNumber]], whose per-view sort cannot
-    * fuse). */
-  def joinFused(
-      entity: DataFrame,
-      entityTs: String,
-      views: Seq[ResolvedView],
-      rowIdCol: Option[String] = None,
-      spineScratchDir: Option[String] = None): DataFrame = {
-    require(views.nonEmpty, "at least one feature view required")
-    val spine = buildSpine(entity, rowIdCol, spineScratchDir)
-    val bounds = spine.agg(min(col(entityTs)), max(col(entityTs))).head()
     if (bounds.isNullAt(0)) {
-      // empty spine: the unfused fold already emits the right schema
-      val withFeatures = views.foldLeft(spine) { (acc, v) =>
-        acc.join(emptyViewResult(spine, v), Seq(RowId), "left")
-      }
-      return withFeatures.drop(RowId)
+      // no entity timestamp to match: typed NULL features, same schema
+      val nulls = keepViewTs.map(n =>
+        lit(null).cast(typeOf(views.head, views.head.tsCol)).as(n)).toSeq ++
+        views.flatMap(v => v.features.map(f =>
+          lit(null).cast(typeOf(v, f)).as(v.outName(f))))
+      return spine.select(spineCols ++ nulls: _*)
     }
-    val incompatible = views.filterNot(maxByAggCompatible)
-    require(incompatible.isEmpty,
-      s"joinFused requires MaxByAgg-orderable feature types; views " +
-        s"${incompatible.map(_.name).mkString(", ")} carry an unorderable " +
-        "feature (e.g. MAP) — use the unfused join with WindowRowNumber")
     val (loTs, hiTs) = (bounds.get(0), bounds.get(1))
-    val vCol = views.indices.map(i => s"__graft_v$i")
-    val groups = fusionGroups(views)
 
-    val groupAggs: Seq[DataFrame] = groups.map { idxs =>
+    // A view's window as seconds (before, after) the entity ts: None =
+    // unbounded on that side, 0 = the entity ts itself.
+    def window(v: ResolvedView): (Option[Long], Option[Long]) = {
+      val w = v.ttlSeconds.filter(_ > 0)
+      dir match {
+        case Backward => (w, Some(0L))
+        case Forward  => (Some(0L), w)
+        case Nearest  => (w, w)
+      }
+    }
+    def interval(s: Long) = expr(s"INTERVAL $s SECONDS")
+    // `ts` admitted by window `w` around [lo, hi]: upper bound, then lower
+    def within(ts: Column, lo: Column, hi: Column,
+        w: (Option[Long], Option[Long])): Seq[Column] =
+      w._2.map(a => ts <= (if (a == 0) hi else hi + interval(a))).toSeq ++
+        w._1.map(b => ts >= (if (b == 0) lo else lo - interval(b)))
+
+    val vCol = views.indices.map(i => s"__graft_v$i")
+    val groupAggs: Seq[DataFrame] = groups(views).map { idxs =>
       val rep = views(idxs.head)
       val keyAliases =
         rep.joinKeys.zipWithIndex.map { case (_, i) => s"__graft_k_$i" }
-      val tsCol0 = col(rep.tsCol)
-      val ttls = idxs.map(i => views(i).ttlSeconds.filter(_ > 0))
-      // Weakest admission across the group: any unbounded member ⇒ no
-      // lower bound; else the LARGEST ttl. Stricter per-view TTLs are
-      // re-checked inside the when() gates below.
-      val groupTtl: Option[Long] =
-        if (ttls.forall(_.isDefined)) Some(ttls.flatten.max) else None
-      val rangeFilter = groupTtl match {
-        case Some(ttl) =>
-          tsCol0 <= lit(hiTs) && tsCol0 >= (lit(loTs) - expr(s"INTERVAL $ttl SECONDS"))
-        case None => tsCol0 <= lit(hiTs)
-      }
+      // Weakest admission across the group, per side: any unbounded
+      // member ⇒ unbounded; else the widest. Each member's own window
+      // is re-checked inside its when() gate below.
+      val ws = idxs.map(i => window(views(i)))
+      def widest(side: Seq[Option[Long]]) =
+        if (side.forall(_.isDefined)) Some(side.flatten.max) else None
+      val groupWin = (widest(ws.map(_._1)), widest(ws.map(_._2)))
       // Scan-level predicate pre-filter: only sound when EVERY member
       // has one (a predicate-free member admits all rows).
       val anyPred: Option[Column] = {
@@ -229,41 +212,51 @@ object PointInTimeJoin {
       val rawFeats = idxs.flatMap(i => views(i).features).distinct
       val predCols = idxs.flatMap(i => views(i).predicate.map(p =>
         coalesce(p, lit(false)).as(s"__graft_p_$i")))
+      val tsCol0 = col(rep.tsCol)
       val viewCols =
         rep.joinKeys.map(_._2).zip(keyAliases).map { case (c, a) => col(c).as(a) } ++
           Seq(tsCol0.as(Vts)) ++
           rep.createdTs.map(c => col(c).as(Vcts)).toSeq ++
           rawFeats.map(f => col(f)) ++ predCols
       val base = anyPred.fold(rep.source)(p => rep.source.filter(p))
-      val pruned = base.filter(rangeFilter).select(viewCols: _*)
+      // Pruned, projected view scan: range filter + needed columns
+      // only, so Catalyst pushes both into the source scan.
+      val pruned = base
+        .filter(within(tsCol0, lit(loTs), lit(hiTs), groupWin).reduce(_ && _))
+        .select(viewCols: _*)
 
       val left = spine.select(
         col(RowId) +: col(entityTs).as(Ets) +: rep.joinKeys.map(k => col(k._1)): _*)
       val keyCond = rep.joinKeys.zip(keyAliases)
         .map { case ((e, _), a) => left(e) === pruned(a) }
         .reduce(_ && _)
-      val asOfCond = pruned(Vts) <= left(Ets)
-      val ttlCond = groupTtl match {
-        case Some(ttl) => pruned(Vts) >= (left(Ets) - expr(s"INTERVAL $ttl SECONDS"))
-        case None      => lit(true)
-      }
-      val joined = left.join(pruned, keyCond && asOfCond && ttlCond, "inner")
+      val joined = left.join(pruned,
+        (keyCond +: within(pruned(Vts), left(Ets), left(Ets), groupWin)).reduce(_ && _),
+        "inner")
 
-      // Every member view's argmax in ONE aggregation over the NARROW
-      // joined row — the ordered structs exist only inside the
-      // aggregate buffers, never as pre-projected row columns (a
-      // union-then-aggregate variant measured 2-3× slower: its
-      // aggregation sorted rows carrying one struct copy per view).
       val aggExprs = idxs.map { j =>
         val w = views(j)
-        val ordered = struct(
-          (col(Vts) +: w.createdTs.map(_ => col(Vcts)).toSeq) ++
-            w.features.map(f => col(f).as(w.outName(f))): _*)
-        val vTtl = w.ttlSeconds.filter(_ > 0)
-          .map(t => col(Vts) >= (col(Ets) - expr(s"INTERVAL $t SECONDS")))
-          .getOrElse(lit(true))
-        val vPred = w.predicate.map(_ => col(s"__graft_p_$j")).getOrElse(lit(true))
-        max(when(vPred && vTtl, ordered)).as(vCol(j))
+        val orderKey =
+          (if (dir == Nearest)
+            Seq(abs(unix_micros(col(Vts)) - unix_micros(col(Ets))).as("__graft_diff"))
+          else Nil) ++ (col(Vts) +: w.createdTs.map(_ => col(Vcts)).toSeq)
+        val packed = struct(orderKey ++ w.features.map(f => col(f).as(w.outName(f))): _*)
+        // the member's own predicate and window; a zero bound is the
+        // entity ts itself, which the candidate join already enforces
+        val (before, after) = window(w)
+        val gate = (w.predicate.map(_ => col(s"__graft_p_$j")).getOrElse(lit(true)) +:
+          within(col(Vts), col(Ets), col(Ets), (before.filter(_ > 0), after.filter(_ > 0))))
+          .reduce(_ && _)
+        val orderable = w.features.forall(f => RowOrdering.isOrderable(typeOf(w, f)))
+        val pick =
+          if (orderable) {
+            val p = when(gate, packed)
+            if (dir == Backward) max(p) else min(p)
+          } else {
+            val k = when(gate, struct(orderKey: _*))
+            if (dir == Backward) max_by(packed, k) else min_by(packed, k)
+          }
+        pick.as(vCol(j))
       }
       joined.groupBy(col(RowId)).agg(aggExprs.head, aggExprs.tail: _*)
     }
@@ -273,57 +266,24 @@ object PointInTimeJoin {
     val stitched = groupAggs.foldLeft(spine) { (acc, g) =>
       acc.join(g, Seq(RowId), "left")
     }
-    def q(name: String): Column = col(s"`${name.replace("`", "``")}`")
-    val spineCols = spine.columns.toSeq.filter(_ != RowId)
-    stitched.select(spineCols.map(q) ++ views.zipWithIndex.flatMap { case (v, i) =>
-      v.features.map(f => col(vCol(i)).getField(v.outName(f)).as(v.outName(f)))
-    }: _*)
+    stitched.select(spineCols ++
+      keepViewTs.map(n => col(vCol.head).getField(Vts).as(n)) ++
+      views.zipWithIndex.flatMap { case (v, i) =>
+        v.features.map(f => col(vCol(i)).getField(v.outName(f)).as(v.outName(f)))
+      }: _*)
   }
 
   /** Group views by source identity (canonicalized plan — reference
     * equality would miss separate loads of the same table), join keys,
-    * and timestamp semantics; group order is deterministic. The
-    * grouping key is the fusion contract: members of one group run ONE
-    * candidate join over one scan in [[joinFused]]. */
-  private def fusionGroups(views: Seq[ResolvedView]): Seq[Seq[Int]] =
+    * and timestamp semantics; group order is deterministic. Members of
+    * one group run ONE candidate join over one scan in [[asOf]]. */
+  private def groups(views: Seq[ResolvedView]): Seq[Seq[Int]] =
     views.zipWithIndex
       .groupBy { case (v, _) =>
         (v.source.queryExecution.logical.canonicalized,
           v.joinKeys, v.tsCol, v.createdTs)
       }
       .values.map(_.map(_._2).toSeq).toSeq.sortBy(_.head)
-
-  /** Whether a view's dedup can run as `max(struct(ts, createdTs,
-    * features…))` — [[MaxByAgg]] and every [[joinFused]] aggregate
-    * need the struct to be ORDERABLE, which each feature's type
-    * decides (maps, for instance, are not; such views need the
-    * unfused [[WindowRowNumber]] path). */
-  private[join] def maxByAggCompatible(v: ResolvedView): Boolean =
-    v.features.forall { f =>
-      org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(v.source.schema(f).dataType)
-    }
-
-  /** Does fusing pay for this view set? — the Auto heuristic
-    * ([[graft.run.FuseAuto]]): TRUE exactly when every view is
-    * [[MaxByAgg]]-compatible (the only dedup [[joinFused]] speaks) and
-    * at least one fusion group has ≥ 2 members, i.e. distinct sources
-    * < views — the regime where "scan each feature table once, however
-    * many views are defined over it" actually saves scans. Singleton
-    * groups fuse into exactly the unfused per-view shape, so fusing a
-    * qualifying set never pessimizes the non-shared views. */
-  def shouldFuse(views: Seq[ResolvedView]): Boolean =
-    views.forall(maxByAggCompatible) && fusionGroups(views).exists(_.size >= 2)
-
-  /** Resolve a [[FusionMode]] against a concrete view set — the one
-    * place the mode → plan decision lives (batch runner and streaming
-    * wrapper both call this, so they cannot diverge). */
-  def resolveFusion(mode: FusionMode, views: Seq[ResolvedView]): Boolean =
-    mode match {
-      case FuseOn   => true
-      case FuseOff  => false
-      case FuseAuto => shouldFuse(views)
-    }
 
   /** Id-stamped spine, materialized once when the id is synthetic. */
   private def buildSpine(
@@ -371,84 +331,4 @@ object PointInTimeJoin {
           case None => withId.localCheckpoint(true)
         }
     }
-
-  /** Spine × one view under the key + as-of + TTL conditions: the
-    * pre-reduction candidate frame (RowId, Ets, entity keys, key
-    * aliases, Vts, [Vcts], out-named features). Shared by the per-view
-    * reduction and the fused multi-view aggregation. */
-  private def joinedView(
-      spine: DataFrame,
-      entityTs: String,
-      v: ResolvedView,
-      loTs: Any,
-      hiTs: Any): DataFrame = {
-    val keyAliases = v.joinKeys.zipWithIndex.map { case (_, i) => s"__graft_k_$i" }
-
-    // Pruned, projected view scan: range filter + needed columns only,
-    // so Catalyst pushes both into the source scan.
-    val tsCol0 = col(v.tsCol)
-    val rangeFilter = v.ttlSeconds.filter(_ > 0) match {
-      case Some(ttl) =>
-        tsCol0 <= lit(hiTs) && tsCol0 >= (lit(loTs) - expr(s"INTERVAL $ttl SECONDS"))
-      case None => tsCol0 <= lit(hiTs)
-    }
-    val viewCols =
-      v.joinKeys.map(_._2).zip(keyAliases).map { case (c, a) => col(c).as(a) } ++
-        Seq(tsCol0.as(Vts)) ++
-        v.createdTs.map(c => col(c).as(Vcts)).toSeq ++
-        v.features.map(f => col(f).as(v.outName(f)))
-    val src = v.predicate.fold(v.source)(p => v.source.filter(p))
-    val pruned = src.filter(rangeFilter).select(viewCols: _*)
-
-    val left = spine.select(
-      col(RowId) +: col(entityTs).as(Ets) +: v.joinKeys.map(k => col(k._1)): _*)
-
-    val keyCond = v.joinKeys.zip(keyAliases)
-      .map { case ((e, _), a) => left(e) === pruned(a) }
-      .reduce(_ && _)
-    val asOfCond = pruned(Vts) <= left(Ets)
-    val ttlCond = v.ttlSeconds.filter(_ > 0) match {
-      case Some(ttl) => pruned(Vts) >= (left(Ets) - expr(s"INTERVAL $ttl SECONDS"))
-      case None      => lit(true)
-    }
-    left.join(pruned, keyCond && asOfCond && ttlCond, "inner")
-  }
-
-  /** One row per spine id carrying this view's latest admissible features. */
-  private def reduceView(
-      spine: DataFrame,
-      entityTs: String,
-      v: ResolvedView,
-      strategy: DedupStrategy,
-      loTs: Any,
-      hiTs: Any): DataFrame = {
-    val joined = joinedView(spine, entityTs, v, loTs, hiTs)
-    val outCols = v.features.map(v.outName)
-    strategy match {
-      case MaxByAgg =>
-        // Lexicographic argmax over (ts, createdTs, features…): identical
-        // winner to the window on (ts desc, createdTs desc) whenever
-        // (ts, createdTs) is unique per key; deterministic always.
-        val ordered = struct(
-          (col(Vts) +: v.createdTs.map(_ => col(Vcts)).toSeq) ++
-            outCols.map(col): _*)
-        joined.groupBy(col(RowId)).agg(max(ordered).as("__graft_best"))
-          .select(col(RowId) +: outCols.map(f => col(s"__graft_best.$f").as(f)): _*)
-      case WindowRowNumber =>
-        val order = desc(Vts) +: v.createdTs.map(_ => desc(Vcts)).toSeq
-        val w = Window.partitionBy(col(RowId)).orderBy(order: _*)
-        joined.withColumn("__graft_rn", row_number().over(w))
-          .filter(col("__graft_rn") === 1)
-          .select(col(RowId) +: outCols.map(col): _*)
-    }
-  }
-
-  /** Empty entity spine: emit the right schema with zero rows. */
-  private def emptyViewResult(spine: DataFrame, v: ResolvedView): DataFrame = {
-    val fields = v.features.map { f =>
-      val dt = v.source.schema(f).dataType
-      lit(null).cast(dt).as(v.outName(f))
-    }
-    spine.select(col(RowId) +: fields: _*).limit(0)
-  }
 }

@@ -45,8 +45,8 @@ object FeatureStoreQueries {
       .select(col("event_id"), col("user_id"), col("ts"))
     val orders = table(s, dir, "orders")
     // predicate passed SEPARATELY from the source (same semantics as
-    // source.filter(pred)) so joinFused can recognize the six order
-    // views as one-scan fusable — see ResolvedView.predicate.
+    // source.filter(pred)) so the join can recognize the six order
+    // views as one source and scan it once — see ResolvedView.predicate.
     def ov(nm: String, pfx: String, pred: Column, ttlDays: Option[Long],
            feats: Seq[String]) = ResolvedView(
       name = nm,
@@ -150,8 +150,8 @@ object FeatureStoreQueries {
 
   val all: Seq[QueryDef] = Seq(
     // Entities = events(user_id, ts); features = latest order per customer
-    // as of the event time, unbounded TTL. Tie-break mirrors MaxByAgg's
-    // lexicographic struct order: (o_orderdate, o_totalprice, o_orderstatus).
+    // as of the event time, unbounded TTL. Tie-break mirrors the join's
+    // max(struct) order: (o_orderdate, o_totalprice, o_orderstatus).
     QueryDef(
       "pit_events_orders",
       (s, dir) => {
@@ -338,11 +338,11 @@ object FeatureStoreQueries {
 
 
 
-    // The stitch is a foldLeft of left joins on the spine row id —
-    // linear in view count by design; this query is the evidence
-    // (SCALE.md logs the exchange count: 2 per time-varying view,
-    // broadcast for the static dims, no cross-view fan-out). Natural
-    // unique key (event_id): no spine materialization needed.
+    // Eight views over two sources: the join groups them by source —
+    // one candidate join, one aggregation and one row-id stitch per
+    // source, however many views, and no cross-view fan-out
+    // (PointInTimeJoinSpec asserts the plan). Natural unique key
+    // (event_id): no spine materialization needed.
     QueryDef(
       "pit_manyviews",
       (s, dir) => {
@@ -365,17 +365,14 @@ object FeatureStoreQueries {
       },
       Some(ManyViewsSql)),
 
-    // Fused twin: the SAME 8 views through joinFused — all per-view
-    // argmaxes in ONE aggregation over a tagged union, one stitch join
-    // total (vs one agg + one stitch per view in the foldLeft path).
-    // Shares the oracle verbatim: identical semantics, collapsed
-    // physical shape (PointInTimeJoinSpec asserts the plan: one
-    // row-id stitch join, bounded exchanges independent of N).
+    // Twin of pit_manyviews, kept under its declared name: the join
+    // has one plan, so this is the same call, and it shares the
+    // oracle verbatim.
     QueryDef(
       "pit_manyviews_fused",
       (s, dir) => {
         val (entity, views) = manyViewsInput(s, dir)
-        PointInTimeJoin.joinFused(entity, "ts", views, rowIdCol = Some("event_id"))
+        PointInTimeJoin.join(entity, "ts", views, rowIdCol = Some("event_id"))
       },
       Some(ManyViewsSql)),
 
@@ -705,16 +702,15 @@ object FeatureStoreQueries {
       },
       Some(ForwardMultiSql)),
 
-    // The FUSED physical twin: one candidate join over ONE scan of the
-    // shared source, per-view horizons/predicates gated inside
-    // min(when(...)) aggregates — shares pit_forward_multi's oracle
-    // SQL VERBATIM (the pit_manyviews_fused pin; plan asserted
-    // one-scan-per-source in DirectionalAsOfSpec).
+    // Twin of pit_forward_multi, kept under its declared name: the
+    // same call (one candidate join over ONE scan of the shared
+    // source, per-view horizons/predicates gated inside min(when(...))
+    // aggregates), sharing pit_forward_multi's oracle SQL VERBATIM.
     QueryDef(
       "pit_forward_multi_fused",
       (s, dir) => {
         val e = table(s, dir, "events")
-        graft.join.DirectionalAsOf.forwardMultiFused(
+        graft.join.DirectionalAsOf.forwardMulti(
           forwardMultiEntity(e), "p_ts", forwardMultiViews(e), "event_id")
       },
       Some(ForwardMultiSql))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.encode.{ExampleEncoder, TfExampleEncoder, TfSequenceExampleEncoder}
 import graft.io.TfRecordSink
-import graft.join.{FuseAuto, FusionMode, PointInTimeJoin, ResolvedView}
+import graft.join.{PointInTimeJoin, ResolvedView}
 import graft.registry.{FeatureRef, Registry}
 
 /** Job configuration — the typed equivalent of the reference's
@@ -26,15 +26,6 @@ import graft.registry.{FeatureRef, Registry}
   *                      already unique per row; when set the PIT join
   *                      uses it as the stitch key and skips the
   *                      synthetic-id spine materialization
-  * @param fusedJoin     [[FusionMode]] dial for the PIT join. Default
-  *                      [[FuseAuto]]: route through
-  *                      [[graft.join.PointInTimeJoin.joinFused]] —
-  *                      views sharing a source table run ONE candidate
-  *                      join / aggregation / stitch per source instead
-  *                      of per view — exactly when the resolved view
-  *                      set qualifies (some views share a source and
-  *                      all are MaxByAgg-compatible; identical
-  *                      results; oracle-twinned by pit_manyviews_fused)
   */
 final case class JobConfig(
     registry: Registry,
@@ -52,8 +43,7 @@ final case class JobConfig(
     artifactVersion: Long = 0,
     transforms: Seq[Transforms.TransformSpec] = Nil,
     entityRowId: Option[String] = None,
-    spineScratchDir: Option[String] = None,
-    fusedJoin: FusionMode = FuseAuto)
+    spineScratchDir: Option[String] = None)
 
 /** Payload-format dispatch — total, unlike the reference's C5 dispatch
   * (`executor.py:141-153`) whose SequenceExample branch raised. */
@@ -158,12 +148,8 @@ object Runner {
           "entityRowId: the synthetic-id path materializes the FULL wide " +
           "spine (O(payload bytes)). Pass a unique entity column as " +
           "entityRowId to skip it (measured 2.5x end-to-end on wide payloads).")
-    if (PointInTimeJoin.resolveFusion(job.fusedJoin, views))
-      PointInTimeJoin.joinFused(entity, job.entityTs, views,
-        rowIdCol = job.entityRowId, spineScratchDir = job.spineScratchDir)
-    else
-      PointInTimeJoin.join(entity, job.entityTs, views,
-        rowIdCol = job.entityRowId, spineScratchDir = job.spineScratchDir)
+    PointInTimeJoin.join(entity, job.entityTs, views,
+      rowIdCol = job.entityRowId, spineScratchDir = job.spineScratchDir)
   }
 
   /** Flatten STRUCT columns into dotted-name leaf columns so nested

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout}
 
-import graft.join.{FuseAuto, FusionMode, PointInTimeJoin, ResolvedView}
+import graft.join.{PointInTimeJoin, ResolvedView}
 
 /** Structured-Streaming operators mirroring the batch engine's
   * semantics on unbounded inputs. The reference pipeline is batch-only
@@ -118,7 +118,7 @@ object StreamingOps {
     * TTL bounds how long a feature row stays joinable), then a chained
     * stateful event-time argmax per event dedups multiple admissible
     * feature rows with the SAME lexicographic (ts, features…) winner
-    * as the batch engine's MaxByAgg. Append mode: an event finalizes
+    * as the batch engine's max(struct) reduction. Append mode: an event finalizes
     * once the watermark passes its timestamp.
     *
     * INNER only: events with no admissible feature are absent from the
@@ -173,7 +173,7 @@ object StreamingOps {
     * fts timestamp, payload string)` — payload is the caller's encoded
     * feature tuple (e.g. `to_json(struct(...))`). Winner per event:
     * latest admissible `fts`, ties by payload (equals the batch
-    * MaxByAgg whenever (key, fts) is unique). */
+    * join's pick whenever (key, fts) is unique). */
   def pitStreamStreamWithState(
       events: DataFrame, features: DataFrame,
       ttlSeconds: Long, watermark: String): DataFrame = {
@@ -409,23 +409,17 @@ object StreamingOps {
     * (otherwise one persisted block accumulates PER MICRO-BATCH until
     * driver GC, the monitor-leak class the drift scorers were purged
     * of in r9), but the natural key skips the materialization
-    * entirely. `fused` is the batch runner's [[graft.join.FusionMode]]
-    * dial — default [[graft.join.FuseAuto]] routes through
-    * [[PointInTimeJoin.joinFused]] (one candidate join per distinct
-    * source) exactly when the view set qualifies, resolved ONCE at
-    * stream definition (views are fixed for the stream's lifetime). */
+    * entirely. Each batch runs the batch runner's plan
+    * ([[PointInTimeJoin.join]]: one candidate join per distinct
+    * source). */
   def pitEnrichStream(
       entities: DataFrame, entityTs: String, views: Seq[ResolvedView],
-      rowIdCol: Option[String] = None,
-      fused: FusionMode = FuseAuto)(
+      rowIdCol: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val fuse = PointInTimeJoin.resolveFusion(fused, views)
     entities.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
       val sc = batch.sparkSession.sparkContext
       val before = sc.getPersistentRDDs.keySet
-      val joined =
-        if (fuse) PointInTimeJoin.joinFused(batch.toDF(), entityTs, views, rowIdCol)
-        else PointInTimeJoin.join(batch.toDF(), entityTs, views, rowIdCol = rowIdCol)
+      val joined = PointInTimeJoin.join(batch.toDF(), entityTs, views, rowIdCol = rowIdCol)
       // ids persisted DURING join construction = this batch's spine
       // checkpoint (empty when rowIdCol is set) — never the sink's own
       val spineBlocks = sc.getPersistentRDDs.keySet -- before

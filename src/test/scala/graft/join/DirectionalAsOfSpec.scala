@@ -136,52 +136,85 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
     (entity, views, scratch)
   }
 
+  /** A [[DirectionalView]] as the oracle's [[ResolvedView]] (window =
+    * `ttlSeconds`, the kernel's contract). */
+  private def asResolved(v: DirectionalView) = ResolvedView(v.name, v.source,
+    v.joinKeys, v.tsCol, features = v.features, ttlSeconds = Some(v.windowSeconds),
+    outputPrefix = v.outputPrefix, predicate = v.predicate)
+
+  /** Scan nodes of `name` in the final plan only (AQE appends an
+    * Initial Plan section that would double-count). */
+  private def scansOf(df: org.apache.spark.sql.DataFrame, name: String): Int = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    name.r.findAllMatchIn(plan).size
+  }
+
   test("forwardMultiFused: row-identical to the unfused fold; one scan per source") {
-    val (entity, views, scratch) = multiViewFixture()
-    val unfused = DirectionalAsOf.forwardMulti(entity, "p_ts", views, "event_id")
-    val fused = DirectionalAsOf.forwardMultiFused(entity, "p_ts", views, "event_id")
-    fused.columns.toSeq shouldBe unfused.columns.toSeq
-    fused.count() shouldBe unfused.count()
-    fused.exceptAll(unfused).count() shouldBe 0
-    unfused.exceptAll(fused).count() shouldBe 0
-    // Plan pin: the shared labels source scans ONCE fused (three times
-    // unfused); the second source scans once in both.
-    def scansOf(df: org.apache.spark.sql.DataFrame, name: String): Int = {
-      df.collect()
-      // count final-plan scan nodes only (AQE appends an Initial Plan
-      // section that would double-count)
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      s"$name".r.findAllMatchIn(plan).size
-    }
-    withClue("unfused labels scans: ") {
-      scansOf(unfused, "labels\\.parquet") should be >= 3
-    }
-    withClue("fused labels scans: ") {
-      scansOf(fused, "labels\\.parquet") shouldBe 1
-      scansOf(fused, "other\\.parquet") shouldBe 1
-    }
+    val (entity, views, _) = multiViewFixture()
+    val out = DirectionalAsOf.forwardMulti(entity, "p_ts", views, "event_id")
+    out.columns.toSeq shouldBe Seq("event_id", "user_id", "p_ts", "nv__next_value",
+      "ne__next_value", "na__next_value", "na__etype", "os__any_value")
+    AsOfOracle.check(out, entity, "event_id", "p_ts", views.map(asResolved),
+      PointInTimeJoin.Forward)
+    // Plan pin: the shared labels source scans ONCE for its three
+    // views; the second source scans once.
+    scansOf(out, "labels\\.parquet") shouldBe 1
+    scansOf(out, "other\\.parquet") shouldBe 1
   }
 
   test("nearestMultiFused: row-identical to the unfused fold on mixed tolerances") {
     val (entity, views, _) = multiViewFixture()
-    val unfused = DirectionalAsOf.nearestMulti(entity, "p_ts", views, "event_id")
-    val fused = DirectionalAsOf.nearestMultiFused(entity, "p_ts", views, "event_id")
-    fused.count() shouldBe unfused.count()
-    fused.exceptAll(unfused).count() shouldBe 0
-    unfused.exceptAll(fused).count() shouldBe 0
+    val out = DirectionalAsOf.nearestMulti(entity, "p_ts", views, "event_id")
+    AsOfOracle.check(out, entity, "event_id", "p_ts", views.map(asResolved),
+      PointInTimeJoin.Nearest)
+    scansOf(out, "labels\\.parquet") shouldBe 1
   }
 
-  test("fused multi rejects unorderable feature types with a named view") {
+  test("multi-view joins reduce a MAP feature through min_by: picks match the oracle") {
     import spark.implicits._
-    val entity = Seq((1L, 1L, t("2024-01-01 10:00:00"))).toDF("eid", "key", "ets")
-    val src = Seq((1L, t("2024-01-01 11:00:00"), Map("a" -> 1.0)))
-      .toDF("fkey", "fts", "m")
-    val ex = intercept[IllegalArgumentException] {
-      DirectionalAsOf.forwardMultiFused(entity, "ets", Seq(
-        DirectionalView("mapview", src, "fts", Seq("key" -> "fkey"),
-          Seq("m"), 3600L)), "eid")
+    val entity = Seq((1L, 1L, t("2024-01-01 10:00:00")), (2L, 1L, t("2024-01-01 12:00:00")),
+      (3L, 2L, t("2024-01-01 10:00:00"))).toDF("eid", "key", "ets")
+    val src = Seq(
+      (1L, t("2024-01-01 11:00:00"), Map("a" -> 1.0), 1.0),
+      (1L, t("2024-01-01 10:30:00"), Map("a" -> 2.0), 2.0),
+      (1L, t("2024-01-01 12:45:00"), Map("a" -> 3.0), 3.0),
+      (2L, t("2024-01-01 09:00:00"), Map("a" -> 4.0), 4.0))
+      .toDF("fkey", "fts", "m", "x")
+    val views = Seq(
+      DirectionalView("mapview", src, "fts", Seq("key" -> "fkey"), Seq("m"), 3600L,
+        outputPrefix = Some("mv")),
+      DirectionalView("scalar", src, "fts", Seq("key" -> "fkey"), Seq("x"), 7200L,
+        outputPrefix = Some("sv")))
+    val fwd = DirectionalAsOf.forwardMulti(entity, "ets", views, "eid")
+    AsOfOracle.check(fwd, entity, "eid", "ets", views.map(asResolved), PointInTimeJoin.Forward)
+    fwd.filter(col("eid") === 1).select("mv__m").head().getMap[String, Double](0) shouldBe
+      Map("a" -> 2.0)
+    val near = DirectionalAsOf.nearestMulti(entity, "ets", views, "eid")
+    AsOfOracle.check(near, entity, "eid", "ets", views.map(asResolved), PointInTimeJoin.Nearest)
+  }
+
+  test("empty entity frame keeps the directional output columns, typed, with zero rows") {
+    val empty = entities.filter(col("eid") < 0)
+    def fwd(e: org.apache.spark.sql.DataFrame) = DirectionalAsOf.forward(
+      e, "ets", feats, "fts", Seq("key" -> "fkey"), Seq("v"),
+      horizonSeconds = 3600, rowIdCol = "eid", keepViewTs = true)
+    def near(e: org.apache.spark.sql.DataFrame) = DirectionalAsOf.nearest(
+      e, "ets", feats, "fts", Seq("key" -> "fkey"), Seq("v"),
+      toleranceSeconds = 3600, rowIdCol = "eid", keepViewTs = true)
+    def multi(e: org.apache.spark.sql.DataFrame) = DirectionalAsOf.forwardMulti(
+      e, "ets", Seq(DirectionalView("f", feats, "fts", Seq("key" -> "fkey"),
+        Seq("v"), 3600L, outputPrefix = Some("p"))), "eid")
+    for ((name, run) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "forward" -> fwd, "nearest" -> near, "forwardMulti" -> multi)) {
+      val got = run(empty)
+      withClue(name) {
+        got.schema.map(f => f.name -> f.dataType) shouldBe
+          run(entities).schema.map(f => f.name -> f.dataType)
+        got.count() shouldBe 0
+      }
     }
-    ex.getMessage should include ("mapview")
+    fwd(empty).columns.toSeq shouldBe Seq("eid", "key", "ets", "fts", "v")
   }
 }

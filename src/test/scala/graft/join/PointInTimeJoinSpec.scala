@@ -3,12 +3,17 @@ package graft.join
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{lit, map => mapOf}
+import org.apache.spark.sql.types._
 import graft.SparkSpec
+
+import PointInTimeJoin.Backward
 
 /** PIT-join edge semantics (SURVEY.md §7.5 item 1): inclusive bounds,
   * TTL expiry, created_ts tie-break, left-join NULLs, duplicate entity
-  * rows, multiple views — each checked against hand-computed expectations,
-  * under both dedup strategies.
+  * rows, multiple views — each checked against hand-computed expectations
+  * or the naive in-memory [[AsOfOracle]], for orderable features and for
+  * views carrying a MAP feature (which reduce through `max_by`).
   */
 class PointInTimeJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -38,11 +43,29 @@ class PointInTimeJoinSpec extends SparkSpec {
     tsCol = "fts", createdTs = Some("created"), features = Seq("val"),
     ttlSeconds = ttl)
 
-  for (strategy <- Seq(PointInTimeJoin.MaxByAgg, PointInTimeJoin.WindowRowNumber)) {
-    test(s"asof semantics with ttl, $strategy") {
+  /** [[view]] plus a MAP feature `m` = {"k" -> val}: not orderable, so
+    * the view reduces through `max_by` instead of `max(struct)`. */
+  private def mapView(ttl: Option[Long]) = view(ttl).copy(
+    source = feats.withColumn("m", mapOf(lit("k"), $"val")),
+    features = Seq("val", "m"))
+
+  // The two reductions, under their historical test names: orderable
+  // features (max over the packed struct) and a view whose MAP feature
+  // selects the max_by reduction from its schema.
+  for ((label, withMap) <- Seq("MaxByAgg" -> false, "WindowRowNumber" -> true)) {
+    def v(ttl: Option[Long]) = if (withMap) mapView(ttl) else view(ttl)
+    def vals(out: org.apache.spark.sql.DataFrame) = {
+      if (withMap) out.collect().foreach { r =>
+        val m = r.getAs[scala.collection.Map[String, String]]("m")
+        assert(m == (if (r.isNullAt(r.fieldIndex("val"))) null else Map("k" -> r.getAs[String]("val"))))
+      }
+      out.select("eid", "val").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    }
+
+    test(s"asof semantics with ttl, $label") {
       val out = PointInTimeJoin.join(
-        entity, "event_ts", Seq(view(Some(30L * 86400))), strategy, rowIdCol = Some("eid"))
-      val got = out.select("eid", "val").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        entity, "event_ts", Seq(v(Some(30L * 86400))), rowIdCol = Some("eid"))
+      val got = vals(out)
       assert(got(1L) == "b2")   // latest <= ts, created tie-break picks b2
       assert(got(2L) == "a")    // boundary: fts == entity ts is admitted
       assert(got(3L) == null)   // stale feature outside ttl → NULL
@@ -51,11 +74,10 @@ class PointInTimeJoinSpec extends SparkSpec {
       assert(out.count() == 5)  // left join keeps every spine row exactly once
     }
 
-    test(s"unbounded ttl admits old rows, $strategy") {
+    test(s"unbounded ttl admits old rows, $label") {
       val out = PointInTimeJoin.join(
-        entity, "event_ts", Seq(view(None)), strategy, rowIdCol = Some("eid"))
-      val got = out.select("eid", "val").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got(3L) == "stale") // no ttl → the old row matches
+        entity, "event_ts", Seq(v(None)), rowIdCol = Some("eid"))
+      assert(vals(out)(3L) == "stale") // no ttl → the old row matches
     }
   }
 
@@ -111,28 +133,26 @@ class PointInTimeJoinSpec extends SparkSpec {
   }
 
   test("many-view stitch stays linear: no cross-view fan-out, bounded exchanges") {
-    // The 8-view canary (6 time-varying + 2 static): the stitch is a
-    // foldLeft of row-id left joins, so exchanges must grow linearly
-    // in view count — per time-varying view at most 2 hash exchanges
-    // (the view-side shuffle for the dedup window + the stitch join),
-    // and zero nested-loop/cartesian joins anywhere.
+    // The 8-view canary (6 time-varying order views + 2 static
+    // customer views): views group by source, so the plan holds one
+    // candidate join, one aggregation and one row-id stitch per
+    // SOURCE — two of each here, at any view count — and zero
+    // nested-loop/cartesian joins anywhere.
     val df = graft.SparkEntry.queries("pit_manyviews")(spark, sf())
     val plan = df.queryExecution.executedPlan.toString
     val hashEx = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-    val timeVarying = 6
     val stitchJoins =
       "SortMergeJoin \\[__graft_row_id".r.findAllMatchIn(plan).size +
         "BroadcastHashJoin \\[__graft_row_id".r.findAllMatchIn(plan).size
     withClue(s"hashExchanges=$hashEx stitchJoins=$stitchJoins\n" + plan.take(4000)) {
-      // measured: 9 = 1 spine shuffle + 1 final-agg shuffle per
-      // time-varying view + 2 static-view stitches; the bound leaves
-      // room for AQE variance but forbids quadratic blowup
-      assert(hashEx <= 2 * timeVarying + 3)
+      // one agg shuffle per source + the spine shuffle, with room for
+      // AQE variance; independent of the view count
+      assert(hashEx <= 5)
       assert(!plan.contains("CartesianProduct"))
       assert(!plan.contains("BroadcastNestedLoopJoin"))
-      // exactly one stitch join per view — linear in view count
-      assert(stitchJoins == 8)
-      // per-view candidate generation broadcasts the pruned side
+      // exactly one stitch join per source
+      assert(stitchJoins == 2)
+      // per-source candidate generation broadcasts the pruned side
       assert("BroadcastHashJoin".r.findAllMatchIn(plan).size >= 2)
     }
     val n = df.count()
@@ -163,7 +183,7 @@ class PointInTimeJoinSpec extends SparkSpec {
       assert(pSyn.contains("ExistingRDD"))
       assert(!pSyn.contains("events.parquet"))
     }
-    // both stay linear: one stitch join per view, no fan-out
+    // both stay linear: one stitch join per source, no fan-out
     Seq(pNat, pSyn).foreach { p =>
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     }
@@ -207,47 +227,45 @@ class PointInTimeJoinSpec extends SparkSpec {
     assert(out.count() == 0)
   }
 
-  test("property: both strategies agree with a naive oracle on random data") {
-    val rng = new scala.util.Random(42)
-    val e = (1 to 200).map { i =>
+  test("spine rows without an entity timestamp keep every row with typed NULL features") {
+    val noTs = entity.withColumn("event_ts", lit(null).cast(TimestampType))
+    val out = PointInTimeJoin.join(
+      noTs, "event_ts", Seq(view(None)), rowIdCol = Some("eid"))
+    assert(out.columns.toSeq == Seq("eid", "key", "event_ts", "val"))
+    assert(out.schema("val").dataType == StringType)
+    assert(out.count() == 5 && out.filter($"val".isNotNull).isEmpty)
+  }
+
+  /** Random entity spine and feature rows over 8 keys in January 2024:
+    * `(eid, key, event_ts)` and `(key, fts, created, val)`. Created
+    * timestamps repeat, so (fts, created) ties occur within a key. */
+  private def randomData(seed: Int, nEntity: Int, nFeat: Int) = {
+    val rng = new scala.util.Random(seed)
+    val e = (1 to nEntity).map { i =>
       (i.toLong, rng.nextInt(8).toLong,
         ts(f"2024-01-${1 + rng.nextInt(28)}%02d ${rng.nextInt(24)}%02d:00:00"))
     }
-    val f = (1 to 300).map { i =>
+    val f = (1 to nFeat).map { i =>
       (rng.nextInt(8).toLong,
         ts(f"2024-01-${1 + rng.nextInt(28)}%02d ${rng.nextInt(24)}%02d:00:00"),
         ts(f"2024-01-01 00:${i % 60}%02d:00"), i.toLong)
     }
-    val ttl = 7L * 86400
-    // naive in-memory oracle
-    val expected = e.map { case (eid, k, ets) =>
-      val cands = f.filter { case (fk, fts, _, _) =>
-        fk == k && !fts.after(ets) &&
-          fts.getTime >= ets.getTime - ttl * 1000
-      }
-      val best = if (cands.isEmpty) null
-      else cands.maxBy { case (_, fts, cts, v) => (fts.getTime, cts.getTime, v) }._4
-      eid -> best
-    }.toMap
+    (e.toDF("eid", "key", "event_ts"), f.toDF("key", "fts", "created", "val"))
+  }
 
-    val eDf = e.toDF("eid", "key", "event_ts")
-    val fDf = f.toDF("key", "fts", "created", "val")
+  test("property: both strategies agree with a naive oracle on random data") {
+    val (eDf, fDf) = randomData(42, 200, 300)
     val v = ResolvedView("v", fDf, Seq("key" -> "key"), "fts", Some("created"),
-      Seq("val"), Some(ttl))
-    for (strategy <- Seq(PointInTimeJoin.MaxByAgg, PointInTimeJoin.WindowRowNumber)) {
-      val got = PointInTimeJoin.join(eDf, "event_ts", Seq(v), strategy, rowIdCol = Some("eid"))
-        .select("eid", "val").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
-      // (ts, created) pairs may collide for the same key: the naive oracle
-      // breaks that tie on max(val), which is exactly MaxByAgg's order; the
-      // window strategy ties only differ when (fts, cts) collide, so compare
-      // those rows loosely.
-      val strict = strategy == PointInTimeJoin.MaxByAgg
-      expected.foreach { case (eid, exp) =>
-        if (strict) assert(got(eid) == exp, s"eid=$eid")
-        else assert((got(eid) == null) == (exp == null), s"eid=$eid nullness")
-      }
-    }
+      Seq("val"), Some(7L * 86400))
+    // orderable: (fts, created, val) decides every pick exactly
+    AsOfOracle.check(PointInTimeJoin.join(eDf, "event_ts", Seq(v), rowIdCol = Some("eid")),
+      eDf, "eid", "event_ts", Seq(v), Backward)
+    // with a MAP feature the view reduces through max_by: ties on
+    // (fts, created) may pick any tied row, which the oracle admits
+    val withMap = v.copy(source = fDf.withColumn("m", mapOf(lit("k"), $"val")),
+      features = Seq("val", "m"))
+    AsOfOracle.check(PointInTimeJoin.join(eDf, "event_ts", Seq(withMap), rowIdCol = Some("eid")),
+      eDf, "eid", "event_ts", Seq(withMap), Backward)
   }
 
   test("joinFused: handcrafted semantics identical to the unfused reference") {
@@ -259,41 +277,35 @@ class PointInTimeJoinSpec extends SparkSpec {
     ).toDF("key", "fts2", "score")
     val v2 = ResolvedView("v2", extra, Seq("key" -> "key"), "fts2",
       None, Seq("score"), None, outputPrefix = Some("v2"))
-    val fused = PointInTimeJoin.joinFused(
+    val out = PointInTimeJoin.join(
       entity, "event_ts", Seq(v1, v2), rowIdCol = Some("eid"))
-    val ref = PointInTimeJoin.join(
-      entity, "event_ts", Seq(v1, v2), rowIdCol = Some("eid"))
-    assert(fused.columns.toSeq == ref.columns.toSeq) // schema parity incl. order
-    assert(fused.exceptAll(ref).isEmpty && ref.exceptAll(fused).isEmpty)
-    // spot semantics (ttl NULL, tie-break, per-view independence)
-    val r = fused.collect().map(x => x.getAs[Long]("eid") -> x).toMap
-    assert(r(1L).getAs[String]("val") == "b2")
-    assert(r(3L).getAs[String]("val") == null)
-    assert(r(3L).getAs[Double]("v2__score") == 9.9)
-    assert(fused.count() == 5)
+    assert(out.columns.toSeq == Seq("eid", "key", "event_ts", "val", "v2__score"))
+    // hand-computed: ttl NULL, created tie-break, per-view independence
+    val want = Set[(Long, String, Option[Double])](
+      (1L, "b2", Some(2.5)), (2L, "a", None), (3L, null, Some(9.9)),
+      (4L, null, None), (5L, "b2", Some(2.5)))
+    val got = out.collect().map(r => (r.getAs[Long]("eid"), r.getAs[String]("val"),
+      Option(r.get(r.fieldIndex("v2__score"))).map(_.asInstanceOf[Double]))).toSet
+    assert(got == want)
+    assert(out.count() == 5)
+    AsOfOracle.check(out, entity, "eid", "event_ts", Seq(v1, v2), Backward)
   }
 
   test("joinFused: empty spine yields empty result with the full fused schema") {
-    val out = PointInTimeJoin.joinFused(
-      entity.filter($"eid" < 0), "event_ts", Seq(view(None)), rowIdCol = Some("eid"))
-    assert(out.columns.contains("val"))
+    val m = mapView(None).copy(name = "vm", outputPrefix = Some("vm"))
+    val out = PointInTimeJoin.join(
+      entity.filter($"eid" < 0), "event_ts", Seq(view(None), m), rowIdCol = Some("eid"))
+    assert(out.schema.map(f => f.name -> f.dataType) == entity.schema.map(f => f.name -> f.dataType) ++
+      Seq("val" -> StringType, "vm__val" -> StringType,
+        "vm__m" -> m.source.schema("m").dataType))
     assert(out.count() == 0)
   }
 
   test("joinFused: random-data parity with the unfused reference across mixed views") {
-    val rng = new scala.util.Random(7)
-    val e = (1 to 300).map { i =>
-      (i.toLong, rng.nextInt(8).toLong,
-        ts(f"2024-01-${1 + rng.nextInt(28)}%02d ${rng.nextInt(24)}%02d:00:00"))
-    }
-    val f = (1 to 400).map { i =>
-      (rng.nextInt(8).toLong,
-        ts(f"2024-01-${1 + rng.nextInt(28)}%02d ${rng.nextInt(24)}%02d:00:00"),
-        ts(f"2024-01-01 00:${i % 60}%02d:00"), i.toLong)
-    }
-    val eDf = e.toDF("eid", "key", "event_ts")
-    val fDf = f.toDF("key", "fts", "created", "val")
-    // mixed shapes: ttl'd + unbounded + no created-ts + prefixed
+    val (eDf, fDf) = randomData(7, 300, 400)
+    // mixed shapes over one source: ttl'd + unbounded + no created-ts +
+    // per-view predicates (so candidate joins share a scan) + a
+    // pre-filtered source that forms its own group
     val views = Seq(
       ResolvedView("a", fDf, Seq("key" -> "key"), "fts", Some("created"),
         Seq("val"), Some(7L * 86400), outputPrefix = Some("a")),
@@ -301,12 +313,17 @@ class PointInTimeJoinSpec extends SparkSpec {
         Seq("val"), None, outputPrefix = Some("b")),
       ResolvedView("c", fDf.filter($"val" % 2 === 0), Seq("key" -> "key"),
         "fts", Some("created"), Seq("val"), Some(86400L),
-        outputPrefix = Some("c")))
-    val fused = PointInTimeJoin.joinFused(eDf, "event_ts", views, rowIdCol = Some("eid"))
-    val ref = PointInTimeJoin.join(eDf, "event_ts", views, rowIdCol = Some("eid"))
-    assert(fused.columns.toSeq == ref.columns.toSeq)
-    assert(fused.exceptAll(ref).isEmpty && ref.exceptAll(fused).isEmpty)
-    assert(fused.count() == 300)
+        outputPrefix = Some("c")),
+      ResolvedView("d", fDf, Seq("key" -> "key"), "fts", Some("created"),
+        Seq("val", "created"), Some(3L * 86400), outputPrefix = Some("d"),
+        predicate = Some($"val" % 3 === 0)),
+      ResolvedView("e", fDf, Seq("key" -> "key"), "fts", None,
+        Seq("val"), Some(2L * 86400), outputPrefix = Some("e"),
+        predicate = Some($"val" > 200)))
+    val out = PointInTimeJoin.join(eDf, "event_ts", views, rowIdCol = Some("eid"))
+    assert(out.columns.toSeq == Seq("eid", "key", "event_ts", "a__val", "b__val",
+      "c__val", "d__val", "d__created", "e__val"))
+    AsOfOracle.check(out, eDf, "eid", "event_ts", views, Backward)
   }
 
   test("joinFused groups on the CANONICAL source plan: re-loads of one table fuse, different join keys do not") {
@@ -315,8 +332,8 @@ class PointInTimeJoinSpec extends SparkSpec {
       .select($"event_id", $"user_id", $"ts")
     def ordersLoad() = graft.sources.ParquetTables.load(spark, dir + "/orders.parquet")
     // v1 and v2: SEPARATE load() calls of the same path, same keys/ts
-    // — must fuse (reference equality would miss this); v3: same
-    // table but joined on a different entity column — must NOT fuse.
+    // — must share a scan (reference equality would miss this); v3:
+    // same table but joined on a different entity column — must not.
     val v1 = ResolvedView("a", ordersLoad(), Seq("user_id" -> "o_custkey"),
       "o_orderdate", features = Seq("o_totalprice"), outputPrefix = Some("a"))
     val v2 = ResolvedView("b", ordersLoad(), Seq("user_id" -> "o_custkey"),
@@ -324,74 +341,68 @@ class PointInTimeJoinSpec extends SparkSpec {
       predicate = Some($"o_orderstatus" =!= "X"))
     val v3 = ResolvedView("c", ordersLoad(), Seq("event_id" -> "o_orderkey"),
       "o_orderdate", features = Seq("o_totalprice"), outputPrefix = Some("c"))
-    val df = PointInTimeJoin.joinFused(
+    val df = PointInTimeJoin.join(
       entity, "ts", Seq(v1, v2, v3), rowIdCol = Some("event_id"))
     val plan = df.queryExecution.executedPlan.toString
     val ordersScans = plan.linesIterator.count(l =>
       l.contains("FileScan parquet") && l.contains("orders.parquet"))
     withClue(plan.take(3000)) {
-      assert(ordersScans == 2) // {v1,v2} fused into one scan; v3 separate
+      assert(ordersScans == 2) // {v1,v2} share one scan; v3 separate
     }
-    // and the fused result still matches the foldLeft reference
-    val ref = PointInTimeJoin.join(
-      entity, "ts", Seq(v1, v2, v3), rowIdCol = Some("event_id"))
-    assert(df.columns.toSeq == ref.columns.toSeq)
-    assert(df.exceptAll(ref).isEmpty && ref.exceptAll(df).isEmpty)
+    AsOfOracle.check(df, entity, "event_id", "ts", Seq(v1, v2, v3), Backward)
   }
 
-  test("shouldFuse: true only when a source is shared AND all features are MaxByAgg-orderable") {
-    val f = Seq((1L, ts("2024-01-01 00:00:00"), 1.0)).toDF("key", "fts", "x")
-    def v(name: String, src: org.apache.spark.sql.DataFrame, feat: String) =
-      ResolvedView(name, src, Seq("key" -> "key"), "fts", features = Seq(feat))
-    // two views over the SAME frame share a canonical source → fuse
-    assert(PointInTimeJoin.shouldFuse(Seq(v("a", f, "x"), v("b", f, "x"))))
-    // disjoint sources: fusing buys nothing → foldLeft path
-    val g = Seq((1L, ts("2024-01-01 00:00:00"), 2.0)).toDF("key", "fts", "x")
-      .filter($"x" > 0)
-    assert(!PointInTimeJoin.shouldFuse(Seq(v("a", f, "x"), v("b", g, "x"))))
-    // a single view never fuses
-    assert(!PointInTimeJoin.shouldFuse(Seq(v("a", f, "x"))))
-    // an unorderable (map-typed) feature disqualifies the whole set —
-    // max(struct(..., map)) cannot run; joinFused also fails fast on it
-    val m = f.withColumn("mv",
-      org.apache.spark.sql.functions.map(
-        org.apache.spark.sql.functions.lit("k"), $"x"))
-    val withMap = Seq(v("a", m, "x"), v("b", m, "mv"))
-    assert(!PointInTimeJoin.shouldFuse(withMap))
-    val err = intercept[IllegalArgumentException] {
-      PointInTimeJoin.joinFused(entity, "event_ts", withMap, rowIdCol = Some("eid"))
+  test("a MAP feature in a shared-source group reduces through max_by beside max(struct) members") {
+    val dir = sf()
+    val entity = graft.sources.ParquetTables.load(spark, dir + "/events.parquet")
+      .select($"event_id", $"user_id", $"ts")
+    val orders = graft.sources.ParquetTables.load(spark, dir + "/orders.parquet")
+      .withColumn("m", mapOf(lit("price"), $"o_totalprice", lit("key"), $"o_orderkey".cast("double")))
+    val views = Seq(
+      ResolvedView("a", orders, Seq("user_id" -> "o_custkey"), "o_orderdate",
+        features = Seq("o_totalprice"), ttlSeconds = Some(180L * 86400),
+        outputPrefix = Some("a")),
+      ResolvedView("b", orders, Seq("user_id" -> "o_custkey"), "o_orderdate",
+        features = Seq("m", "o_orderkey"), outputPrefix = Some("b"),
+        predicate = Some($"o_orderstatus" === "O")))
+    val df = PointInTimeJoin.join(entity, "ts", views, rowIdCol = Some("event_id"))
+    val plan = df.queryExecution.executedPlan.toString
+    withClue(plan.take(3000)) {
+      assert(plan.linesIterator.count(l =>
+        l.contains("FileScan parquet") && l.contains("orders.parquet")) == 1)
+      assert(plan.contains("max_by"))
     }
-    assert(err.getMessage.contains("unorderable"))
+    AsOfOracle.check(df, entity, "event_id", "ts", views, Backward)
+    // the map and the scalar come from the same picked row
+    assert(df.filter($"b__m".isNotNull &&
+      $"b__m".getItem("key") =!= $"b__o_orderkey".cast("double")).isEmpty)
+    assert(df.filter($"b__m".isNotNull).count() > 0)
   }
 
   test("joinFused 8-view plan: per-SOURCE candidate joins, aggs, and stitches (2 groups, not 8 views)") {
     val fused = graft.SparkEntry.queries("pit_manyviews_fused")(spark, sf())
-    val ref = graft.SparkEntry.queries("pit_manyviews")(spark, sf())
-    // row-for-row identical to the foldLeft reference (which the
-    // DuckDB oracle checks independently)
-    assert(fused.columns.toSeq == ref.columns.toSeq)
-    assert(fused.exceptAll(ref).isEmpty && ref.exceptAll(fused).isEmpty)
     val plan = fused.queryExecution.executedPlan.toString
     val hashEx = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
     val stitchJoins =
       "SortMergeJoin \\[__graft_row_id".r.findAllMatchIn(plan).size +
         "BroadcastHashJoin \\[__graft_row_id".r.findAllMatchIn(plan).size
     // the 8 views span exactly TWO sources (orders, customer): the
-    // fused shape is per-source, independent of view count
+    // plan shape is per-source, independent of view count
     withClue(s"hashExchanges=$hashEx stitchJoins=$stitchJoins\n" + plan.take(4000)) {
-      // one candidate join + one agg + one stitch per GROUP: the
-      // unfused plan has 8 stitch joins and ~9 hash exchanges (see the
-      // many-view test above); fused is 2 of each, at ANY view count
+      // one candidate join + one agg + one stitch per GROUP
       assert(stitchJoins == 2)
       assert(hashEx <= 5)
       assert(!plan.contains("CartesianProduct"))
       assert(!plan.contains("BroadcastNestedLoopJoin"))
       // per-group candidate joins still broadcast the pruned side
       assert("BroadcastHashJoin".r.findAllMatchIn(plan).size >= 2)
-      // candidate fusion: the orders table is scanned ONCE for all six
-      // order views (the foldLeft plan scans it six times)
+      // the orders table is scanned ONCE for all six order views
       assert(plan.linesIterator.count(l =>
         l.contains("FileScan parquet") && l.contains("orders.parquet")) == 1)
     }
+    // left-join semantics: spine cardinality preserved exactly (values
+    // are pinned by the query's DuckDB oracle)
+    assert(fused.count() ==
+      graft.sources.ParquetTables.load(spark, sf() + "/events.parquet").count())
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions.{col, size, sum}
 import graft.SparkSpec
 import graft.encode.TfExample
 import graft.io.TfRecordSink
-import graft.join.{FuseAuto, FuseOff, FuseOn, FusionMode}
 import graft.registry.YamlRegistry
 
 /** End-to-end smoke (SURVEY.md §7.3 slice): entity query over `events`,
@@ -88,28 +87,9 @@ class RunnerSpec extends SparkSpec {
     assert(manifest.contains("\"span\":0"))
   }
 
-  test("fusedJoin job flag: retrieve emits identical rows and schema to the foldLeft path") {
-    val entitySql =
-      """SELECT event_id, user_id AS o_custkey, ts AS event_timestamp, event_type
-        |FROM events""".stripMargin
-    def job(fused: FusionMode) = JobConfig(
-      registry = YamlRegistry.load(registryYaml),
-      dataDir = sf(),
-      features = Right("training_service"),
-      entityQuery = entitySql,
-      entityTs = "event_timestamp",
-      entityRowId = Some("event_id"),
-      fusedJoin = fused)
-    val ref = Runner.retrieve(spark, job(FuseOff), entitySql)
-    val fus = Runner.retrieve(spark, job(FuseOn), entitySql)
-    assert(fus.columns.toSeq == ref.columns.toSeq)
-    assert(fus.exceptAll(ref).isEmpty && ref.exceptAll(fus).isEmpty)
-    assert(fus.count() > 0)
-  }
-
-  test("FuseAuto: fuses exactly when views share a source — Auto plan == On plan on a manyviews registry, == Off plan otherwise") {
-    // three order views + one customer view: orders is shared, so the
-    // Auto heuristic (distinct sources < views) must pick the fused plan
+  test("retrieve scans a shared source once: one candidate join and one stitch per source") {
+    // three order views + one customer view: the order views share one
+    // scan, one aggregation and one row-id stitch
     val manyViewsYaml =
       """project: graft-test
         |views:
@@ -122,6 +102,7 @@ class RunnerSpec extends SparkSpec {
         |    source: orders.parquet
         |    entities: [o_custkey]
         |    timestamp: o_orderdate
+        |    ttlSeconds: 15552000
         |    features: [o_orderstatus]
         |  - name: ord_prio
         |    source: orders.parquet
@@ -137,31 +118,69 @@ class RunnerSpec extends SparkSpec {
     val entitySql =
       """SELECT event_id, user_id AS o_custkey, user_id AS c_custkey,
         |       ts AS event_timestamp FROM events""".stripMargin
-    val feats = Left(Seq(
-      "ord_price:o_totalprice", "ord_status:o_orderstatus",
-      "ord_prio:o_orderpriority", "customer_features:c_acctbal"))
-    def job(yaml: String, f: Either[Seq[String], String], mode: FusionMode) =
-      JobConfig(
-        registry = YamlRegistry.load(yaml), dataDir = sf(), features = f,
-        entityQuery = entitySql, entityTs = "event_timestamp",
-        entityRowId = Some("event_id"), fusedJoin = mode)
-    def plan(mode: FusionMode, yaml: String = manyViewsYaml,
-             f: Either[Seq[String], String] = feats) =
-      Runner.retrieve(spark, job(yaml, f, mode), entitySql)
-        .queryExecution.optimizedPlan
-    val auto = plan(FuseAuto)
-    assert(auto.sameResult(plan(FuseOn)), "Auto must pick the fused plan here")
-    assert(!auto.sameResult(plan(FuseOff)), "fused and foldLeft plans must differ")
-    // a registry with one view per source keeps the exact historical
-    // (unfused) plan under Auto — fusion only triggers when it pays
-    val single = Left(Seq(
-      "ord_price:o_totalprice", "customer_features:c_acctbal"))
-    assert(plan(FuseAuto, f = single).sameResult(plan(FuseOff, f = single)))
-    // and the Auto result is row-identical to the Off result regardless
-    val a = Runner.retrieve(spark, job(manyViewsYaml, feats, FuseAuto), entitySql)
-    val o = Runner.retrieve(spark, job(manyViewsYaml, feats, FuseOff), entitySql)
-    assert(a.columns.toSeq == o.columns.toSeq)
-    assert(a.exceptAll(o).isEmpty && o.exceptAll(a).isEmpty)
+    val job = JobConfig(
+      registry = YamlRegistry.load(manyViewsYaml), dataDir = sf(),
+      features = Left(Seq("ord_price:o_totalprice", "ord_status:o_orderstatus",
+        "ord_prio:o_orderpriority", "customer_features:c_acctbal")),
+      entityQuery = entitySql, entityRowId = Some("event_id"))
+    val out = Runner.retrieve(spark, job, entitySql)
+    val plan = out.queryExecution.executedPlan.toString
+    withClue(plan.take(4000)) {
+      assert(plan.linesIterator.count(l =>
+        l.contains("FileScan parquet") && l.contains("orders.parquet")) == 1)
+      assert(("SortMergeJoin \\[__graft_row_id".r.findAllMatchIn(plan).size +
+        "BroadcastHashJoin \\[__graft_row_id".r.findAllMatchIn(plan).size) == 2)
+    }
+    assert(out.columns.toSeq == Seq("event_id", "o_custkey", "c_custkey",
+      "event_timestamp", "o_totalprice", "o_orderstatus", "o_orderpriority", "c_acctbal"))
+    graft.join.AsOfOracle.check(out, spark.sql(entitySql), "event_id",
+      "event_timestamp", Runner.resolveViews(spark, job))
+  }
+
+  test("a MAP-valued feature view runs through Runner.run and its m.<key> leaves decode") {
+    import org.apache.spark.sql.functions.{lit, map}
+    val scratch = java.nio.file.Files.createTempDirectory("graft-mapview").toString
+    val src = s"$scratch/order_maps.parquet"
+    graft.sources.ParquetTables.load(spark, s"${sf()}/orders.parquet")
+      .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
+        map(lit("price"), col("o_totalprice"),
+          lit("key"), col("o_orderkey").cast("double")).as("m"))
+      .write.parquet(src)
+    val yaml =
+      s"""project: graft-test
+         |views:
+         |  - name: order_maps
+         |    source: $src
+         |    entities: [o_custkey]
+         |    timestamp: o_orderdate
+         |    features: [m, o_orderkey]
+         |""".stripMargin
+    val out = s"$scratch/out"
+    val job = JobConfig(
+      registry = YamlRegistry.load(yaml), dataDir = sf(),
+      features = Left(Seq("order_maps:m", "order_maps:o_orderkey")),
+      entityQuery = "SELECT event_id, user_id AS o_custkey, ts AS event_timestamp FROM events",
+      outputSplits = Seq("train" -> 1), outputPath = out)
+    val results = Runner.run(spark, job)
+    val events = spark.read.parquet(s"${sf()}/events.parquet").count()
+    assert(results.map(_.records).sum == events)
+    val decoded = TfRecordSink.readAll(spark, out, "train").map(TfExample.decode)
+    val leafless = decoded.filterNot(d => d.contains("m.price") && d.contains("m.key"))
+    assert(leafless.isEmpty, s"${leafless.size} records, e.g. ${leafless.headOption}")
+    // the leaves come from the picked row: m.key is that row's order key
+    val matched = decoded.filter(_("o_orderkey") != TfExample.Empty)
+    assert(matched.nonEmpty)
+    matched.foreach { d =>
+      val TfExample.Int64s(Seq(k)) = d("o_orderkey")
+      assert(d("m.key") == TfExample.Floats(Seq(k.toFloat)))
+      assert(d("m.price").isInstanceOf[TfExample.Floats])
+    }
+    decoded.filter(_("o_orderkey") == TfExample.Empty)
+      .foreach(d => assert(d("m.price") == TfExample.Empty && d("m.key") == TfExample.Empty))
+    // and the picks themselves match the naive oracle
+    val entity = spark.sql(job.entityQuery)
+    graft.join.AsOfOracle.check(Runner.retrieve(spark, job, job.entityQuery), entity,
+      "event_id", "event_timestamp", Runner.resolveViews(spark, job))
   }
 
   test("writeSplits executes the upstream pipeline once for N splits") {
@@ -351,6 +370,23 @@ class RunnerSpec extends SparkSpec {
     intercept[IllegalArgumentException](Transforms.applyAll(frame, Transforms.parse(
       s"forward_label(id=row_id,ts=ets,source=$labelsDir,source_ts=lts," +
         "keys=userv,features=outcome,horizon=3600)")))
+  }
+
+  test("forward_label with prefix on a zero-row frame keeps the prefixed label columns") {
+    import spark.implicits._
+    val ts = (s: String) => java.sql.Timestamp.valueOf(s)
+    val frame = Seq((1L, 10L, ts("2024-01-01 10:00:00"))).toDF("row_id", "user", "ets")
+    val labelsDir = java.nio.file.Files.createTempDirectory("fwd-labels-empty").toString
+    Seq((10L, ts("2024-01-01 10:30:00"), 1.0))
+      .toDF("u", "lts", "outcome").write.mode("overwrite").parquet(labelsDir)
+    val spec = Transforms.parse(
+      s"forward_label(id=row_id,ts=ets,source=$labelsDir,source_ts=lts," +
+        "keys=user:u,features=outcome,horizon=3600,prefix=label,keep_ts=true)")
+    val full = Transforms.applyAll(frame, spec)
+    val empty = Transforms.applyAll(frame.filter($"row_id" < 0), spec)
+    assert(empty.columns.toSeq == Seq("row_id", "user", "ets", "label__lts", "label__outcome"))
+    assert(empty.schema == full.schema)
+    assert(empty.count() == 0)
   }
 
   test("dedup_against transform: index dups drop, batch dups collapse, fresh and NULL rows survive") {

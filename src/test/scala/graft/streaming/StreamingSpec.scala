@@ -444,14 +444,13 @@ class StreamingSpec extends SparkSpec with Matchers {
       (1L, t("2024-01-01 09:00:00"), 10.0, 1.0),
       (2L, t("2024-01-01 10:00:00"), 20.0, 2.0))
       .toDF("user_id", "f_ts", "score", "rank")
-    // two views over the SAME source frame: Auto (the default) must
-    // resolve to the fused path once, at stream definition
+    // two views over the SAME source frame: each micro-batch runs the
+    // batch join's plan, one candidate join over the shared source
     val views = Seq(
       ResolvedView("s1", features, Seq("user_id" -> "user_id"), "f_ts",
         features = Seq("score"), outputPrefix = Some("s1")),
       ResolvedView("s2", features, Seq("user_id" -> "user_id"), "f_ts",
         features = Seq("rank"), outputPrefix = Some("s2")))
-    assert(graft.join.PointInTimeJoin.shouldFuse(views))
     val stream = MemoryStream[Ev]
     val got = scala.collection.mutable.ArrayBuffer.empty[String]
     val q = StreamingOps.pitEnrichStream(
@@ -463,7 +462,7 @@ class StreamingSpec extends SparkSpec with Matchers {
         stream.addData(chunk); q.processAllAvailable()
       }
       val twin = graft.join.PointInTimeJoin
-        .joinFused(events.toDF().select("user_id", "ts"), "ts", views)
+        .join(events.toDF().select("user_id", "ts"), "ts", views)
         .collect().map(_.toString)
       got.sorted.toSeq shouldBe twin.toSeq.sorted
     } finally q.stop()
@@ -484,13 +483,12 @@ class StreamingSpec extends SparkSpec with Matchers {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val stream = MemoryStream[Ev]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Double])]
-    // synthetic spine (no rowIdCol), fused path: each micro-batch
+    // synthetic spine (no rowIdCol): each micro-batch
     // localCheckpoints a spine; the wrapper must unpersist it after
     // the sink — across 3 batches NOTHING may accumulate (one block
     // per micro-batch was the r9 monitor-leak class).
     val q = StreamingOps.pitEnrichStream(
-      stream.toDF().select("user_id", "ts"), "ts", Seq(view),
-      fused = graft.join.FuseOn) {
+      stream.toDF().select("user_id", "ts"), "ts", Seq(view)) {
       (batch, _) =>
         got.synchronized {
           got ++= batch.collect().map(r =>
