@@ -52,32 +52,6 @@ object Dedup {
     spark.read.parquet(path)
       .select(col("text_hash"), col("keep_id"), col("dup_count"))
 
-  /** Persist an [[exact]] index as a BUCKETED catalog table — the
-    * at-scale layout for the serve side. At 100 TB the index is one
-    * row per DISTINCT document (billions); a plain parquet index
-    * makes every daily [[exactAgainst]] shuffle those billions on
-    * `text_hash` before the join, every day. Bucketing the table by
-    * `text_hash` at write time pre-partitions it ONCE: the join then
-    * reads index buckets in place and only the arrival batch — the
-    * small side — shuffles (spec-asserted: the bucketed plan carries
-    * strictly fewer exchanges, identical rows). Pick `nBuckets` so a
-    * bucket is a few hundred MB at full index size; the sort within
-    * buckets makes the join's index side sort-free too. */
-  def saveExactIndexBucketed(
-      index: DataFrame, tableName: String, nBuckets: Int): Unit =
-    index.select(col("text_hash"), col("keep_id"), col("dup_count"))
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "text_hash").sortBy("text_hash")
-      .format("parquet").saveAsTable(tableName)
-
-  /** Load a bucketed exact index (inverse of
-    * [[saveExactIndexBucketed]]; bucket metadata rides the catalog
-    * entry, so the exchange-free join shape survives the round trip). */
-  def loadExactIndexBucketed(
-      spark: org.apache.spark.sql.SparkSession, tableName: String): DataFrame =
-    spark.table(tableName)
-      .select(col("text_hash"), col("keep_id"), col("dup_count"))
-
   /** Classify an ingest batch against a persisted [[exact]] index:
     * one row per arrival, `dup_of` = the id it duplicates, NULL for
     * survivors (genuinely new content). Semantics are FIRST-SEEN-WINS
@@ -145,10 +119,7 @@ object Dedup {
     * dup_count) rows land in hash partition directories, so a serve
     * reads only the partitions the ARRIVAL batch's content hashes
     * fall into — ≤ |batch| directories out of a bucket count sized to
-    * the corpus. The bucketed CATALOG layout
-    * ([[saveExactIndexBucketed]]) removes the index-side JOIN
-    * shuffle but still scans every bucket per serve; this one removes
-    * the scan itself. Same one-row-per-hash precondition as
+    * the corpus. Same one-row-per-hash precondition as
     * [[exactAgainst]]. Maintenance: [[mergeExactIndexes]] + re-save
     * (dup_count of repeated hashes must update, so the exact index is
     * rebuild-maintained, not append-maintained — the merge is one

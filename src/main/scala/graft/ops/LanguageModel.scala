@@ -650,22 +650,43 @@ object LanguageModel {
     * denominator tables whose group-bys also carry the COUNT-CLASS
     * type sums (`k1`/`k2`/`k3`) the per-level back-off weight
     * γ(prefix) = D1·N1 + D2·N2 + D3+·N3+ reads. Raw counts only —
-    * the per-level discounts are ESTIMATED AT SERVE TIME from the
-    * tables' own count-of-counts (four 1-row aggregates), so one
-    * saved model serves any corpus snapshot without refitting, the
-    * [[KnModel]] contract at order 5. */
+    * the per-level discounts derive from the tables' own
+    * count-of-counts (four 1-row aggregates), so one saved model
+    * serves any corpus snapshot without refitting, the [[KnModel]]
+    * contract at order 5.
+    *
+    * `disc` holds the discounts when the model came from a layout that
+    * persisted them (the `disc/` or `meta/` sidecar): they derive
+    * deterministically from integer counts and doubles round-trip
+    * parquet exactly, so a sidecar read IS the re-estimation, minus one
+    * full scan of the four numerator tables per serve. None = estimate
+    * on first use.
+    *
+    * `keyBuckets` is set ONLY by [[loadKn5Model]] on a
+    * [[saveKn5ModelPartitioned]] directory (the
+    * [[graft.ops.Retrieval.Bm25Index]] `termBuckets` /
+    * [[graft.ops.Dedup.ExactHashIndex]] `root` precedent): the nine
+    * keyed tables then read from key-hash partition directories and
+    * still carry their `__graft_kb` column, and every broadcast-semi
+    * serve prunes them to the arrival batch's probed buckets first. */
   case class Kn5Model(
       c5: DataFrame, p4: DataFrame, t4: DataFrame, d4: DataFrame,
       t3: DataFrame, d3: DataFrame, t2: DataFrame, d2: DataFrame,
       t1: DataFrame, stats: DataFrame,
-      // Per-level discounts when the model came from a layout that
-      // persisted them (the [[saveKn5Model]] `disc` sidecar — the
-      // partitioned layout's `meta` argument applied to the flat one):
-      // they derive deterministically from the count tables' own
-      // count-of-counts and doubles round-trip parquet exactly, so a
-      // sidecar read IS the re-estimation, minus one full scan of the
-      // four numerator tables per serve. None = estimate on first use.
-      disc: Option[Map[String, (Double, Double, Double)]] = None)
+      disc: Option[Map[String, (Double, Double, Double)]] = None,
+      private[graft] val keyBuckets: Option[Int] = None) {
+
+    /** The nine keyed count tables by name, in [[Kn5Keyed]] order. */
+    private[graft] def keyedTables: Seq[(String, DataFrame)] = Seq(
+      "c5" -> c5, "p4" -> p4, "t4" -> t4, "d4" -> d4, "t3" -> t3,
+      "d3" -> d3, "t2" -> t2, "d2" -> d2, "t1" -> t1)
+
+    /** This model with every keyed table replaced by `f(name, table)`. */
+    private[graft] def mapKeyed(f: (String, DataFrame) => DataFrame): Kn5Model =
+      copy(c5 = f("c5", c5), p4 = f("p4", p4), t4 = f("t4", t4),
+        d4 = f("d4", d4), t3 = f("t3", t3), d3 = f("d3", d3),
+        t2 = f("t2", t2), d2 = f("d2", d2), t1 = f("t1", t1))
+  }
 
   /** Fit the order-5 count statistics over `textCol` of `train`. */
   def fitKn5(train: DataFrame, textCol: String): Kn5Model =
@@ -706,32 +727,40 @@ object LanguageModel {
     val trainFg = ngrams(train, idCol, textCol, 5, "fg").localCheckpoint(false)
     val scoreFg =
       if (score eq train) trainFg else ngrams(score, idCol, textCol, 5, "fg")
-    kn5ScoreJoin(scoreFg,
+    kn5Cascade(scoreFg,
       fitKn5FromFivegrams(trainFg, train, textCol), floorEps, idCol)
   }
 
   /** Score documents against an already-fitted (possibly loaded)
     * order-5 model — the serve face; shares the scoring join with
-    * [[modifiedKn5CrossEntropy]] verbatim, and re-estimates the
-    * per-level discounts from the persisted tables' own
-    * count-of-counts (raw counts are the artifact; the discounts are
-    * derived statistics, so save/load cannot change them — integer
-    * counts round-trip parquet exactly).
+    * [[modifiedKn5CrossEntropy]] verbatim. Discounts come from
+    * `model.disc` (the save-time sidecar) or are re-estimated from the
+    * tables' own count-of-counts (raw counts are the artifact; the
+    * discounts are derived statistics, so save/load cannot change
+    * them — integer counts round-trip parquet exactly).
     *
-    * `broadcastScore` picks the serve PLAN, not the algebra (rows are
-    * identical either way, plan-spec-pinned): `false` (default) runs
-    * the bulk left-join cascade that shuffles the model tables — right
-    * when the score side IS the corpus (self-scoring, index-scale
-    * batches); `true` runs the broadcast-semi plan the streaming serve
-    * uses — every model lookup becomes a left-semi against the
-    * broadcast batch keys followed by a small broadcast left join, so
-    * the ten count tables stream map-side and NO hash exchange touches
-    * a model table. Right for the daily-ingest batch gate, where
-    * re-shuffling millions of count rows to score a small arrival
-    * batch is the whole cost. Requires the batch's 5-gram projection
-    * to be broadcast-sized (the driver holds ~10 × |batch 5-grams|
-    * survivor frames at once) — corpus-sized batches must keep the
-    * default cascade. ENFORCED, not just documented (review finding
+    * The PLAN follows the model and `broadcastScore`, never the
+    * algebra (rows are identical on every plan, plan-spec-pinned):
+    *   - a flat model with `broadcastScore = false` (default) runs the
+    *     bulk left-join cascade that shuffles the model tables — right
+    *     when the score side IS the corpus (self-scoring, index-scale
+    *     batches);
+    *   - `broadcastScore = true` runs the broadcast-semi plan the
+    *     streaming serve uses — every model lookup becomes a left-semi
+    *     against the broadcast batch keys followed by a small
+    *     broadcast left join, so the ten count tables stream map-side
+    *     and NO hash exchange touches a model table. Right for the
+    *     daily-ingest batch gate, where re-shuffling millions of count
+    *     rows to score a small arrival batch is the whole cost;
+    *   - a key-bucketed model ([[loadKn5Model]] of a
+    *     [[saveKn5ModelPartitioned]] directory) always runs that
+    *     broadcast-semi plan, after pruning every table to the
+    *     partitions the batch's keys hash into: serve cost ≈
+    *     |batch keys| × bucket size instead of the whole model.
+    *
+    * The broadcast-semi plan requires the batch's 5-gram projection to
+    * be broadcast-sized (the driver holds ~10 × |batch 5-grams|
+    * survivor frames at once). ENFORCED when asked for (review finding
     * r14): `broadcastScore = true` first counts the batch's distinct
     * 5-gram keys (one count-agg pass over the batch — cheap next to
     * the serve it guards) and REFUSES batches above
@@ -745,7 +774,8 @@ object LanguageModel {
     * plan once more, bounded small by the guard itself): folding the
     * count into the checkpoint would make a REFUSED corpus-sized
     * batch pay a full block-storage materialization just to be told
-    * no. */
+    * no. [[kn5ServeAuto]] makes that choice from the batch's measured
+    * key count. */
   def modifiedKn5Against(
       score: DataFrame, idCol: String, textCol: String, model: Kn5Model,
       floorEps: Double = 1e-6, broadcastScore: Boolean = false,
@@ -761,8 +791,9 @@ object LanguageModel {
           "broadcastScore, or raise broadcastMaxKeys if the driver " +
           "truly has the headroom)")
     }
-    kn5ScoreJoinWith(fg, model,
-      model.disc.getOrElse(mknDiscountsAll(model)), floorEps, idCol, broadcastScore)
+    if (broadcastScore || model.keyBuckets.isDefined)
+      kn5Broadcast(fg, model, floorEps, idCol)
+    else kn5Cascade(fg, model, floorEps, idCol)
   }
 
   /** Default ceiling on the batch's DISTINCT 5-gram keys admitted to
@@ -775,24 +806,22 @@ object LanguageModel {
     * `disc` discount sidecar. The sidecar estimation runs FIRST (one
     * union-agg job): it is the fail-fast gate a degenerate corpus hits
     * at serve time anyway (the [[saveKn5ModelPartitioned]] contract,
-    * now shared by both layouts), and its job materializes the
+    * shared by both layouts), and its job materializes the
     * c5/t4/t3/t2 lazy checkpoints the concurrent writes then share —
     * so no write stalls mid-flight on a sibling's checkpoint blocks.
     * A serve against the loaded model then never re-scans the four
-    * numerator tables for count-of-counts. */
+    * numerator tables for count-of-counts. A model loaded key-bucketed
+    * is written flat (its `__graft_kb` column is dropped). */
   def saveKn5Model(model: Kn5Model, path: String): Unit = {
-    val disc = model.disc.getOrElse(mknDiscountsAll(model))
+    val disc = kn5Discounts(model)
     val spark = model.stats.sparkSession
     import spark.implicits._
     // Eleven independent writes as CONCURRENT jobs (the [[saveKnModel]]
     // argument at order 5 — formerly ten serial job+commit latencies).
     OpsUtil.runConcurrently(
-      (Seq("c5" -> model.c5, "p4" -> model.p4, "t4" -> model.t4,
-        "d4" -> model.d4, "t3" -> model.t3, "d3" -> model.d3,
-        "t2" -> model.t2, "d2" -> model.d2, "t1" -> model.t1)
-        .map { case (n, df) =>
-          () => df.write.mode("overwrite").parquet(s"$path/$n")
-        }) ++ Seq(
+      unbucketed(model).keyedTables.map { case (n, df) =>
+        () => df.write.mode("overwrite").parquet(s"$path/$n")
+      } ++ Seq(
         () => model.stats.coalesce(1).write.mode("overwrite")
           .parquet(s"$path/stats"),
         () => Kn5DiscLevels.map { lvl =>
@@ -805,27 +834,98 @@ object LanguageModel {
   private val Kn5DiscLevels =
     Seq("order 5", "level 4", "level 3", "level 2")
 
-  /** Load a persisted order-5 model (inverse of [[saveKn5Model]]).
-    * Reads the `disc` sidecar when present; flat layouts saved before
-    * the sidecar existed load with `disc = None` and estimate on
-    * first use, exactly as before. */
+  /** The bounds a modified-KN discount triple lives in (Chen-Goodman:
+    * each discount is positive and at most its count class). */
+  private def mknInBounds(d1: Double, d2: Double, d3: Double): Boolean =
+    d1 > 0 && d1 <= 1 && d2 > 0 && d2 <= 2 && d3 > 0 && d3 <= 3
+
+  /** Load a persisted order-5 model — the inverse of BOTH writers, and
+    * the one place that reads which layout a directory holds:
+    *   - `meta/` ([[saveKn5ModelPartitioned]]): key-bucketed. The nine
+    *     keyed tables keep their `__graft_kb` partition column,
+    *     `keyBuckets` and `disc` come from the `meta` sidecar, and one
+    *     file listing per table happens HERE (building each frame's
+    *     file index) — serves prune partitions through the cached
+    *     index with no re-listing.
+    *   - `c5/` ([[saveKn5Model]]): flat. `disc` comes from the `disc/`
+    *     sidecar when present; layouts saved before the sidecar
+    *     existed load with `disc = None` and estimate on first use.
+    *   - neither: fails here, naming both writers, instead of at the
+    *     first table read with a raw path error.
+    * A sidecar is checked before any serve trusts it: the four levels
+    * appear once each, no value is NULL, every triple lies inside the
+    * bounds the estimation enforces (0 < D1 ≤ 1, 0 < D2 ≤ 2,
+    * 0 < D3+ ≤ 3), and `meta` holds one positive `key_buckets`. A bad
+    * sidecar fails naming its path and that contract, not at serve
+    * time as a missing key, a NULL read as 0, or a division by zero. */
   def loadKn5Model(
       spark: org.apache.spark.sql.SparkSession, path: String): Kn5Model = {
-    val discPath = new org.apache.hadoop.fs.Path(path, "disc")
-    val fs = discPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val disc =
-      if (!fs.exists(discPath)) None
-      else Some(spark.read.parquet(discPath.toString).collect()
-        .map(r => r.getAs[String]("level") -> (
-          r.getAs[Double]("d1"), r.getAs[Double]("d2"),
-          r.getAs[Double]("d3"))).toMap)
-    Kn5Model(
-      spark.read.parquet(s"$path/c5"), spark.read.parquet(s"$path/p4"),
-      spark.read.parquet(s"$path/t4"), spark.read.parquet(s"$path/d4"),
-      spark.read.parquet(s"$path/t3"), spark.read.parquet(s"$path/d3"),
-      spark.read.parquet(s"$path/t2"), spark.read.parquet(s"$path/d2"),
-      spark.read.parquet(s"$path/t1"), spark.read.parquet(s"$path/stats"),
-      disc)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def has(sub: String): Boolean =
+      fs.exists(new org.apache.hadoop.fs.Path(root, sub))
+    val bucketed = has("meta")
+    require(bucketed || has("c5"),
+      s"loadKn5Model: $path is neither a saveKn5ModelPartitioned " +
+        "layout (meta/) nor a saveKn5Model layout (c5/) — fit and save " +
+        "one (e.g. `Fit kn5 <corpus> <id> <text> <dir> [keyBuckets]`)")
+    val sidecar =
+      if (bucketed) Some(readKn5Sidecar(spark, s"$path/meta", bucketed))
+      else if (has("disc")) Some(readKn5Sidecar(spark, s"$path/disc", bucketed))
+      else None
+    def table(name: String): DataFrame = spark.read.parquet(s"$path/$name")
+    Kn5Model(table("c5"), table("p4"), table("t4"), table("d4"),
+      table("t3"), table("d3"), table("t2"), table("d2"), table("t1"),
+      table("stats"), sidecar.map(_._1), sidecar.flatMap(_._2))
+  }
+
+  /** The discounts (and, for `meta`, the key-bucket count) of a kn5
+    * sidecar, checked against the contract both writers keep. Fields
+    * are read by NAME, not ordinal (review finding r14). */
+  private def readKn5Sidecar(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      bucketed: Boolean): (Map[String, (Double, Double, Double)], Option[Int]) = {
+    import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
+    val writer = if (bucketed) "saveKn5ModelPartitioned" else "saveKn5Model"
+    def fail(why: String): Nothing = throw new IllegalArgumentException(
+      s"loadKn5Model: $dir breaks the kn5 discount sidecar contract " +
+        s"(one row per level ${Kn5DiscLevels.mkString("'", "', '", "'")}; " +
+        "non-NULL d1, d2, d3 with 0 < d1 <= 1, 0 < d2 <= 2, 0 < d3 <= 3" +
+        (if (bucketed) "; one positive key_buckets" else "") +
+        s"): $why — re-save the model with $writer")
+    val fields = Seq[(String, DataType)]("level" -> StringType,
+      "d1" -> DoubleType, "d2" -> DoubleType, "d3" -> DoubleType) ++
+      (if (bucketed) Seq("key_buckets" -> IntegerType) else Nil)
+    val df = spark.read.parquet(dir)
+    val bad = fields.filterNot { case (n, t) =>
+      df.schema.fieldNames.contains(n) && df.schema(n).dataType == t
+    }
+    if (bad.nonEmpty) fail("missing or mistyped column(s) " +
+      bad.map { case (n, t) => s"$n ${t.simpleString}" }.mkString(", "))
+    val rows = df.select(fields.map(f => col(f._1)): _*).collect()
+    rows.foreach { r =>
+      fields.indices.find(r.isNullAt).foreach { i =>
+        fail(s"NULL ${fields(i)._1}" +
+          (if (r.isNullAt(0)) "" else s" at level '${r.getString(0)}'"))
+      }
+    }
+    val levels = rows.map(_.getString(0)).toSeq
+    if (levels.sorted != Kn5DiscLevels.sorted)
+      fail(s"levels ${levels.mkString("[", ", ", "]")}")
+    val disc = rows.map { r =>
+      val (d1, d2, d3) = (r.getDouble(1), r.getDouble(2), r.getDouble(3))
+      if (!mknInBounds(d1, d2, d3))
+        fail(s"discounts out of bounds at level '${r.getString(0)}' " +
+          s"(D1=$d1, D2=$d2, D3+=$d3)")
+      r.getString(0) -> (d1, d2, d3)
+    }.toMap
+    val keyBuckets =
+      if (!bucketed) None
+      else rows.map(_.getInt(4)).distinct.toSeq match {
+        case Seq(b) if b > 0 => Some(b)
+        case bs => fail(s"key_buckets ${bs.mkString("[", ", ", "]")}")
+      }
+    (disc, keyBuckets)
   }
 
   /** Partition column of the key-bucketed order-5 serve layout. */
@@ -838,40 +938,33 @@ object LanguageModel {
     "t3" -> "s345", "d3" -> "p34", "t2" -> "s45", "d2" -> "w4d",
     "t1" -> "w5c")
 
-  /** A persisted, KEY-BUCKETED order-5 model — the partitioned serve
+  /** Persist an order-5 model KEY-BUCKETED — the partitioned serve
     * layout of the LM face (the [[graft.ops.Dedup.ExactHashIndex]] /
     * bm25 argument applied to language-model serving): each of the
-    * nine keyed count tables lands in `keyBuckets` key-hash partition
+    * nine keyed count tables lands in `nKeyBuckets` key-hash partition
     * directories, so a serve reads only the partitions the ARRIVAL
     * batch's n-gram keys fall into — at real model scale (billions of
     * n-gram types over a reference corpus) the flat layout's
     * every-serve scan of all ten tables is exactly the cost partition
     * pruning kills on every other serve face. The four per-level
-    * discount triples are estimated ONCE at save and ride the `meta`
-    * sidecar (they derive deterministically from the model's own
-    * count-of-counts, and doubles round-trip parquet exactly, so
-    * save-time and load-time estimation are the same bits) — a serve
-    * therefore never scans the numerator tables for count-of-counts,
-    * which would defeat the pruning. */
-  final case class Kn5PartModel(
-      tables: Map[String, DataFrame], stats: DataFrame,
-      keyBuckets: Int, disc: Map[String, (Double, Double, Double)])
-
-  /** Persist an order-5 model KEY-BUCKETED (see [[Kn5PartModel]]).
+    * discount triples are estimated ONCE here and ride the `meta`
+    * sidecar with the bucket count (save-time and load-time
+    * estimation are the same bits), so a serve never scans the
+    * numerator tables for count-of-counts, which would defeat the
+    * pruning. [[loadKn5Model]] reads the layout back.
+    *
     * Size `nKeyBuckets` to the model (constant per-bucket bytes):
     * serve scan ≈ |batch n-gram keys| × bucket size per table, flat
     * as the reference corpus grows. Fails fast (at FIT time, not
     * first serve) when the corpus cannot support order-5 MKN — the
-    * discount estimation runs here anyway. */
+    * discount estimation runs here anyway. A model loaded key-bucketed
+    * is re-bucketed from its tables without their old `__graft_kb`. */
   def saveKn5ModelPartitioned(
       model: Kn5Model, path: String, nKeyBuckets: Int = 64): Unit = {
     require(nKeyBuckets > 0,
       "saveKn5ModelPartitioned: nKeyBuckets must be > 0")
-    val disc = model.disc.getOrElse(mknDiscountsAll(model))
-    val frames = Map(
-      "c5" -> model.c5, "p4" -> model.p4, "t4" -> model.t4,
-      "d4" -> model.d4, "t3" -> model.t3, "d3" -> model.d3,
-      "t2" -> model.t2, "d2" -> model.d2, "t1" -> model.t1)
+    val disc = kn5Discounts(model)
+    val frames = unbucketed(model).keyedTables.toMap
     // Eleven independent writes as CONCURRENT jobs (guide §2.6 — the
     // write phase of the partitioned save is job/commit latency and
     // partition-directory metadata, measured flat in data size at
@@ -899,109 +992,67 @@ object LanguageModel {
           .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")))
   }
 
-  /** Load a persisted [[Kn5PartModel]] (inverse of
-    * [[saveKn5ModelPartitioned]]). One file listing per table happens
-    * HERE (building each frame's file index); serves against the
-    * loaded value prune partitions through the cached index with no
-    * re-listing. */
-  def loadKn5ModelPartitioned(
-      spark: org.apache.spark.sql.SparkSession, path: String): Kn5PartModel = {
-    // Fields by NAME, not ordinal (review finding r14): parquet
-    // happens to preserve write order today, but the sidecar contract
-    // is its column names.
-    val meta = spark.read.parquet(s"$path/meta").collect()
-    val disc = meta.map(r => r.getAs[String]("level") -> (
-      r.getAs[Double]("d1"), r.getAs[Double]("d2"),
-      r.getAs[Double]("d3"))).toMap
-    Kn5PartModel(
-      Kn5Keyed.map { case (name, _) =>
-        name -> spark.read.parquet(s"$path/$name")
-      }.toMap,
-      spark.read.parquet(s"$path/stats"),
-      meta.head.getAs[Int]("key_buckets"), disc)
-  }
+  /** `model` with its keyed tables as plain frames: a key-bucketed
+    * model's tables drop their `__graft_kb` partition column (bucket
+    * directories only change which files a full scan lists, never a
+    * row); a flat model is returned as it is. */
+  private def unbucketed(model: Kn5Model): Kn5Model =
+    if (model.keyBuckets.isEmpty) model
+    else model.mapKeyed((_, df) => df.drop(Kn5KeyBucket))
+      .copy(keyBuckets = None)
 
-  /** [[modifiedKn5Against]] against a persisted [[Kn5PartModel]] —
-    * IDENTICAL output to the flat serve (same counts, same sidecar
-    * discounts, shared scoring join — spec-pinned row parity),
-    * different physics: the batch's nine key projections collect to
-    * ONE distinct (table, bucket) set (≤ 9 × keyBuckets ints, one
-    * job over the staged batch), each count table is pruned to the
-    * probed partitions BEFORE the broadcast-semi join, and the serve
-    * plan keeps the broadcast-score shape (≤ 2 hash exchanges, model
-    * never shuffled). Serve cost ≈ |batch keys| × bucket size instead
-    * of the whole model. */
-  def modifiedKn5AgainstPartitioned(
-      score: DataFrame, idCol: String, textCol: String,
-      model: Kn5PartModel, floorEps: Double = 1e-6): DataFrame =
-    // Staged once: feeds the bucket collect, the nine semi probes,
-    // and the accumulator (the stageExactArrivals contract — a batch
-    // caller owns a one-shot block; the STREAMING face owns its
-    // staging via withStaged + the Staged split below).
-    modifiedKn5AgainstPartitionedStaged(
-      stageKn5Arrivals(score, idCol, textCol).localCheckpoint(false),
-      model, floorEps, idCol)
-
-  /** The partition-pruned serve over an already-STAGED keyed
-    * projection (a [[stageKn5Arrivals]] output the caller has made
-    * stable — it feeds the bucket collect, the nine semi probes, and
-    * the accumulator). No materialization happens here; block
-    * ownership stays with the caller. */
-  private[graft] def modifiedKn5AgainstPartitionedStaged(
-      keyed: DataFrame, model: Kn5PartModel, floorEps: Double,
-      idCol: String): DataFrame = {
-    val probes = keyed.select(explode(array(Kn5Keyed.map { case (name, key) =>
-        struct(lit(name).as("t"),
-          OpsUtil.hashBucket(model.keyBuckets, col(key)).as("b"))
-      }: _*)).as("x"))
-      .select(col("x.t"), col("x.b")).distinct()
-      .collect().groupBy(_.getString(0))
-      .map { case (t, rows) => t -> rows.map(_.getInt(1)).toSeq }
-    def pruned(name: String): DataFrame = {
-      val buckets = probes.getOrElse(name, Seq.empty)
-      val df = model.tables(name)
-      (if (buckets.isEmpty) df.limit(0)
-       else df.filter(col(Kn5KeyBucket).isin(buckets: _*)))
-        .drop(Kn5KeyBucket)
+  /** The prune step of the broadcast-semi serve: against a key-bucketed
+    * model, the staged batch's nine key projections collect to ONE
+    * distinct (table, bucket) set (≤ 9 × keyBuckets ints, one job over
+    * the staged batch) and each count table is cut to the probed
+    * partitions BEFORE the broadcast-semi join. A flat model is
+    * returned as it is. */
+  private def prunedTo(keyed: DataFrame, model: Kn5Model): Kn5Model =
+    model.keyBuckets.fold(model) { nb =>
+      val probes = keyed.select(explode(array(Kn5Keyed.map { case (name, key) =>
+          struct(lit(name).as("t"),
+            OpsUtil.hashBucket(nb, col(key)).as("b"))
+        }: _*)).as("x"))
+        .select(col("x.t"), col("x.b")).distinct()
+        .collect().groupBy(_.getString(0))
+        .map { case (t, rows) => t -> rows.map(_.getInt(1)).toSeq }
+      model.mapKeyed { (name, df) =>
+        val buckets = probes.getOrElse(name, Seq.empty)
+        (if (buckets.isEmpty) df.limit(0)
+         else df.filter(col(Kn5KeyBucket).isin(buckets: _*)))
+          .drop(Kn5KeyBucket)
+      }.copy(keyBuckets = None)
     }
-    kn5ScoreJoinKeyed(keyed,
-      Kn5Model(pruned("c5"), pruned("p4"), pruned("t4"), pruned("d4"),
-        pruned("t3"), pruned("d3"), pruned("t2"), pruned("d2"),
-        pruned("t1"), model.stats),
-      model.disc, floorEps, idCol, broadcastScore = true)
-  }
 
   /** Serve-plan FRONT DOOR for persisted order-5 models (r15 verdict
     * #4): the engine has three serve plans whose crossover is
     * batch-geometry-dependent, and this makes the decision for the
     * caller — the reference's serve contract (one arrival batch
     * against a large offline store, `executor.py:87`) is exactly this
-    * choice pre-made. Routes on (a) what the directory IS (the
-    * [[graft.streaming.StreamingOps.lm5ScoreStreamFrom]] sniff: a
-    * `meta` discount sidecar marks a [[saveKn5ModelPartitioned]]
-    * layout, whose key-bucket geometry the pruned serve's probe set
-    * reads; a `c5/` dir marks a flat [[saveKn5Model]] layout; neither
-    * fails fast with the contract named) and (b) the batch's MEASURED
-    * distinct 5-gram key count — one count-agg pass over the batch's
-    * n-gram plan, deliberately separate from the serve's own staging
-    * (the [[modifiedKn5Against]] guard argument: bounded-small next
-    * to any serve it routes).
+    * choice pre-made. The model comes from [[loadKn5Model]] (either
+    * layout; a directory that is neither fails there with both writers
+    * named), and the route from the batch's MEASURED distinct 5-gram
+    * key count — one count-agg pass over the batch's n-gram plan,
+    * deliberately separate from the serve's own staging (the
+    * [[modifiedKn5Against]] guard argument: bounded-small next to any
+    * serve it routes).
     *
     * Routing: distinct keys ≤ `broadcastMaxKeys` (the driver-side
     * bound — every broadcast-shaped plan holds ~10 × |batch keys|
-    * survivor frames on the driver) takes the broadcast-shaped serve:
-    * partition-PRUNED against a bucketed layout (serve scan ≈
+    * survivor frames on the driver) takes the broadcast-semi serve:
+    * partition-PRUNED against a key-bucketed model (serve scan ≈
     * |batch keys| × bucket size — Kn5GeometryCanary measures it FLAT
-    * at 100× model growth), broadcast-semi against a flat one. Above
-    * the bound — corpus-scale self-scoring — only the shuffle
-    * CASCADE is admissible, served with the sidecar discounts when
-    * the layout has them (no count-of-counts re-scan). Bucket
-    * geometry never flips an admissible batch away from the pruned
-    * plan: even at adversarial geometry (4,200 keys probing 65% of a
-    * 64-bucket-per-scale layout, the k=100 canary) the pruned serve
-    * measured 4.8× faster absolute than the cascade, because pruning
-    * degrades to at-worst a full scan while the broadcast-semi shape
-    * still keeps the model out of every hash exchange.
+    * at 100× model growth), over whole tables against a flat one.
+    * Above the bound — corpus-scale self-scoring — only the shuffle
+    * CASCADE is admissible, over the unioned buckets of a key-bucketed
+    * model, with the sidecar discounts whenever the layout has them
+    * (no count-of-counts re-scan). Bucket geometry never flips an
+    * admissible batch away from the pruned plan: even at adversarial
+    * geometry (4,200 keys probing 65% of a 64-bucket-per-scale layout,
+    * the k=100 canary) the pruned serve measured 4.8× faster absolute
+    * than the cascade, because pruning degrades to at-worst a full
+    * scan while the broadcast-semi shape still keeps the model out of
+    * every hash exchange.
     *
     * Output is identical on every route (shared scoring join,
     * spec-pinned row parity). */
@@ -1018,46 +1069,12 @@ object LanguageModel {
   private[graft] def kn5ServeAutoRouted(
       score: DataFrame, idCol: String, textCol: String, modelDir: String,
       floorEps: Double, broadcastMaxKeys: Long): (DataFrame, String) = {
-    val spark = score.sparkSession
-    val metaPath = new org.apache.hadoop.fs.Path(modelDir, "meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partitioned = fs.exists(metaPath)
-    require(partitioned ||
-        fs.exists(new org.apache.hadoop.fs.Path(modelDir, "c5")),
-      s"kn5ServeAuto: $modelDir is neither a saveKn5ModelPartitioned " +
-        "layout (meta sidecar) nor a saveKn5Model layout (c5/) — fit " +
-        "and save one (e.g. `Fit kn5 <corpus> <id> <text> <dir> " +
-        "[keyBuckets]`)")
+    val model = loadKn5Model(score.sparkSession, modelDir)
     val fg = ngrams(score, idCol, textCol, 5, "fg")
     val n = fg.select(countDistinct(col("fg"))).head().getLong(0)
-    if (n <= broadcastMaxKeys) {
-      if (partitioned)
-        (modifiedKn5AgainstPartitioned(score, idCol, textCol,
-          loadKn5ModelPartitioned(spark, modelDir), floorEps), "pruned")
-      else {
-        val model = loadKn5Model(spark, modelDir)
-        (kn5ScoreJoinWith(fg, model, model.disc.getOrElse(mknDiscountsAll(model)), floorEps,
-          idCol, broadcastScore = true), "broadcast")
-      }
-    } else if (partitioned) {
-      // Corpus-scale batch against a bucketed layout: cascade over
-      // the UNIONED buckets with the sidecar discounts — the one
-      // route that pays neither the driver bound nor a
-      // count-of-counts re-scan. Bucket dirs only change which files
-      // the full scan lists, never a row.
-      val model = loadKn5ModelPartitioned(spark, modelDir)
-      def flat(name: String): DataFrame =
-        model.tables(name).drop(Kn5KeyBucket)
-      (kn5ScoreJoinKeyed(kn5Keyed(fg),
-        Kn5Model(flat("c5"), flat("p4"), flat("t4"), flat("d4"),
-          flat("t3"), flat("d3"), flat("t2"), flat("d2"),
-          flat("t1"), model.stats),
-        model.disc, floorEps, idCol, broadcastScore = false), "cascade")
-    } else {
-      val model = loadKn5Model(spark, modelDir)
-      (kn5ScoreJoinWith(fg, model, model.disc.getOrElse(mknDiscountsAll(model)), floorEps,
-        idCol, broadcastScore = false), "cascade")
-    }
+    if (n > broadcastMaxKeys) (kn5Cascade(fg, model, floorEps, idCol), "cascade")
+    else (kn5Broadcast(fg, model, floorEps, idCol),
+      if (model.keyBuckets.isDefined) "pruned" else "broadcast")
   }
 
   /** Distinct-5-gram table + every derived statistic. Each
@@ -1143,7 +1160,7 @@ object LanguageModel {
       val d1 = 1.0 - 2.0 * y * cc2 / cc1
       val d2 = 2.0 - 3.0 * y * cc3 / cc2
       val d3 = 3.0 - 4.0 * y * cc4 / cc3
-      require(d1 > 0 && d1 <= 1 && d2 > 0 && d2 <= 2 && d3 > 0 && d3 <= 3,
+      require(mknInBounds(d1, d2, d3),
         f"modified KN ($level): estimated discounts out of bounds " +
           f"(D1=$d1%.4f, D2=$d2%.4f, D3+=$d3%.4f)")
       level -> (d1, d2, d3)
@@ -1170,83 +1187,67 @@ object LanguageModel {
         den.cast("double") + gamma / den.cast("double") * lower)
   }
 
-  /** Per-level discounts of a fitted/loaded order-5 model — exposed
-    * (package-private) so a STREAMING consumer can estimate once per
-    * query instead of once per micro-batch (the estimation is a
-    * collect job; [[kn5ScoreJoin]] runs it at DataFrame-build time,
-    * which in a foreachBatch loop would mean one extra job every
-    * trigger). */
-  private[graft] def estimateKn5Discounts(
+  /** The per-level discounts a serve uses: the model's sidecar ones,
+    * or a fresh estimation from its own tables (one union-aggregate
+    * job). */
+  private def kn5Discounts(
       model: Kn5Model): Map[String, (Double, Double, Double)] =
     model.disc.getOrElse(mknDiscountsAll(model))
 
-  /** [[modifiedKn5Against]] with the discounts already estimated —
-    * the streaming serve face's per-batch body. Serves with the
-    * broadcast-score join plan: the batch side is micro-batch-sized
-    * by construction, so the model tables stream map-side instead of
-    * re-shuffling every trigger. The micro-batch's keyed projection is
-    * localCheckpointed inside the join (computed once, not once per
-    * broadcast subtree), but the driver still holds ~10 broadcast
-    * survivor frames of ≤ |batch 5-grams| rows each — bound the
-    * trigger size (maxFilesPerTrigger / maxOffsetsPerTrigger)
-    * accordingly; a corpus-sized batch belongs on the bulk cascade
-    * ([[modifiedKn5Against]] default). */
-  private[graft] def modifiedKn5AgainstPrepared(
-      score: DataFrame, idCol: String, textCol: String, model: Kn5Model,
-      disc: Map[String, (Double, Double, Double)],
-      floorEps: Double): DataFrame =
-    kn5ScoreJoinWith(ngrams(score, idCol, textCol, 5, "fg"), model,
-      disc, floorEps, idCol, broadcastScore = true)
-
-  /** The nine-key arrival projection of the broadcast-score serve —
+  /** The nine-key arrival projection of the broadcast-semi serve —
     * exposed so a STREAMING caller can own its materialization and
     * release it after the sink (the [[graft.ops.Dedup
     * .stageExactArrivals]] / `withStaged` pattern: the internal
     * localCheckpoint of the batch path would leave one lingering
     * block per micro-batch, the r9 monitor-leak class — the soak
-    * caught exactly that on this face). Pair with
-    * [[modifiedKn5AgainstStaged]]. */
+    * caught exactly that on this face). Pair with [[kn5ServeStaged]]. */
   private[graft] def stageKn5Arrivals(
       score: DataFrame, idCol: String, textCol: String): DataFrame =
     kn5Keyed(ngrams(score, idCol, textCol, 5, "fg"))
 
-  /** The broadcast-score join over an already-STAGED keyed projection
-    * (a [[stageKn5Arrivals]] output the caller has made stable — it
-    * feeds the nine broadcast-semi probes AND the accumulator). No
-    * materialization happens here; block ownership stays with the
-    * caller. */
-  private[graft] def modifiedKn5AgainstStaged(
-      keyed: DataFrame, model: Kn5Model,
-      disc: Map[String, (Double, Double, Double)],
-      floorEps: Double, idCol: String): DataFrame =
-    kn5ScoreJoinKeyed(keyed, model, disc, floorEps, idCol,
-      broadcastScore = true)
-
-  /** The order-5 scoring join, shared verbatim by the in-engine and
-    * serve paths. Per-level discounts re-estimated from the model's
-    * own tables (one union-aggregate job). */
-  private def kn5ScoreJoin(
-      scoreFg: DataFrame, model: Kn5Model,
-      floorEps: Double, idCol: String): DataFrame =
-    kn5ScoreJoinWith(scoreFg, model, model.disc.getOrElse(mknDiscountsAll(model)),
-      floorEps, idCol)
-
-  private def kn5ScoreJoinWith(
-      scoreFg: DataFrame, model: Kn5Model,
-      disc: Map[String, (Double, Double, Double)],
-      floorEps: Double, idCol: String,
-      broadcastScore: Boolean = false): DataFrame = {
-    // Under broadcastScore the keyed projection is localCheckpointed:
-    // it feeds the nine broadcast-semi probes AND the accumulator, and
-    // without it each broadcast subtree would re-run the batch's
-    // ngram-explode plan (~10 recomputations per serve, r13 ADVICE).
-    // One-shot BATCH ownership only (blocks release at GC) — a
-    // per-micro-batch caller must use the stageKn5Arrivals /
-    // modifiedKn5AgainstStaged split and release after its sink.
-    val keyed0 = kn5Keyed(scoreFg)
-    val keyed = if (broadcastScore) keyed0.localCheckpoint(false) else keyed0
-    kn5ScoreJoinKeyed(keyed, model, disc, floorEps, idCol, broadcastScore)
+  /** The broadcast-semi serve of `model`, built once: discounts are
+    * resolved HERE (sidecar, or one estimation job), so a stream that
+    * builds it at query start pays no estimation job per trigger. The
+    * returned function takes an already-STAGED keyed projection (a
+    * [[stageKn5Arrivals]] output the caller has made stable — it feeds
+    * the bucket collect, the nine broadcast-semi probes AND the
+    * accumulator), prunes a key-bucketed model to the probed buckets
+    * ([[prunedTo]]; a no-op on a flat model) and runs the
+    * broadcast-semi join. No materialization happens inside; block
+    * ownership stays with the caller. It is the per-micro-batch body
+    * of [[graft.streaming.StreamingOps.lm5ScoreStream]] and the
+    * broadcast-semi plan of [[modifiedKn5Against]]. The driver holds
+    * ~10 broadcast survivor frames of ≤ |batch 5-grams| rows each, so
+    * a stream must bound its trigger size (maxFilesPerTrigger /
+    * maxOffsetsPerTrigger). */
+  private[graft] def kn5ServeStaged(
+      model: Kn5Model, floorEps: Double, idCol: String): DataFrame => DataFrame = {
+    val disc = kn5Discounts(model)
+    keyed => kn5ScoreJoinKeyed(keyed, prunedTo(keyed, model), disc,
+      floorEps, idCol, broadcastScore = true)
   }
+
+  /** The one-shot BATCH broadcast-semi serve. The keyed projection is
+    * localCheckpointed: it feeds the bucket collect, the nine
+    * broadcast-semi probes AND the accumulator, and without it each
+    * broadcast subtree would re-run the batch's ngram-explode plan
+    * (~10 recomputations per serve, r13 ADVICE). Its blocks release at
+    * GC — a per-micro-batch caller stages through [[stageKn5Arrivals]]
+    * instead and releases after its sink. */
+  private def kn5Broadcast(
+      scoreFg: DataFrame, model: Kn5Model,
+      floorEps: Double, idCol: String): DataFrame =
+    kn5ServeStaged(model, floorEps, idCol)(
+      kn5Keyed(scoreFg).localCheckpoint(false))
+
+  /** The shuffle cascade, shared verbatim by the in-engine score and
+    * the bulk serve; a key-bucketed model serves from its unioned
+    * buckets. */
+  private def kn5Cascade(
+      scoreFg: DataFrame, model: Kn5Model,
+      floorEps: Double, idCol: String): DataFrame =
+    kn5ScoreJoinKeyed(kn5Keyed(scoreFg), unbucketed(model),
+      kn5Discounts(model), floorEps, idCol, broadcastScore = false)
 
   /** All nine lookup keys derive from the batch's fg column alone, so
     * they are computed BEFORE any join — which is what makes the

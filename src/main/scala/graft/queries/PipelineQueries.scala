@@ -2211,11 +2211,12 @@ object PipelineQueries {
       Some(LmScoreKn5Sql)),
 
     // The SAME order-5 serve through the KEY-BUCKETED layout
-    // (saveKn5ModelPartitioned → parquet round trips →
-    // modifiedKn5AgainstPartitioned): nine count tables in key-hash
-    // partition directories, the batch's (table, bucket) probe set
-    // pruning each BEFORE the broadcast-semi join, discounts from the
-    // save-time sidecar instead of a per-serve count-of-counts scan.
+    // (saveKn5ModelPartitioned → loadKn5Model → modifiedKn5Against,
+    // which serves a key-bucketed model partition-pruned): nine count
+    // tables in key-hash partition directories, the batch's
+    // (table, bucket) probe set pruning each BEFORE the broadcast-semi
+    // join, discounts from the save-time sidecar instead of a
+    // per-serve count-of-counts scan.
     // Shares lm_score_kn5's SQL VERBATIM — the layout may only change
     // which files are read, never a row (the dedup_*_serve pattern at
     // the LM face).
@@ -2230,9 +2231,8 @@ object PipelineQueries {
             s.sparkContext.applicationId)
         LanguageModel.saveKn5ModelPartitioned(
           LanguageModel.fitKn5(docs, "text"), path, nKeyBuckets = 16)
-        LanguageModel.modifiedKn5AgainstPartitioned(
-          docs, "doc_id", "text",
-          LanguageModel.loadKn5ModelPartitioned(s, path))
+        LanguageModel.modifiedKn5Against(
+          docs, "doc_id", "text", LanguageModel.loadKn5Model(s, path))
       },
       Some(LmScoreKn5Sql)),
 

@@ -482,12 +482,14 @@ object Transforms {
       // the Kneser-Ney count tables were fitted ONCE on a clean
       // reference corpus and every ingest batch scores against them
       // with zero training passes. The model directory knows its own
-      // ORDER (the isPartitionedIndex sniff pattern): a saveKn5Model
-      // layout (c5/) serves order-5 modified KN — CCNet's actual
-      // configuration, discounts self-estimated from the model's
-      // count-of-counts so the discount arg is rejected; a
-      // saveKn3Model layout (c3/) serves order-3 interpolated KN; a
-      // saveKnModel layout (c12/) serves the bigram family.
+      // ORDER (the isPartitionedIndex sniff pattern): a saveKn3Model
+      // layout (c3/) serves order-3 interpolated KN; a saveKnModel
+      // layout (c12/) serves the bigram family; anything else is an
+      // order-5 model — CCNet's actual configuration — which
+      // loadKn5Model reads in either layout (flat, or key-bucketed with
+      // its meta sidecar) or rejects naming both writers. Order-5
+      // discounts come from the model's own count-of-counts, so the
+      // discount arg is rejected there.
       // discount/floor_eps are serve-time knobs of the persisted raw
       // counts (the whole point of shipping them) — surfaced with the
       // operators' own defaults (r12 ADVICE). Same NULL-key bypass
@@ -510,44 +512,35 @@ object Transforms {
         val p = new org.apache.hadoop.fs.Path(t.arg("model"), sub)
         p.getFileSystem(sess.sparkContext.hadoopConfiguration).exists(p)
       }
-      require(!gBroadcast || gHas("c5"),
+      val gKn3 = gHas("c3")
+      val gKn5 = !gKn3 && !gHas("c12")
+      require(!gBroadcast || gKn5,
         "lm_filter_against: serve=broadcast is the order-5 serve plan " +
           "— the order-2/3 cascades have no broadcast-semi variant; " +
           "drop the arg for a c3/c12 model")
       val gStaged = df.localCheckpoint(false)
       val gScorable = gStaged.filter(col(gKey).isNotNull)
       val (gScored, gCeCol) =
-        if (gHas("c5") && gHas("meta")) {
-          // Key-bucketed order-5 layout (saveKn5ModelPartitioned,
-          // detected by its meta sidecar): partition-pruned
-          // broadcast-semi serve, discounts from the sidecar. This
-          // layout IS the broadcast-score plan — serve=shuffle would
-          // contradict it (the bulk cascade needs the flat tables).
-          require(!t.args.get("serve").contains("shuffle"),
+        if (gKn5) {
+          require(gDisc.isEmpty,
+            "lm_filter_against: an order-5 modified-KN model estimates " +
+              "its discounts from its own count-of-counts — drop the " +
+              "discount arg (floor_eps still applies)")
+          val model = graft.ops.LanguageModel.loadKn5Model(sess, t.arg("model"))
+          // A key-bucketed model serves the partition-pruned
+          // broadcast-semi plan by construction — serve=shuffle would
+          // contradict it (the bulk cascade reads whole flat tables).
+          require(model.keyBuckets.isEmpty ||
+              !t.args.get("serve").contains("shuffle"),
             "lm_filter_against: a key-bucketed kn5 model (meta sidecar) " +
               "serves the partition-pruned broadcast-semi plan by " +
               "construction — drop serve=shuffle or point at a flat " +
               "saveKn5Model layout")
-          require(gDisc.isEmpty,
-            "lm_filter_against: an order-5 modified-KN model estimates " +
-              "its discounts from its own count-of-counts — drop the " +
-              "discount arg (floor_eps still applies)")
-          (graft.ops.LanguageModel.modifiedKn5AgainstPartitioned(
-            gScorable, gKey, gText,
-            graft.ops.LanguageModel.loadKn5ModelPartitioned(
-              sess, t.arg("model")),
-            floorEps = gEps), "kn5_cross_entropy")
-        } else if (gHas("c5")) {
-          require(gDisc.isEmpty,
-            "lm_filter_against: an order-5 modified-KN model estimates " +
-              "its discounts from its own count-of-counts — drop the " +
-              "discount arg (floor_eps still applies)")
           (graft.ops.LanguageModel.modifiedKn5Against(
-            gScorable, gKey, gText,
-            graft.ops.LanguageModel.loadKn5Model(sess, t.arg("model")),
+            gScorable, gKey, gText, model,
             floorEps = gEps, broadcastScore = gBroadcast),
             "kn5_cross_entropy")
-        } else if (gHas("c3")) {
+        } else if (gKn3) {
           (graft.ops.LanguageModel.kneserNeyTrigramAgainst(
             gScorable, gKey, gText,
             graft.ops.LanguageModel.loadKn3Model(sess, t.arg("model")),

@@ -920,7 +920,8 @@ object StreamingOps {
     * its writer; when the query bearing that name terminates, the
     * frames unpersist and the listener removes itself — retired
     * scoring queries cannot leak cached model blocks (the r12 ADVICE
-    * class, now shared by every model-serving stream). The started
+    * class; [[lmScoreStream]] pins its model, [[lm5ScoreStream]]
+    * serves from storage and needs none). The started
     * event is the only one carrying the name; its id is remembered
     * and matched on termination (per-query listener events are
     * ordered, so the id is always set first). A caller that OVERRIDES
@@ -978,125 +979,50 @@ object StreamingOps {
 
   /** Streaming ORDER-5 modified-KN scoring — the [[lmScoreStream]]
     * deployment shape at KenLM's production order: document batches
-    * score against a prebuilt [[graft.ops.LanguageModel.Kn5Model]]
-    * with zero training passes. The per-level discounts are estimated
-    * ONCE per query (one union-aggregate job over the persisted
-    * tables, at stream build — not per micro-batch), and the ten
-    * count tables persist for the query's lifetime with the same
-    * termination-keyed auto-release as [[lmScoreStream]]. Shares
-    * [[graft.ops.LanguageModel.modifiedKn5AgainstPrepared]] with the
-    * batch serve, so per-batch rows are the batch operator's by
-    * construction; the lm_score_kn5_serve oracle covers the scoring
-    * join.
-    *
-    * DEPRECATED deployment shape (kept for sidecar-less flat
-    * [[graft.ops.LanguageModel.saveKn5Model]] layouts only): pinning
-    * ten count tables in executor memory for the stream's lifetime
-    * assumes the model fits cluster memory — false at real reference-
-    * corpus scale. Prefer [[lm5ScoreStreamFrom]] (routes to the
-    * storage-serving partition-pruned stream whenever the model dir
-    * carries the `meta` sidecar, zero pinned blocks) or re-save via
-    * `saveKn5ModelPartitioned`. See README "Behavior changes". */
+    * score against a [[graft.ops.LanguageModel.Kn5Model]] with zero
+    * training passes, served FROM STORAGE — nothing is persisted for
+    * the query's lifetime and no termination listener is registered,
+    * because there is nothing to release. Discounts come from
+    * `model.disc` (the save-time sidecar) or are estimated ONCE here,
+    * at stream build, never per micro-batch. Each micro-batch stages
+    * its nine-key 5-gram projection via withStaged (released after the
+    * sink — the batch path's internal localCheckpoint would leave one
+    * lingering block per micro-batch; the soak caught it) and runs the
+    * broadcast-semi serve: against a key-bucketed model
+    * ([[graft.ops.LanguageModel.loadKn5Model]] of a
+    * `saveKn5ModelPartitioned` directory) every table is first pruned
+    * to the batch's probed key buckets; a flat model's tables are read
+    * whole. Rows per batch are
+    * [[graft.ops.LanguageModel.modifiedKn5Against]]'s by construction
+    * (shared code path; the lm_score_kn5_serve / lm_score_kn5_pruned
+    * oracles cover the serve). The driver holds ~10 broadcast survivor
+    * frames of ≤ |batch 5-grams| rows each — bound the trigger size
+    * (maxFilesPerTrigger / maxOffsetsPerTrigger) accordingly. */
   def lm5ScoreStream(
       docs: DataFrame, idCol: String, textCol: String,
       model: graft.ops.LanguageModel.Kn5Model,
       floorEps: Double = 1e-6)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val servable = graft.ops.LanguageModel.Kn5Model(
-      model.c5.persist(lvl), model.p4.persist(lvl),
-      model.t4.persist(lvl), model.d4.persist(lvl),
-      model.t3.persist(lvl), model.d3.persist(lvl),
-      model.t2.persist(lvl), model.d2.persist(lvl),
-      model.t1.persist(lvl), model.stats.persist(lvl))
-    val frames = Seq(servable.c5, servable.p4, servable.t4, servable.d4,
-      servable.t3, servable.d3, servable.t2, servable.d2,
-      servable.t1, servable.stats)
-    // Estimated AFTER the persists so the one estimation job also
-    // warms the caches every later batch reads.
-    val disc = graft.ops.LanguageModel.estimateKn5Discounts(servable)
-    val queryName = releaseOnTermination(docs.sparkSession,
-      "graft-lm5-score", frames, lvl)
-    docs.writeStream.queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // The batch's keyed 5-gram projection feeds the nine
-        // broadcast-semi probes AND the accumulator — staged via
-        // withStaged so the block releases after the sink (the batch
-        // path's internal localCheckpoint would leave one lingering
-        // block per micro-batch; the soak caught it).
-        withStaged(graft.ops.LanguageModel.stageKn5Arrivals(
-            batch.toDF(), idCol, textCol), batchId, sink)(
-          keyed => graft.ops.LanguageModel.modifiedKn5AgainstStaged(
-            keyed, servable, disc, floorEps, idCol))
-      }
-  }
-
-  /** [[lm5ScoreStream]] against a KEY-BUCKETED
-    * [[graft.ops.LanguageModel.Kn5PartModel]] — the STORAGE-SERVING
-    * streaming posture (the [[exactDedupStream]] partitioned-overload
-    * pattern): the model is NOT memory-pinned (the flat overload's
-    * ten persists assume the count tables fit cluster memory — false
-    * once the reference corpus outgrows it); each micro-batch's nine
-    * key projections prune every table to the probed key buckets, the
-    * discounts come from the save-time sidecar (zero per-query
-    * estimation jobs), and there is no termination listener because
-    * there is nothing to release — the batch's own staged projection
-    * is released after the sink via the stage/Staged split. Rows per
-    * batch are [[graft.ops.LanguageModel.modifiedKn5AgainstPartitioned]]'s
-    * by construction (shared code path; the lm_score_kn5_pruned
-    * oracle covers the serve). */
-  def lm5ScoreStream(
-      docs: DataFrame, idCol: String, textCol: String,
-      model: graft.ops.LanguageModel.Kn5PartModel,
-      floorEps: Double)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    val serve = graft.ops.LanguageModel.kn5ServeStaged(model, floorEps, idCol)
     docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
       withStaged(graft.ops.LanguageModel.stageKn5Arrivals(
-          batch.toDF(), idCol, textCol), batchId, sink)(
-        keyed => graft.ops.LanguageModel.modifiedKn5AgainstPartitionedStaged(
-          keyed, model, floorEps, idCol))
+          batch.toDF(), idCol, textCol), batchId, sink)(serve)
     }
+  }
 
   /** Order-5 scoring stream FROM A MODEL DIRECTORY — the deployment
-    * entry point, routing by what the directory IS (the
-    * lm_filter_against sniff, streaming edition): a
-    * [[graft.ops.LanguageModel.saveKn5ModelPartitioned]] layout
-    * (detected by its `meta` discount sidecar) serves the
-    * storage-serving partition-pruned stream — the model is never
-    * memory-pinned, discounts come from the sidecar, ZERO persisted
-    * blocks for the stream's lifetime; a flat
-    * [[graft.ops.LanguageModel.saveKn5Model]] layout falls back to
-    * the memory-pinned flat stream, which is a DEPRECATED deployment
-    * shape (it persists all ten count tables for the query's lifetime
-    * — untenable once the reference corpus outgrows cluster memory;
-    * see README "Behavior changes"): re-save the model with
-    * `saveKn5ModelPartitioned` to get the storage-serving posture. */
+    * entry point: [[lm5ScoreStream]] over
+    * [[graft.ops.LanguageModel.loadKn5Model]], which reads either
+    * layout (a `saveKn5ModelPartitioned` directory serves
+    * partition-pruned, a `saveKn5Model` one whole) and fails at stream
+    * build, naming both writers, on a directory that is neither. */
   def lm5ScoreStreamFrom(
       docs: DataFrame, idCol: String, textCol: String,
       modelDir: String, floorEps: Double = 1e-6)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val spark = docs.sparkSession
-    val meta = new org.apache.hadoop.fs.Path(modelDir, "meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasSidecar = fs.exists(meta)
-    // A non-model dir should die HERE with the contract named, not at
-    // first table read with a raw path-does-not-exist (the
-    // lm_filter_against sniff's strictness, streaming edition).
-    require(hasSidecar ||
-        fs.exists(new org.apache.hadoop.fs.Path(modelDir, "c5")),
-      s"lm5ScoreStreamFrom: $modelDir is neither a " +
-        "saveKn5ModelPartitioned layout (meta sidecar) nor a " +
-        "saveKn5Model layout (c5/) — fit and save one (e.g. " +
-        "`Fit kn5 <corpus> <id> <text> <dir> [keyBuckets]`)")
-    if (hasSidecar)
-      lm5ScoreStream(docs, idCol, textCol,
-        graft.ops.LanguageModel.loadKn5ModelPartitioned(spark, modelDir),
-        floorEps)(sink)
-    else
-      lm5ScoreStream(docs, idCol, textCol,
-        graft.ops.LanguageModel.loadKn5Model(spark, modelDir),
-        floorEps)(sink)
-  }
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    lm5ScoreStream(docs, idCol, textCol,
+      graft.ops.LanguageModel.loadKn5Model(docs.sparkSession, modelDir),
+      floorEps)(sink)
 
   /** Streaming sequence packing: documents arriving on a stream are
     * assigned (bucket, seq_idx, tokens_before) against a running

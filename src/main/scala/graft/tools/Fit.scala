@@ -161,8 +161,9 @@ object Fit {
           }
         size match {
           // size = key-bucket count -> the partition-pruned serve
-          // layout (saveKn5ModelPartitioned; lm_filter_against sniffs
-          // its meta sidecar and serves broadcast-semi + pruned).
+          // layout (saveKn5ModelPartitioned; loadKn5Model reads its
+          // meta sidecar, so lm_filter_against, kn5ServeAuto and
+          // lm5ScoreStreamFrom serve it broadcast-semi + pruned).
           case Some(b) => validated(
             graft.ops.LanguageModel.saveKn5ModelPartitioned(model, outDir, b))
           case None =>

@@ -91,15 +91,16 @@ object Kn5GeometryCanary {
       .select("fg").distinct().count()
     println(s"""{"batch_docs":$batchN,"distinct_5gram_keys":$distinctKeys}""")
 
-    def probedShare(model: LanguageModel.Kn5PartModel): (Long, Long) = {
+    def probedShare(model: LanguageModel.Kn5Model): (Long, Long) = {
+      val buckets = model.keyBuckets.get
       val keyed = LanguageModel.stageKn5Arrivals(batch, "doc_id", "text")
       val probed = keyed.select(explode(array(
           LanguageModel.Kn5Keyed.map { case (name, key) =>
             struct(lit(name).as("t"),
-              graft.ops.OpsUtil.hashBucket(model.keyBuckets, col(key)).as("b"))
+              graft.ops.OpsUtil.hashBucket(buckets, col(key)).as("b"))
           }: _*)).as("x"))
         .select(col("x.t"), col("x.b")).distinct().count()
-      (probed, 9L * model.keyBuckets)
+      (probed, 9L * buckets)
     }
 
     def time(f: () => DataFrame): Double = {
@@ -138,13 +139,15 @@ object Kn5GeometryCanary {
       }
       spark.sqlContext.clearCache()
       val flat = LanguageModel.loadKn5Model(spark, s"$d/flat")
-      val part = LanguageModel.loadKn5ModelPartitioned(spark, s"$d/part")
+      val part = LanguageModel.loadKn5Model(spark, s"$d/part")
       val modelRows = flat.c5.count()
       val (probed, total) = probedShare(part)
       shares += k -> (probed, total)
 
       val faces = Map(
-        "pruned" -> (() => LanguageModel.modifiedKn5AgainstPartitioned(
+        // Both layouts load through loadKn5Model; the key-bucketed one
+        // serves partition-pruned.
+        "pruned" -> (() => LanguageModel.modifiedKn5Against(
           batch, "doc_id", "text", part)),
         "flat_cascade" -> (() => LanguageModel.modifiedKn5Against(
           batch, "doc_id", "text", flat)),
@@ -152,16 +155,16 @@ object Kn5GeometryCanary {
           batch, "doc_id", "text", flat, broadcastScore = true)),
         // The serve-plan FRONT DOOR (r15 verdict #4) at production
         // geometry — routes "pruned" here (36 keys ≪ the driver
-        // bound). Timed WITH its per-call partitioned-model load
-        // (listing ∝ 9 × 64·scale bucket dirs) + the distinct-key
-        // routing pass — costs the three pre-loaded faces above never
-        // pay — so its apples-to-apples comparator is pruned_cold:
-        // the hand-picked pruned serve paying the same per-call load.
+        // bound). Timed WITH its per-call loadKn5Model (listing
+        // ∝ 9 × 64·scale bucket dirs) + the distinct-key routing pass
+        // — costs the three pre-loaded faces above never pay — so its
+        // apples-to-apples comparator is pruned_cold: the hand-picked
+        // pruned serve paying the same per-call load.
         "auto" -> (() => LanguageModel.kn5ServeAuto(
           batch, "doc_id", "text", s"$d/part")),
-        "pruned_cold" -> (() => LanguageModel.modifiedKn5AgainstPartitioned(
+        "pruned_cold" -> (() => LanguageModel.modifiedKn5Against(
           batch, "doc_id", "text",
-          LanguageModel.loadKn5ModelPartitioned(spark, s"$d/part"))))
+          LanguageModel.loadKn5Model(spark, s"$d/part"))))
 
       // Gates before timing: same-scale layout parity (full rows incl.
       // scores) and the constant batch row count.

@@ -105,9 +105,9 @@ object Kn5WriteDecomp {
         // SERVE: blocks released first — the storage-serving clock.
         release()
         val tServe = clock {
-          LanguageModel.modifiedKn5AgainstPartitioned(
+          LanguageModel.modifiedKn5Against(
             docs, "doc_id", "text",
-            LanguageModel.loadKn5ModelPartitioned(spark, modelDir))
+            LanguageModel.loadKn5Model(spark, modelDir))
             .write.format("noop").mode("overwrite").save()
         }
         if (rep > 0) { // rep 0 is the untimed warmup

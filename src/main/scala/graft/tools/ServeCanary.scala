@@ -238,7 +238,7 @@ object ServeCanary {
       val winFps = Dedup.loadWinnowFpIndex(spark, s"$d/winnowp")
       val knModel = LanguageModel.loadKnModel(spark, s"$d/knlm")
       val kn5Flat = LanguageModel.loadKn5Model(spark, s"$d/kn5lm")
-      val kn5Part = LanguageModel.loadKn5ModelPartitioned(spark, s"$d/kn5lmp")
+      val kn5Part = LanguageModel.loadKn5Model(spark, s"$d/kn5lmp")
       val bm25Flat = Retrieval.loadBm25Index(spark, s"$d/bm25")
       val bm25Part = Retrieval.loadBm25Index(spark, s"$d/bm25p")
       val annIdx = Similarity.loadIndex(s"$d/ann", spark)
@@ -295,16 +295,16 @@ object ServeCanary {
         // gate is the row COUNT (≥5-token docs of the fixed batch),
         // layout parity below is exceptAll over full rows incl.
         // scores (same counts, same sidecar discounts, plan-pinned
-        // row-identical algebra).
+        // row-identical algebra). Both layouts load through
+        // loadKn5Model; the key-bucketed one serves partition-pruned.
         "kn5_against" -> (() => LanguageModel.modifiedKn5Against(
           batch, "doc_id", "text", kn5Flat)),
-        "kn5_against_pruned" -> (() =>
-          LanguageModel.modifiedKn5AgainstPartitioned(
-            batch, "doc_id", "text", kn5Part)),
+        "kn5_against_pruned" -> (() => LanguageModel.modifiedKn5Against(
+          batch, "doc_id", "text", kn5Part)),
         // Serve-plan FRONT DOOR (r15 verdict #4): dir-based routing —
         // this batch's distinct 5-gram count is far under the driver
         // bound, so auto routes "pruned". Its wall includes the
-        // per-call model LOAD (listing ∝ bucket count) plus the
+        // per-call loadKn5Model (listing ∝ bucket count) plus the
         // distinct-key routing pass, which the pre-loaded faces above
         // never pay — so the apples-to-apples comparator is
         // kn5_against_pruned_cold below, the HAND-PICKED pruned serve
@@ -312,10 +312,9 @@ object ServeCanary {
         // front door costs one bounded count-agg over the batch.
         "kn5_auto" -> (() => LanguageModel.kn5ServeAuto(
           batch, "doc_id", "text", s"$d/kn5lmp")),
-        "kn5_against_pruned_cold" -> (() =>
-          LanguageModel.modifiedKn5AgainstPartitioned(
-            batch, "doc_id", "text",
-            LanguageModel.loadKn5ModelPartitioned(spark, s"$d/kn5lmp"))),
+        "kn5_against_pruned_cold" -> (() => LanguageModel.modifiedKn5Against(
+          batch, "doc_id", "text",
+          LanguageModel.loadKn5Model(spark, s"$d/kn5lmp"))),
         "bm25_serve" -> (() => Retrieval.bm25ServeBatch(
           bm25Flat, queries, "query_id", "query_text", k = 10)),
         "bm25_serve_pruned" -> (() => Retrieval.bm25ServeBatch(

@@ -110,29 +110,6 @@ class DedupSpec extends SparkSpec with Matchers {
     filesRead(idx.rows) should be > 4L
   }
 
-  test("bucketed exact index: identical rows, strictly fewer exchanges (index side reads in place)") {
-    val history = docsDf((1L to 200L).map(i => i -> s"doc content ${i % 40}"))
-    val arrivals = docsDf((1000L to 1019L).map(i => i -> s"doc content ${i % 50}"))
-    val index = Dedup.exact(history, "doc_id", "text")
-    Dedup.saveExactIndexBucketed(index, "graft_test_xidx", 8)
-    try {
-      val bucketed = Dedup.exactAgainst(
-        arrivals, Dedup.loadExactIndexBucketed(spark, "graft_test_xidx"),
-        "doc_id", "text")
-      val plain = Dedup.exactAgainst(arrivals, index, "doc_id", "text")
-      bucketed.columns.toSeq shouldBe plain.columns.toSeq
-      bucketed.exceptAll(plain).count() shouldBe 0L
-      plain.exceptAll(bucketed).count() shouldBe 0L
-      // the at-scale claim: the bucketed index joins WITHOUT being
-      // re-shuffled — only the arrival side exchanges
-      def exchanges(df: org.apache.spark.sql.DataFrame) =
-        "Exchange".r.findAllMatchIn(df.queryExecution.executedPlan.toString).size
-      withClue(bucketed.queryExecution.executedPlan.toString.take(3000)) {
-        exchanges(bucketed) should be < exchanges(plain)
-      }
-    } finally spark.sql("DROP TABLE IF EXISTS graft_test_xidx"): Unit
-  }
-
   test("sequential ingest property: a k-day merge loop converges to the batch index; daily classifications stay consistent") {
     // The real ingest loop: day 0 seeds the index; each later day is
     // classified against the running index, then folded in. After k

@@ -757,8 +757,11 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     // parquet exactly, so a serve that reads the sidecar serves the
     // same doubles a count-of-counts re-scan would compute.
     loaded.disc shouldBe defined
-    loaded.disc.get shouldBe LanguageModel.estimateKn5Discounts(
-      loaded.copy(disc = None))
+    // Fresh estimation: re-saving the model without its discounts makes
+    // saveKn5Model estimate them again from the loaded count tables.
+    val fresh = java.nio.file.Files.createTempDirectory("kn5-disc-fresh").toString
+    LanguageModel.saveKn5Model(loaded.copy(disc = None), fresh)
+    loaded.disc shouldBe LanguageModel.loadKn5Model(spark, fresh).disc
     // A pre-sidecar layout (disc/ absent) still loads and estimates.
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
@@ -781,7 +784,6 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     LanguageModel.saveKn5Model(LanguageModel.fitKn5(docs, "text"), dir)
     val model = LanguageModel.loadKn5Model(spark, dir)
     val batch = Seq((100L, "the cat sat on the mat")).toDF("doc_id", "text")
-    val disc = LanguageModel.estimateKn5Discounts(model)
     def hashExchanges(df: org.apache.spark.sql.DataFrame): Int =
       "Exchange hashpartitioning".r
         .findAllMatchIn(df.queryExecution.executedPlan.toString).size
@@ -793,9 +795,13 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     // CONSTRUCTION, not by size estimation.
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // The stream's per-batch body: the staged projection, persisted
+    // the way withStaged persists it, through the serve built once per
+    // stream.
+    val staged = LanguageModel.stageKn5Arrivals(batch, "doc_id", "text")
+      .persist()
     try {
-      val streamPlan = LanguageModel.modifiedKn5AgainstPrepared(
-        batch, "doc_id", "text", model, disc, 1e-6)
+      val streamPlan = LanguageModel.kn5ServeStaged(model, 1e-6, "doc_id")(staged)
       val bulkPlan = LanguageModel.modifiedKn5Against(
         batch, "doc_id", "text", model)
       // Broadcast-score: the only hash shuffle left is the final
@@ -822,7 +828,10 @@ class LanguageModelSpec extends SparkSpec with Matchers {
       }
       batchServe.collect().map(_.toString).sorted.toSeq shouldBe
         bulkPlan.collect().map(_.toString).sorted.toSeq
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    } finally {
+      staged.unpersist()
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    }
   }
 
   test("broadcastScore enforces its batch bound — corpus-sized batches are refused, bounded ones serve unchanged") {
@@ -863,14 +872,18 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     val dir = java.nio.file.Files.createTempDirectory("kn5-part").toString
     val model = LanguageModel.fitKn5(docs, "text")
     LanguageModel.saveKn5ModelPartitioned(model, dir, nKeyBuckets = 8)
-    val part = LanguageModel.loadKn5ModelPartitioned(spark, dir)
-    part.keyBuckets shouldBe 8
-    // Sidecar discounts == fit-time estimation (deterministic driver
-    // arithmetic; doubles round-trip parquet exactly).
-    part.disc shouldBe LanguageModel.estimateKn5Discounts(model)
+    val part = LanguageModel.loadKn5Model(spark, dir)
+    part.keyBuckets shouldBe Some(8)
+    // Sidecar discounts == the flat layout's fit-time estimation
+    // (deterministic driver arithmetic; doubles round-trip parquet
+    // exactly).
+    val flatDir = java.nio.file.Files.createTempDirectory("kn5-part-flat").toString
+    LanguageModel.saveKn5Model(model, flatDir)
+    part.disc shouldBe defined
+    part.disc shouldBe LanguageModel.loadKn5Model(spark, flatDir).disc
     // Row parity with the in-engine score AND the flat serve — the
     // layout may change which files are read, never a row.
-    val served = LanguageModel.modifiedKn5AgainstPartitioned(
+    val served = LanguageModel.modifiedKn5Against(
       docs, "doc_id", "text", part)
     served.collect().map(_.toString).sorted.toSeq shouldBe
       LanguageModel.modifiedKn5Against(docs, "doc_id", "text", model)
@@ -879,7 +892,7 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     // fewer files than the full table (the layout's whole point).
     def filesRead(df: org.apache.spark.sql.DataFrame): Long =
       df.select(input_file_name()).distinct().count()
-    val c5 = part.tables("c5")
+    val c5 = part.c5
     val full = filesRead(c5)
     full should be >= 4L // the corpus fills most of 8 buckets
     filesRead(c5.filter(col(LanguageModel.Kn5KeyBucket) === 0)) should
@@ -890,7 +903,7 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val oneServe = LanguageModel.modifiedKn5AgainstPartitioned(
+      val oneServe = LanguageModel.modifiedKn5Against(
         one, "doc_id", "text", part)
       // Broadcast-score shape survives the pruning.
       withClue(oneServe.queryExecution.executedPlan.toString.take(4000)) {
@@ -947,6 +960,109 @@ class LanguageModelSpec extends SparkSpec with Matchers {
       LanguageModel.kn5ServeAuto(docs, "doc_id", "text", junk)
     }
     e.getMessage should include("saveKn5ModelPartitioned")
+  }
+
+  test("kn5 layouts round-trip: bucketed → flat → loaded keeps every table and serve") {
+    import spark.implicits._
+    val docs = kn5Corpus(40).toDF("doc_id", "text")
+    val fit = LanguageModel.fitKn5(docs, "text")
+    val root = java.nio.file.Files.createTempDirectory("kn5-trip").toString
+    LanguageModel.saveKn5ModelPartitioned(fit, s"$root/part", nKeyBuckets = 8)
+    val part = LanguageModel.loadKn5Model(spark, s"$root/part")
+    part.keyBuckets shouldBe Some(8)
+    part.c5.columns should contain(LanguageModel.Kn5KeyBucket)
+    // Both writers drop the bucket column of a model loaded bucketed.
+    LanguageModel.saveKn5Model(part, s"$root/flat")
+    val flat = LanguageModel.loadKn5Model(spark, s"$root/flat")
+    flat.keyBuckets shouldBe None
+    flat.disc shouldBe part.disc
+    LanguageModel.saveKn5ModelPartitioned(part, s"$root/part4", nKeyBuckets = 4)
+    val part4 = LanguageModel.loadKn5Model(spark, s"$root/part4")
+    part4.keyBuckets shouldBe Some(4)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    (fit.keyedTables :+ ("stats" -> fit.stats))
+      .zip(flat.keyedTables :+ ("stats" -> flat.stats))
+      .foreach { case ((name, expected), (_, got)) =>
+        withClue(name) {
+          got.columns.toSeq shouldBe expected.columns.toSeq
+          rows(got) shouldBe rows(expected)
+        }
+      }
+    part4.keyedTables.foreach { case (name, df) =>
+      withClue(name) {
+        df.columns.count(_ == LanguageModel.Kn5KeyBucket) shouldBe 1
+        rows(df.drop(LanguageModel.Kn5KeyBucket)) shouldBe
+          rows(fit.keyedTables.toMap.apply(name))
+      }
+    }
+    // Every layout serves the same rows as the fitted model.
+    val expected = rows(LanguageModel.modifiedKn5Against(
+      docs, "doc_id", "text", fit))
+    Seq(part, flat, part4).foreach { m =>
+      rows(LanguageModel.modifiedKn5Against(docs, "doc_id", "text", m)) shouldBe
+        expected
+    }
+  }
+
+  test("loadKn5Model on a directory that is neither layout fails naming both writers") {
+    val junk = java.nio.file.Files.createTempDirectory("kn5-neither").toString
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(junk, "disc"))
+    val e = intercept[IllegalArgumentException] {
+      LanguageModel.loadKn5Model(spark, junk)
+    }
+    e.getMessage should include(junk)
+    e.getMessage should include("saveKn5Model layout (c5/)")
+    e.getMessage should include("saveKn5ModelPartitioned layout (meta/)")
+  }
+
+  test("loadKn5Model checks the discount sidecar of both layouts: missing level, NULL double, D1 = 1.5") {
+    import org.apache.spark.sql.Row
+    import spark.implicits._
+    val docs = kn5Corpus(40).toDF("doc_id", "text")
+    val fit = LanguageModel.fitKn5(docs, "text")
+    val root = java.nio.file.Files.createTempDirectory("kn5-sidecar").toString
+    LanguageModel.saveKn5Model(fit, s"$root/flat")
+    LanguageModel.saveKn5ModelPartitioned(fit, s"$root/part", nKeyBuckets = 8)
+    for ((dir, sidecar, writer) <- Seq(
+        (s"$root/flat", "disc", "saveKn5Model"),
+        (s"$root/part", "meta", "saveKn5ModelPartitioned"))) {
+      val path = s"$dir/$sidecar"
+      val pristine = spark.read.parquet(path)
+      val schema = pristine.schema
+      val good = pristine.collect().toSeq
+      def write(rows: Seq[Row]): Unit =
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+          .write.mode("overwrite").parquet(path)
+      def set(rows: Seq[Row], level: String, field: String, v: Any): Seq[Row] =
+        rows.map { r =>
+          if (r.getAs[String]("level") != level) r
+          else Row.fromSeq(r.toSeq.updated(schema.fieldIndex(field), v))
+        }
+      val broken = Seq(
+        "levels" -> good.filterNot(_.getAs[String]("level") == "level 2"),
+        "levels" -> (good :+ good.head),
+        "NULL d2 at level 'level 3'" -> set(good, "level 3", "d2", null),
+        "out of bounds at level 'order 5'" -> set(good, "order 5", "d1", 1.5)) ++
+        (if (sidecar == "meta") Seq(
+          "key_buckets [0]" -> good.map(r => Row.fromSeq(
+            r.toSeq.updated(schema.fieldIndex("key_buckets"), 0))))
+        else Nil)
+      try broken.foreach { case (why, rows) =>
+        write(rows)
+        val e = intercept[IllegalArgumentException] {
+          LanguageModel.loadKn5Model(spark, dir)
+        }
+        withClue(s"$path / $why: ") {
+          e.getMessage should include(path)
+          e.getMessage should include("sidecar contract")
+          e.getMessage should include(why)
+          e.getMessage should include(s"re-save the model with $writer")
+        }
+      } finally write(good)
+      // Restored, the layout loads and serves again.
+      LanguageModel.loadKn5Model(spark, dir).disc.map(_.size) shouldBe Some(4)
+    }
   }
 
   test("order-5 MKN fails fast on corpora without count-class decay") {

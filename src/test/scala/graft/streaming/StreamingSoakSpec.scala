@@ -775,9 +775,13 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       val log = progressLog(q)
       log.size should be >= 10
       log.foreach { case (_, _, st) => st.sum shouldBe 0L } // stateless
-      // only the ten query-lifetime persisted model tables may remain
-      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore)
-        .size should be <= 10
+      // Served from storage: the stream persists no model table, and
+      // each batch's staged projection is released after its sink.
+      Seq(model.c5, model.p4, model.t4, model.d4, model.t3, model.d3,
+        model.t2, model.d2, model.t1, model.stats).foreach(
+        _.storageLevel shouldBe org.apache.spark.storage.StorageLevel.NONE)
+      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe
+        empty
       val twin = LanguageModel.modifiedKn5Against(
         docRows.toDF("doc_id", "text"), "doc_id", "text", model).count()
       scored.get() shouldBe twin
@@ -797,7 +801,7 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
     val dir = java.nio.file.Files.createTempDirectory("kn5p-soak").toString
     LanguageModel.saveKn5ModelPartitioned(
       LanguageModel.fitKn5(docs, "text"), dir, nKeyBuckets = 32)
-    val part = LanguageModel.loadKn5ModelPartitioned(spark, dir)
+    val part = LanguageModel.loadKn5Model(spark, dir)
     val docRows = docs.as[Doc].collect().toSeq
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val stream = MemoryStream[Doc]
@@ -814,13 +818,12 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       val log = progressLog(q)
       log.size should be >= 10
       log.foreach { case (_, _, st) => st.sum shouldBe 0L } // stateless
-      // Storage-serving: unlike the flat overload's ten pinned model
-      // tables, NOTHING may remain — the model reads pruned from
-      // parquet and each batch's staged projection is released after
-      // its sink.
+      // Storage-serving: NOTHING may remain — the model reads pruned
+      // from parquet and each batch's staged projection is released
+      // after its sink.
       (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe
         empty
-      val twin = LanguageModel.modifiedKn5AgainstPartitioned(
+      val twin = LanguageModel.modifiedKn5Against(
         docRows.toDF("doc_id", "text"), "doc_id", "text", part).count()
       scored.get() shouldBe twin
       soakLine("lm5ScoreStreamPartitioned", docRows.size.toLong, log)

@@ -952,12 +952,15 @@ class StreamingSpec extends SparkSpec with Matchers {
     import graft.ops.LanguageModel
     import org.apache.spark.storage.StorageLevel
     val train = graft.Kn5TestCorpus.corpus(40).toDF("doc_id", "text")
-    val model = LanguageModel.fitKn5(train, "text")
+    val dir = java.nio.file.Files.createTempDirectory("kn5-stream").toString
+    LanguageModel.saveKn5Model(LanguageModel.fitKn5(train, "text"), dir)
+    val model = LanguageModel.loadKn5Model(spark, dir)
     val batches = Seq(
       Seq((100L, "the cat sat on the mat"),
         (101L, "zz qq ww vv uu tt")),
       Seq((102L, "the cat sat on the mat " +
         graft.Kn5TestCorpus.gadgetText(3))))
+    val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val stream = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Array[org.apache.spark.sql.Row])]
@@ -965,9 +968,18 @@ class StreamingSpec extends SparkSpec with Matchers {
       stream.toDF().toDF("doc_id", "text"), "doc_id", "text", model) {
       (rows, id) => got.synchronized { got += ((id, rows.collect())) }
     }.start()
+    val frames = Seq(model.c5, model.p4, model.t4, model.d4, model.t3,
+      model.d3, model.t2, model.d2, model.t1, model.stats)
     try {
       batches.foreach { b => stream.addData(b); q.processAllAvailable() }
       got.size shouldBe 2
+      // Served from storage: the stream never persists a model table,
+      // and each batch's staged projection is released after its sink
+      // (checked before the batch twins, whose one-shot checkpoint
+      // would show up here).
+      frames.foreach(_.storageLevel shouldBe StorageLevel.NONE)
+      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe
+        empty
       got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
         val twin = LanguageModel.modifiedKn5Against(
           rows.toDF("doc_id", "text"), "doc_id", "text", model).collect()
@@ -981,14 +993,8 @@ class StreamingSpec extends SparkSpec with Matchers {
     } finally {
       q.stop(); q.awaitTermination()
     }
-    // termination listener releases all ten persisted count tables
-    val frames = Seq(model.c5, model.p4, model.t4, model.d4, model.t3,
-      model.d3, model.t2, model.d2, model.t1, model.stats)
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    while (frames.exists(_.storageLevel != StorageLevel.NONE) &&
-        System.nanoTime() < deadline) Thread.sleep(100)
     frames.foreach(f => assert(f.storageLevel == StorageLevel.NONE,
-      "retired order-5 scoring queries must not leak cached model blocks"))
+      "retired order-5 scoring queries must not leave cached model blocks"))
   }
 
   test("lm5ScoreStream over a key-bucketed model: storage-serving, no pin, no lingering blocks") {
@@ -999,7 +1005,8 @@ class StreamingSpec extends SparkSpec with Matchers {
     val dir = java.nio.file.Files.createTempDirectory("kn5p-stream").toString
     LanguageModel.saveKn5ModelPartitioned(
       LanguageModel.fitKn5(train, "text"), dir, nKeyBuckets = 8)
-    val part = LanguageModel.loadKn5ModelPartitioned(spark, dir)
+    val part = LanguageModel.loadKn5Model(spark, dir)
+    part.keyBuckets shouldBe Some(8)
     val batches = Seq(
       Seq((100L, "the cat sat on the mat"),
         (101L, "zz qq ww vv uu tt")),
@@ -1025,7 +1032,7 @@ class StreamingSpec extends SparkSpec with Matchers {
       (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe
         empty
       got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
-        val twin = LanguageModel.modifiedKn5AgainstPartitioned(
+        val twin = LanguageModel.modifiedKn5Against(
           rows.toDF("doc_id", "text"), "doc_id", "text", part).collect()
         streamed.map(_.toString).sorted.toSeq shouldBe
           twin.map(_.toString).sorted.toSeq
@@ -1042,40 +1049,37 @@ class StreamingSpec extends SparkSpec with Matchers {
     val root = java.nio.file.Files.createTempDirectory("kn5-route").toString
     LanguageModel.saveKn5ModelPartitioned(fit, s"$root/part", nKeyBuckets = 8)
     LanguageModel.saveKn5Model(fit, s"$root/flat")
-    val batch = Seq((100L, "the cat sat on the mat"))
-    def run(dir: String): (Long, Set[Int]) = {
+    val batch = Seq((100L, "the cat sat on the mat"),
+      (101L, "zz qq ww vv uu tt"))
+    val expected = LanguageModel.modifiedKn5Against(
+        batch.toDF("doc_id", "text"), "doc_id", "text", fit)
+      .collect().map(_.toString).sorted.toSeq
+    def run(dir: String): (Seq[String], Set[Int]) = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val stream = MemoryStream[(Long, String)]
-      var rows = 0L
+      val rows = scala.collection.mutable.ArrayBuffer.empty[String]
       var pinnedDuring = Set.empty[Int]
       val q = StreamingOps.lm5ScoreStreamFrom(
         stream.toDF().toDF("doc_id", "text"), "doc_id", "text", dir) {
-        (df, _) => rows += df.count()
+        (df, _) => rows.synchronized { rows ++= df.collect().map(_.toString) }
       }.start()
       try {
         stream.addData(batch); q.processAllAvailable()
         pinnedDuring =
           (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet
       } finally { q.stop(); q.awaitTermination() }
-      // Whatever a route pinned must release on termination (the flat
-      // path's listener contract) — wait for it so the next route
-      // starts clean.
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      while ((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty
-          && System.nanoTime() < deadline) Thread.sleep(100)
       (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
-      (rows, pinnedDuring)
+      (rows.sorted.toSeq, pinnedDuring)
     }
-    // Sidecar dir → the storage-serving route: ZERO pinned blocks for
-    // the stream's whole lifetime (r14 verdict #2's Done criterion).
+    // Both layouts serve from storage: the batch serve's rows and ZERO
+    // pinned blocks for the stream's whole lifetime (r14 verdict #2's
+    // Done criterion, now on the flat layout too).
     val (partRows, partPinned) = run(s"$root/part")
-    partRows should be > 0L
+    partRows shouldBe expected
     partPinned shouldBe empty
-    // Sidecar-less flat dir → the deprecated pinned shape still works
-    // (and visibly pins — proof the routing actually branched).
     val (flatRows, flatPinned) = run(s"$root/flat")
-    flatRows shouldBe partRows
-    flatPinned should not be empty
+    flatRows shouldBe expected
+    flatPinned shouldBe empty
     // A non-model dir dies at stream build with the contract named,
     // not at first table read with a raw path error.
     val notAModel = java.nio.file.Files
