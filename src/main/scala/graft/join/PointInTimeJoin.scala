@@ -147,7 +147,11 @@ object PointInTimeJoin {
     *     source schema) reduces with `max_by|min_by(struct, gated
     *     order key)` instead: same winner, except that ties on the
     *     order key pick an arbitrary row.
-    *  3. **One stitch per group**: a left join on the row id.
+    *  3. **One stitch per group**: a left join on the row id, over the
+    *     spine repartitioned on the row id into the session's shuffle
+    *     partitions (when those are at most one per core), so the
+    *     stitch and everything fused after it run one task per
+    *     partition however small the spine is.
     */
   private[join] def asOf(
       spine: DataFrame,
@@ -261,9 +265,25 @@ object PointInTimeJoin {
       joined.groupBy(col(RowId)).agg(aggExprs.head, aggExprs.tail: _*)
     }
 
-    // One stitch join per GROUP (= per distinct source), each already
-    // hash-partitioned on the row id by its aggregation.
-    val stitched = groupAggs.foldLeft(spine) { (acc, g) =>
+    // One stitch join per GROUP (= per distinct source) on the row id.
+    // Left to itself, AQE sizes the spine's stitch exchange by bytes
+    // and folds a small spine into ONE partition; once it turns the
+    // stitch into a broadcast join, that one task also runs everything
+    // downstream (Runner: the encode and the gzip write of every
+    // split). So the spine is repartitioned on the row id BY NUMBER,
+    // which AQE never coalesces. The number is the shuffle width of
+    // the group aggregations: planning re-targets any other count to
+    // it, so it is the stitch's width either way, and the exchange
+    // replaces the implicit one (same rows, same bytes). It is pinned
+    // only while that width is at most one partition per core: a
+    // session that shuffles wider (Spark's default 200) keeps AQE's
+    // coalescing rather than split a small job into 200 tasks.
+    val sess = spine.sparkSession
+    val width = sess.sessionState.conf.numShufflePartitions
+    val base =
+      if (width <= sess.sparkContext.defaultParallelism) spine.repartition(width, col(RowId))
+      else spine
+    val stitched = groupAggs.foldLeft(base) { (acc, g) =>
       acc.join(g, Seq(RowId), "left")
     }
     stitched.select(spineCols ++

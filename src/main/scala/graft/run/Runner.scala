@@ -83,7 +83,7 @@ object Runner {
 
   /** [[resolveViews]] over already-loaded frames (source path → frame):
     * each source path is loaded at most once, so views sharing a source
-    * share one frame (one footer read, one schema-inference job). */
+    * share one frame (one footer read). */
   private def resolveViews(
       spark: SparkSession,
       job: JobConfig,

@@ -151,7 +151,7 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
     name.r.findAllMatchIn(plan).size
   }
 
-  test("forwardMultiFused: row-identical to the unfused fold; one scan per source") {
+  test("forwardMulti: the naive oracle agrees; one scan per source") {
     val (entity, views, _) = multiViewFixture()
     val out = DirectionalAsOf.forwardMulti(entity, "p_ts", views, "event_id")
     out.columns.toSeq shouldBe Seq("event_id", "user_id", "p_ts", "nv__next_value",
@@ -164,7 +164,7 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
     scansOf(out, "other\\.parquet") shouldBe 1
   }
 
-  test("nearestMultiFused: row-identical to the unfused fold on mixed tolerances") {
+  test("nearestMulti: the naive oracle agrees on mixed tolerances; one scan per source") {
     val (entity, views, _) = multiViewFixture()
     val out = DirectionalAsOf.nearestMulti(entity, "p_ts", views, "event_id")
     AsOfOracle.check(out, entity, "event_id", "p_ts", views.map(asResolved),

@@ -253,7 +253,7 @@ class PointInTimeJoinSpec extends SparkSpec {
     (e.toDF("eid", "key", "event_ts"), f.toDF("key", "fts", "created", "val"))
   }
 
-  test("property: both strategies agree with a naive oracle on random data") {
+  test("property: max(struct) and max_by picks agree with a naive oracle on random data") {
     val (eDf, fDf) = randomData(42, 200, 300)
     val v = ResolvedView("v", fDf, Seq("key" -> "key"), "fts", Some("created"),
       Seq("val"), Some(7L * 86400))
@@ -268,7 +268,7 @@ class PointInTimeJoinSpec extends SparkSpec {
       eDf, "eid", "event_ts", Seq(withMap), Backward)
   }
 
-  test("joinFused: handcrafted semantics identical to the unfused reference") {
+  test("two views over two sources: hand-computed rows, and the naive oracle agrees") {
     val v1 = view(Some(30L * 86400))
     val extra = Seq(
       (10L, ts("2024-01-02 00:00:00"), 1.5),
@@ -291,7 +291,7 @@ class PointInTimeJoinSpec extends SparkSpec {
     AsOfOracle.check(out, entity, "eid", "event_ts", Seq(v1, v2), Backward)
   }
 
-  test("joinFused: empty spine yields empty result with the full fused schema") {
+  test("empty spine yields an empty result with the full output schema") {
     val m = mapView(None).copy(name = "vm", outputPrefix = Some("vm"))
     val out = PointInTimeJoin.join(
       entity.filter($"eid" < 0), "event_ts", Seq(view(None), m), rowIdCol = Some("eid"))
@@ -301,7 +301,7 @@ class PointInTimeJoinSpec extends SparkSpec {
     assert(out.count() == 0)
   }
 
-  test("joinFused: random-data parity with the unfused reference across mixed views") {
+  test("mixed views over one source: random-data parity with the naive oracle") {
     val (eDf, fDf) = randomData(7, 300, 400)
     // mixed shapes over one source: ttl'd + unbounded + no created-ts +
     // per-view predicates (so candidate joins share a scan) + a
@@ -326,7 +326,7 @@ class PointInTimeJoinSpec extends SparkSpec {
     AsOfOracle.check(out, eDf, "eid", "event_ts", views, Backward)
   }
 
-  test("joinFused groups on the CANONICAL source plan: re-loads of one table fuse, different join keys do not") {
+  test("views group on the CANONICAL source plan: re-loads of one table share a scan, other join keys do not") {
     val dir = sf()
     val entity = graft.sources.ParquetTables.load(spark, dir + "/events.parquet")
       .select($"event_id", $"user_id", $"ts")
@@ -379,7 +379,7 @@ class PointInTimeJoinSpec extends SparkSpec {
     assert(df.filter($"b__m".isNotNull).count() > 0)
   }
 
-  test("joinFused 8-view plan: per-SOURCE candidate joins, aggs, and stitches (2 groups, not 8 views)") {
+  test("8-view plan: per-SOURCE candidate joins, aggs, and stitches (2 groups, not 8 views)") {
     val fused = graft.SparkEntry.queries("pit_manyviews_fused")(spark, sf())
     val plan = fused.queryExecution.executedPlan.toString
     val hashEx = "Exchange hashpartitioning".r.findAllMatchIn(plan).size

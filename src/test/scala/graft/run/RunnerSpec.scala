@@ -137,6 +137,76 @@ class RunnerSpec extends SparkSpec {
       "event_timestamp", Runner.resolveViews(spark, job))
   }
 
+  test("the stitch, encode and write stage runs on every core, with the records of a run without AQE") {
+    // customer (static), orders (two TTL views, one group) and events:
+    // the shape of the ExampleGen benchmark's registry
+    val yaml =
+      """project: graft-test
+        |views:
+        |  - name: customer_profile
+        |    source: customer.parquet
+        |    entities: [c_custkey]
+        |    timestamp: __static__
+        |    features: [c_acctbal, c_mktsegment]
+        |  - name: order_value
+        |    source: orders.parquet
+        |    entities: [o_custkey]
+        |    timestamp: o_orderdate
+        |    ttlSeconds: 7776000
+        |    features: [o_totalprice]
+        |  - name: order_status
+        |    source: orders.parquet
+        |    entities: [o_custkey]
+        |    timestamp: o_orderdate
+        |    ttlSeconds: 31536000
+        |    features: [o_orderstatus]
+        |  - name: user_activity
+        |    source: events.parquet
+        |    entities: [user_id]
+        |    timestamp: ts
+        |    ttlSeconds: 2592000
+        |    features: [value, event_type]
+        |""".stripMargin
+    val splits = Seq("train" -> 2, "eval" -> 1)
+    def job(out: String) = JobConfig(
+      registry = YamlRegistry.load(yaml), dataDir = sf(),
+      features = Left(Seq("customer_profile:c_acctbal", "customer_profile:c_mktsegment",
+        "order_value:o_totalprice", "order_status:o_orderstatus",
+        "user_activity:value", "user_activity:event_type")),
+      entityQuery = "SELECT o_orderkey, o_custkey, o_custkey AS c_custkey, " +
+        "o_custkey AS user_id, o_orderdate AS event_timestamp FROM orders",
+      outputSplits = splits, outputPath = out)
+    def tmp() = java.nio.file.Files.createTempDirectory("graft-wide").toString
+    val out = tmp()
+    Runner.run(spark, job(tmp())) // warm: the traced run starts no one-off job
+    val (res, jobs, stages) = traced(Runner.run(spark, job(out)))
+    // the run's last job is writePartitioned's collect, and its result
+    // stage stitches, encodes and writes: each task one shard per split
+    val write = stages(jobs.last.stageIds.max)
+    val shards = splits.map { case (s, _) =>
+      new java.io.File(s"$out/$s").list().count(_.endsWith(".tfrecord.gz"))
+    }
+    withClue(s"jobs=${jobs.size} writeTasks=${write.numTasks} shards=$shards") {
+      assert(write.numTasks >= spark.sparkContext.defaultParallelism)
+      assert(shards.forall(_ == write.numTasks))
+      // tables register without schema-inference jobs; then the spine
+      // checkpoint, the bounds, and AQE's stages of the one write
+      assert(jobs.size == 14)
+    }
+    val ref = tmp()
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try Runner.run(spark, job(ref))
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    def records(dir: String, split: String) = TfRecordSink.readAll(spark, dir, split)
+      .map(java.util.Base64.getEncoder.encodeToString).sorted
+    splits.foreach { case (s, _) =>
+      assert(records(out, s) == records(ref, s), s)
+    }
+    assert(res.map(_.records).sum ==
+      spark.read.parquet(s"${sf()}/orders.parquet").count())
+  }
+
   test("a MAP-valued feature view runs through Runner.run and its m.<key> leaves decode") {
     import org.apache.spark.sql.functions.{lit, map}
     val scratch = java.nio.file.Files.createTempDirectory("graft-mapview").toString

@@ -436,7 +436,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     } finally q.stop()
   }
 
-  test("pitEnrichStream FuseAuto default: shared-source views fuse at stream definition and match the batch fused twin") {
+  test("pitEnrichStream: shared-source views over one source frame match the batch join") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.join.ResolvedView
@@ -468,7 +468,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     } finally q.stop()
   }
 
-  test("pitEnrichStream: synthetic-spine blocks are released per batch; fused variant agrees") {
+  test("pitEnrichStream: synthetic-spine blocks are released per batch; rows match the batch join") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.join.ResolvedView
@@ -1040,7 +1040,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     } finally { q.stop(); q.awaitTermination() }
   }
 
-  test("lm5ScoreStreamFrom routes by the meta sidecar: partitioned dir pins nothing, flat dir is the deprecated pinned shape") {
+  test("lm5ScoreStreamFrom routes by the meta sidecar: neither the partitioned nor the flat dir pins a block") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.LanguageModel
