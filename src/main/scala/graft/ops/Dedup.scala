@@ -86,10 +86,7 @@ object Dedup {
   def exactAgainst(
       newDocs: DataFrame, index: DataFrame,
       idCol: String, textCol: String): DataFrame =
-    exactClassify(
-      newDocs.select(col(idCol).as("id"),
-        md5(TextOps.normalized(col(textCol))).as("text_hash")),
-      index)
+    exactClassify(stageExactArrivals(newDocs, idCol, textCol), index)
 
   /** The [[exactAgainst]] classification over an already-hashed batch
     * — shared by the flat and partition-pruned serve paths so the
@@ -113,151 +110,59 @@ object Dedup {
         lit(null).cast(classified.schema("dup_of").dataType).as("dup_of")))
   }
 
-  /** A persisted, hash-partitioned EXACT index — the partition-pruned
-    * serve layout of the content-hash table (the [[WinnowFpIndex]]
-    * argument applied to the exact face): (text_hash, keep_id,
-    * dup_count) rows land in hash partition directories, so a serve
-    * reads only the partitions the ARRIVAL batch's content hashes
-    * fall into — ≤ |batch| directories out of a bucket count sized to
-    * the corpus. Same one-row-per-hash precondition as
-    * [[exactAgainst]]. Maintenance: [[mergeExactIndexes]] + re-save
-    * (dup_count of repeated hashes must update, so the exact index is
-    * rebuild-maintained, not append-maintained — the merge is one
-    * hash-agg over index ∪ batch-index, never the corpus). */
-  /** `root` (set ONLY by [[loadExactIndexPartitioned]] — it is a
-    * `private[graft]` val, so external code cannot READ it; note the
-    * Scala 2 case-class wart that the generated `apply`/`copy` can
-    * still SET the parameter — doing so with a root you did not get
-    * from `loadExactIndexPartitioned`, or carrying one across a
-    * `copy(rows = …)`, violates the invariant below) enables the
-    * DIRECT-PATH serve: the probed bucket directories are
-    * read by explicit path, so per-serve driver work is O(|batch|)
-    * existence probes and the scan's file listing never touches the
-    * other bucket directories — the cost that made a ∝-corpus bucket
-    * count (flat read bytes) pay an O(#partitions) planning pass per
-    * serve (r12's one canary outlier; a √-sizing attempt just moved
-    * the cost into √-growing read bytes). Without `root` the serve
-    * falls back to an `isin` partition filter over the loaded frame.
-    * INVARIANT (r13 ADVICE): `root` BINDS the serve to the persisted
-    * layout — the direct-path probe reads the on-disk buckets and
-    * ignores `rows` for the probed set, so a value whose `rows` was
-    * replaced in memory (e.g. via `copy()` after a merge) while `root`
-    * survived would silently classify against stale on-disk hashes.
-    * Never carry `root` past a `rows` replacement; a refreshed index
-    * is re-loaded from its re-saved layout, never patched in place. */
-  final case class ExactHashIndex(rows: DataFrame, hashBuckets: Int,
-      private[graft] val root: Option[String] = None)
+  /** A persisted EXACT index in the [[BucketedIndex]] layout (kind
+    * `exact`): (text_hash, keep_id, dup_count) rows bucketed by hash,
+    * so a serve reads ≤ |batch| bucket directories. Same
+    * one-row-per-hash precondition as [[exactAgainst]].
+    * Rebuild-maintained ([[mergeExactIndexes]] + re-save: dup_count of
+    * repeated hashes must update). Only [[loadExactIndexPartitioned]]
+    * makes one, so a serve reads the layout it was loaded from. */
+  final class ExactHashIndex private[graft] (
+      private[graft] val layout: BucketedIndex.Layout) {
+    def rows: DataFrame = layout.rows
+    def hashBuckets: Int = layout.hashBuckets
+  }
 
   /** Build + persist an [[ExactHashIndex]] from an [[exact]] /
     * [[loadExactIndex]] table. Size `nHashBuckets` ∝ corpus (constant
-    * per-bucket bytes): the loaded index serves by DIRECT PATH to the
-    * probed bucket directories, so a large directory count costs
-    * nothing per serve — per-serve driver work is O(|batch|)
-    * regardless of layout size. (r12 measured the alternatives: an
-    * isin filter over the full listing pays an O(#partitions)
-    * planning pass per serve — 2.08× at 6,400 dirs against a ~0.2 s
-    * base — and √-sizing just moves the cost into √-growing read
-    * bytes, 2.48× measured.) */
+    * per-bucket bytes): serves read the probed buckets by path, so
+    * their driver work is O(|batch|) at any layout size. */
   def saveExactIndexPartitioned(
-      index: DataFrame, path: String, nHashBuckets: Int = 64): Unit = {
-    require(nHashBuckets > 0,
-      "saveExactIndexPartitioned: nHashBuckets must be > 0")
-    index.select(col("text_hash"), col("keep_id"), col("dup_count"))
-      .withColumn(BandBucket, fpBucket(col("text_hash"), nHashBuckets))
-      .repartition(nHashBuckets, col(BandBucket))
-      .write.mode("overwrite").partitionBy(BandBucket)
-      .parquet(s"$path/hashes")
-    val spark = index.sparkSession
-    import spark.implicits._
-    Seq(Tuple1(nHashBuckets)).toDF("hash_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-  }
+      index: DataFrame, path: String, nHashBuckets: Int = 64): Unit =
+    BucketedIndex.write(BucketedIndex.Exact, path,
+      index.select(col("text_hash"), col("keep_id"), col("dup_count")),
+      nHashBuckets)
 
-  /** Load a persisted [[ExactHashIndex]] (inverse of
-    * [[saveExactIndexPartitioned]]). */
+  /** Load a persisted [[ExactHashIndex]] ([[BucketedIndex.load]]). */
   def loadExactIndexPartitioned(
-      spark: org.apache.spark.sql.SparkSession, path: String): ExactHashIndex = {
-    val st = spark.read.parquet(s"$path/stats").head()
-    ExactHashIndex(spark.read.parquet(s"$path/hashes"), st.getInt(0),
-      Some(path))
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): ExactHashIndex =
+    new ExactHashIndex(BucketedIndex.load(spark, path, BucketedIndex.Exact))
 
   /** [[exactAgainst]] against a persisted [[ExactHashIndex]] —
-    * IDENTICAL output (one first-seen-wins classification row per
-    * arrival, NULL-text pass-through) to serving the flat index
-    * (oracle-pinned: dedup_exact_serve shares
-    * dedup_exact_incremental's SQL verbatim), different physics: the
-    * arrival batch's hash bucket set collects to the driver
-    * (≤ |batch| ints) and prunes index partitions STATICALLY — only
-    * matching-bucket index rows are read, and the LEFT join still
-    * classifies unmatched arrivals as survivors (pruning drops only
-    * index partitions no arrival hash can reach, never an arrival
-    * row). */
+    * IDENTICAL output to serving the flat index (oracle-pinned:
+    * dedup_exact_serve shares dedup_exact_incremental's SQL verbatim),
+    * reading only the buckets the arrival hashes reach
+    * ([[BucketedIndex.Layout.probe]]). */
   def exactAgainst(
       newDocs: DataFrame, index: ExactHashIndex,
       idCol: String, textCol: String): DataFrame =
-    exactAgainstStaged(
-      stageExactArrivals(newDocs, idCol, textCol)
-        .localCheckpoint(false), // feeds the bucket collect AND the join
-      index)
+    BucketedIndex.staged(stageExactArrivals(newDocs, idCol, textCol))(
+      exactAgainstStaged(_, index))
 
-  /** The arrival projection of the partitioned exact serve — exposed
-    * so a caller that OWNS the staging (the streaming face, which
-    * persists it and releases it after the sink) can pair it with
-    * [[exactAgainstStaged]]. */
+  /** The arrival projection of the exact serves — exposed so a caller
+    * that OWNS the staging (the streaming face, which persists it and
+    * releases it after the sink) can pair it with [[exactAgainstStaged]]. */
   private[graft] def stageExactArrivals(
       newDocs: DataFrame, idCol: String, textCol: String): DataFrame =
     newDocs.select(col(idCol).as("id"),
       md5(TextOps.normalized(col(textCol))).as("text_hash"))
 
-  /** [[exactAgainst]] over an already-STAGED arrival frame (a
-    * [[stageExactArrivals]] output the caller has made stable —
-    * localCheckpoint or persist; it is consumed by both the bucket
-    * collect and the join). No materialization happens here, so
-    * block ownership stays entirely with the caller — the streaming
-    * faces' leak-free release needs exactly this split. */
+  /** [[exactAgainst]] over a [[stageExactArrivals]] frame the caller
+    * has made stable (it feeds both the bucket collect and the join);
+    * block ownership stays with the caller. */
   private[graft] def exactAgainstStaged(
-      hashed: DataFrame, index: ExactHashIndex): DataFrame = {
-    val buckets = hashed.filter(col("text_hash").isNotNull)
-      .select(fpBucket(col("text_hash"), index.hashBuckets).as("bb"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    // Direct-path probe when the index knows its root: list and read
-    // ONLY the probed bucket directories. Per-serve driver cost is
-    // |batch| existence probes + a |probed|-directory file listing —
-    // independent of the layout's total bucket count, so the bucket
-    // count can grow ∝ corpus (constant per-bucket bytes, flat serve
-    // reads) without the per-serve partition-planning pass over every
-    // directory that an `isin` filter over the full listing pays. An
-    // empty bucket never wrote a directory (repartition emits no task
-    // output), hence the existence filter; probing zero directories
-    // means no arrival hash can match — LIMIT-0 index side keeps the
-    // LEFT-join survivor semantics.
-    val pruned = index.root match {
-      case Some(r) =>
-        val spark = hashed.sparkSession
-        val base = new org.apache.hadoop.fs.Path(s"$r/hashes")
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // ONE listStatus intersected with the probed set — not one
-        // fs.exists per bucket: |batch| serial existence RPCs against
-        // an object store would put minutes of driver wall in front
-        // of every serve/micro-batch (review finding r13). An empty
-        // bucket never wrote a directory (repartition emits no task
-        // output), hence the intersection.
-        val existing = fs.listStatus(base).iterator
-          .map(_.getPath.getName).filter(_.startsWith(s"$BandBucket="))
-          .toSet
-        val dirs = buckets.map(b => s"$BandBucket=$b").filter(existing)
-          .map(n => new org.apache.hadoop.fs.Path(base, n).toString)
-        if (dirs.isEmpty) index.rows.limit(0)
-        else spark.read
-          .option("basePath", base.toString)
-          .schema(index.rows.schema) // no schema-inference listing
-          .parquet(dirs: _*)
-      case None =>
-        index.rows.filter(col(BandBucket).isin(buckets: _*))
-    }
-    exactClassify(hashed, pruned)
-  }
+      hashed: DataFrame, index: ExactHashIndex): DataFrame =
+    exactClassify(hashed, index.layout.probe(hashed))
 
   /** Merge [[exact]] indexes — the append-composability law of the
     * incremental path: `mergeExactIndexes(Seq(exact(a), exact(b)))`
@@ -507,45 +412,33 @@ object Dedup {
       .select("new_id", "base_id", "est_jaccard")
   }
 
-  /** A persisted, term-partitioned LSH BAND index — the serve-optimal
-    * layout of the minhash signature table (the
-    * [[graft.ops.Retrieval.saveBm25IndexPartitioned]] argument applied
-    * to near-dup serving): band rows are precomputed ONCE at build
-    * (the per-serve band explode of the whole history was the one
-    * serve cost growing linearly with the index — measured 7× at 100×
-    * index growth, SCALE.md round 12) and land in band-hash-bucket
-    * partition directories, so a serve reads only the partitions the
-    * ARRIVAL batch's band hashes fall into. Signatures ride inside
-    * the band rows (bands× storage, k longs each — the classic
-    * space/time trade) so candidate verification never joins back to
-    * a full signature table. Build parameters live in the stats
-    * sidecar and are re-validated at serve. */
-  final case class LshBandIndex(
-      rows: DataFrame, k: Int, bands: Int, portable: Boolean,
-      hashBuckets: Int, shingleN: Option[Int] = None,
-      maxBucket: Option[Int] = None)
-
-  /** Partition column of the band-bucketed LSH layout. */
-  private[graft] val BandBucket = "__graft_bb"
-
-  /** band_hash → partition bucket (the shared [[OpsUtil.hashBucket]];
-    * band_hash is long or md5 string per family). */
-  private def bandBucket(bandHash: Column, n: Int): Column =
-    OpsUtil.hashBucket(n, bandHash)
+  /** A persisted LSH BAND index in the [[BucketedIndex]] layout (kind
+    * `minhash`): band rows are precomputed ONCE at build (the per-serve
+    * band explode of the whole history grew 7× at 100× index growth,
+    * SCALE.md round 12), bucketed by band hash. Signatures ride inside
+    * the band rows (bands× storage) so verification never joins back to
+    * a signature table. Build parameters live in the sidecar and are
+    * re-validated at serve. */
+  final class LshBandIndex private[graft] (
+      private[graft] val layout: BucketedIndex.Layout) {
+    def rows: DataFrame = layout.rows
+    def k: Int = layout.param[Int]("k")
+    def bands: Int = layout.param[Int]("bands")
+    def portable: Boolean = layout.param[Boolean]("portable")
+    def hashBuckets: Int = layout.hashBuckets
+    def shingleN: Option[Int] = layout.opt[Int]("shingle_n")
+    def maxBucket: Option[Int] = layout.opt[Int]("max_bucket")
+  }
 
   /** Build + persist an [[LshBandIndex]] from a signature table
-    * ([[minhashSignatures]] output). `maxBucket` (the template-
-    * collapse cap) applies at BUILD — it depends only on the index,
-    * so pre-capping keeps serves cadence-independent, the
-    * [[capBaseFps]] argument. Size `nHashBuckets` to the corpus
-    * (constant per-bucket bytes): serve scan ≈ |arrival band hashes|
-    * × bucket size, flat as history grows. */
+    * ([[minhashSignatures]] output). `maxBucket` (the template-collapse
+    * cap) applies at BUILD, which keeps serves cadence-independent.
+    * Size `nHashBuckets` to the corpus (constant per-bucket bytes). */
   def saveLshBandIndex(
       sigs: DataFrame, path: String,
       k: Int = 16, bands: Int = 8, portable: Boolean = false,
       maxBucket: Int = Int.MaxValue, nHashBuckets: Int = 64): Unit = {
     require(k % bands == 0, "k must divide into bands")
-    require(nHashBuckets > 0, "saveLshBandIndex: nHashBuckets must be > 0")
     // The signature frame's own family tag must match the `portable`
     // the band rows are built with — otherwise the sidecar records a
     // family the index was never hashed with and every serve that
@@ -556,56 +449,32 @@ object Dedup {
     // shingle_n rides the sidecar when the frame carries its tag (every
     // minhashSignatures output does): band hashes strip the signature
     // metadata, so without the sidecar a serve could sign arrivals at a
-    // different shingle width and silently find nothing.
+    // different shingle width and silently find nothing. max_bucket
+    // decides the MAINTENANCE contract: an uncapped build's band rows
+    // are append-composable; a capped build's bucket membership is a
+    // global aggregate over the whole index, so it is rebuild-only.
     val sigMd = sigs.schema("sig").metadata
-    val shingleN: java.lang.Integer =
+    val shingleN =
       if (sigMd.contains("graft.minhash.shingle_n"))
-        Int.box(sigMd.getLong("graft.minhash.shingle_n").toInt)
-      else null
-    bandRows(sigLengthGuard(sigs, k, "base"), k, bands, portable, maxBucket)
-      .withColumn(BandBucket, bandBucket(col("band_hash"), nHashBuckets))
-      .repartition(nHashBuckets, col(BandBucket))
-      .write.mode("overwrite").partitionBy(BandBucket)
-      .parquet(s"$path/bands")
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    // max_bucket rides the sidecar because it decides the MAINTENANCE
-    // contract: an uncapped build's band rows are append-composable
-    // (appendLshBandIndex checks this column); a capped build's bucket
-    // membership is a global aggregate over the whole index — the
-    // winnow stored-df argument — so it is rebuild-only.
-    Seq((k, bands, portable, nHashBuckets, Option(shingleN).map(_.toInt),
-        maxBucket))
-      .toDF("k", "bands", "portable", "hash_buckets", "shingle_n",
-        "max_bucket")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+        Map("shingle_n" -> sigMd.getLong("graft.minhash.shingle_n").toInt)
+      else Map.empty
+    BucketedIndex.write(BucketedIndex.Minhash, path,
+      bandRows(sigLengthGuard(sigs, k, "base"), k, bands, portable, maxBucket),
+      nHashBuckets, Map("k" -> k, "bands" -> bands, "portable" -> portable,
+        "max_bucket" -> maxBucket) ++ shingleN)
   }
 
-  /** Append a new batch's signatures to an existing
-    * [[saveLshBandIndex]] layout — the incremental-maintenance write
-    * (the [[appendSimhashBandIndex]] contract at the MinHash face).
-    * ONLY legal for an UNCAPPED build (`maxBucket = Int.MaxValue` at
-    * [[saveLshBandIndex]]): band rows under a fixed (k, bands, family,
-    * shingle width) are append-composable — append ∪ rebuild are
-    * row-identical, spec-pinned — but a build-time `maxBucket` cap is
-    * a global aggregate over the whole index (which rows survive a hot
-    * bucket's cap depends on every batch ever written), so a capped
-    * layout is REBUILD-maintained and this fails fast. A pre-sidecar
-    * layout (no `max_bucket` column) also fails fast — its build cap
-    * is unknowable; rebuild once to record it. The batch frame's
-    * family/shingle tags must match the index's (fail-fast); k/bands/
-    * bucket count come from the sidecar. Each append adds ≤ one file
-    * per touched bucket; compact with [[compactLshBandIndex]] (or
-    * `graft.tools.Maintain`) when listing cost matters. */
+  /** Append a new batch's signatures to a [[saveLshBandIndex]] layout
+    * (append ∪ rebuild are row-identical, spec-pinned). ONLY legal for
+    * an UNCAPPED build: a build-time `maxBucket` cap is a global
+    * aggregate over the whole index, so a capped layout (or one whose
+    * sidecar predates `max_bucket`) is REBUILD-maintained and this
+    * fails fast. The batch's family/shingle tags must match the
+    * index's; k/bands/bucket count come from the sidecar. Each append
+    * adds ≤ one file per touched bucket; compact with
+    * [[compactLshBandIndex]] (or `graft.tools.Maintain`). */
   def appendLshBandIndex(sigs: DataFrame, path: String): Unit = {
-    val spark = sigs.sparkSession
-    // Sidecar ONLY — loadLshBandIndex would eagerly list every file
-    // under bands/ to build the rows frame this method never touches,
-    // putting an O(#files) driver pass in front of each append on
-    // exactly the append-maintained layouts whose file counts grow
-    // per batch (review finding r14; the appendSimhashBandIndex
-    // pattern).
-    val idx = loadLshBandStats(spark, path)
+    val idx = loadLshBandIndex(sigs.sparkSession, path)
     require(idx.maxBucket.contains(Int.MaxValue),
       idx.maxBucket match {
         case Some(cap) =>
@@ -620,117 +489,45 @@ object Dedup {
             "max_bucket sidecar column, so its build cap is unknowable " +
             "— rebuild once with saveLshBandIndex to record it"
       })
-    // Appends are STRICT on tag presence (review finding r15): an
-    // append writes permanent rows, so a hand-built frame without the
-    // family tag must be refused here even though the lenient serve
-    // paths (checkBuildParams skips absent keys, for indexes that
-    // predate the tags) would let it through — signatures hashed with
-    // the wrong family would land as never-matching garbage band rows.
-    require(sigs.schema("sig").metadata.contains("graft.minhash.portable"),
-      "appendLshBandIndex: the batch signature frame carries no " +
-        "graft.minhash.portable metadata — build it with " +
-        "minhashSignatures so the hash family is provably consistent " +
-        "with the index")
-    checkBuildParams(sigs, "sig", "appendLshBandIndex",
-      Seq("graft.minhash.portable" -> idx.portable))
-    val nm = sigs.schema("sig").metadata
-    idx.shingleN.foreach { want =>
-      // Two-sided (review finding r14): a batch frame WITHOUT the tag
-      // (hand-built, not minhashSignatures output) must be refused,
-      // not silently trusted — the checkBuildParams portable-tag
-      // strictness applied to the shingle width.
-      require(nm.contains("graft.minhash.shingle_n"),
-        "appendLshBandIndex: the index records shingle_n=" + want +
-          " but the batch signature frame carries no " +
-          "graft.minhash.shingle_n metadata — build the batch with " +
-          "minhashSignatures (same shingleN) so the widths are provably " +
-          "consistent")
-      require(nm.getLong("graft.minhash.shingle_n").toInt == want,
-        "appendLshBandIndex: the index was built from signatures with " +
-          s"shingle_n=$want but the batch carries shingle_n=" +
-          s"${nm.getLong("graft.minhash.shingle_n")}")
-    }
-    bandRows(sigLengthGuard(sigs, idx.k, "batch"), idx.k, idx.bands,
-        idx.portable, Int.MaxValue)
-      .withColumn(BandBucket, bandBucket(col("band_hash"), idx.hashBuckets))
-      .repartition(idx.hashBuckets, col(BandBucket))
-      .write.mode("append").partitionBy(BandBucket)
-      .parquet(s"$path/bands")
+    checkBuildParams(sigs, "sig", "appendLshBandIndex", lshTags(idx),
+      strict = true)
+    BucketedIndex.append(idx.layout,
+      bandRows(sigLengthGuard(sigs, idx.k, "batch"), idx.k, idx.bands,
+        idx.portable, Int.MaxValue))
   }
 
-  /** Compact an append-maintained [[saveLshBandIndex]] layout back to
-    * one file per bucket directory. Rows untouched; see
-    * [[OpsUtil.compactPartitionedDir]] for the swap semantics. */
+  /** Compact an append-maintained [[saveLshBandIndex]] layout to one
+    * file per bucket directory ([[BucketedIndex.compact]]). */
   def compactLshBandIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    OpsUtil.compactPartitionedDir(spark, s"$path/bands", BandBucket)
+    BucketedIndex.compact(spark, path, BucketedIndex.Minhash)
 
-  /** Load a persisted [[LshBandIndex]] (inverse of
-    * [[saveLshBandIndex]]). */
+  /** Load a persisted [[LshBandIndex]] ([[BucketedIndex.load]]). */
   def loadLshBandIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): LshBandIndex = {
-    val st = loadLshBandStats(spark, path)
-    LshBandIndex(spark.read.parquet(s"$path/bands"),
-      st.k, st.bands, st.portable, st.hashBuckets, st.shingleN,
-      st.maxBucket)
-  }
-
-  /** The build parameters of a [[saveLshBandIndex]] layout WITHOUT its
-    * band frame — one 1-row sidecar read, no bands/ file listing. The
-    * append path needs only these. */
-  private final case class LshBandStats(
-      k: Int, bands: Int, portable: Boolean, hashBuckets: Int,
-      shingleN: Option[Int], maxBucket: Option[Int])
-
-  private def loadLshBandStats(
-      spark: org.apache.spark.sql.SparkSession, path: String): LshBandStats = {
-    val st = spark.read.parquet(s"$path/stats").head()
-    def optInt(name: String): Option[Int] =
-      if (st.schema.fieldNames.contains(name) &&
-          !st.isNullAt(st.fieldIndex(name)))
-        Some(st.getInt(st.fieldIndex(name)))
-      else None
-    LshBandStats(st.getAs[Int]("k"), st.getAs[Int]("bands"),
-      st.getAs[Boolean]("portable"), st.getAs[Int]("hash_buckets"),
-      optInt("shingle_n"), optInt("max_bucket"))
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): LshBandIndex =
+    new LshBandIndex(BucketedIndex.load(spark, path, BucketedIndex.Minhash))
 
   /** [[minhashLshAgainst]] against a persisted [[LshBandIndex]] —
-    * IDENTICAL output (new_id, base_id, est_jaccard ≥ threshold) to
-    * serving the raw signature table with the index's build
-    * parameters (oracle-pinned: dedup_minhash_serve shares
-    * dedup_incremental's SQL verbatim), different physics: the
-    * arrival batch's band rows are computed (tiny), their bucket set
-    * collects to the driver (≤ |batch| × bands values — the
-    * bm25ServeBatch pattern) and prunes index partitions STATICALLY;
-    * only matching-bucket band rows are ever read, the band-hash
-    * equi-join re-checks exact hashes, and signatures come off the
-    * index rows themselves — the historical signature table is never
-    * scanned, never re-exploded. `maxBucket` here caps the ARRIVAL
-    * side only (the base side was capped at build). */
+    * IDENTICAL output to serving the raw signature table with the
+    * index's build parameters (oracle-pinned: dedup_minhash_serve
+    * shares dedup_incremental's SQL verbatim), reading only the buckets
+    * the arrival band hashes reach ([[BucketedIndex.Layout.probe]]).
+    * `maxBucket` caps the ARRIVAL side only (the base was capped at
+    * build). */
   def minhashLshAgainst(
       newSigs: DataFrame, index: LshBandIndex, threshold: Double,
       maxBucket: Int): DataFrame = {
-    checkBuildParams(newSigs, "sig", "minhashLshAgainst",
-      Seq("graft.minhash.portable" -> index.portable))
-    // The raw-path shingle-width guard, against the index's sidecar:
-    // signatures from different shingle widths never match
-    // meaningfully, and the band rows carry no metadata to catch it.
-    val nm = newSigs.schema("sig").metadata
-    index.shingleN.foreach { want =>
-      if (nm.contains("graft.minhash.shingle_n"))
-        require(nm.getLong("graft.minhash.shingle_n").toInt == want,
-          "minhashLshAgainst: the index was built from signatures with " +
-            s"shingle_n=$want but the arrival signatures carry shingle_n=" +
-            s"${nm.getLong("graft.minhash.shingle_n")} — matching shingle " +
-            "widths are required (signatures from different widths never " +
-            "match meaningfully)")
-    }
-    minhashLshAgainstStaged(
-      stageLshArrivalBands(newSigs, index, maxBucket)
-        .localCheckpoint(false), // feeds the bucket collect AND the join
-      index, threshold)
+    // The band rows carry no signature metadata, so the family and
+    // shingle width are checked against the index's sidecar.
+    checkBuildParams(newSigs, "sig", "minhashLshAgainst", lshTags(index))
+    BucketedIndex.staged(stageLshArrivalBands(newSigs, index, maxBucket))(
+      minhashLshAgainstStaged(_, index, threshold))
   }
+
+  /** The signature tags an [[LshBandIndex]]'s sidecar pins. */
+  private def lshTags(index: LshBandIndex): Seq[(String, Any)] =
+    Seq("graft.minhash.portable" -> index.portable) ++
+      index.shingleN.map(w => "graft.minhash.shingle_n" -> w.toLong)
 
   /** The arrival band rows of the partitioned minhash serve — the
     * [[stageExactArrivals]] split for caller-owned staging.
@@ -742,18 +539,12 @@ object Dedup {
       .select(col("band"), col("band_hash"),
         col("id").as("new_id"), col("sig").as("sig_a"))
 
-  /** [[minhashLshAgainst]] over already-STAGED arrival band rows (the
-    * [[exactAgainstStaged]] contract; callers must run the
-    * build-parameter checks of the public entry first — the streaming
-    * face signs arrivals with the index's own parameters, making a
-    * mismatch unrepresentable). */
+  /** [[minhashLshAgainst]] over staged arrival band rows (the
+    * [[exactAgainstStaged]] contract; callers run the public entry's
+    * build-parameter checks first). */
   private[graft] def minhashLshAgainstStaged(
       a: DataFrame, index: LshBandIndex, threshold: Double): DataFrame = {
-    val buckets = a
-      .select(bandBucket(col("band_hash"), index.hashBuckets).as("bb"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = index.rows
-      .filter(col(BandBucket).isin(buckets: _*))
+    val pruned = index.layout.probe(a)
       .select(col("band"), col("band_hash"),
         col("id").as("base_id"), col("sig").as("sig_b"))
     a.join(pruned, Seq("band", "band_hash"))
@@ -831,126 +622,73 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path).select(col("id"), col("simhash"))
 
-  /** A persisted, band-bucketed SIMHASH index — the serve-optimal
-    * layout of the fingerprint table (the [[LshBandIndex]] argument
-    * applied to the SimHash face): the 4×16-bit band rows are
-    * precomputed ONCE at build (the per-serve band explode of the
-    * whole history was the SimHash face's only index-proportional
-    * serve cost) and land in (band, chunk)-hash partition
-    * directories, so a serve reads only the partitions the ARRIVAL
-    * batch's band chunks fall into. The fingerprint rides inside the
-    * band rows (4× storage at 8 bytes each — still 32 bytes + ids per
-    * historical doc), so Hamming verification never joins back to the
-    * flat fingerprint table. The hash family is captured at build
-    * from the frame's own `graft.simhash.portable` tag and arrivals
-    * are hashed WITH IT at serve — a build/serve family mismatch is
-    * structurally impossible, not merely validated. */
-  final case class SimhashBandIndex(
-      rows: DataFrame, portable: Boolean, hashBuckets: Int)
-
-  /** (band, chunk) → partition bucket of the band-bucketed SimHash
-    * layout (the shared [[OpsUtil.hashBucket]]). */
-  private def simChunkBucket(band: Column, chunk: Column, n: Int): Column =
-    OpsUtil.hashBucket(n, band, chunk)
+  /** A persisted SIMHASH band index in the [[BucketedIndex]] layout
+    * (kind `simhash`; the [[LshBandIndex]] argument at the SimHash
+    * face): the 4×16-bit band rows, with the fingerprint riding inside
+    * them, are precomputed ONCE at build and bucketed by (band, chunk).
+    * The hash family is captured at build from the frame's own
+    * `graft.simhash.portable` tag and arrivals are hashed WITH IT, so a
+    * build/serve family mismatch cannot happen. */
+  final class SimhashBandIndex private[graft] (
+      private[graft] val layout: BucketedIndex.Layout) {
+    def rows: DataFrame = layout.rows
+    def portable: Boolean = layout.param[Boolean]("portable")
+    def hashBuckets: Int = layout.hashBuckets
+  }
 
   /** Build + persist a [[SimhashBandIndex]] from a [[withSimhash]] /
-    * [[loadSimhashes]] fingerprint table. Size `nHashBuckets` to the
-    * corpus (constant per-bucket bytes, the
-    * [[graft.ops.Retrieval.saveBm25IndexPartitioned]] contract):
-    * serve scan ≈ |arrival band chunks| × bucket size, flat as
-    * history grows. Requires the frame's `graft.simhash.portable`
-    * tag (present on every [[withSimhash]] output and preserved
-    * through parquet) — the index must know its own hash family to
-    * hash arrivals at serve time. */
+    * [[loadSimhashes]] fingerprint table, which must carry its
+    * `graft.simhash.portable` tag. Size `nHashBuckets` to the corpus
+    * (constant per-bucket bytes). */
   def saveSimhashBandIndex(
       sim: DataFrame, path: String, nHashBuckets: Int = 64): Unit = {
-    require(nHashBuckets > 0, "saveSimhashBandIndex: nHashBuckets must be > 0")
     val md = sim.schema("simhash").metadata
     require(md.contains("graft.simhash.portable"),
       "saveSimhashBandIndex: the fingerprint frame carries no " +
         "graft.simhash.portable tag — build the index from withSimhash/" +
         "loadSimhashes output so the serve can hash arrivals with the " +
         "index's own family")
-    val portable = md.getBoolean("graft.simhash.portable")
-    simhashBands(sim.select(col("id"), col("simhash")))
-      .withColumn(BandBucket,
-        simChunkBucket(col("band"), col("chunk"), nHashBuckets))
-      .repartition(nHashBuckets, col(BandBucket))
-      .write.mode("overwrite").partitionBy(BandBucket)
-      .parquet(s"$path/bands")
-    val spark = sim.sparkSession
-    import spark.implicits._
-    Seq((portable, nHashBuckets)).toDF("portable", "hash_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+    BucketedIndex.write(BucketedIndex.Simhash, path,
+      simhashBands(sim.select(col("id"), col("simhash"))), nHashBuckets,
+      Map("portable" -> md.getBoolean("graft.simhash.portable")))
   }
 
-  /** Append a new batch's fingerprints to an existing
-    * [[saveSimhashBandIndex]] layout — the incremental-maintenance
-    * write (band rows under a fixed hash family are append-composable
-    * and the SimHash face has no build-time cap, so append ∪ rebuild
-    * are row-identical — spec-pinned). The batch frame's family tag
-    * must match the index's (fail-fast); bucket count comes from the
-    * index's own sidecar. Each append adds ≤ one file per touched
-    * bucket (the [[graft.ops.Similarity.appendEncodedCorpus]]
-    * contract); compact by re-running [[saveSimhashBandIndex]] over
-    * the flat fingerprint table when listing cost matters. */
+  /** Append a new batch's fingerprints to a [[saveSimhashBandIndex]]
+    * layout (no build-time cap, so append ∪ rebuild are row-identical,
+    * spec-pinned). The batch's family tag must match the index's. Each
+    * append adds ≤ one file per touched bucket; compact with
+    * [[compactSimhashBandIndex]]. */
   def appendSimhashBandIndex(sim: DataFrame, path: String): Unit = {
-    val spark = sim.sparkSession
-    val st = spark.read.parquet(s"$path/stats").head()
-    val (portable, n) = (st.getBoolean(0), st.getInt(1))
-    // Strict on tag presence, like appendLshBandIndex: appends write
-    // permanent rows, and the build (saveSimhashBandIndex) already
-    // requires the tag — an untagged batch frame here is hand-built.
-    require(sim.schema("simhash").metadata.contains("graft.simhash.portable"),
-      "appendSimhashBandIndex: the batch frame carries no " +
-        "graft.simhash.portable metadata — build it with withSimhash " +
-        "so the hash family is provably consistent with the index")
+    val idx = loadSimhashBandIndex(sim.sparkSession, path)
     checkBuildParams(sim, "simhash", "appendSimhashBandIndex",
-      Seq("graft.simhash.portable" -> portable))
-    simhashBands(sim.select(col("id"), col("simhash")))
-      .withColumn(BandBucket, simChunkBucket(col("band"), col("chunk"), n))
-      .repartition(n, col(BandBucket))
-      .write.mode("append").partitionBy(BandBucket)
-      .parquet(s"$path/bands")
+      Seq("graft.simhash.portable" -> idx.portable), strict = true)
+    BucketedIndex.append(idx.layout,
+      simhashBands(sim.select(col("id"), col("simhash"))))
   }
 
-  /** Compact an append-maintained [[saveSimhashBandIndex]] layout
-    * back to one file per bucket directory (appends add ≤ 1 file per
-    * touched bucket per batch). Rows untouched; see
-    * [[OpsUtil.compactPartitionedDir]] for the swap semantics and the
-    * don't-compact-under-a-live-serve caveat. */
+  /** Compact an append-maintained [[saveSimhashBandIndex]] layout to
+    * one file per bucket directory ([[BucketedIndex.compact]]; never
+    * under a live serve). */
   def compactSimhashBandIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    OpsUtil.compactPartitionedDir(spark, s"$path/bands", BandBucket)
+    BucketedIndex.compact(spark, path, BucketedIndex.Simhash)
 
-  /** Load a persisted [[SimhashBandIndex]] (inverse of
-    * [[saveSimhashBandIndex]]). */
+  /** Load a persisted [[SimhashBandIndex]] ([[BucketedIndex.load]]). */
   def loadSimhashBandIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): SimhashBandIndex = {
-    val st = spark.read.parquet(s"$path/stats").head()
-    SimhashBandIndex(spark.read.parquet(s"$path/bands"),
-      st.getBoolean(0), st.getInt(1))
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): SimhashBandIndex =
+    new SimhashBandIndex(BucketedIndex.load(spark, path, BucketedIndex.Simhash))
 
   /** [[simhashAgainst]] against a persisted [[SimhashBandIndex]] —
-    * IDENTICAL output (new_id, base_id, hamming ≤ maxHamming) to
-    * serving the flat fingerprint table (oracle-pinned:
-    * dedup_simhash_serve shares dedup_simhash_incremental's SQL
-    * verbatim), different physics: arrivals are hashed with the
-    * index's own family, their (band, chunk) bucket set collects to
-    * the driver (≤ |batch| × 4 values — the [[minhashLshAgainst]]
-    * band-index pattern) and prunes index partitions STATICALLY; only
-    * matching-bucket band rows are read, the (band, chunk) equi-join
-    * re-checks exact chunks, and Hamming verifies off the index rows
-    * themselves — the flat fingerprint table is never scanned, never
-    * re-exploded. */
+    * IDENTICAL output to serving the flat fingerprint table
+    * (oracle-pinned: dedup_simhash_serve shares
+    * dedup_simhash_incremental's SQL verbatim), hashing arrivals with
+    * the index's own family and reading only the buckets their (band,
+    * chunk) pairs reach ([[BucketedIndex.Layout.probe]]). */
   def simhashAgainst(
       newDocs: DataFrame, index: SimhashBandIndex, idCol: String,
       textCol: String, maxHamming: Int): DataFrame =
-    simhashAgainstStaged(
-      stageSimhashArrivals(newDocs, idCol, textCol, index)
-        .localCheckpoint(false), // feeds the bucket collect AND the join
-      index, maxHamming)
+    BucketedIndex.staged(stageSimhashArrivals(newDocs, idCol, textCol, index))(
+      simhashAgainstStaged(_, index, maxHamming))
 
   /** The arrival band rows of the partitioned SimHash serve (hashed
     * with the INDEX's family) — the [[stageExactArrivals]] split for
@@ -962,16 +700,11 @@ object Dedup {
       .select(col("band"), col("chunk"),
         col("id").as("new_id"), col("simhash").as("__graft_sim_n"))
 
-  /** [[simhashAgainst]] over already-STAGED arrival band rows (the
-    * [[exactAgainstStaged]] contract: caller made them stable and
-    * owns their blocks). */
+  /** [[simhashAgainst]] over staged arrival band rows (the
+    * [[exactAgainstStaged]] contract). */
   private[graft] def simhashAgainstStaged(
       a: DataFrame, index: SimhashBandIndex, maxHamming: Int): DataFrame = {
-    val buckets = a
-      .select(simChunkBucket(col("band"), col("chunk"), index.hashBuckets).as("bb"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = index.rows
-      .filter(col(BandBucket).isin(buckets: _*))
+    val pruned = index.layout.probe(a)
       .select(col("band"), col("chunk"),
         col("id").as("base_id"), col("simhash").as("__graft_sim_b"))
     a.join(pruned, Seq("band", "chunk"))
@@ -1025,16 +758,20 @@ object Dedup {
   }
 
   /** Fail fast when `df`'s fingerprint column carries build-parameter
-    * metadata that contradicts the serve call's parameters. A frame
-    * WITHOUT the tags (e.g. an index persisted by an engine that
+    * metadata that contradicts `expected` (the other side's values). A
+    * frame WITHOUT a tag (e.g. an index persisted by an engine that
     * strips Spark field metadata, or hand-built rows) passes
-    * unvalidated — for those the must-match contract is documentation
-    * only, so prefer frames produced by this engine's builders. */
+    * unvalidated unless `strict`: appends write permanent rows, so they
+    * refuse an untagged frame (review findings r14, r15) — a wrong-family
+    * batch would land as never-matching garbage rows. */
   private def checkBuildParams(
       df: DataFrame, fpCol: String, op: String,
-      expected: Seq[(String, Any)]): Unit = {
+      expected: Seq[(String, Any)], strict: Boolean = false): Unit = {
     val md = df.schema(fpCol).metadata
     expected.foreach { case (key, want) =>
+      require(!strict || md.contains(key),
+        s"$op: the batch frame carries no $key metadata — build it with " +
+          "this engine's builders so its parameters provably match the index")
       if (md.contains(key)) {
         val got: Any = want match {
           case _: Boolean => md.getBoolean(key)
@@ -1042,7 +779,7 @@ object Dedup {
           case other      => sys.error(s"unsupported param type: $other")
         }
         require(got == want,
-          s"$op: the index was built with $key=$got but is being served " +
+          s"$op: the frame carries $key=$got but the other side was built " +
             s"with $key=$want — matching build/serve parameters are " +
             "required (fingerprints from different parameters never " +
             "match meaningfully)")
@@ -1355,43 +1092,31 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path).select(col("id"), col("fp"))
 
-  /** A persisted, fp-bucketed WINNOW index — the serve-optimal layout
-    * of the substring fingerprint table (the [[SimhashBandIndex]]
-    * argument applied to the winnow face): (id, fp) rows land in
-    * fp-hash partition directories so a serve reads only the
-    * partitions the ARRIVAL batch's fingerprints fall into, and each
-    * row carries its fingerprint's document frequency `df`, computed
-    * ONCE at build — the serve-time hot-fingerprint cap
-    * ([[capBaseFps]]'s per-serve aggregate over the whole index, the
-    * face's other index-proportional cost) becomes a stored-column
-    * filter, with `maxDf` still a serve-time knob (the
-    * [[graft.ops.Retrieval.Bm25Index]] k1/b argument). Build
-    * parameters (k, w, family) are captured from the frame's own
-    * `graft.winnow.*` tags and arrivals are fingerprinted WITH THEM
-    * at serve — a build/serve mismatch is structurally impossible.
-    * Maintenance: REBUILD, not append — the stored `df` is a global
-    * aggregate (an appended batch's copies of an existing fingerprint
-    * would leave history rows under-counted), and the rebuild's input
-    * is the flat fingerprint table ∪ the batch's, never the corpus. */
-  final case class WinnowFpIndex(
-      rows: DataFrame, k: Int, w: Int, portable: Boolean, hashBuckets: Int)
+  /** A persisted WINNOW index in the [[BucketedIndex]] layout (kind
+    * `winnow`): (id, fp) rows bucketed by fingerprint, each carrying its
+    * fingerprint's document frequency `df`, computed ONCE at build — so
+    * the serve-time hot-fingerprint cap ([[capBaseFps]]'s per-serve
+    * aggregate over the whole index) becomes a stored-column filter,
+    * `maxDf` still a serve-time knob. (k, w, family) come from the
+    * frame's own `graft.winnow.*` tags and arrivals are fingerprinted
+    * WITH THEM. REBUILD-maintained: the stored `df` is a global
+    * aggregate, and the rebuild reads the flat fingerprint table ∪ the
+    * batch's, never the corpus. */
+  final class WinnowFpIndex private[graft] (
+      private[graft] val layout: BucketedIndex.Layout) {
+    def rows: DataFrame = layout.rows
+    def k: Int = layout.param[Int]("k")
+    def w: Int = layout.param[Int]("w")
+    def portable: Boolean = layout.param[Boolean]("portable")
+    def hashBuckets: Int = layout.hashBuckets
+  }
 
-  /** fp → partition bucket of the fp-bucketed winnow layout (also the
-    * exact layout's content-hash bucket; the shared
-    * [[OpsUtil.hashBucket]]). */
-  private def fpBucket(fp: Column, n: Int): Column =
-    OpsUtil.hashBucket(n, fp)
-
-  /** Build + persist a [[WinnowFpIndex]] from a
-    * [[winnowFingerprints]] / [[loadWinnowFingerprints]] table. Size
-    * `nHashBuckets` to the corpus (constant per-bucket bytes): serve
-    * scan ≈ |arrival fingerprints| × bucket size, flat as history
-    * grows. Requires the frame's `graft.winnow.*` build tags (present
-    * on every [[winnowFingerprints]] output and preserved through
-    * parquet). */
+  /** Build + persist a [[WinnowFpIndex]] from a [[winnowFingerprints]]
+    * / [[loadWinnowFingerprints]] table, which must carry its
+    * `graft.winnow.*` build tags. Size `nHashBuckets` to the corpus
+    * (constant per-bucket bytes). */
   def saveWinnowFpIndex(
       fps: DataFrame, path: String, nHashBuckets: Int = 64): Unit = {
-    require(nHashBuckets > 0, "saveWinnowFpIndex: nHashBuckets must be > 0")
     val md = fps.schema("fp").metadata
     require(md.contains("graft.winnow.k") && md.contains("graft.winnow.w") &&
         md.contains("graft.winnow.portable"),
@@ -1400,58 +1125,37 @@ object Dedup {
         "loadWinnowFingerprints output so the serve can fingerprint " +
         "arrivals with the index's own (k, w, family)")
     val rows = fps.select(col("id"), col("fp"))
-    val dfs = rows.groupBy("fp").agg(count(lit(1)).as("df"))
-    rows.join(dfs, Seq("fp"))
-      .withColumn(BandBucket, fpBucket(col("fp"), nHashBuckets))
-      .repartition(nHashBuckets, col(BandBucket))
-      .write.mode("overwrite").partitionBy(BandBucket)
-      .parquet(s"$path/fps")
-    val spark = fps.sparkSession
-    import spark.implicits._
-    Seq((md.getLong("graft.winnow.k").toInt, md.getLong("graft.winnow.w").toInt,
-        md.getBoolean("graft.winnow.portable"), nHashBuckets))
-      .toDF("k", "w", "portable", "hash_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+    BucketedIndex.write(BucketedIndex.Winnow, path,
+      rows.join(rows.groupBy("fp").agg(count(lit(1)).as("df")), Seq("fp")),
+      nHashBuckets, Map("k" -> md.getLong("graft.winnow.k").toInt,
+        "w" -> md.getLong("graft.winnow.w").toInt,
+        "portable" -> md.getBoolean("graft.winnow.portable")))
   }
 
-  /** Load a persisted [[WinnowFpIndex]] (inverse of
-    * [[saveWinnowFpIndex]]). */
+  /** Load a persisted [[WinnowFpIndex]] ([[BucketedIndex.load]]). */
   def loadWinnowFpIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): WinnowFpIndex = {
-    val st = spark.read.parquet(s"$path/stats").head()
-    WinnowFpIndex(spark.read.parquet(s"$path/fps"),
-      st.getInt(0), st.getInt(1), st.getBoolean(2), st.getInt(3))
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): WinnowFpIndex =
+    new WinnowFpIndex(BucketedIndex.load(spark, path, BucketedIndex.Winnow))
 
   /** [[winnowAgainst]] against a persisted [[WinnowFpIndex]] —
-    * IDENTICAL output (new_id, base_id, n_shared ≥ minShared) to
-    * serving the flat fingerprint table with the same `maxDf`
-    * (oracle-pinned: dedup_winnow_serve shares
-    * dedup_winnow_incremental's SQL verbatim), different physics:
-    * arrivals are fingerprinted with the index's own (k, w, family),
-    * their fp bucket set collects to the driver (≤ `hashBuckets`
-    * distinct ints) and prunes index partitions STATICALLY, and the
-    * df-cap filters the STORED per-fingerprint document frequency —
-    * no per-serve aggregate over the index, no full-index scan. */
+    * IDENTICAL output to serving the flat fingerprint table with the
+    * same `maxDf` (oracle-pinned: dedup_winnow_serve shares
+    * dedup_winnow_incremental's SQL verbatim), reading only the buckets
+    * the arrival fingerprints reach ([[BucketedIndex.Layout.probe]])
+    * and capping on the STORED document frequency. */
   def winnowAgainst(
       newDocs: DataFrame, index: WinnowFpIndex, idCol: String,
       textCol: String, minShared: Int, maxDf: Int): DataFrame =
-    winnowAgainstStaged(
-      winnowFingerprints(newDocs, idCol, textCol, index.k, index.w,
-        index.portable)
-        .localCheckpoint(false), // feeds the bucket collect AND the join
-      index, minShared, maxDf)
+    BucketedIndex.staged(winnowFingerprints(newDocs, idCol, textCol,
+        index.k, index.w, index.portable))(
+      winnowAgainstStaged(_, index, minShared, maxDf))
 
-  /** [[winnowAgainst]] over already-STAGED arrival fingerprints (a
-    * [[winnowFingerprints]] output built with the index's (k, w,
-    * family), made stable by the caller — the [[exactAgainstStaged]]
-    * contract). */
+  /** [[winnowAgainst]] over staged arrival fingerprints built with the
+    * index's (k, w, family) (the [[exactAgainstStaged]] contract). */
   private[graft] def winnowAgainstStaged(
       a: DataFrame, index: WinnowFpIndex,
       minShared: Int, maxDf: Int): DataFrame = {
-    val buckets = a.select(fpBucket(col("fp"), index.hashBuckets).as("bb"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = index.rows.filter(col(BandBucket).isin(buckets: _*))
+    val pruned = index.layout.probe(a)
     val capped =
       if (maxDf == Int.MaxValue) pruned else pruned.filter(col("df") <= maxDf)
     a.as("x").join(capped.as("y"), Seq("fp"))

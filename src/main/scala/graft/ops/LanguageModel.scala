@@ -664,8 +664,7 @@ object LanguageModel {
     *
     * `keyBuckets` is set ONLY by [[loadKn5Model]] on a
     * [[saveKn5ModelPartitioned]] directory (the
-    * [[graft.ops.Retrieval.Bm25Index]] `termBuckets` /
-    * [[graft.ops.Dedup.ExactHashIndex]] `root` precedent): the nine
+    * [[graft.ops.Retrieval.Bm25Index]] `termBuckets` precedent): the nine
     * keyed tables then read from key-hash partition directories and
     * still carry their `__graft_kb` column, and every broadcast-semi
     * serve prunes them to the arrival batch's probed buckets first. */

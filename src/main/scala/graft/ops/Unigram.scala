@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 import graft.functions.UnigramFunctions
 
@@ -115,14 +116,19 @@ object Unigram {
   }
 
   /** Load a persisted model (inverse of [[saveModel]]; `llTrace` comes
-    * back empty — it describes the training run, not the model). */
+    * back empty — it describes the training run, not the model). A
+    * missing, mistyped, NULL or out-of-range `stats` field fails naming
+    * the sidecar's contract. */
   def loadModel(
       spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val st = spark.read.parquet(s"$path/stats").head()
+    val st = BucketedIndex.readSidecar(spark, s"$path/stats",
+      "Unigram.saveModel", Seq("unk_logp" -> DoubleType,
+        "max_piece_len" -> IntegerType), Seq(BucketedIndex.positive("max_piece_len")))
     val pieces = spark.read.parquet(s"$path/pieces")
       .collect().map(r => (r.getString(0), r.getDouble(1)))
       .sortWith((a, b) => utf8Order.compare(a._1, b._1) < 0)
-    Model(pieces.toSeq, st.getDouble(0), st.getInt(1), Nil)
+    Model(pieces.toSeq, st("unk_logp").asInstanceOf[Double],
+      st("max_piece_len").asInstanceOf[Int], Nil)
   }
 
   def tokenize(

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.functions.WordPieceFunctions
 
@@ -88,13 +89,18 @@ object WordPiece {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
   }
 
-  /** Load a persisted model (inverse of [[saveModel]]). */
+  /** Load a persisted model (inverse of [[saveModel]]). A missing,
+    * mistyped, NULL or out-of-range `stats` field fails naming the
+    * sidecar's contract. */
   def loadModel(
       spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val st = spark.read.parquet(s"$path/stats").head()
+    val st = BucketedIndex.readSidecar(spark, s"$path/stats",
+      "WordPiece.saveModel", Seq("unk" -> StringType,
+        "max_word_cp" -> IntegerType), Seq(BucketedIndex.positive("max_word_cp")))
     val vocab = spark.read.parquet(s"$path/vocab").orderBy("rank")
       .collect().map(_.getString(1)).toSeq
-    Model(vocab, st.getString(0), st.getInt(1))
+    Model(vocab, st("unk").asInstanceOf[String],
+      st("max_word_cp").asInstanceOf[Int])
   }
 
   // ---------------------------------------------------------------------

@@ -3,7 +3,7 @@ package graft.run
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Packing, Sampling, TextOps}
+import graft.ops.{BucketedIndex, Packing, Sampling, TextOps}
 
 /** Named corpus-prep transforms applicable between retrieval and
   * encoding — the configuration-surface analogue of the reference's
@@ -231,19 +231,6 @@ object Transforms {
       .unionByName(staged.filter(col(text).isNull || col(key).isNull))
   }
 
-  /** Layout sniff for the fingerprint index gates: every PARTITIONED
-    * serve layout ([[graft.ops.Dedup.saveLshBandIndex]] /
-    * `saveSimhashBandIndex` / `saveWinnowFpIndex`) writes a `stats`
-    * sidecar next to its data directory; the flat layouts are a bare
-    * parquet table. One existence probe at plan time picks the
-    * loader, so a gate upgrades to file-level partition pruning the
-    * moment its index is re-saved in the partitioned form — no config
-    * change. */
-  private def isPartitionedIndex(df: DataFrame, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(root, "stats")
-    p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** rates as strata:pct pairs joined with '|', e.g. `en:40|de:80`. */
   private def parseRates(spec: String): Map[String, Int] =
     spec.split('|').toSeq.map { r =>
@@ -289,14 +276,14 @@ object Transforms {
       // classification).
       // `index` is either a flat parquet index (saveExactIndex) or a
       // hash-partitioned ExactHashIndex directory
-      // (saveExactIndexPartitioned, auto-detected by its stats
-      // sidecar): partition-pruned serving, only the arrival batch's
-      // hash buckets are read.
+      // (saveExactIndexPartitioned, whose sidecar is its commit marker
+      // and names its kind): partition-pruned serving, only the
+      // arrival batch's hash buckets are read.
       val key = t.arg("key")
       val root = t.arg("index")
       indexGate(df, key, t.arg("col"), keepMatches = true) { (rows, text) =>
         val classified =
-          if (isPartitionedIndex(df, root))
+          if (BucketedIndex.kindOf(df.sparkSession, root).nonEmpty)
             graft.ops.Dedup.exactAgainst(rows,
               graft.ops.Dedup.loadExactIndexPartitioned(df.sparkSession, root),
               key, text)
@@ -312,7 +299,7 @@ object Transforms {
       // dedup_against. `index` is either a flat fingerprint table
       // (graft.ops.Dedup.saveSimhashes; arrivals hashed with the
       // default family) or a band-bucketed SimhashBandIndex directory
-      // (saveSimhashBandIndex, auto-detected by its stats sidecar):
+      // (saveSimhashBandIndex; its sidecar names the kind):
       // partition-pruned serving, hash family from the index itself —
       // the only DSL route to a portable-family index.
       val key = t.arg("key")
@@ -320,7 +307,7 @@ object Transforms {
       val mh = t.args.get("max_hamming").map(_.toInt).getOrElse(8)
       indexGate(df, key, t.arg("col"), keepMatches = false) { (rows, text) =>
         val pairs =
-          if (isPartitionedIndex(df, root))
+          if (BucketedIndex.kindOf(df.sparkSession, root).nonEmpty)
             graft.ops.Dedup.simhashAgainst(rows,
               graft.ops.Dedup.loadSimhashBandIndex(df.sparkSession, root),
               key, text, mh)
@@ -337,8 +324,8 @@ object Transforms {
       // is either a flat fingerprint table
       // (graft.ops.Dedup.saveWinnowFingerprints; arrivals
       // fingerprinted with the default (k, w, family)) or an
-      // fp-bucketed WinnowFpIndex directory (saveWinnowFpIndex,
-      // auto-detected by its stats sidecar): partition-pruned
+      // fp-bucketed WinnowFpIndex directory (saveWinnowFpIndex; its
+      // sidecar names the kind): partition-pruned
       // serving, (k, w, family) from the index itself and the df-cap
       // a stored-column filter — the only DSL route to non-default
       // build parameters.
@@ -348,7 +335,7 @@ object Transforms {
       val mDf = t.args.get("max_df").map(_.toInt).getOrElse(Int.MaxValue)
       indexGate(df, key, t.arg("col"), keepMatches = false) { (rows, text) =>
         val pairs =
-          if (isPartitionedIndex(df, root))
+          if (BucketedIndex.kindOf(df.sparkSession, root).nonEmpty)
             graft.ops.Dedup.winnowAgainst(rows,
               graft.ops.Dedup.loadWinnowFpIndex(df.sparkSession, root),
               key, text, minShared = minSh, maxDf = mDf)
@@ -365,8 +352,8 @@ object Transforms {
       // signature table (graft.ops.Dedup.saveSignatures; k/bands/
       // portable args must match the build — the metadata tags
       // enforce portable and shingle_n) or a band-bucketed
-      // LshBandIndex directory (saveLshBandIndex, auto-detected by
-      // its stats sidecar): partition-pruned serving with k/bands/
+      // LshBandIndex directory (saveLshBandIndex; its sidecar names
+      // the kind): partition-pruned serving with k/bands/
       // portable/shingle_n from the index itself — explicitly passed
       // k/bands/portable args must AGREE with the sidecar (fail-fast,
       // never silently ignored). max_bucket semantics differ by
@@ -381,7 +368,7 @@ object Transforms {
       val maxBucket = t.args.get("max_bucket").map(_.toInt).getOrElse(Int.MaxValue)
       indexGate(df, key, t.arg("col"), keepMatches = false) { (rows, text) =>
         val pairs =
-          if (isPartitionedIndex(df, root)) {
+          if (BucketedIndex.kindOf(df.sparkSession, root).nonEmpty) {
             val idx = graft.ops.Dedup.loadLshBandIndex(df.sparkSession, root)
             Seq(("k", t.args.get("k").map(_.toInt), idx.k),
               ("bands", t.args.get("bands").map(_.toInt), idx.bands))
@@ -482,7 +469,7 @@ object Transforms {
       // the Kneser-Ney count tables were fitted ONCE on a clean
       // reference corpus and every ingest batch scores against them
       // with zero training passes. The model directory knows its own
-      // ORDER (the isPartitionedIndex sniff pattern): a saveKn3Model
+      // ORDER: a saveKn3Model
       // layout (c3/) serves order-3 interpolated KN; a saveKnModel
       // layout (c12/) serves the bigram family; anything else is an
       // order-5 model — CCNet's actual configuration — which

@@ -30,7 +30,10 @@ import org.apache.spark.sql.SparkSession
   *                    count for the partition-pruned serve layout
   *                    (saveKn5ModelPartitioned); omit for flat]
   *   - `exact_index` — content-hash dedup index [size = hash-bucket
-  *                    count for the partitioned layout; omit for flat]
+  *                    count for the bucketed layout, whose sidecar is
+  *                    written last as its commit marker and records
+  *                    the kind the `*_filter` gates route on; omit
+  *                    for flat]
   *   - `minhash_index` — band-bucketed MinHash LSH index
   *                    ([[graft.ops.Dedup.saveLshBandIndex]]; serves
   *                    `minhash_filter`) [size = nHashBuckets, 64]

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.ops.{BucketedIndex, Dedup, Similarity}
+
 /** Maintenance entry point for the append-maintained serve layouts —
   * the runnable job the r12 verdict asked for: the layouts whose
   * freshness path is APPEND ([[graft.ops.Similarity.appendEncodedCorpus]]
@@ -14,17 +16,16 @@ import org.apache.spark.sql.SparkSession
   * crash leaves a `.__graft_old` sibling that BLOCKS the next run
   * with the named recovery path instead of silently double-compacting.
   *
-  * Layout is auto-detected from the directory's own structure. The
-  * two band indexes share the `bands/ + stats/` shape, so the STATS
-  * SIDECAR SCHEMA disambiguates (the r13-verdict mislabel fix — a
-  * MinHash index must never be reported as a SimHash one):
-  *   - `bands` + `stats` with `k`/`bands` columns → MinHash LSH band
-  *     index (append-maintained only when built UNCAPPED; a capped
-  *     build is rebuild-maintained — see
-  *     [[graft.ops.Dedup.appendLshBandIndex]] — but compaction is
-  *     row-preserving either way, so both are accepted here)
-  *   - `bands` + `stats` without them → SimHash band index
-  *   - `cid=*` partition directories → encoded corpus (PQ codes)
+  * Layout is routed on [[graft.ops.BucketedIndex.kindOf]], the kind
+  * a bucketed index's sidecar records (a MinHash index must never be
+  * reported as a SimHash one — the r13-verdict mislabel):
+  *   - `minhash` built UNCAPPED → MinHash LSH band index
+  *   - `simhash` → SimHash band index
+  *   - no bucketed index, `cid=*` partition directories → encoded
+  *     corpus (PQ codes)
+  * The rebuild-maintained kinds (exact, winnow, and a CAPPED-build
+  * minhash index — see [[graft.ops.Dedup.appendLshBandIndex]]) are
+  * refused: their merge/rebuild step rewrites them whole.
   *
   * Run it from the maintenance job that owns the index, never under a
   * live serve (object-store rename is copy+delete).
@@ -51,37 +52,32 @@ object Maintain {
       }
       n
     }
-    val bands = new org.apache.hadoop.fs.Path(root, "bands")
-    val stats = new org.apache.hadoop.fs.Path(root, "stats")
-    val isBandIndex = fs.exists(bands) && fs.exists(stats)
-    val isEncoded = !isBandIndex &&
-      fs.listStatus(root).exists(_.getPath.getName.startsWith("cid="))
-    require(isBandIndex || isEncoded,
-      s"maintain: $dir is neither a band index (bands/ + stats/: " +
-        "MinHash LSH or SimHash, told apart by the stats schema) nor a " +
-        "cid-partitioned encoded corpus (cid=* directories) — only the " +
-        "APPEND-maintained layouts need compaction; the " +
+    val rebuilt =
+      "only the APPEND-maintained layouts need compaction; the " +
         "rebuild-maintained ones (exact, winnow, bm25, and any " +
         "CAPPED-build minhash LSH index) are rewritten whole by their " +
-        "merge/rebuild step")
-    if (isBandIndex) {
-      // Both band indexes persist bands/ + stats/; the sidecar schema
-      // names the layout (simhash: portable + hash_buckets only;
-      // minhash adds k, bands, shingle_n, max_bucket). Compaction is
-      // mechanically identical (same BandBucket partition column,
-      // row-preserving) — the distinction is the REPORT and the
-      // append contract documented above.
-      val sidecar = spark.read.parquet(s"$dir/stats").schema.fieldNames.toSet
-      val isMinhash = sidecar.contains("k") && sidecar.contains("bands")
-      val before = dataFiles(bands)
-      if (isMinhash) graft.ops.Dedup.compactLshBandIndex(spark, dir)
-      else graft.ops.Dedup.compactSimhashBandIndex(spark, dir)
-      (if (isMinhash) "minhash_band_index" else "simhash_band_index",
-        before, dataFiles(bands))
-    } else {
-      val before = dataFiles(root)
-      graft.ops.Similarity.compactEncodedCorpus(spark, dir)
-      ("encoded_corpus", before, dataFiles(root))
+        "merge/rebuild step"
+    BucketedIndex.kindOf(spark, dir) match {
+      case Some(kind) =>
+        val cap = if (kind == BucketedIndex.Minhash)
+          Dedup.loadLshBandIndex(spark, dir).maxBucket.filter(_ != Int.MaxValue)
+        else None
+        require((kind == BucketedIndex.Simhash || kind == BucketedIndex.Minhash) &&
+            cap.isEmpty,
+          s"maintain: $dir is a ${kind.name} index" +
+            cap.fold("")(c => s" capped at max_bucket=$c") + s" — $rebuilt")
+        val data = new org.apache.hadoop.fs.Path(root, kind.dataDir)
+        val before = dataFiles(data)
+        BucketedIndex.compact(spark, dir, kind)
+        (s"${kind.name}_band_index", before, dataFiles(data))
+      case None =>
+        require(fs.listStatus(root).exists(_.getPath.getName.startsWith("cid=")),
+          s"maintain: $dir is neither a band index (a minhash or simhash " +
+            "bucketed index, told apart by the kind its sidecar records) " +
+            s"nor a cid-partitioned encoded corpus (cid=* directories) — $rebuilt")
+        val before = dataFiles(root)
+        Similarity.compactEncodedCorpus(spark, dir)
+        ("encoded_corpus", before, dataFiles(root))
     }
   }
 

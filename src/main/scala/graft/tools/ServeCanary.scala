@@ -135,7 +135,7 @@ object ServeCanary {
       Dedup.saveExactIndex(exactIdx0, s"$d/exact")
       // Hash-partitioned exact serve layout, bucket count ∝ scale
       // (constant per-bucket bytes). The serve reads the probed
-      // buckets by DIRECT PATH (ExactHashIndex.root), so the large
+      // buckets by DIRECT PATH (BucketedIndex.Layout.probe), so the large
       // directory count costs nothing per serve — r12's 2.08× outlier
       // was the isin-filter planning pass over every directory, and a
       // √-sizing attempt measured WORSE (2.48×: it traded planning

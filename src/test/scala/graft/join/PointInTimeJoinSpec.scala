@@ -49,10 +49,10 @@ class PointInTimeJoinSpec extends SparkSpec {
     source = feats.withColumn("m", mapOf(lit("k"), $"val")),
     features = Seq("val", "m"))
 
-  // The two reductions, under their historical test names: orderable
-  // features (max over the packed struct) and a view whose MAP feature
-  // selects the max_by reduction from its schema.
-  for ((label, withMap) <- Seq("MaxByAgg" -> false, "WindowRowNumber" -> true)) {
+  // The two reductions: orderable features (max over the packed
+  // struct) and a view whose MAP feature selects the max_by reduction
+  // from its schema.
+  for ((label, withMap) <- Seq("orderable features" -> false, "map feature" -> true)) {
     def v(ttl: Option[Long]) = if (withMap) mapView(ttl) else view(ttl)
     def vals(out: org.apache.spark.sql.DataFrame) = {
       if (withMap) out.collect().foreach { r =>

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
-import graft.SparkSpec
+import graft.{SidecarFaults, SparkSpec}
 
 /** Unit + property coverage for the dedup operator family, checked
   * against naive in-memory oracles. */
@@ -923,6 +923,117 @@ class DedupSpec extends SparkSpec with Matchers {
             "doc_id", "text", k = 6, w = 10, minShared = 2, maxDf = maxDf))
       }
     }
+  }
+
+  /** One bucketed dedup family as the fault-injection specs drive it:
+    * its save over a docs frame, its loader, a required sidecar field
+    * to NULL (with its SQL type), one to drop, an out-of-range value,
+    * and the family whose layout it must refuse to load. */
+  private case class Bucketed(
+      name: String, writer: String,
+      save: (org.apache.spark.sql.DataFrame, String) => Unit,
+      load: String => Any, nullField: (String, String), missingField: String,
+      outOfRange: (String, Int), foreign: String)
+
+  private def bucketedFamilies: Seq[Bucketed] = Seq(
+    Bucketed("exact", "saveExactIndexPartitioned",
+      (d, p) => Dedup.saveExactIndexPartitioned(Dedup.exact(d, "doc_id", "text"), p, 8),
+      p => Dedup.loadExactIndexPartitioned(spark, p),
+      "hash_buckets" -> "int", "hash_buckets", "hash_buckets" -> 0, "winnow"),
+    Bucketed("minhash", "saveLshBandIndex",
+      (d, p) => Dedup.saveLshBandIndex(
+        Dedup.minhashSignatures(d, "doc_id", "text", shingleN = 2), p, nHashBuckets = 8),
+      p => Dedup.loadLshBandIndex(spark, p),
+      "k" -> "int", "bands", "bands" -> 3, "simhash"),
+    Bucketed("simhash", "saveSimhashBandIndex",
+      (d, p) => Dedup.saveSimhashBandIndex(Dedup.withSimhash(d, "doc_id", "text"), p, 8),
+      p => Dedup.loadSimhashBandIndex(spark, p),
+      "portable" -> "boolean", "portable", "hash_buckets" -> -2, "minhash"),
+    Bucketed("winnow", "saveWinnowFpIndex",
+      (d, p) => Dedup.saveWinnowFpIndex(
+        Dedup.winnowFingerprints(d, "doc_id", "text", k = 6, w = 8), p, 8),
+      p => Dedup.loadWinnowFpIndex(spark, p),
+      "w" -> "int", "k", "w" -> 0, "exact"))
+
+  for (f <- bucketedFamilies)
+    test(s"${f.name} bucketed index: an unfinished save or a corrupt, foreign or out-of-range sidecar fails naming ${f.writer}") {
+      val docs = docsDf((1L to 40L).map(i =>
+        i -> s"document body number ${i % 13} with a few more words"))
+      // a save whose write job dies mid-way, as a killed save would (the
+      // repartition keeps the planner from folding the error into the
+      // local input before the save starts)
+      val killed = docs.repartition(2).withColumn("text",
+        when(col("doc_id") > 0L, raise_error(lit("killed mid-save")))
+          .otherwise(col("text")))
+      val d = java.nio.file.Files.createTempDirectory(s"graft-fault-${f.name}").toString
+      def refused(path: String, why: String): Unit = {
+        val e = intercept[IllegalArgumentException](f.load(path))
+        e.getMessage should include (f.writer)
+        e.getMessage should include (why)
+      }
+      def saved(path: String): String = { f.save(docs, path); f.load(path); path }
+
+      // killed before its commit: no sidecar
+      intercept[Exception](f.save(killed, s"$d/fresh"))
+      refused(s"$d/fresh", "no sidecar")
+      // a re-save killed after it deleted the old sidecar
+      intercept[Exception](f.save(killed, saved(s"$d/resave")))
+      refused(s"$d/resave", "no sidecar")
+      // zero-byte and truncated sidecar files
+      SidecarFaults.truncate(spark, s"${saved(s"$d/zero")}/stats", 0)
+      refused(s"$d/zero", "unreadable sidecar")
+      SidecarFaults.truncate(spark, s"${saved(s"$d/cut")}/stats", 16)
+      refused(s"$d/cut", "unreadable sidecar")
+      // a NULL and a missing field
+      SidecarFaults.rewrite(spark, s"${saved(s"$d/null")}/stats")(
+        _.withColumn(f.nullField._1, lit(null).cast(f.nullField._2)))
+      refused(s"$d/null", s"NULL ${f.nullField._1}")
+      SidecarFaults.rewrite(spark, s"${saved(s"$d/missing")}/stats")(
+        _.withColumnRenamed(f.missingField, "renamed"))
+      refused(s"$d/missing", s"missing field ${f.missingField}")
+      // another family's layout
+      bucketedFamilies.find(_.name == f.foreign).get.save(docs, s"$d/foreign")
+      refused(s"$d/foreign", s"kind '${f.foreign}'")
+      // out-of-range parameters
+      SidecarFaults.rewrite(spark, s"${saved(s"$d/range")}/stats")(
+        _.withColumn(f.outOfRange._1, lit(f.outOfRange._2)))
+      refused(s"$d/range", "out of range")
+      // a sidecar written before the kind and schema were recorded
+      // still loads as the kind its loader asks for
+      SidecarFaults.rewrite(spark, s"${saved(s"$d/legacy")}/stats")(_.drop("kind", "schema"))
+      f.load(s"$d/legacy")
+    }
+
+  test("a dedup_against gate refuses an index directory whose re-save never committed") {
+    val docs = docsDf((1L to 20L).map(i => i -> s"gate body $i"))
+    val d = java.nio.file.Files.createTempDirectory("graft-fault-gate").toString
+    Dedup.saveExactIndexPartitioned(Dedup.exact(docs, "doc_id", "text"), s"$d/idx", 4)
+    intercept[Exception](Dedup.saveExactIndexPartitioned(
+      Dedup.exact(docs.repartition(2).withColumn("text",
+        when(col("doc_id") > 0L, raise_error(lit("killed mid-save")))
+          .otherwise(col("text"))), "doc_id", "text"), s"$d/idx", 4))
+    val e = intercept[IllegalArgumentException](graft.run.Transforms.apply(docs,
+      graft.run.Transforms.parse(s"dedup_against(key=doc_id,col=text,index=$d/idx)").head))
+    e.getMessage should include ("no stats/ sidecar")
+  }
+
+  test("append onto a foreign kind fails naming the layout's writer and writes nothing") {
+    val docs = docsDf((1L to 40L).map(i => i -> s"append body ${i % 9} and tail words"))
+    val d = java.nio.file.Files.createTempDirectory("graft-fault-append").toString
+    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", shingleN = 2)
+    val sim = Dedup.withSimhash(docs, "doc_id", "text")
+    Dedup.saveLshBandIndex(sigs, s"$d/lsh", nHashBuckets = 8)
+    Dedup.saveSimhashBandIndex(sim, s"$d/sim", 8)
+    def rows(p: String) = spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+    val (lshRows, simRows) = (rows(s"$d/lsh/bands"), rows(s"$d/sim/bands"))
+    val e1 = intercept[IllegalArgumentException](Dedup.appendLshBandIndex(sigs, s"$d/sim"))
+    e1.getMessage should include ("saveLshBandIndex")
+    e1.getMessage should include ("kind 'simhash'")
+    val e2 = intercept[IllegalArgumentException](Dedup.appendSimhashBandIndex(sim, s"$d/lsh"))
+    e2.getMessage should include ("saveSimhashBandIndex")
+    e2.getMessage should include ("kind 'minhash'")
+    rows(s"$d/lsh/bands") shouldBe lshRows
+    rows(s"$d/sim/bands") shouldBe simRows
   }
 
   test("index build-parameter tags: mismatched serve parameters fail fast, through parquet round trips") {

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
-import graft.SparkSpec
+import graft.{SidecarFaults, SparkSpec}
 import graft.functions.UnigramFunctions
 
 class UnigramSpec extends SparkSpec with Matchers {
@@ -228,6 +228,22 @@ class UnigramSpec extends SparkSpec with Matchers {
     val a = Unigram.tokenize(docs, "doc_id", "text", m).collect().toSeq
     val b = Unigram.tokenize(docs, "doc_id", "text", m2).collect().toSeq
     b should contain theSameElementsAs a
+  }
+
+  test("loadModel refuses a stats sidecar with a NULL or missing field, naming its contract") {
+    val docs = docsDf(Seq(1L -> "the cat sat on the mat", 2L -> "a rat and a cat"))
+    val m = Unigram.train(docs, "text", vocabSize = 18,
+      maxPieceLen = 3, seedSize = 64, emIters = 2)
+    for ((why, corrupt) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "NULL unk_logp" -> (_.withColumn("unk_logp", lit(null).cast("double"))),
+        "missing field max_piece_len" -> (_.withColumnRenamed("max_piece_len", "renamed")))) {
+      val dir = java.nio.file.Files.createTempDirectory("unigram-bad").toString
+      Unigram.saveModel(m, dir, spark)
+      SidecarFaults.rewrite(spark, s"$dir/stats")(corrupt)
+      val e = intercept[IllegalArgumentException](Unigram.loadModel(spark, dir))
+      e.getMessage should include ("Unigram.saveModel sidecar contract")
+      e.getMessage should include (why)
+    }
   }
 
   test("train + tokenize round-trips the sf0.001 documents losslessly") {

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SidecarFaults, SparkSpec}
 
 class WordPieceSpec extends SparkSpec {
   import spark.implicits._
@@ -130,5 +130,20 @@ class WordPieceSpec extends SparkSpec {
     val b = WordPiece.tokenize(docs, "doc_id", "text", m2)
       .orderBy("token_pos").collect().toSeq
     assert(a === b)
+  }
+
+  test("loadModel refuses a stats sidecar with a NULL or missing field, naming its contract") {
+    val docs = Seq((1L, "abc abd abe")).toDF("doc_id", "text")
+    val m = WordPiece.train(docs, "text", nMerges = 4)
+    for ((why, corrupt) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "NULL unk" -> (_.withColumn("unk", lit(null).cast("string"))),
+        "missing field max_word_cp" -> (_.withColumnRenamed("max_word_cp", "renamed")))) {
+      val dir = java.nio.file.Files.createTempDirectory("wp-bad").toString
+      WordPiece.saveModel(m, dir, spark)
+      SidecarFaults.rewrite(spark, s"$dir/stats")(corrupt)
+      val e = intercept[IllegalArgumentException](WordPiece.loadModel(spark, dir))
+      assert(e.getMessage.contains("WordPiece.saveModel sidecar contract"))
+      assert(e.getMessage.contains(why))
+    }
   }
 }

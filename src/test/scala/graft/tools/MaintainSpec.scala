@@ -98,6 +98,29 @@ class MaintainSpec extends SparkSpec with Matchers {
     e.getMessage should include("died mid-swap")
   }
 
+  test("rebuild-maintained kinds (exact, winnow, capped minhash) are refused, naming the kind") {
+    import spark.implicits._
+    val d = scratch()
+    val docs = (1L to 40L).map(i => (i, s"body ${i % 7} of some words here"))
+      .toDF("doc_id", "text")
+    Dedup.saveExactIndexPartitioned(Dedup.exact(docs, "doc_id", "text"), s"$d/exact", 4)
+    Dedup.saveWinnowFpIndex(
+      Dedup.winnowFingerprints(docs, "doc_id", "text", k = 6, w = 8), s"$d/winnow", 4)
+    Dedup.saveLshBandIndex(Dedup.minhashSignatures(docs, "doc_id", "text", shingleN = 2),
+      s"$d/capped", maxBucket = 5, nHashBuckets = 4)
+    // a sidecar written before the kind was recorded is told by its fields
+    Dedup.saveLshBandIndex(Dedup.minhashSignatures(docs, "doc_id", "text", shingleN = 2),
+      s"$d/legacy", maxBucket = 5, nHashBuckets = 4)
+    graft.SidecarFaults.rewrite(spark, s"$d/legacy/stats")(_.drop("kind", "schema"))
+    for ((dir, kind) <- Seq("exact" -> "exact index", "winnow" -> "winnow index",
+        "capped" -> "minhash index capped at max_bucket=5",
+        "legacy" -> "minhash index capped at max_bucket=5")) {
+      val e = intercept[IllegalArgumentException](Maintain.run(spark, s"$d/$dir"))
+      e.getMessage should include (kind)
+      e.getMessage should include ("rebuild-maintained")
+    }
+  }
+
   test("unknown layouts and missing dirs fail fast with the supported set named") {
     val d = scratch()
     // plain directory with a stray file: neither layout
