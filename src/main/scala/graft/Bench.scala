@@ -3,13 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus(32)
+    val spark = LocalSession(cpus)
     // Self-diagnosis: count task failures (retries) per query via a
     // listener. A retried task silently inflates that query's wall
     // time — r6's bench tail showed a mid-run stack trace with no
@@ -97,7 +92,7 @@ object Bench {
     def calibOnce(): Double = {
       currentQuery = "calib"
       val t0 = System.nanoTime()
-      calibJob(spark, cpus.toInt)
+      calibJob(spark, cpus)
       (System.nanoTime() - t0) / 1e9
     }
     calibOnce() // warmup, untimed

@@ -6,12 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension exposing the engine's custom Catalyst expressions
   * to SQL users — `spark.sql("SELECT graft_dot(a, b)")` works the same
-  * as the typed Column API. Install at build time:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * }}}
+  * as the typed Column API. Install at build time by setting
+  * `spark.sql.extensions=graft.functions.GraftExtensions` on the
+  * session builder,
   *
   * or imperatively on an existing session with
   * [[GraftFunctions.register]].

@@ -1342,9 +1342,9 @@ object FeatureStats {
     * one row per baseline slice: (feature, slice, n_base, n_cur, psi,
     * js_div), same add-half smoothing and 9-dp DECIMAL-summed
     * reduction as [[scoreDrift]] applied slice-wise. Fully
-    * distributed: the baseline rides as a slices×nBins literal frame
-    * (broadcast), the batch contributes ONE map-side-combined hash-agg
-    * onto (slice, bin); per-slice totals and the divergence reduction
+    * distributed: the baseline rides as a slices×nBins literal frame,
+    * the batch contributes ONE map-side-combined hash-agg onto
+    * (slice, bin); per-slice totals and the divergence reduction
     * are aggs over the small joined frame. Slices absent from the
     * batch score against an all-smoothed empty side (their PSI flags
     * the disappearance); batch slices unknown to the baseline are
@@ -1361,9 +1361,12 @@ object FeatureStats {
   }
 
   /** Shared slice-wise divergence reduction over a (slice, bin, n_q)
-    * batch agg: the baseline rides as a broadcast slices×nBins literal
-    * frame; per-slice totals and the 9-dp DECIMAL PSI/JS reduction are
-    * aggs over the small joined frame. One copy so the equal-width and
+    * batch agg: the baseline rides as a slices×nBins literal frame on
+    * the preserved side of a left join (every baseline bin scores, even
+    * one the batch never fills), so it is never the broadcast side —
+    * the planner may broadcast the batch agg instead; per-slice
+    * totals and the 9-dp DECIMAL PSI/JS reduction are aggs over the
+    * small joined frame. One copy so the equal-width and
     * equal-mass sliced scorers cannot drift apart. */
   private def slicedDivergence(
       feature: String, baseCounts: Map[String, IndexedSeq[Long]],
@@ -1374,7 +1377,7 @@ object FeatureStats {
     val baseDf = slices.flatMap { sl =>
       baseCounts(sl).zipWithIndex.map { case (n, b) => (sl, b, n) }
     }.toDF("slice", "bin", "n_b") // slices×nBins literal rows
-    val joined = broadcast(baseDf)
+    val joined = baseDf
       .join(curBinned, Seq("slice", "bin"), "left")
       .select(col("slice"), col("bin"), col("n_b"),
         coalesce(col("n_q"), lit(0L)).as("n_q"))

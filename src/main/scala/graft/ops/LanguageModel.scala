@@ -1040,8 +1040,8 @@ object LanguageModel {
     * bound — every broadcast-shaped plan holds ~10 × |batch keys|
     * survivor frames on the driver) takes the broadcast-semi serve:
     * partition-PRUNED against a key-bucketed model (serve scan ≈
-    * |batch keys| × bucket size — Kn5GeometryCanary measures it FLAT
-    * at 100× model growth), over whole tables against a flat one.
+    * |batch keys| × bucket size — measured FLAT at 100× model growth,
+    * SCALE.md Round 15), over whole tables against a flat one.
     * Above the bound — corpus-scale self-scoring — only the shuffle
     * CASCADE is admissible, over the unioned buckets of a key-bucketed
     * model, with the sidecar discounts whenever the layout has them

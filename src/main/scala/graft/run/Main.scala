@@ -1,7 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSession
 import graft.registry.YamlRegistry
 
 /** CLI entry: run a FeastExampleGen-shaped job end-to-end.
@@ -40,15 +39,7 @@ object Main {
       else if (featureArg.contains(":")) Left(featureArg.split(",").toSeq)
       else Right(featureArg)
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(32))
 
     val job = JobConfig(
       registry = YamlRegistry.loadFile(registryPath),

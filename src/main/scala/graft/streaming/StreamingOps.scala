@@ -690,8 +690,8 @@ object StreamingOps {
     * the index fits cluster memory — false once history outgrows it);
     * each micro-batch runs the partition-pruned serve, reading only
     * the ≤ |batch| hash buckets the batch's content falls into, a
-    * per-batch cost flat in history size (the ServeCanary
-    * measurement). Rows per batch are [[graft.ops.Dedup
+    * per-batch cost flat in history size (measured in SCALE.md
+    * Round-12). Rows per batch are [[graft.ops.Dedup
     * .exactAgainst]]'s by construction (shared code path; the
     * dedup_exact_serve oracle covers it). */
   def exactDedupStream(

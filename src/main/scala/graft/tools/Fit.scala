@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.LocalSession
+
 /** Artifact trainer CLI — the missing front door of the
   * fit-once/serve-many family: every transform-DSL gate
   * (`lm_filter_against`, `dedup_against`, `minhash_filter`,
@@ -251,14 +253,7 @@ object Fit {
       val eq = kv.indexOf('=')
       kv.substring(0, eq) -> kv.substring(eq + 1)
     }.toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(4))
     val n =
       try fit(spark, what, input, idCol, textCol, outDir, size, opts)
       catch {

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
+import graft.LocalSession
 import graft.ops.LanguageModel
 import graft.sources.ParquetTables
 
@@ -22,7 +21,7 @@ import graft.sources.ParquetTables
   * replica-disjoint — the AmplifiedSweep construction); per scale one
   * untimed warmup pass of all three phases, then min-of-`reps` per
   * phase; the fit's checkpoint blocks are RELEASED before the serve
-  * clock (the r15 Kn5GeometryCanary release-before-clock rule) so
+  * clock (the release-before-clock rule, SCALE.md Round 15) so
   * the serve times the storage-serving path, not residency pressure.
   * The query's own geometry throughout: `nKeyBuckets = 16`,
   * gadget-enriched text, self-score (the score side IS the corpus).
@@ -38,14 +37,7 @@ object Kn5WriteDecomp {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 10
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(32))
     val taskFailures = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(

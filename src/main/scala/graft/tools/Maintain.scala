@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.LocalSession
 import graft.ops.{BucketedIndex, Dedup, Similarity}
 
 /** Maintenance entry point for the append-maintained serve layouts —
@@ -84,13 +85,7 @@ object Maintain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: Maintain <index-dir> [<index-dir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(4))
     args.foreach { dir =>
       val (layout, before, after) = run(spark, dir)
       println(s"""{"dir":"$dir","layout":"$layout",""" +

@@ -1,11 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions","32").config("spark.ui.enabled","false")
-      .config("spark.sql.session.timeZone","UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     val dir = "/root/testdata/sf0.1"
     graft.sources.ParquetTables.registerAll(spark, dir).foreach(t => spark.table(t).count())
     for (name <- args) {

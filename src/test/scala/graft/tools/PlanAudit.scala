@@ -1,18 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Executed-plan auditor for SCALE.md evidence: runs named SparkEntry
   * queries and prints one line of operator COUNTS from the EXECUTED
   * (post-AQE) plan per query — the multi-query companion to
-  * [[graft.tools.BenchOne]]'s full single-query `explain("formatted")`
-  * dump. `sbt 'Test/runMain graft.tools.PlanAudit <query...>'`. */
+  * [[graft.tools.BenchOne]]'s single-query `explain` mode (the full
+  * `explain("formatted")` dump beside a per-stage profile). `sbt 'Test/runMain graft.tools.PlanAudit <query...>'`. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else Seq("q1_agg")
