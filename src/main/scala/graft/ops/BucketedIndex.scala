@@ -27,8 +27,8 @@ import graft.io.HadoopConfs
   * [[load]] checks the sidecar by field name and reads the rows with
   * the stored schema, so no schema-inference job runs. A serve reads
   * only the bucket directories its arrivals reach, by path
-  * ([[Layout.probe]]). [[kindOf]] is the only code that tells layouts
-  * apart. */
+  * ([[Layout.probe]]). Each loader names the kind it expects; only a
+  * tool that routes on the kind (`Maintain`) asks [[kindOf]]. */
 private[graft] object BucketedIndex {
 
   /** Partition column of every bucketed layout. */
@@ -150,6 +150,12 @@ private[graft] object BucketedIndex {
     * loads as `kind` after the same checks. */
   def load(spark: SparkSession, root: String, kind: Kind): Layout = {
     val fail = contractError(s"$root/stats", kind.writer, kind.fields, kind.ranges) _
+    val names = listing(spark, root)
+    if (!names("stats")) fail(s"no sidecar at $root/stats — " +
+      unfinished(names).getOrElse(
+        if (names.exists(_.endsWith(".parquet")))
+          s"it holds a flat parquet table, which is no longer served; rebuild it with ${kind.writer}"
+        else "nothing was saved there"))
     val row = sidecarRow(spark, s"$root/stats")(fail)
     row.get("kind").flatMap(_._2).filter(_ != kind.name).foreach { k =>
       fail(s"it records kind '$k'" +
@@ -166,22 +172,15 @@ private[graft] object BucketedIndex {
   }
 
   /** The kind of the bucketed layout at `root`; None when `root` holds
-    * none (a flat table, or nothing). A sidecar that predates the
-    * `kind` column is told by its parameters. Bucketed rows with no
-    * sidecar are an unfinished save and fail. */
+    * none (another layout, such as an encoded corpus, or nothing). A
+    * sidecar that predates the `kind` column is told by its parameters.
+    * Bucketed rows with no sidecar are an unfinished save and fail. */
   def kindOf(spark: SparkSession, root: String): Option[Kind] = {
-    val p = new Path(root)
-    val f = fs(spark, p)
-    val names =
-      if (f.exists(p) && f.getFileStatus(p).isDirectory)
-        f.listStatus(p).map(_.getPath.getName).toSet
-      else Set.empty[String]
     def fail(why: String): Nothing =
       throw new IllegalArgumentException(s"$root is not a committed bucketed index: $why")
+    val names = listing(spark, root)
     if (!names("stats")) {
-      Kinds.find(k => names(k.dataDir)).foreach(k => fail(
-        s"it holds rows under ${k.dataDir}/ but no stats/ sidecar, so its " +
-          "save did not finish (the sidecar is written last) — re-run the save"))
+      unfinished(names).foreach(fail)
       None
     } else {
       val row = sidecarRow(spark, s"$root/stats")(fail)
@@ -195,6 +194,22 @@ private[graft] object BucketedIndex {
       })
     }
   }
+
+  /** The entry names directly under `root`; empty when it is no
+    * directory. */
+  private def listing(spark: SparkSession, root: String): Set[String] = {
+    val p = new Path(root)
+    val f = fs(spark, p)
+    if (f.exists(p) && f.getFileStatus(p).isDirectory)
+      f.listStatus(p).map(_.getPath.getName).toSet
+    else Set.empty
+  }
+
+  /** Why a directory holding bucketed rows but no sidecar fails. */
+  private def unfinished(names: Set[String]): Option[String] =
+    Kinds.find(k => names(k.dataDir)).map(k =>
+      s"it holds rows under ${k.dataDir}/ but no stats/ sidecar, so its " +
+        "save did not finish (the sidecar is written last) — re-run the save")
 
   /** Read the one-row parquet sidecar at `dir` that `writer` wrote and
     * check it: each of `fields` present by name, of that type and
@@ -272,6 +287,7 @@ private[graft] object BucketedIndex {
     if (g.getFieldRepetitionCount(f.name) == 0) None
     else f.dataType match {
       case IntegerType => Some(g.getInteger(f.name, 0))
+      case LongType => Some(g.getLong(f.name, 0))
       case BooleanType => Some(g.getBoolean(f.name, 0))
       case DoubleType => Some(g.getDouble(f.name, 0))
       case StringType => Some(g.getString(f.name, 0))

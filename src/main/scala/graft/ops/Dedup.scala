@@ -28,8 +28,8 @@ object Dedup {
     * The result doubles as the persistable EXACT-dedup index of the
     * fit-once/serve-many ingest path — the content-hash twin of the
     * minhash signature table ([[minhashSignatures]]): persist it with
-    * [[saveExactIndex]], check each ingest batch against it with
-    * [[exactAgainst]] (or the streaming
+    * [[saveExactIndexPartitioned]], check each ingest batch against it
+    * with [[exactAgainst]] (or the streaming
     * [[graft.streaming.StreamingOps.exactDedupStream]]), and fold the
     * batch back in with [[mergeExactIndexes]]. At 100 TB the index —
     * one (hash, id, count) row per DISTINCT document — is the only
@@ -40,21 +40,10 @@ object Dedup {
       .groupBy("text_hash")
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
 
-  /** Persist an [[exact]] index as parquet (the [[saveSignatures]]
-    * pattern: engine-agnostic, versionable beside the corpus). */
-  def saveExactIndex(index: DataFrame, path: String): Unit =
-    index.select(col("text_hash"), col("keep_id"), col("dup_count"))
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a persisted exact index (inverse of [[saveExactIndex]]). */
-  def loadExactIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .select(col("text_hash"), col("keep_id"), col("dup_count"))
-
-  /** Classify an ingest batch against a persisted [[exact]] index:
-    * one row per arrival, `dup_of` = the id it duplicates, NULL for
-    * survivors (genuinely new content). Semantics are FIRST-SEEN-WINS
+  /** Classify an ingest batch against an [[exact]] index frame (the
+    * reference semantics of the [[ExactHashIndex]] serve): one row per
+    * arrival, `dup_of` = the id it duplicates, NULL for survivors
+    * (genuinely new content). Semantics are FIRST-SEEN-WINS
     * — the real ingest contract, because history is immutable:
     *   - content already in the index → `dup_of` = the index's
     *     `keep_id`, even if the arrival's id is smaller (the
@@ -89,7 +78,7 @@ object Dedup {
     exactClassify(stageExactArrivals(newDocs, idCol, textCol), index)
 
   /** The [[exactAgainst]] classification over an already-hashed batch
-    * — shared by the flat and partition-pruned serve paths so the
+    * — shared by the in-frame and partition-pruned serve paths so the
     * first-seen-wins / NULL-pass-through contract lives in exactly
     * one place. */
   private def exactClassify(hashed: DataFrame, index: DataFrame): DataFrame = {
@@ -114,9 +103,12 @@ object Dedup {
     * `exact`): (text_hash, keep_id, dup_count) rows bucketed by hash,
     * so a serve reads ≤ |batch| bucket directories. Same
     * one-row-per-hash precondition as [[exactAgainst]].
-    * Rebuild-maintained ([[mergeExactIndexes]] + re-save: dup_count of
-    * repeated hashes must update). Only [[loadExactIndexPartitioned]]
-    * makes one, so a serve reads the layout it was loaded from. */
+    * Rebuild-maintained (dup_count of repeated hashes must update):
+    * save `mergeExactIndexes(Seq(rows.select(text_hash, keep_id,
+    * dup_count), exact(batch)))` to a fresh path — the rows are read
+    * lazily, so never over the index being read. Only
+    * [[loadExactIndexPartitioned]] makes one, so a serve reads the
+    * layout it was loaded from. */
   final class ExactHashIndex private[graft] (
       private[graft] val layout: BucketedIndex.Layout) {
     def rows: DataFrame = layout.rows
@@ -124,7 +116,7 @@ object Dedup {
   }
 
   /** Build + persist an [[ExactHashIndex]] from an [[exact]] /
-    * [[loadExactIndex]] table. Size `nHashBuckets` ∝ corpus (constant
+    * [[mergeExactIndexes]] table. Size `nHashBuckets` ∝ corpus (constant
     * per-bucket bytes): serves read the probed buckets by path, so
     * their driver work is O(|batch|) at any layout size. */
   def saveExactIndexPartitioned(
@@ -139,7 +131,7 @@ object Dedup {
     new ExactHashIndex(BucketedIndex.load(spark, path, BucketedIndex.Exact))
 
   /** [[exactAgainst]] against a persisted [[ExactHashIndex]] —
-    * IDENTICAL output to serving the flat index (oracle-pinned:
+    * IDENTICAL output to the in-frame serve of its rows (oracle-pinned:
     * dedup_exact_serve shares dedup_exact_incremental's SQL verbatim),
     * reading only the buckets the arrival hashes reach
     * ([[BucketedIndex.Layout.probe]]). */
@@ -205,7 +197,7 @@ object Dedup {
     * (id, sig: array<k longs>) — THE single copy of the
     * shingle→signature pipeline, shared by the one-shot [[minhashLsh]]
     * and the fit-once/serve-many incremental path
-    * ([[saveSignatures]]/[[loadSignatures]]/[[minhashLshAgainst]]:
+    * ([[saveLshBandIndex]]/[[loadLshBandIndex]]/[[minhashLshAgainst]]:
     * dedup a daily ingest batch against yesterday's corpus WITHOUT
     * re-shingling the historical text — at 100 TB the signature table
     * is the only artifact the historical side ever re-reads). */
@@ -241,17 +233,6 @@ object Dedup {
     else
       shingled.select(col("id"), minhashSignature(col("sh"), k).as("sig", md))
   }
-
-  /** Persist a signature table as parquet — engine-agnostic,
-    * versionable beside the corpus it indexes (the
-    * [[graft.ops.Classifier.saveWeights]] pattern). */
-  def saveSignatures(sigs: DataFrame, path: String): Unit =
-    sigs.select(col("id"), col("sig")).write.mode("overwrite").parquet(path)
-
-  /** Load a persisted signature table (inverse of [[saveSignatures]]). */
-  def loadSignatures(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("id"), col("sig"))
 
   /** LSH band rows (id, sig, band, band_hash) for a signature table,
     * with hot buckets wider than `maxBucket` dropped — shared between
@@ -333,24 +314,54 @@ object Dedup {
   }
 
   /** INCREMENTAL MinHash-LSH: near-duplicate pairs between a NEW batch
-    * and an already-indexed BASE corpus — the serve-many half of the
-    * signature index ([[minhashSignatures]] → [[saveSignatures]] once;
-    * each ingest then computes signatures for its batch only and joins
-    * against the loaded base table). The historical corpus text is
-    * never re-shingled: at 100 TB the base side ships k longs + id per
-    * document, and both band streams shuffle on the same (band,
-    * band_hash) key. `maxBucket` caps bucket width PER SIDE (bounding
-    * candidates per bucket at maxBucket², the same template-collapse
-    * guard as [[minhashLsh]]). Output: (new_id, base_id, est_jaccard ≥
+    * and an in-frame BASE signature table — the reference semantics of
+    * the persisted serve (the [[LshBandIndex]] overload returns the
+    * same rows). Each ingest computes signatures for its batch only;
+    * the base corpus text is never re-shingled: the base side ships k
+    * longs + id per document, and both band streams shuffle on the
+    * same (band, band_hash) key. `maxBucket` caps bucket width PER
+    * SIDE (bounding candidates per bucket at maxBucket², the same
+    * template-collapse guard as [[minhashLsh]]). Output: (new_id, base_id, est_jaccard ≥
     * threshold). Sides are expected disjoint (an id present in both
     * pairs with itself at jaccard 1.0 — harmless but redundant). */
   def minhashLshAgainst(
       newSigs: DataFrame, baseSigs: DataFrame,
       k: Int = 16, bands: Int = 8, threshold: Double = 0.5,
-      portable: Boolean = false, maxBucket: Int = Int.MaxValue): DataFrame =
-    minhashLshAgainstPrepared(
-      newSigs.localCheckpoint(false), baseSigs.localCheckpoint(false),
-      k, bands, threshold, portable, maxBucket)
+      portable: Boolean = false, maxBucket: Int = Int.MaxValue): DataFrame = {
+    require(k % bands == 0, "k must divide into bands")
+    // Hash-family tag check (the winnowAgainst contract): band hashes
+    // from different families never collide meaningfully, and unlike
+    // a k mismatch (caught per-row by sigLengthGuard) a family or
+    // shingle-width mismatch is structurally invisible.
+    checkBuildParams(baseSigs, "sig", "minhashLshAgainst",
+      Seq("graft.minhash.portable" -> portable))
+    checkBuildParams(newSigs, "sig", "minhashLshAgainst",
+      Seq("graft.minhash.portable" -> portable))
+    val (nm, bm) = (newSigs.schema("sig").metadata, baseSigs.schema("sig").metadata)
+    if (nm.contains("graft.minhash.shingle_n") && bm.contains("graft.minhash.shingle_n"))
+      require(nm.getLong("graft.minhash.shingle_n") == bm.getLong("graft.minhash.shingle_n"),
+        "minhashLshAgainst: the two signature tables were built with " +
+          s"different shingle widths (new=${nm.getLong("graft.minhash.shingle_n")}, " +
+          s"base=${bm.getLong("graft.minhash.shingle_n")}) — their signatures " +
+          "never match meaningfully")
+    val newOnce = newSigs.localCheckpoint(false)
+    val baseOnce = sigLengthGuard(baseSigs.localCheckpoint(false), k, "base")
+    val a = bandRows(sigLengthGuard(newOnce, k, "new"), k, bands, portable, maxBucket)
+      .select(col("band"), col("band_hash"), col("id").as("new_id"))
+    val b = bandRows(baseOnce, k, bands, portable, maxBucket)
+      .select(col("band"), col("band_hash"), col("id").as("base_id"))
+    val cand = a.join(b, Seq("band", "band_hash"))
+      .select("new_id", "base_id")
+      .dropDuplicates("new_id", "base_id")
+    cand
+      .join(newOnce.select(col("id").as("new_id"), col("sig").as("sig_a")), Seq("new_id"))
+      .join(baseOnce.select(col("id").as("base_id"), col("sig").as("sig_b")), Seq("base_id"))
+      .withColumn("est_jaccard",
+        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), m => m))
+          .cast("double") / lit(k.toDouble))
+      .filter(col("est_jaccard") >= threshold)
+      .select("new_id", "base_id", "est_jaccard")
+  }
 
   /** A loaded index can carry a DIFFERENT k than the serve call: band
     * slices would then hash the wrong components and est_jaccard would
@@ -370,47 +381,6 @@ object Dedup {
           lit(s"minhashLshAgainst: $side signature has "),
           size(col("sig")).cast("string"),
           lit(s" components, expected k=$k — the index was built with a different k")))))
-
-  /** [[minhashLshAgainst]] over ALREADY-materialized signature frames —
-    * the streaming serve path calls this so the base index checkpoints
-    * ONCE for the query's lifetime instead of once per micro-batch. */
-  private[graft] def minhashLshAgainstPrepared(
-      newOnce: DataFrame, baseOnce0: DataFrame,
-      k: Int, bands: Int, threshold: Double,
-      portable: Boolean, maxBucket: Int): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
-    // Hash-family tag check (the winnowAgainst contract): band hashes
-    // from different families never collide meaningfully, and unlike
-    // a k mismatch (caught per-row by sigLengthGuard) a family or
-    // shingle-width mismatch is structurally invisible.
-    checkBuildParams(baseOnce0, "sig", "minhashLshAgainst",
-      Seq("graft.minhash.portable" -> portable))
-    checkBuildParams(newOnce, "sig", "minhashLshAgainst",
-      Seq("graft.minhash.portable" -> portable))
-    val (nm, bm) = (newOnce.schema("sig").metadata, baseOnce0.schema("sig").metadata)
-    if (nm.contains("graft.minhash.shingle_n") && bm.contains("graft.minhash.shingle_n"))
-      require(nm.getLong("graft.minhash.shingle_n") == bm.getLong("graft.minhash.shingle_n"),
-        "minhashLshAgainst: the two signature tables were built with " +
-          s"different shingle widths (new=${nm.getLong("graft.minhash.shingle_n")}, " +
-          s"base=${bm.getLong("graft.minhash.shingle_n")}) — their signatures " +
-          "never match meaningfully")
-    val baseOnce = sigLengthGuard(baseOnce0, k, "base")
-    val a = bandRows(sigLengthGuard(newOnce, k, "new"), k, bands, portable, maxBucket)
-      .select(col("band"), col("band_hash"), col("id").as("new_id"))
-    val b = bandRows(baseOnce, k, bands, portable, maxBucket)
-      .select(col("band"), col("band_hash"), col("id").as("base_id"))
-    val cand = a.join(b, Seq("band", "band_hash"))
-      .select("new_id", "base_id")
-      .dropDuplicates("new_id", "base_id")
-    cand
-      .join(newOnce.select(col("id").as("new_id"), col("sig").as("sig_a")), Seq("new_id"))
-      .join(baseOnce.select(col("id").as("base_id"), col("sig").as("sig_b")), Seq("base_id"))
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), m => m))
-          .cast("double") / lit(k.toDouble))
-      .filter(col("est_jaccard") >= threshold)
-      .select("new_id", "base_id", "est_jaccard")
-  }
 
   /** A persisted LSH BAND index in the [[BucketedIndex]] layout (kind
     * `minhash`): band rows are precomputed ONCE at build (the per-serve
@@ -577,12 +547,13 @@ object Dedup {
       .select("id_a", "id_b", "hamming")
   }
 
-  /** SimHash near-dups of an arrival batch against a PERSISTED
-    * fingerprint table — the third fit-once/serve-many dedup index
-    * beside the minhash signatures and the exact content-hash index,
-    * and by far the cheapest: 8 BYTES per historical document (the
-    * `(id, simhash)` table from [[withSimhash]], persisted via
-    * [[saveSimhashes]]). Output (new_id, base_id, hamming), one row
+  /** SimHash near-dups of an arrival batch against an in-frame
+    * fingerprint table — the reference semantics of the third
+    * fit-once/serve-many dedup index beside the minhash signatures and
+    * the exact content-hash index, and by far the cheapest: 8 BYTES per
+    * historical document (the `(id, simhash)` table from
+    * [[withSimhash]]; persisted, it is a [[SimhashBandIndex]], whose
+    * overload returns the same rows). Output (new_id, base_id, hamming), one row
     * per cross pair within the Hamming budget. Same candidate shape as
     * [[simhashPairs]]: 4 bands of 16 bits equi-joined (complete recall
     * for maxHamming < 4 by pigeonhole, heuristic beyond), then exact
@@ -595,7 +566,7 @@ object Dedup {
       maxHamming: Int = 8, portable: Boolean = false): DataFrame = {
     // The arrival side MUST hash with the family the index was built
     // with; the index's own metadata tag (stamped by withSimhash,
-    // preserved through saveSimhashes/loadSimhashes) is checked here —
+    // preserved through a bucketed save and load) is checked here —
     // a mismatch would otherwise silently yield empty/garbage pairs.
     checkBuildParams(baseSim, "simhash", "simhashAgainst",
       Seq("graft.simhash.portable" -> portable))
@@ -613,15 +584,6 @@ object Dedup {
       .select("new_id", "base_id", "hamming")
   }
 
-  /** Persist a [[withSimhash]] fingerprint table (8 bytes + id per doc). */
-  def saveSimhashes(sim: DataFrame, path: String): Unit =
-    sim.select(col("id"), col("simhash")).write.mode("overwrite").parquet(path)
-
-  /** Load a persisted fingerprint table (inverse of [[saveSimhashes]]). */
-  def loadSimhashes(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("id"), col("simhash"))
-
   /** A persisted SIMHASH band index in the [[BucketedIndex]] layout
     * (kind `simhash`; the [[LshBandIndex]] argument at the SimHash
     * face): the 4×16-bit band rows, with the fingerprint riding inside
@@ -636,18 +598,17 @@ object Dedup {
     def hashBuckets: Int = layout.hashBuckets
   }
 
-  /** Build + persist a [[SimhashBandIndex]] from a [[withSimhash]] /
-    * [[loadSimhashes]] fingerprint table, which must carry its
-    * `graft.simhash.portable` tag. Size `nHashBuckets` to the corpus
-    * (constant per-bucket bytes). */
+  /** Build + persist a [[SimhashBandIndex]] from a [[withSimhash]]
+    * fingerprint table, which must carry its `graft.simhash.portable`
+    * tag (a loaded index's `rows` keep it). Size `nHashBuckets` to the
+    * corpus (constant per-bucket bytes). */
   def saveSimhashBandIndex(
       sim: DataFrame, path: String, nHashBuckets: Int = 64): Unit = {
     val md = sim.schema("simhash").metadata
     require(md.contains("graft.simhash.portable"),
       "saveSimhashBandIndex: the fingerprint frame carries no " +
-        "graft.simhash.portable tag — build the index from withSimhash/" +
-        "loadSimhashes output so the serve can hash arrivals with the " +
-        "index's own family")
+        "graft.simhash.portable tag — build the index from withSimhash " +
+        "output so the serve can hash arrivals with the index's own family")
     BucketedIndex.write(BucketedIndex.Simhash, path,
       simhashBands(sim.select(col("id"), col("simhash"))), nHashBuckets,
       Map("portable" -> md.getBoolean("graft.simhash.portable")))
@@ -679,7 +640,7 @@ object Dedup {
     new SimhashBandIndex(BucketedIndex.load(spark, path, BucketedIndex.Simhash))
 
   /** [[simhashAgainst]] against a persisted [[SimhashBandIndex]] —
-    * IDENTICAL output to serving the flat fingerprint table
+    * IDENTICAL output to the in-frame serve of its fingerprints
     * (oracle-pinned: dedup_simhash_serve shares
     * dedup_simhash_incremental's SQL verbatim), hashing arrivals with
     * the index's own family and reading only the buckets their (band,
@@ -1060,7 +1021,7 @@ object Dedup {
     * near-dup, exact = whole-document, SimHash = cheap token-level;
     * this one carries the MOSS substring guarantee: any shared run of
     * ≥ w+k−1 chars contributes a shared fingerprint). Persist with
-    * [[saveWinnowFingerprints]]; check arrivals with
+    * [[saveWinnowFpIndex]]; check arrivals with
     * [[winnowAgainst]]. ~2/(w+1) of windows are keyed, so the index
     * is a small fraction of corpus length × 8 bytes. */
   def winnowFingerprints(
@@ -1083,25 +1044,17 @@ object Dedup {
       .select(col("id"), col("fp").as("fp", md))
   }
 
-  /** Persist a winnow fingerprint index as parquet. */
-  def saveWinnowFingerprints(fps: DataFrame, path: String): Unit =
-    fps.select(col("id"), col("fp")).write.mode("overwrite").parquet(path)
-
-  /** Load a persisted winnow fingerprint index. */
-  def loadWinnowFingerprints(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("id"), col("fp"))
-
   /** A persisted WINNOW index in the [[BucketedIndex]] layout (kind
     * `winnow`): (id, fp) rows bucketed by fingerprint, each carrying its
     * fingerprint's document frequency `df`, computed ONCE at build — so
-    * the serve-time hot-fingerprint cap ([[capBaseFps]]'s per-serve
-    * aggregate over the whole index) becomes a stored-column filter,
-    * `maxDf` still a serve-time knob. (k, w, family) come from the
-    * frame's own `graft.winnow.*` tags and arrivals are fingerprinted
-    * WITH THEM. REBUILD-maintained: the stored `df` is a global
-    * aggregate, and the rebuild reads the flat fingerprint table ∪ the
-    * batch's, never the corpus. */
+    * the serve-time hot-fingerprint cap (the in-frame serve's aggregate
+    * over the whole index) becomes a stored-column filter, `maxDf`
+    * still a serve-time knob. (k, w, family) come from the frame's own
+    * `graft.winnow.*` tags and arrivals are fingerprinted WITH THEM.
+    * REBUILD-maintained: the stored `df` is a global aggregate, so the
+    * rebuild is [[saveWinnowFpIndex]] over `rows.select(id, fp)` ∪ the
+    * batch's [[winnowFingerprints]] (the loaded rows keep their tags),
+    * written to a fresh path — never the corpus. */
   final class WinnowFpIndex private[graft] (
       private[graft] val layout: BucketedIndex.Layout) {
     def rows: DataFrame = layout.rows
@@ -1112,18 +1065,18 @@ object Dedup {
   }
 
   /** Build + persist a [[WinnowFpIndex]] from a [[winnowFingerprints]]
-    * / [[loadWinnowFingerprints]] table, which must carry its
-    * `graft.winnow.*` build tags. Size `nHashBuckets` to the corpus
-    * (constant per-bucket bytes). */
+    * table (or a loaded index's `rows.select(id, fp)` ∪ a batch's, the
+    * rebuild), which must carry its `graft.winnow.*` build tags. Size
+    * `nHashBuckets` to the corpus (constant per-bucket bytes). */
   def saveWinnowFpIndex(
       fps: DataFrame, path: String, nHashBuckets: Int = 64): Unit = {
     val md = fps.schema("fp").metadata
     require(md.contains("graft.winnow.k") && md.contains("graft.winnow.w") &&
         md.contains("graft.winnow.portable"),
       "saveWinnowFpIndex: the fingerprint frame carries no graft.winnow.* " +
-        "build tags — build the index from winnowFingerprints/" +
-        "loadWinnowFingerprints output so the serve can fingerprint " +
-        "arrivals with the index's own (k, w, family)")
+        "build tags — build the index from winnowFingerprints output " +
+        "so the serve can fingerprint arrivals with the index's own " +
+        "(k, w, family)")
     val rows = fps.select(col("id"), col("fp"))
     BucketedIndex.write(BucketedIndex.Winnow, path,
       rows.join(rows.groupBy("fp").agg(count(lit(1)).as("df")), Seq("fp")),
@@ -1138,8 +1091,8 @@ object Dedup {
     new WinnowFpIndex(BucketedIndex.load(spark, path, BucketedIndex.Winnow))
 
   /** [[winnowAgainst]] against a persisted [[WinnowFpIndex]] —
-    * IDENTICAL output to serving the flat fingerprint table with the
-    * same `maxDf` (oracle-pinned: dedup_winnow_serve shares
+    * IDENTICAL output to the in-frame serve of its fingerprints with
+    * the same `maxDf` (oracle-pinned: dedup_winnow_serve shares
     * dedup_winnow_incremental's SQL verbatim), reading only the buckets
     * the arrival fingerprints reach ([[BucketedIndex.Layout.probe]])
     * and capping on the STORED document frequency. */
@@ -1164,13 +1117,6 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** [[capHotFps]] over a loaded index's (id, fp) projection — the
-    * base-side pre-cap [[winnowAgainst]] applies and
-    * [[graft.streaming.StreamingOps.winnowStream]] hoists out of the
-    * micro-batch loop (it depends only on the index). */
-  private[graft] def capBaseFps(baseFps: DataFrame, maxDf: Int): DataFrame =
-    capHotFps(baseFps.select(col("id"), col("fp")), maxDf)
-
   /** Drop fingerprints appearing in more than `maxDf` rows of `fps`
     * (corpus-ubiquitous boilerplate — m occurrences → m² pairs on one
     * shuffle key). Shared by the self-join and two-sided paths. */
@@ -1182,8 +1128,9 @@ object Dedup {
       fps.join(hot, Seq("fp"), "left_anti")
     }
 
-  /** Substring-overlap report of an arrival batch against a PERSISTED
-    * winnow index — "which arrivals copy runs from the reference
+  /** Substring-overlap report of an arrival batch against an in-frame
+    * winnow fingerprint table (the reference semantics of the
+    * [[WinnowFpIndex]] serve) — "which arrivals copy runs from the reference
     * corpus, and how much": (new_id, base_id, n_shared) per cross
     * pair with at least `minShared` shared fingerprints. The
     * recall guarantee is [[winnowOverlap]]'s (any shared run of
@@ -1205,7 +1152,7 @@ object Dedup {
       "graft.winnow.k" -> k.toLong,
       "graft.winnow.w" -> w.toLong,
       "graft.winnow.portable" -> portable))
-    val base = capBaseFps(baseFps, maxDf)
+    val base = capHotFps(baseFps.select(col("id"), col("fp")), maxDf)
     winnowFingerprints(newDocs, idCol, textCol, k, w, portable).as("x")
       .join(base.as("y"), Seq("fp"))
       .groupBy(col("x.id").as("new_id"), col("y.id").as("base_id"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
 /** Sparse lexical retrieval over the corpus — the BM25 scoring a
   * training-data pipeline uses for decontamination probes, quality
@@ -190,21 +191,8 @@ object Retrieval {
     Bm25Index(postingsOf(docs, idCol, identity), idCol, nDocs, avgdl)
   }
 
-  /** Persist a [[Bm25Index]] (postings + 1-row stats) as flat parquet.
-    * Every serve then scans the whole posting table under the
-    * broadcast query vocabulary — fine while the index is small; once
-    * posting scan time shows up in the serve wall, use
-    * [[saveBm25IndexPartitioned]] instead. */
-  def saveBm25Index(index: Bm25Index, path: String): Unit = {
-    index.postings.write.mode("overwrite").parquet(s"$path/postings")
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    Seq((index.idCol, index.nDocs, index.avgdl))
-      .toDF("id_col", "n_docs", "avgdl")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-  }
-
-  /** Persist a [[Bm25Index]] TERM-PARTITIONED: postings land in
+  /** Persist a [[Bm25Index]] — the one persisted BM25 layout,
+    * TERM-PARTITIONED: postings land in
     * `nTermBuckets` term-hash partition directories, so
     * [[bm25ServeBatch]] reads only the partitions the query
     * vocabulary hashes into instead of scanning every posting — the
@@ -220,32 +208,35 @@ object Retrieval {
   def saveBm25IndexPartitioned(
       index: Bm25Index, path: String, nTermBuckets: Int): Unit = {
     require(nTermBuckets > 0, "saveBm25IndexPartitioned: nTermBuckets must be > 0")
+    val spark = index.postings.sparkSession
+    // the sidecar is the commit marker: gone while the postings change
+    val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
+    stats.getFileSystem(graft.io.HadoopConfs.of(spark)).delete(stats, true)
     index.postings
       .withColumn(TermBucket, termBucket(col("term"), nTermBuckets))
       .repartition(nTermBuckets, col(TermBucket))
       .write.mode("overwrite").partitionBy(TermBucket)
       .parquet(s"$path/postings")
-    val spark = index.postings.sparkSession
     import spark.implicits._
     Seq((index.idCol, index.nDocs, index.avgdl, nTermBuckets))
       .toDF("id_col", "n_docs", "avgdl", "term_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
   }
 
-  /** Load a persisted [[Bm25Index]] — inverse of [[saveBm25Index]] or
-    * [[saveBm25IndexPartitioned]] (the stats sidecar says which layout
-    * was written; [[bm25ServeBatch]] prunes automatically on the
-    * partitioned one). */
+  /** Load a [[saveBm25IndexPartitioned]] layout. Its `stats` sidecar
+    * is read on the driver with no Spark job and checked by field name
+    * ([[BucketedIndex.readSidecar]]); a layout without a positive
+    * `term_buckets` fails naming the writer. */
   def loadBm25Index(
       spark: org.apache.spark.sql.SparkSession, path: String): Bm25Index = {
-    val stats = spark.read.parquet(s"$path/stats")
-    val st = stats.head()
-    val buckets =
-      if (stats.schema.fieldNames.contains("term_buckets") && !st.isNullAt(3))
-        Some(st.getInt(3))
-      else None
+    val st = BucketedIndex.readSidecar(spark, s"$path/stats",
+      "saveBm25IndexPartitioned",
+      Seq("id_col" -> StringType, "n_docs" -> LongType, "avgdl" -> DoubleType,
+        "term_buckets" -> IntegerType),
+      Seq(BucketedIndex.positive("term_buckets")))
     Bm25Index(spark.read.parquet(s"$path/postings"),
-      st.getString(0), st.getLong(1), st.getDouble(2), buckets)
+      st("id_col").asInstanceOf[String], st("n_docs").asInstanceOf[Long],
+      st("avgdl").asInstanceOf[Double], Some(st("term_buckets").asInstanceOf[Int]))
   }
 
   /** Batch BM25 against a prebuilt [[Bm25Index]] — output contract

@@ -287,28 +287,23 @@ object PipelineQueries {
         SELECT id_a, id_b, est_jaccard FROM scored WHERE est_jaccard >= 0.125""")),
 
     // INCREMENTAL dedup (fit-once/serve-many for MinHash): the corpus
-    // splits into a "historical" base (doc_id % 5 != 4) whose
-    // signatures persist through parquet, and a "new batch"
-    // (doc_id % 5 = 4) deduped against the LOADED base without
-    // re-shingling it — the daily-ingest workflow. Portable family, so
-    // the oracle replays signatures for both sides and the two-sided
-    // band join in SQL.
+    // splits into a "historical" base (doc_id % 5 != 4) and a "new
+    // batch" (doc_id % 5 = 4) deduped against the base's signature
+    // table — the in-frame reference of the daily-ingest serve, which
+    // dedup_minhash_serve runs through the persisted index. Portable
+    // family, so the oracle replays signatures for both sides and the
+    // two-sided band join in SQL.
     QueryDef(
       "dedup_incremental",
       (s, dir) => {
         val docs = table(s, dir, "documents")
         val hist = docs.filter(pmod(col("doc_id"), lit(5)) =!= 4)
         val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
-        val path = QueryDef.deleteOnExit(
-          s"/tmp/graft-minhash-sigs-${dir.replaceAll("[^a-zA-Z0-9]", "_")}" +
-            s"-${s.sparkContext.applicationId}")
-        Dedup.saveSignatures(
-          Dedup.minhashSignatures(hist, "doc_id", "text",
-            shingleN = 3, k = 16, portable = true), path)
         Dedup.minhashLshAgainst(
           Dedup.minhashSignatures(batch, "doc_id", "text",
             shingleN = 3, k = 16, portable = true),
-          Dedup.loadSignatures(s, path),
+          Dedup.minhashSignatures(hist, "doc_id", "text",
+            shingleN = 3, k = 16, portable = true),
           k = 16, bands = 8, threshold = 0.125, portable = true,
           maxBucket = 200)
       },

@@ -1,6 +1,9 @@
 package graft.run
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 import graft.encode.{ExampleEncoder, TfExampleEncoder, TfSequenceExampleEncoder}
@@ -69,12 +72,27 @@ object Runner {
   def substitute(query: String, params: Map[String, String]): String =
     params.foldLeft(query) { case (q, (k, v)) => q.replace(s"@$k", v) }
 
-  /** Register every parquet table in `dataDir` as a temp view so the
-    * entity SQL can reference them by name (the reference sends its SQL
-    * to BigQuery's catalog; ours is the session catalog). Returns the
-    * registered (name, frame) pairs. */
-  def registerTables(spark: SparkSession, dataDir: String): Seq[(String, DataFrame)] =
-    graft.sources.ParquetTables.registerFrames(spark, dataDir)
+  /** Register the parquet tables in `dataDir` whose names pass `only`
+    * as temp views so the entity SQL can reference them by name (the
+    * reference sends its SQL to BigQuery's catalog; ours is the session
+    * catalog). Returns the registered (name, frame) pairs. */
+  def registerTables(spark: SparkSession, dataDir: String,
+      only: String => Boolean): Seq[(String, DataFrame)] =
+    graft.sources.ParquetTables.registerFrames(spark, dataDir, only)
+
+  /** The one-part relation names `sql` reads — subqueries and CTE
+    * bodies included. The plan is unresolved, so CTE and view names
+    * appear too; a name with no `<name>.parquet` file is left to the
+    * analyzer. */
+  private def relationNames(spark: SparkSession, sql: String): Seq[String] = {
+    def walk(p: LogicalPlan): Seq[String] = (p match {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 => r.multipartIdentifier
+      case _ => Nil
+    }) ++ (p.children ++ p.innerChildren.collect { case c: LogicalPlan => c } ++
+      p.expressions.flatMap(_.collect { case s: SubqueryExpression => s.plan }))
+      .flatMap(walk)
+    walk(spark.sessionState.sqlParser.parsePlan(sql)).distinct
+  }
 
   /** Resolve feature refs against the registry into concrete
     * [[ResolvedView]]s, grouped per view in ref order. */
@@ -120,8 +138,13 @@ object Runner {
   /** The retrieval half: entity SQL → PIT join. Returns the joined
     * DataFrame (entity columns + requested features). */
   def retrieve(spark: SparkSession, job: JobConfig, entitySql: String): DataFrame = {
-    val tables = registerTables(spark, job.dataDir)
-    val entity = spark.sql(substitute(entitySql, job.rangeParams))
+    // Only the tables the SQL names: every other file in `dataDir`
+    // would cost a footer read per split and could fail the job.
+    val sql = substitute(entitySql, job.rangeParams)
+    val named = relationNames(spark, sql)
+    val resolver = spark.sessionState.conf.resolver
+    val tables = registerTables(spark, job.dataDir, t => named.exists(resolver(_, t)))
+    val entity = spark.sql(sql)
     val views = resolveViews(spark, job,
       tables.map { case (name, df) => s"${job.dataDir}/$name.parquet" -> df }.toMap)
     // A job with NO feature refs is a pure CORPUS-PREP job: the entity

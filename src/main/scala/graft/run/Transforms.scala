@@ -3,7 +3,7 @@ package graft.run
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{BucketedIndex, Packing, Sampling, TextOps}
+import graft.ops.{Packing, Sampling, TextOps}
 
 /** Named corpus-prep transforms applicable between retrieval and
   * encoding — the configuration-surface analogue of the reference's
@@ -269,141 +269,94 @@ object Transforms {
         .drop("__graft_th")
     case "dedup_against" =>
       // Incremental exact dedup against a PERSISTED content-hash index
-      // (graft.ops.Dedup.saveExactIndex — the daily-ingest loop as a
-      // job transform): rows whose normalized text already exists in
-      // history drop; within-frame repeats keep the min-key row
-      // (dedup_exact's semantics, via exactAgainst's first-seen-wins
-      // classification).
-      // `index` is either a flat parquet index (saveExactIndex) or a
-      // hash-partitioned ExactHashIndex directory
-      // (saveExactIndexPartitioned, whose sidecar is its commit marker
-      // and names its kind): partition-pruned serving, only the
-      // arrival batch's hash buckets are read.
+      // (graft.ops.Dedup.saveExactIndexPartitioned — the daily-ingest
+      // loop as a job transform): rows whose normalized text already
+      // exists in history drop; within-frame repeats keep the min-key
+      // row (dedup_exact's semantics, via exactAgainst's
+      // first-seen-wins classification). Partition-pruned serving:
+      // only the arrival batch's hash buckets are read.
       val key = t.arg("key")
       val root = t.arg("index")
       indexGate(df, key, t.arg("col"), keepMatches = true) { (rows, text) =>
-        val classified =
-          if (BucketedIndex.kindOf(df.sparkSession, root).nonEmpty)
-            graft.ops.Dedup.exactAgainst(rows,
-              graft.ops.Dedup.loadExactIndexPartitioned(df.sparkSession, root),
-              key, text)
-          else graft.ops.Dedup.exactAgainst(rows,
-            graft.ops.Dedup.loadExactIndex(df.sparkSession, root),
+        graft.ops.Dedup.exactAgainst(rows,
+            graft.ops.Dedup.loadExactIndexPartitioned(df.sparkSession, root),
             key, text)
-        classified.filter(col("dup_of").isNull).select(col("id").as(key))
+          .filter(col("dup_of").isNull).select(col("id").as(key))
       }
     case "simhash_filter" =>
       // Near-dup ingest gate: drop rows whose SimHash fingerprint is
       // within max_hamming (default 8) of ANY document in a persisted
-      // fingerprint index — the typo-tolerant sibling of
-      // dedup_against. `index` is either a flat fingerprint table
-      // (graft.ops.Dedup.saveSimhashes; arrivals hashed with the
-      // default family) or a band-bucketed SimhashBandIndex directory
-      // (saveSimhashBandIndex; its sidecar names the kind):
-      // partition-pruned serving, hash family from the index itself —
-      // the only DSL route to a portable-family index.
+      // band-bucketed index (graft.ops.Dedup.saveSimhashBandIndex) —
+      // the typo-tolerant sibling of dedup_against. Partition-pruned
+      // serving, hash family from the index itself.
       val key = t.arg("key")
       val root = t.arg("index")
       val mh = t.args.get("max_hamming").map(_.toInt).getOrElse(8)
       indexGate(df, key, t.arg("col"), keepMatches = false) { (rows, text) =>
-        val pairs =
-          if (BucketedIndex.kindOf(df.sparkSession, root).nonEmpty)
-            graft.ops.Dedup.simhashAgainst(rows,
-              graft.ops.Dedup.loadSimhashBandIndex(df.sparkSession, root),
-              key, text, mh)
-          else graft.ops.Dedup.simhashAgainst(rows,
-            graft.ops.Dedup.loadSimhashes(df.sparkSession, root),
-            key, text, maxHamming = mh)
-        pairs.select(col("new_id").as(key)).distinct()
+        graft.ops.Dedup.simhashAgainst(rows,
+            graft.ops.Dedup.loadSimhashBandIndex(df.sparkSession, root),
+            key, text, mh)
+          .select(col("new_id").as(key)).distinct()
       }
     case "winnow_filter" =>
       // Substring-copy ingest gate: drop rows sharing >= min_shared
-      // (default 2) winnowed fingerprints with a persisted reference
-      // index — "copied a run of w+k-1 chars from history". max_df
-      // (default uncapped) is the base-side boilerplate cap. `index`
-      // is either a flat fingerprint table
-      // (graft.ops.Dedup.saveWinnowFingerprints; arrivals
-      // fingerprinted with the default (k, w, family)) or an
-      // fp-bucketed WinnowFpIndex directory (saveWinnowFpIndex; its
-      // sidecar names the kind): partition-pruned
-      // serving, (k, w, family) from the index itself and the df-cap
-      // a stored-column filter — the only DSL route to non-default
-      // build parameters.
+      // (default 2) winnowed fingerprints with a persisted fp-bucketed
+      // reference index (graft.ops.Dedup.saveWinnowFpIndex) — "copied
+      // a run of w+k-1 chars from history". max_df (default uncapped)
+      // is the base-side boilerplate cap, a filter on the document
+      // frequency stored at build. Partition-pruned serving, (k, w,
+      // family) from the index itself.
       val key = t.arg("key")
       val root = t.arg("index")
       val minSh = t.args.get("min_shared").map(_.toInt).getOrElse(2)
       val mDf = t.args.get("max_df").map(_.toInt).getOrElse(Int.MaxValue)
       indexGate(df, key, t.arg("col"), keepMatches = false) { (rows, text) =>
-        val pairs =
-          if (BucketedIndex.kindOf(df.sparkSession, root).nonEmpty)
-            graft.ops.Dedup.winnowAgainst(rows,
-              graft.ops.Dedup.loadWinnowFpIndex(df.sparkSession, root),
-              key, text, minShared = minSh, maxDf = mDf)
-          else graft.ops.Dedup.winnowAgainst(rows,
-            graft.ops.Dedup.loadWinnowFingerprints(df.sparkSession, root),
+        graft.ops.Dedup.winnowAgainst(rows,
+            graft.ops.Dedup.loadWinnowFpIndex(df.sparkSession, root),
             key, text, minShared = minSh, maxDf = mDf)
-        pairs.select(col("new_id").as(key)).distinct()
+          .select(col("new_id").as(key)).distinct()
       }
     case "minhash_filter" =>
       // Document-level near-dup ingest gate: drop rows whose MinHash
       // signature LSH-collides (est. Jaccard >= threshold, default
-      // 0.5) with ANY document of a persisted signature index — the
-      // fourth persisted-index gate. `index` is either a flat
-      // signature table (graft.ops.Dedup.saveSignatures; k/bands/
-      // portable args must match the build — the metadata tags
-      // enforce portable and shingle_n) or a band-bucketed
-      // LshBandIndex directory (saveLshBandIndex; its sidecar names
-      // the kind): partition-pruned serving with k/bands/
-      // portable/shingle_n from the index itself — explicitly passed
-      // k/bands/portable args must AGREE with the sidecar (fail-fast,
-      // never silently ignored). max_bucket semantics differ by
-      // layout: the flat path caps BOTH sides at serve; the
-      // partitioned path caps the arrival side only — base-side
-      // capping is a build decision (saveLshBandIndex's maxBucket),
-      // which is what keeps serves cadence-independent.
+      // 0.5) with ANY document of a persisted band-bucketed index
+      // (graft.ops.Dedup.saveLshBandIndex) — the fourth
+      // persisted-index gate. Partition-pruned serving with
+      // k/bands/portable/shingle_n from the index's sidecar: the
+      // k/bands/portable/shingle_n args only cross-check it
+      // (fail-fast, never silently ignored). max_bucket caps the
+      // arrival side; base-side capping is a build decision
+      // (saveLshBandIndex's maxBucket), which keeps serves
+      // cadence-independent.
       val key = t.arg("key")
       val root = t.arg("index")
-      val shingleN = t.args.get("shingle_n").map(_.toInt).getOrElse(3)
       val threshold = t.args.get("threshold").map(_.toDouble).getOrElse(0.5)
       val maxBucket = t.args.get("max_bucket").map(_.toInt).getOrElse(Int.MaxValue)
       indexGate(df, key, t.arg("col"), keepMatches = false) { (rows, text) =>
-        val pairs =
-          if (BucketedIndex.kindOf(df.sparkSession, root).nonEmpty) {
-            val idx = graft.ops.Dedup.loadLshBandIndex(df.sparkSession, root)
-            Seq(("k", t.args.get("k").map(_.toInt), idx.k),
-              ("bands", t.args.get("bands").map(_.toInt), idx.bands))
-              .foreach { case (name, arg, built) =>
-                arg.foreach(v => require(v == built,
-                  s"minhash_filter: $name=$v contradicts the partitioned " +
-                    s"index's build $name=$built (the sidecar is " +
-                    "authoritative; drop the arg or rebuild the index)"))
-              }
-            t.args.get("portable").map(_.toBoolean).foreach(v =>
-              require(v == idx.portable,
-                s"minhash_filter: portable=$v contradicts the partitioned " +
-                  s"index's build portable=${idx.portable}"))
-            for (v <- t.args.get("shingle_n").map(_.toInt); w <- idx.shingleN)
-              require(v == w,
-                s"minhash_filter: shingle_n=$v contradicts the partitioned " +
-                  s"index's build shingle_n=$w")
-            graft.ops.Dedup.minhashLshAgainst(
-              graft.ops.Dedup.minhashSignatures(rows, key, text,
-                shingleN = idx.shingleN.getOrElse(shingleN),
-                k = idx.k, portable = idx.portable),
-              idx, threshold = threshold, maxBucket = maxBucket)
-          } else {
-            val kSig = t.args.get("k").map(_.toInt).getOrElse(16)
-            val portable = t.args.get("portable").exists(_.toBoolean)
-            graft.ops.Dedup.minhashLshAgainst(
-              graft.ops.Dedup.minhashSignatures(rows, key, text,
-                shingleN = shingleN, k = kSig, portable = portable),
-              graft.ops.Dedup.loadSignatures(df.sparkSession, root),
-              k = kSig,
-              bands = t.args.get("bands").map(_.toInt).getOrElse(8),
-              threshold = threshold, portable = portable,
-              maxBucket = maxBucket)
+        val idx = graft.ops.Dedup.loadLshBandIndex(df.sparkSession, root)
+        Seq(("k", t.args.get("k").map(_.toInt), idx.k),
+          ("bands", t.args.get("bands").map(_.toInt), idx.bands))
+          .foreach { case (name, arg, built) =>
+            arg.foreach(v => require(v == built,
+              s"minhash_filter: $name=$v contradicts the partitioned " +
+                s"index's build $name=$built (the sidecar is " +
+                "authoritative; drop the arg or rebuild the index)"))
           }
-        pairs.select(col("new_id").as(key)).distinct()
+        t.args.get("portable").map(_.toBoolean).foreach(v =>
+          require(v == idx.portable,
+            s"minhash_filter: portable=$v contradicts the partitioned " +
+              s"index's build portable=${idx.portable}"))
+        val shingleN = t.args.get("shingle_n").map(_.toInt)
+        for (v <- shingleN; w <- idx.shingleN)
+          require(v == w,
+            s"minhash_filter: shingle_n=$v contradicts the partitioned " +
+              s"index's build shingle_n=$w")
+        graft.ops.Dedup.minhashLshAgainst(
+            graft.ops.Dedup.minhashSignatures(rows, key, text,
+              shingleN = idx.shingleN.orElse(shingleN).getOrElse(3),
+              k = idx.k, portable = idx.portable),
+            idx, threshold = threshold, maxBucket = maxBucket)
+          .select(col("new_id").as(key)).distinct()
       }
     case "semantic_filter" =>
       // Embedding near-dup ingest gate: drop rows whose vector scores

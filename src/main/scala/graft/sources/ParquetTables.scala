@@ -87,16 +87,18 @@ object ParquetTables {
     }
   }
 
-  /** Register every `<name>.parquet` table in `dir` as temp view
-    * `<name>`; returns the (name, frame) pairs in name order. Lists
-    * `dir` through the session's Hadoop conf, so any filesystem works. */
-  def registerFrames(spark: SparkSession, dir: String): Seq[(String, DataFrame)] = {
+  /** Register every `<name>.parquet` table in `dir` whose name passes
+    * `only` as temp view `<name>`; returns the (name, frame) pairs in
+    * name order. Lists `dir` through the session's Hadoop conf, so any
+    * filesystem works; a table left out is never opened. */
+  def registerFrames(spark: SparkSession, dir: String,
+      only: String => Boolean = _ => true): Seq[(String, DataFrame)] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(HadoopConfs.of(spark))
     val names =
       if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) Nil
       else fs.listStatus(p).map(_.getPath.getName).filter(_.endsWith(".parquet")).toSeq
-    names.map(_.stripSuffix(".parquet")).sorted.map { t =>
+    names.map(_.stripSuffix(".parquet")).filter(only).sorted.map { t =>
       val df = load(spark, s"$dir/$t.parquet")
       df.createOrReplaceTempView(t)
       t -> df

@@ -429,33 +429,6 @@ object StreamingOps {
     }
   }
 
-  /** Streaming incremental near-dup detection: each micro-batch of
-    * arriving documents dedups against a STATIC signature index via
-    * the batch engine's [[graft.ops.Dedup.minhashLshAgainst]] — the
-    * streaming face of the fit-once/serve-many dedup path (build the
-    * index once with [[graft.ops.Dedup.minhashSignatures]] →
-    * `saveSignatures`; the ingest stream then checks every arrival
-    * batch against it, shipping only id + k longs per base doc).
-    * Per-batch semantics are the batch operator's BY CONSTRUCTION
-    * (same code path — the dedup_incremental oracle covers it), and
-    * there is no streaming state at all: the index IS the state, and
-    * it lives in parquet. Pairs are per micro-batch; near-dups WITHIN
-    * the stream are the index-refresh cadence's concern (append each
-    * accepted batch's signatures to the base, the standard ingest
-    * loop). The base index is persisted ONCE for the query's
-    * lifetime, not per micro-batch — OWNERSHIP CAVEAT: nothing can
-    * unpersist at query stop (the writer API has no termination
-    * hook), so `baseSigs` stays registered in the cache manager after
-    * `stop()`, and any other query over the same logical plan reads
-    * the cached copy. Callers cycling indexes (the refresh loop)
-    * must `baseSigs.unpersist()` after the last `stop()` on each
-    * retired index, or stale copies accumulate in executor storage.
-    * Caveat 2: with a finite `maxBucket` the
-    * NEW-side hot-bucket cap is evaluated per micro-batch, so bucket
-    * widths — and therefore which template buckets drop — depend on
-    * trigger cadence; exact batch-twin parity holds for the default
-    * uncapped new side (the base-side cap is cadence-independent).
-    * The returned writer still needs `.start()`. */
   /** Streaming drift monitor: every micro-batch is scored against a
     * fitted [[graft.ops.FeatureStats.DriftModel]] — the baseline is
     * nBins longs of driver metadata riding the plan as a literal
@@ -609,62 +582,6 @@ object StreamingOps {
         batch.toDF(), valueCol, width, depth), batchId)
     }
 
-  def nearDupStream(
-      docs: DataFrame, idCol: String, textCol: String, baseSigs: DataFrame,
-      shingleN: Int = 3, k: Int = 16, bands: Int = 8,
-      threshold: Double = 0.5, portable: Boolean = false,
-      maxBucket: Int = Int.MaxValue)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    // Cached here, OUTSIDE foreachBatch: a per-batch materialization
-    // would re-shingle the whole base index every trigger. persist,
-    // NOT localCheckpoint — checkpoint blocks are non-replicated and
-    // truncate lineage, so one executor loss would break every later
-    // micro-batch of a long-running query; persist keeps the
-    // parquet-backed lineage and recomputes lost blocks transparently.
-    // (The query owns the cache for its lifetime; callers sharing
-    // baseSigs across queries can unpersist after the last stop().)
-    val baseOnce = baseSigs.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      // The batch's signatures are materialized once (consumed per
-      // band by the LSH join) and RELEASED after the sink — a
-      // lingering block per micro-batch is the r9 monitor-leak class.
-      // Ownership-exact via withStaged: only the signatures frame is
-      // pinned, so no registry diffing (which could catch a
-      // concurrent query's blocks) and release survives a throwing
-      // sink. baseOnce persists for the query's lifetime.
-      withStaged(graft.ops.Dedup.minhashSignatures(
-          batch, idCol, textCol, shingleN, k, portable), batchId, sink)(
-        sigs => graft.ops.Dedup.minhashLshAgainstPrepared(
-          sigs, baseOnce, k, bands, threshold, portable, maxBucket))
-    }
-  }
-
-  /** Streaming EXACT dedup against a persisted content-hash index —
-    * the exact-hash sibling of [[nearDupStream]] and the streaming
-    * face of [[graft.ops.Dedup.exactAgainst]] (shared code path, so
-    * per-batch rows are the batch operator's by construction; the
-    * dedup_exact_incremental oracle covers it). First-seen-wins
-    * semantics per batch: arrivals hashing into the index point at
-    * the historical survivor, within-batch repeats point at the
-    * batch's min-id arrival, fresh content gets dup_of NULL. No
-    * streaming state — the index IS the state, it lives in parquet,
-    * and refreshing it is [[graft.ops.Dedup.mergeExactIndexes]] over
-    * (index ∪ accepted batches) at whatever cadence the ingest loop
-    * chooses. Same lifetime-persist ownership caveat as
-    * [[nearDupStream]]: callers cycling indexes must unpersist the
-    * retired index after the last `stop()`. */
-  def exactDedupStream(
-      docs: DataFrame, idCol: String, textCol: String, index: DataFrame)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val indexOnce = index.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.Dedup.exactAgainst(
-        batch.toDF(), indexOnce, idCol, textCol), batchId)
-    }
-  }
-
   /** Persist a micro-batch's STAGED arrival frame, run the serve, and
     * release exactly that frame after the sink — the ownership-exact
     * release of the per-batch blocks that would otherwise accumulate
@@ -684,16 +601,20 @@ object StreamingOps {
     finally pinned.unpersist(false): Unit
   }
 
-  /** [[exactDedupStream]] against a partitioned [[graft.ops.Dedup
-    * .ExactHashIndex]] — the STORAGE-SERVING streaming posture: the
-    * index is NOT memory-pinned (the flat overload's persist assumes
-    * the index fits cluster memory — false once history outgrows it);
-    * each micro-batch runs the partition-pruned serve, reading only
-    * the ≤ |batch| hash buckets the batch's content falls into, a
-    * per-batch cost flat in history size (measured in SCALE.md
-    * Round-12). Rows per batch are [[graft.ops.Dedup
-    * .exactAgainst]]'s by construction (shared code path; the
-    * dedup_exact_serve oracle covers it). */
+  /** Streaming EXACT dedup against a persisted
+    * [[graft.ops.Dedup.ExactHashIndex]] — the streaming face of
+    * [[graft.ops.Dedup.exactAgainst]] (shared code path, so per-batch
+    * rows are the batch operator's by construction; the
+    * dedup_exact_serve oracle covers it). First-seen-wins semantics per
+    * batch: arrivals hashing into the index point at the historical
+    * survivor, within-batch repeats point at the batch's min-id
+    * arrival, fresh content gets dup_of NULL. No streaming state — the
+    * index IS the state and it lives in storage: nothing is pinned in
+    * memory, and each micro-batch reads only the ≤ |batch| hash buckets
+    * its content falls into, a per-batch cost flat in history size
+    * (SCALE.md Round-12). Refreshing the index is a rebuild
+    * ([[graft.ops.Dedup.mergeExactIndexes]] over its rows ∪ accepted
+    * batches) at whatever cadence the ingest loop chooses. */
   def exactDedupStream(
       docs: DataFrame, idCol: String, textCol: String,
       index: graft.ops.Dedup.ExactHashIndex)(
@@ -704,15 +625,20 @@ object StreamingOps {
         graft.ops.Dedup.exactAgainstStaged(_, index))
     }
 
-  /** [[nearDupStream]] against a partitioned [[graft.ops.Dedup
-    * .LshBandIndex]] — the storage-serving posture: no memory pin of
-    * the signature table, each micro-batch's band rows collect their
-    * bucket set and read only those partitions, signatures verified
-    * off the index rows. The batch is signed with the index's own
-    * k/family (and its sidecar shingle width when recorded;
-    * `shingleN` is the fallback for pre-sidecar indexes). `maxBucket`
-    * caps the ARRIVAL side only — the base side was capped at build
-    * ([[graft.ops.Dedup.saveLshBandIndex]]). Rows per batch are
+  /** Streaming MinHash near-dup detection against a persisted
+    * [[graft.ops.Dedup.LshBandIndex]] — the near-dup sibling of
+    * [[exactDedupStream]], with the same storage-serving posture: each
+    * micro-batch's band rows collect their bucket set and read only
+    * those partitions, signatures verified off the index rows. The
+    * batch is signed with the index's own k/family (and its sidecar
+    * shingle width when recorded; `shingleN` is the fallback for
+    * pre-sidecar indexes). Pairs are per micro-batch; near-dups WITHIN
+    * the stream are the index-refresh cadence's concern
+    * ([[graft.ops.Dedup.appendLshBandIndex]] over accepted batches).
+    * `maxBucket` caps the ARRIVAL side only — the base side was capped
+    * at build ([[graft.ops.Dedup.saveLshBandIndex]]) — so with a finite
+    * cap the arrival bucket widths, and which template buckets drop,
+    * depend on trigger cadence. Rows per batch are
     * [[graft.ops.Dedup.minhashLshAgainst]]'s by construction
     * (dedup_minhash_serve oracle). */
   def nearDupStream(
@@ -734,34 +660,14 @@ object StreamingOps {
     }
   }
 
-  /** Streaming SimHash near-dup against a persisted fingerprint table
-    * — [[exactDedupStream]]'s typo-tolerant sibling over the cheapest
-    * index form (8 bytes per historical doc,
-    * [[graft.ops.Dedup.saveSimhashes]]). Shares
-    * [[graft.ops.Dedup.simhashAgainst]] verbatim, so per-batch rows
-    * are the batch operator's by construction (the
-    * dedup_simhash_incremental oracle covers it). Stateless; same
-    * index-lifetime persist + ownership caveat as [[nearDupStream]]. */
-  def simhashDedupStream(
-      docs: DataFrame, idCol: String, textCol: String, baseSim: DataFrame,
-      maxHamming: Int = 8, portable: Boolean = false)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val baseOnce = baseSim.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.Dedup.simhashAgainst(
-        batch.toDF(), baseOnce, idCol, textCol, maxHamming, portable), batchId)
-    }
-  }
-
-  /** [[simhashDedupStream]] against a partitioned [[graft.ops.Dedup
-    * .SimhashBandIndex]] — the storage-serving posture
-    * ([[exactDedupStream]]'s partitioned-overload argument): no
-    * memory pin, each micro-batch reads only the ≤ |batch| × 4 band
-    * buckets its fingerprints fall into, and the hash family comes
-    * from the index itself (a batch can never be hashed with the
-    * wrong family). Maintenance between/within runs is
-    * [[graft.ops.Dedup.appendSimhashBandIndex]] over accepted
+  /** Streaming SimHash near-dup against a persisted
+    * [[graft.ops.Dedup.SimhashBandIndex]] — [[exactDedupStream]]'s
+    * typo-tolerant sibling over the cheapest index form (8 bytes per
+    * historical doc). Same storage-serving posture: each micro-batch
+    * reads only the ≤ |batch| × 4 band buckets its fingerprints fall
+    * into, and the hash family comes from the index itself (a batch can
+    * never be hashed with the wrong family). Maintenance between/within
+    * runs is [[graft.ops.Dedup.appendSimhashBandIndex]] over accepted
     * batches + periodic [[graft.ops.Dedup.compactSimhashBandIndex]].
     * Rows per batch are [[graft.ops.Dedup.simhashAgainst]]'s by
     * construction (dedup_simhash_serve oracle). */
@@ -775,40 +681,16 @@ object StreamingOps {
         graft.ops.Dedup.simhashAgainstStaged(_, index, maxHamming))
     }
 
-  /** Streaming substring-overlap detection against a persisted winnow
-    * fingerprint index — the fourth face of the streaming dedup
-    * matrix (exact hash, SimHash, minhash LSH, and now the MOSS
-    * substring guarantee). Shares
-    * [[graft.ops.Dedup.winnowAgainst]] verbatim (per-batch rows are
-    * the batch operator's by construction; oracle
-    * dedup_winnow_incremental). `k`/`w` must match the index build.
-    * The BASE-side df-cap is applied ONCE here, outside the loop — it
-    * depends only on the index, so pre-capping keeps every micro-batch
-    * from re-aggregating the base and keeps results
-    * cadence-independent. Stateless; same index-lifetime persist +
-    * ownership caveat as [[nearDupStream]]. */
-  def winnowStream(
-      docs: DataFrame, idCol: String, textCol: String, baseFps: DataFrame,
-      k: Int = 8, w: Int = 16, minShared: Int = 1,
-      maxDf: Int = Int.MaxValue, portable: Boolean = false)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val baseOnce = graft.ops.Dedup.capBaseFps(baseFps, maxDf).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.Dedup.winnowAgainst(
-        batch.toDF(), baseOnce, idCol, textCol, k, w, minShared,
-        maxDf = Int.MaxValue, portable = portable), batchId)
-    }
-  }
-
-  /** [[winnowStream]] against a partitioned [[graft.ops.Dedup
-    * .WinnowFpIndex]] — the storage-serving posture: no memory pin,
-    * each micro-batch reads only the fp buckets its fingerprints fall
-    * into, (k, w, family) come from the index itself, and the df-cap
-    * filters the document frequency STORED at build — the flat
-    * overload's hoisted capBaseFps aggregate disappears entirely.
-    * Rows per batch are [[graft.ops.Dedup.winnowAgainst]]'s by
-    * construction (dedup_winnow_serve oracle). */
+  /** Streaming substring-overlap detection against a persisted
+    * [[graft.ops.Dedup.WinnowFpIndex]] — the MOSS-guarantee face of the
+    * streaming dedup matrix (exact hash, SimHash, minhash LSH, winnow).
+    * Same storage-serving posture: each micro-batch reads only the fp
+    * buckets its fingerprints fall into, (k, w, family) come from the
+    * index itself, and the base-side df-cap filters the document
+    * frequency STORED at build, so no micro-batch re-aggregates the
+    * base and results are cadence-independent. Rows per batch are
+    * [[graft.ops.Dedup.winnowAgainst]]'s by construction
+    * (dedup_winnow_serve oracle). */
   def winnowStream(
       docs: DataFrame, idCol: String, textCol: String,
       index: graft.ops.Dedup.WinnowFpIndex, minShared: Int, maxDf: Int)(
@@ -827,8 +709,10 @@ object StreamingOps {
     * (per-batch rows are the batch operator's by construction; oracle
     * dedup_semantic_incremental). The encoded code table AND the
     * historical vector table (the exact-refinement side) persist once
-    * for the query's lifetime; same ownership caveat as
-    * [[nearDupStream]]. Index freshness is the [[pqIndexStream]]
+    * for the query's lifetime. OWNERSHIP CAVEAT: the writer API has no
+    * termination hook, so both stay cached after `stop()`; callers
+    * cycling indexes must unpersist the retired frames after the last
+    * `stop()`. Index freshness is the [[pqIndexStream]]
     * loop: append accepted batches' encodings at the refresh cadence. */
   def semanticDedupStream(
       vecs: DataFrame, idCol: String, vecCol: String,
@@ -860,9 +744,9 @@ object StreamingOps {
     * [[graft.ops.Retrieval.bm25ServeBatch]] verbatim, so per-batch
     * rows are the batch operator's by construction; the bm25_serve
     * oracle covers it). Stateless — the posting table is the state,
-    * persisted once for the query's lifetime (same ownership caveat
-    * as [[nearDupStream]]: unpersist retired indexes after the last
-    * `stop()`). */
+    * persisted once for the query's lifetime (the writer API has no
+    * termination hook: unpersist a retired index's postings after the
+    * last `stop()`). */
   def bm25ServeStream(
       queries: DataFrame, index: graft.ops.Retrieval.Bm25Index,
       queryIdCol: String, queryTextCol: String,

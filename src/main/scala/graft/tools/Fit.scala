@@ -31,11 +31,9 @@ import graft.LocalSession
   *                    validated HERE at fit time). [size = key-bucket
   *                    count for the partition-pruned serve layout
   *                    (saveKn5ModelPartitioned); omit for flat]
-  *   - `exact_index` — content-hash dedup index [size = hash-bucket
-  *                    count for the bucketed layout, whose sidecar is
-  *                    written last as its commit marker and records
-  *                    the kind the `*_filter` gates route on; omit
-  *                    for flat]
+  *   - `exact_index` — hash-bucketed content-hash dedup index
+  *                    ([[graft.ops.Dedup.saveExactIndexPartitioned]];
+  *                    serves `dedup_against`) [size = nHashBuckets, 64]
   *   - `minhash_index` — band-bucketed MinHash LSH index
   *                    ([[graft.ops.Dedup.saveLshBandIndex]]; serves
   *                    `minhash_filter`) [size = nHashBuckets, 64]
@@ -100,8 +98,7 @@ object Fit {
     // The order-2/3 KN families consume no size — accepting-and-
     // ignoring one would be the silent-misconfiguration class the opt
     // whitelist exists to kill (review finding r14). kn5 DOES take
-    // one: size = key-bucket count selects the partitioned layout
-    // (the exact_index convention).
+    // one: size = key-bucket count selects its partitioned layout.
     require(size.isEmpty || !Set("kn", "kn3").contains(what),
       s"Fit $what: this family takes no [size] argument — " +
         s"drop the ${size.get}")
@@ -178,12 +175,9 @@ object Fit {
             validated(graft.ops.LanguageModel.saveKn5Model(model, outDir))
         }
       case "exact_index" =>
-        val idx = graft.ops.Dedup.exact(df, idCol, textCol)
-        size match {
-          case Some(b) =>
-            graft.ops.Dedup.saveExactIndexPartitioned(idx, outDir, b)
-          case None => graft.ops.Dedup.saveExactIndex(idx, outDir)
-        }
+        graft.ops.Dedup.saveExactIndexPartitioned(
+          graft.ops.Dedup.exact(df, idCol, textCol), outDir,
+          nHashBuckets = size.getOrElse(64))
       case "minhash_index" =>
         val k = optInt("k", 16)
         val portable = optBool("portable")

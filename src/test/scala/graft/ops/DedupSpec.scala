@@ -44,8 +44,9 @@ class DedupSpec extends SparkSpec with Matchers {
     val history = docsDf(Seq(
       10L -> "Hello   World", 11L -> "old news here", 12L -> "hello world"))
     val scratch = java.nio.file.Files.createTempDirectory("graft-xidx").toString
-    Dedup.saveExactIndex(Dedup.exact(history, "doc_id", "text"), s"$scratch/idx")
-    val index = Dedup.loadExactIndex(spark, s"$scratch/idx")
+    Dedup.saveExactIndexPartitioned(
+      Dedup.exact(history, "doc_id", "text"), s"$scratch/idx", 4)
+    val index = Dedup.loadExactIndexPartitioned(spark, s"$scratch/idx")
     val arrivals = docsDf(Seq(
       2L -> "HELLO WORLD",      // in the index, arrival id SMALLER than keep_id
       20L -> "fresh content a", // new to everyone: survivor
@@ -201,11 +202,12 @@ class DedupSpec extends SparkSpec with Matchers {
     val batch = df.filter(col("doc_id").isin(batchIds.toSeq: _*))
     val hist = df.filter(!col("doc_id").isin(batchIds.toSeq: _*))
     val path = java.nio.file.Files.createTempDirectory("graft-sigs").toString + "/sigs"
-    Dedup.saveSignatures(
-      Dedup.minhashSignatures(hist, "doc_id", "text", shingleN = 3, k = 16), path)
+    Dedup.saveLshBandIndex(
+      Dedup.minhashSignatures(hist, "doc_id", "text", shingleN = 3, k = 16), path,
+      k = 16, bands = 8, nHashBuckets = 8)
     val inc = Dedup.minhashLshAgainst(
       Dedup.minhashSignatures(batch, "doc_id", "text", shingleN = 3, k = 16),
-      Dedup.loadSignatures(spark, path), k = 16, bands = 8, threshold = 0.3)
+      Dedup.loadLshBandIndex(spark, path), threshold = 0.3, maxBucket = Int.MaxValue)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // oracle: the one-shot full-corpus run, restricted to pairs that
     // cross the batch/base boundary (id order normalized)
@@ -277,11 +279,11 @@ class DedupSpec extends SparkSpec with Matchers {
     val history = docs.filter(col("doc_id") % 2 === 0)
     val arrivals = docs.filter(col("doc_id") % 2 =!= 0)
     val scratch = java.nio.file.Files.createTempDirectory("graft-simidx").toString
-    Dedup.saveSimhashes(
-      Dedup.withSimhash(history, "doc_id", "text"), s"$scratch/idx")
+    Dedup.saveSimhashBandIndex(
+      Dedup.withSimhash(history, "doc_id", "text"), s"$scratch/idx", 8)
     val got = Dedup.simhashAgainst(
-      arrivals, Dedup.loadSimhashes(spark, s"$scratch/idx"),
-      "doc_id", "text", maxHamming = 10)
+      arrivals, Dedup.loadSimhashBandIndex(spark, s"$scratch/idx"),
+      "doc_id", "text", 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // reference: the self-join over the union, restricted to cross pairs
     val self = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 10)
@@ -425,12 +427,12 @@ class DedupSpec extends SparkSpec with Matchers {
     val base = docs.filter(col("doc_id") % 2 === 0)
     val arrivals = docs.filter(col("doc_id") % 2 =!= 0)
     val scratch = java.nio.file.Files.createTempDirectory("graft-wfp").toString
-    Dedup.saveWinnowFingerprints(
+    Dedup.saveWinnowFpIndex(
       Dedup.winnowFingerprints(base, "doc_id", "text", k = 8, w = 16),
-      s"$scratch/idx")
+      s"$scratch/idx", 8)
     val got = Dedup.winnowAgainst(
-      arrivals, Dedup.loadWinnowFingerprints(spark, s"$scratch/idx"),
-      "doc_id", "text", k = 8, w = 16, minShared = 2)
+      arrivals, Dedup.loadWinnowFpIndex(spark, s"$scratch/idx"),
+      "doc_id", "text", minShared = 2, maxDf = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // reference: uncapped self-join over the union, cross slice only
     val self = Dedup.winnowOverlap(docs, "doc_id", "text",
@@ -856,8 +858,7 @@ class DedupSpec extends SparkSpec with Matchers {
     // untagged frames cannot become an index
     intercept[IllegalArgumentException] {
       Dedup.saveWinnowFpIndex(
-        Dedup.loadWinnowFingerprints(spark, s"$scratch/idx/fps")
-          .select(col("id"), col("fp").cast("long").as("fp")), // cast drops metadata
+        idx.rows.select(col("id"), col("fp").cast("long").as("fp")), // cast drops metadata
         s"$scratch/untagged")
     }.getMessage should include ("graft.winnow")
   }
@@ -1036,18 +1037,67 @@ class DedupSpec extends SparkSpec with Matchers {
     rows(s"$d/sim/bands") shouldBe simRows
   }
 
+  test("exact and winnow rebuilds: the loaded rows plus a batch rebuild to the one-shot index") {
+    val docs = docsDf((1L to 60L).map(i =>
+      i -> s"rebuild body ${i % 17} shared run of words ${i % 5} tail"))
+    val hist = docs.filter(col("doc_id") <= 40L)
+    val batch = docs.filter(col("doc_id") > 40L)
+    val d = java.nio.file.Files.createTempDirectory("graft-rebuild").toString
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+
+    // exact: fold the batch's index into the loaded rows (dup_count of
+    // repeated hashes updates), written to a fresh path
+    Dedup.saveExactIndexPartitioned(Dedup.exact(hist, "doc_id", "text"), s"$d/ex0", 8)
+    val ex0 = Dedup.loadExactIndexPartitioned(spark, s"$d/ex0")
+    Dedup.saveExactIndexPartitioned(Dedup.mergeExactIndexes(Seq(
+      ex0.rows.select("text_hash", "keep_id", "dup_count"),
+      Dedup.exact(batch, "doc_id", "text"))), s"$d/ex1", 8)
+    Dedup.saveExactIndexPartitioned(Dedup.exact(docs, "doc_id", "text"), s"$d/exAll", 8)
+    rows(Dedup.loadExactIndexPartitioned(spark, s"$d/ex1").rows) shouldBe
+      rows(Dedup.loadExactIndexPartitioned(spark, s"$d/exAll").rows)
+
+    // winnow: the loaded rows keep their build tags, so their (id, fp)
+    // projection plus the batch's fingerprints rebuilds with a fresh
+    // stored df
+    def fps(df: org.apache.spark.sql.DataFrame) =
+      Dedup.winnowFingerprints(df, "doc_id", "text", k = 6, w = 8, portable = true)
+    Dedup.saveWinnowFpIndex(fps(hist), s"$d/wn0", 8)
+    val wn0 = Dedup.loadWinnowFpIndex(spark, s"$d/wn0")
+    Dedup.saveWinnowFpIndex(
+      wn0.rows.select("id", "fp").unionByName(fps(batch)), s"$d/wn1", 8)
+    Dedup.saveWinnowFpIndex(fps(docs), s"$d/wnAll", 8)
+    val (wn1, wnAll) =
+      (Dedup.loadWinnowFpIndex(spark, s"$d/wn1"), Dedup.loadWinnowFpIndex(spark, s"$d/wnAll"))
+    (wn1.k, wn1.w, wn1.portable) shouldBe ((6, 8, true))
+    rows(wn1.rows) shouldBe rows(wnAll.rows)
+    wn1.rows.filter(col("df") > 1).count() should be > 0L // the df really re-aggregated
+  }
+
+  test("only BucketedIndex and Maintain ask a directory its kind: every other loader names the kind it expects") {
+    val main = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val walk = java.nio.file.Files.walk(main)
+    val hits =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .filter(f => java.nio.file.Files.readString(f).contains("kindOf("))
+        .map(f => main.relativize(f).toString).sorted
+      finally walk.close()
+    hits shouldBe Seq("graft/ops/BucketedIndex.scala", "graft/tools/Maintain.scala")
+  }
+
   test("index build-parameter tags: mismatched serve parameters fail fast, through parquet round trips") {
     val docs = docsDf(Seq(
       1L -> "alpha beta gamma delta epsilon zeta eta theta",
       2L -> "iota kappa lambda mu nu xi omicron pi rho sigma"))
     val scratch = java.nio.file.Files.createTempDirectory("graft-ptag").toString
 
-    // SimHash: the portable flag survives saveSimhashes/loadSimhashes
-    // and a family mismatch dies with a named parameter, not empty
-    // garbage results.
-    Dedup.saveSimhashes(
-      Dedup.withSimhash(docs, "doc_id", "text", portable = true), s"$scratch/sim")
-    val simIdx = Dedup.loadSimhashes(spark, s"$scratch/sim")
+    // SimHash: the portable flag survives a bucketed save and load on
+    // the loaded rows, and a family mismatch dies with a named
+    // parameter, not empty garbage results.
+    Dedup.saveSimhashBandIndex(
+      Dedup.withSimhash(docs, "doc_id", "text", portable = true), s"$scratch/sim", 4)
+    val simIdx = Dedup.loadSimhashBandIndex(spark, s"$scratch/sim").rows
+      .filter(col("band") === 0).select(col("id"), col("simhash"))
     val simEx = intercept[IllegalArgumentException] {
       Dedup.simhashAgainst(docs, simIdx, "doc_id", "text", portable = false)
     }
@@ -1057,10 +1107,11 @@ class DedupSpec extends SparkSpec with Matchers {
       .count() should be >= 2L
 
     // Winnow: (k, w, portable) all validated.
-    Dedup.saveWinnowFingerprints(
+    Dedup.saveWinnowFpIndex(
       Dedup.winnowFingerprints(docs, "doc_id", "text", k = 8, w = 16),
-      s"$scratch/win")
-    val winIdx = Dedup.loadWinnowFingerprints(spark, s"$scratch/win")
+      s"$scratch/win", 4)
+    val winIdx = Dedup.loadWinnowFpIndex(spark, s"$scratch/win").rows
+      .select(col("id"), col("fp"))
     val winEx = intercept[IllegalArgumentException] {
       Dedup.winnowAgainst(docs, winIdx, "doc_id", "text", k = 6, w = 16)
     }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.matchers.should.Matchers
 
-import graft.SparkSpec
+import graft.{SidecarFaults, SparkSpec}
 
 /** BM25 semantics against a hand-computed miniature corpus. */
 class RetrievalSpec extends SparkSpec with Matchers {
@@ -122,8 +122,8 @@ class RetrievalSpec extends SparkSpec with Matchers {
     val queries = Seq(
       ("q1", "spark vector"), ("q2", "merge filler7"), ("q3", "")).toDF("qid", "qtext")
     val scratch = java.nio.file.Files.createTempDirectory("graft-bm25").toString
-    Retrieval.saveBm25Index(
-      Retrieval.buildBm25Index(docs, "doc_id", "text"), s"$scratch/idx")
+    Retrieval.saveBm25IndexPartitioned(
+      Retrieval.buildBm25Index(docs, "doc_id", "text"), s"$scratch/idx", 8)
     val index = Retrieval.loadBm25Index(spark, s"$scratch/idx")
     index.idCol shouldBe "doc_id"
     index.nDocs shouldBe 60L
@@ -156,16 +156,16 @@ class RetrievalSpec extends SparkSpec with Matchers {
     val scratch = java.nio.file.Files.createTempDirectory("graft-bm25p").toString
     val built = Retrieval.buildBm25Index(docs, "doc_id", "text")
     val nBuckets = 32
-    Retrieval.saveBm25Index(built, s"$scratch/flat")
     Retrieval.saveBm25IndexPartitioned(built, s"$scratch/part", nBuckets)
-    val flat = Retrieval.loadBm25Index(spark, s"$scratch/flat")
+    // the in-session index scans every posting: the unpruned reference
+    val flat = built
     val part = Retrieval.loadBm25Index(spark, s"$scratch/part")
     flat.termBuckets shouldBe None
     part.termBuckets shouldBe Some(nBuckets)
     part.nDocs shouldBe flat.nDocs
     part.avgdl shouldBe flat.avgdl
 
-    // Row-identical serve through either layout.
+    // Row-identical serve, pruned or not.
     val servedFlat = Retrieval.bm25ServeBatch(flat, queries, "qid", "qtext", k = 10)
     val servedPart = Retrieval.bm25ServeBatch(part, queries, "qid", "qtext", k = 10)
     servedPart.columns.toSeq shouldBe servedFlat.columns.toSeq
@@ -201,5 +201,30 @@ class RetrievalSpec extends SparkSpec with Matchers {
       part.postings.filter($"__graft_tb".isin(bucketIds: _*)))
     prunedFiles should be <= qTerms.size.toLong
     prunedFiles should be < allFiles
+  }
+
+  test("bm25 index load checks its sidecar: a zero-byte file, a NULL n_docs or a missing term_buckets fail naming saveBm25IndexPartitioned") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val docs = Seq((1L, "spark engine"), (2L, "flink engine")).toDF("doc_id", "text")
+    val d = java.nio.file.Files.createTempDirectory("graft-bm25-fault").toString
+    def saved(name: String): String = {
+      Retrieval.saveBm25IndexPartitioned(
+        Retrieval.buildBm25Index(docs, "doc_id", "text"), s"$d/$name", 4)
+      Retrieval.loadBm25Index(spark, s"$d/$name").nDocs shouldBe 2L
+      s"$d/$name"
+    }
+    def refused(path: String, why: String): Unit = {
+      val e = intercept[IllegalArgumentException](Retrieval.loadBm25Index(spark, path))
+      e.getMessage should include ("saveBm25IndexPartitioned")
+      e.getMessage should include (why)
+    }
+    SidecarFaults.truncate(spark, s"${saved("zero")}/stats", 0)
+    refused(s"$d/zero", "unreadable sidecar")
+    SidecarFaults.rewrite(spark, s"${saved("null")}/stats")(
+      _.withColumn("n_docs", lit(null).cast("long")))
+    refused(s"$d/null", "NULL n_docs")
+    SidecarFaults.rewrite(spark, s"${saved("missing")}/stats")(_.drop("term_buckets"))
+    refused(s"$d/missing", "missing field term_buckets")
   }
 }

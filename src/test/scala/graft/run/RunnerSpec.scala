@@ -465,8 +465,9 @@ class RunnerSpec extends SparkSpec {
       (100L, "seen before text"), (101L, "other historical text")
     ).toDF("id", "bio")
     val scratch = java.nio.file.Files.createTempDirectory("graft-tidx").toString
-    graft.ops.Dedup.saveExactIndex(
-      graft.ops.Dedup.exact(history, "id", "bio"), s"$scratch/idx")
+    graft.ops.Dedup.saveExactIndexPartitioned(
+      graft.ops.Dedup.exact(history, "id", "bio"), s"$scratch/idx",
+      nHashBuckets = 8)
     val df = Seq(
       (1L, Option("Seen   BEFORE text")),  // normalized index hit → drops
       (2L, Option("fresh content a")),     // new → survives
@@ -478,16 +479,6 @@ class RunnerSpec extends SparkSpec {
       Transforms.parse(s"dedup_against(key=id,col=bio,index=$scratch/idx)"))
       .collect().map(_.getLong(0)).sorted
     assert(out.toSeq == Seq(2L, 3L, 5L), s"got ${out.toSeq}")
-
-    // hash-partitioned layout: the stats sidecar flips the gate's
-    // loader to the partition-pruned serve, same kept rows
-    graft.ops.Dedup.saveExactIndexPartitioned(
-      graft.ops.Dedup.exact(history, "id", "bio"), s"$scratch/idxp",
-      nHashBuckets = 8)
-    val outP = Transforms.applyAll(df,
-      Transforms.parse(s"dedup_against(key=id,col=bio,index=$scratch/idxp)"))
-      .collect().map(_.getLong(0)).sorted
-    assert(outP.toSeq == Seq(2L, 3L, 5L), s"got ${outP.toSeq}")
   }
 
   test("simhash_filter / winnow_filter transforms: near-dups of the persisted index drop, novel and NULL rows survive") {
@@ -498,10 +489,12 @@ class RunnerSpec extends SparkSpec {
       (100L, base), (101L, s"$copied plus base trailing content here")
     ).toDF("id", "bio")
     val scratch = java.nio.file.Files.createTempDirectory("graft-nidx").toString
-    graft.ops.Dedup.saveSimhashes(
-      graft.ops.Dedup.withSimhash(history, "id", "bio"), s"$scratch/sim")
-    graft.ops.Dedup.saveWinnowFingerprints(
-      graft.ops.Dedup.winnowFingerprints(history, "id", "bio"), s"$scratch/wfp")
+    graft.ops.Dedup.saveSimhashBandIndex(
+      graft.ops.Dedup.withSimhash(history, "id", "bio"), s"$scratch/sim",
+      nHashBuckets = 8)
+    graft.ops.Dedup.saveWinnowFpIndex(
+      graft.ops.Dedup.winnowFingerprints(history, "id", "bio"), s"$scratch/wfp",
+      nHashBuckets = 8)
     val vary = (1 to 30).map(i => if (i == 5) "CHANGED" else s"token$i").mkString(" ")
     val df = Seq(
       (1L, Option(vary)),                            // near-dup of history
@@ -522,17 +515,8 @@ class RunnerSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted
     assert(winOut.toSeq == Seq(2L, 3L), s"got ${winOut.toSeq}")
 
-    // PARTITIONED layouts at the same paths' pruned twins: the stats
-    // sidecar flips the gate's loader, same kept rows. The winnow one
-    // is built with NON-default (k, w) — only reachable from the DSL
-    // through the sidecar (the flat path serves defaults).
-    graft.ops.Dedup.saveSimhashBandIndex(
-      graft.ops.Dedup.withSimhash(history, "id", "bio"), s"$scratch/simp",
-      nHashBuckets = 8)
-    val simpOut = Transforms.applyAll(df, Transforms.parse(
-      s"simhash_filter(key=id,col=bio,index=$scratch/simp,max_hamming=14)"))
-      .collect().map(_.getLong(0)).sorted
-    assert(simpOut.toSeq == Seq(2L, 3L), s"got ${simpOut.toSeq}")
+    // NON-default (k, w) reach the gate through the index's sidecar,
+    // same kept rows
     graft.ops.Dedup.saveWinnowFpIndex(
       graft.ops.Dedup.winnowFingerprints(history, "id", "bio", k = 6, w = 8),
       s"$scratch/wfpp", nHashBuckets = 8)
@@ -553,9 +537,9 @@ class RunnerSpec extends SparkSpec {
     val shared = (1 to 40).map(i => s"word$i").mkString(" ")
     val history = Seq((100L, shared)).toDF("id", "bio")
     val scratch = java.nio.file.Files.createTempDirectory("graft-mhidx").toString
-    graft.ops.Dedup.saveSignatures(
+    graft.ops.Dedup.saveLshBandIndex(
       graft.ops.Dedup.minhashSignatures(history, "id", "bio",
-        shingleN = 3, k = 16), s"$scratch/mh")
+        shingleN = 3, k = 16), s"$scratch/mh", nHashBuckets = 8)
     val vary = (1 to 40).map(i => if (i == 7) "CHANGED" else s"word$i").mkString(" ")
     val df = Seq(
       (1L, Option(vary)),                            // near-dup of history
@@ -567,8 +551,8 @@ class RunnerSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted
     assert(mhOut.toSeq == Seq(2L, 3L), s"got ${mhOut.toSeq}")
 
-    // band-bucketed layout, PORTABLE family: k/portable come from the
-    // index's stats sidecar (no k=/portable= args), same kept rows.
+    // PORTABLE family: k/portable come from the index's stats sidecar
+    // (no k=/portable= args), same kept rows.
     graft.ops.Dedup.saveLshBandIndex(
       graft.ops.Dedup.minhashSignatures(history, "id", "bio",
         shingleN = 3, k = 16, portable = true),
@@ -936,6 +920,58 @@ class RunnerSpec extends SparkSpec {
       "pack_sequences(key=id,col=tokens)"))
   }
 
+  // The flat dedup tables are no longer served: each gate reads only
+  // its bucketed layout, and a flat table fails at plan time.
+  for ((gate, writer) <- Seq(
+      "dedup_against" -> "saveExactIndexPartitioned",
+      "simhash_filter" -> "saveSimhashBandIndex",
+      "winnow_filter" -> "saveWinnowFpIndex",
+      "minhash_filter" -> "saveLshBandIndex"))
+    test(s"$gate pointed at a flat table fails before any job runs, naming $writer") {
+      import spark.implicits._
+      val history = Seq((100L, "a historical document body with enough words to shingle"))
+        .toDF("id", "bio")
+      val flat = java.nio.file.Files.createTempDirectory(s"graft-flat-$gate").toString + "/idx"
+      (gate match {
+        case "dedup_against" => graft.ops.Dedup.exact(history, "id", "bio")
+        case "simhash_filter" => graft.ops.Dedup.withSimhash(history, "id", "bio")
+        case "winnow_filter" => graft.ops.Dedup.winnowFingerprints(history, "id", "bio")
+        case _ => graft.ops.Dedup.minhashSignatures(history, "id", "bio")
+      }).write.parquet(flat)
+      val arrivals = Seq((1L, Option("an arriving document"))).toDF("id", "bio")
+      val (e, jobs, _) = traced(intercept[IllegalArgumentException](
+        Transforms.applyAll(arrivals, Transforms.parse(s"$gate(key=id,col=bio,index=$flat)"))))
+      assert(jobs.isEmpty, s"${jobs.size} jobs ran before the gate failed")
+      assert(e.getMessage.contains(writer), e.getMessage)
+      assert(e.getMessage.contains("flat parquet table"), e.getMessage)
+    }
+
+  test("Runner.run reads only the tables its SQL names: an unreadable junk.parquet beside them changes nothing") {
+    val data = java.nio.file.Files.createTempDirectory("graft-junk")
+    java.nio.file.Files.list(java.nio.file.Paths.get(sf())).forEach(f =>
+      java.nio.file.Files.copy(f, data.resolve(f.getFileName)))
+    java.nio.file.Files.write(data.resolve("junk.parquet"), "not a parquet file".getBytes)
+    // `events` only inside a CTE body, `orders` only inside a
+    // subquery; the CTE name `e` has no file and stays the analyzer's
+    def job(dir: String) = JobConfig(
+      registry = YamlRegistry.load(registryYaml),
+      dataDir = dir,
+      features = Right("training_service"),
+      entityQuery =
+        """WITH e AS (SELECT user_id, ts FROM events)
+          |SELECT user_id AS o_custkey, ts AS event_timestamp FROM e
+          |WHERE user_id IN (SELECT o_custkey FROM orders WHERE o_totalprice > 1000)""".stripMargin,
+      entityTs = "event_timestamp",
+      outputSplits = Seq("train" -> 2, "eval" -> 1),
+      outputPath = java.nio.file.Files.createTempDirectory("graft-junk-out").toString)
+    def records(dir: String) =
+      Runner.run(spark, job(dir)).map(r => r.split -> r.records).toMap
+    val want = records(sf())
+    assert(want.values.sum > 0L)
+    assert(records(data.toString) == want)
+    assert(!spark.catalog.tableExists("junk"))
+  }
+
   test("pre-training recipe chains end-to-end: clean, LM gate, dedup gate, tokenize, pack") {
     import spark.implicits._
     // The full CCNet-to-training-batch pipeline as ONE config string:
@@ -950,11 +986,11 @@ class RunnerSpec extends SparkSpec {
       graft.ops.Unigram.train(reference, "bio", vocabSize = 12),
       s"$base/uni", spark)
     // History already contains doc 1's content -> its re-crawl drops.
-    graft.ops.Dedup.saveExactIndex(
+    graft.ops.Dedup.saveExactIndexPartitioned(
       graft.ops.Dedup.exact(
         Seq((1L, "the cat sat on the mat")).toDF("doc_id", "bio"),
         "doc_id", "bio"),
-      s"$base/exact")
+      s"$base/exact", nHashBuckets = 4)
     val ingest = (Seq(
       (100L, "  the cat  sat on the mat  "), // cleans fluent, but dups history
       (101L, "the cat sat on the mat rug")) ++ // fluent and fresh

@@ -110,12 +110,14 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
     val arriving = corpus.map(d => Doc(d.doc_id + 1000000L, d.text))
     val baseSigs = Dedup.minhashSignatures(
       corpus.toDF(), "doc_id", "text", shingleN = 3, k = 16)
+    val path = java.nio.file.Files.createTempDirectory("graft-ndsoak").toString
+    Dedup.saveLshBandIndex(baseSigs, path, k = 16, bands = 8, nHashBuckets = 64)
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val stream = MemoryStream[Doc]
     val gotCount = new java.util.concurrent.atomic.AtomicLong(0)
     val q = StreamingOps.nearDupStream(
-      stream.toDF(), "doc_id", "text", baseSigs,
-      shingleN = 3, k = 16, bands = 8, threshold = 0.5) { (pairs, _) =>
+      stream.toDF(), "doc_id", "text", Dedup.loadLshBandIndex(spark, path),
+      3, 0.5, Int.MaxValue) { (pairs, _) =>
       gotCount.addAndGet(pairs.count())
     }.start()
     try {
@@ -129,11 +131,10 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       log.foreach { case (_, _, st) => st.sum shouldBe 0L }
       // block-manager hygiene, asserted BEFORE the batch twin (which
       // legitimately checkpoints its own two signature frames):
-      // per-batch signature checkpoints are released after each sink;
-      // only the query-lifetime base index may remain persisted
-      // across the 10 batches.
-      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore)
-        .size should be <= 1
+      // per-batch arrival frames are released after each sink, and the
+      // index is read from storage, never pinned.
+      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe empty
+      // the in-frame serve over the signature table is the reference
       val batchTwin = Dedup.minhashLshAgainst(
         Dedup.minhashSignatures(arriving.toDF(), "doc_id", "text", shingleN = 3, k = 16),
         baseSigs, k = 16, bands = 8, threshold = 0.5).count()
@@ -150,13 +151,15 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
     val corpus = spark.read.parquet(sf("sf0.1") + "/documents.parquet")
       .select(col("doc_id"), col("text")).as[Doc].collect().toSeq
     val arriving = corpus.map(d => Doc(d.doc_id + 1000000L, d.text))
-    val index = Dedup.exact(corpus.toDF(), "doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-exsoak").toString
+    Dedup.saveExactIndexPartitioned(Dedup.exact(corpus.toDF(), "doc_id", "text"), path)
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val stream = MemoryStream[Doc]
     val rows = new java.util.concurrent.atomic.AtomicLong(0)
     val dups = new java.util.concurrent.atomic.AtomicLong(0)
     val q = StreamingOps.exactDedupStream(
-      stream.toDF(), "doc_id", "text", index) { (batch, _) =>
+      stream.toDF(), "doc_id", "text",
+      Dedup.loadExactIndexPartitioned(spark, path)) { (batch, _) =>
       rows.addAndGet(batch.count())
       dups.addAndGet(batch.filter(col("dup_of").isNotNull).count())
     }.start()
@@ -167,9 +170,8 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       val log = progressLog(q)
       log.size should be >= 10
       log.foreach { case (_, _, st) => st.sum shouldBe 0L } // stateless
-      // only the query-lifetime persisted index may remain
-      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore)
-        .size should be <= 1
+      // nothing stays pinned: the index is read from storage
+      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe empty
       rows.get() shouldBe arriving.size.toLong  // every arrival classified
       dups.get() shouldBe arriving.size.toLong  // every text exists in history
       soakLine("exactDedupStream", arriving.size.toLong, log)
@@ -313,11 +315,14 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       .select(col("doc_id"), col("text")).as[Doc].collect().toSeq
     val arriving = corpus.map(d => Doc(d.doc_id + 1000000L, d.text))
     val index = Dedup.withSimhash(corpus.toDF(), "doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-shsoak").toString
+    Dedup.saveSimhashBandIndex(index, path)
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val stream = MemoryStream[Doc]
     val pairs = new java.util.concurrent.atomic.AtomicLong(0)
     val q = StreamingOps.simhashDedupStream(
-      stream.toDF(), "doc_id", "text", index, maxHamming = 2) { (batch, _) =>
+      stream.toDF(), "doc_id", "text",
+      Dedup.loadSimhashBandIndex(spark, path), 2) { (batch, _) =>
       pairs.addAndGet(batch.count())
     }.start()
     try {
@@ -327,8 +332,8 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       val log = progressLog(q)
       log.size should be >= 10
       log.foreach { case (_, _, st) => st.sum shouldBe 0L } // stateless
-      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore)
-        .size should be <= 1
+      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe empty
+      // the in-frame serve over the fingerprint table is the reference
       val twin = Dedup.simhashAgainst(
         arriving.toDF(), index, "doc_id", "text", maxHamming = 2).count()
       pairs.get() shouldBe twin
@@ -345,12 +350,14 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       .select(col("doc_id"), col("text")).as[Doc].collect().toSeq
     val arriving = corpus.map(d => Doc(d.doc_id + 1000000L, d.text))
     val index = Dedup.winnowFingerprints(corpus.toDF(), "doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-wnsoak").toString
+    Dedup.saveWinnowFpIndex(index, path)
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val stream = MemoryStream[Doc]
     val pairs = new java.util.concurrent.atomic.AtomicLong(0)
     val q = StreamingOps.winnowStream(
-      stream.toDF(), "doc_id", "text", index,
-      minShared = 2, maxDf = 200) { (batch, _) =>
+      stream.toDF(), "doc_id", "text",
+      Dedup.loadWinnowFpIndex(spark, path), 2, 200) { (batch, _) =>
       pairs.addAndGet(batch.count())
     }.start()
     try {
@@ -360,9 +367,8 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       val log = progressLog(q)
       log.size should be >= 10
       log.foreach { case (_, _, st) => st.sum shouldBe 0L } // stateless
-      // only the query-lifetime pre-capped index may remain persisted
-      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore)
-        .size should be <= 1
+      (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe empty
+      // the in-frame serve with the same cap is the reference
       val twin = Dedup.winnowAgainst(
         arriving.toDF(), index, "doc_id", "text",
         minShared = 2, maxDf = 200).count()

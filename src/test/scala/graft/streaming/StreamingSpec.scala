@@ -523,11 +523,13 @@ class StreamingSpec extends SparkSpec with Matchers {
       Doc(7L, "totally new content sharing nothing with the base corpus at all"))
     val baseSigs = Dedup.minhashSignatures(
       corpus.toDF(), "doc_id", "text", shingleN = 3, k = 16)
+    val path = java.nio.file.Files.createTempDirectory("graft-ndstream").toString
+    Dedup.saveLshBandIndex(baseSigs, path, k = 16, bands = 8, nHashBuckets = 8)
     val stream = MemoryStream[Doc]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val q = StreamingOps.nearDupStream(
-      stream.toDF(), "doc_id", "text", baseSigs,
-      shingleN = 3, k = 16, bands = 8, threshold = 0.3) { (pairs, _) =>
+      stream.toDF(), "doc_id", "text", Dedup.loadLshBandIndex(spark, path),
+      3, 0.3, Int.MaxValue) { (pairs, _) =>
       got.synchronized {
         got ++= pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       }
@@ -537,6 +539,7 @@ class StreamingSpec extends SparkSpec with Matchers {
       q.processAllAvailable()
       stream.addData(arriving.drop(1))
       q.processAllAvailable()
+      // the in-frame serve over the signature table is the reference
       val batchTwin = Dedup.minhashLshAgainst(
         Dedup.minhashSignatures(arriving.toDF(), "doc_id", "text", shingleN = 3, k = 16),
         baseSigs, k = 16, bands = 8, threshold = 0.3)
@@ -555,6 +558,8 @@ class StreamingSpec extends SparkSpec with Matchers {
       Doc(10L, "Hello   World"), Doc(11L, "old news here"),
       Doc(12L, "hello world"))
     val index = Dedup.exact(history.toDF(), "doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-exstream").toString
+    Dedup.saveExactIndexPartitioned(index, path, 4)
     val batches = Seq(
       Seq(Doc(2L, "HELLO WORLD"), Doc(20L, "fresh content a")),
       // batch 2 repeats batch 1's fresh content: the STATIC index
@@ -564,22 +569,24 @@ class StreamingSpec extends SparkSpec with Matchers {
     val stream = MemoryStream[Doc]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[org.apache.spark.sql.Row])]
     val q = StreamingOps.exactDedupStream(
-      stream.toDF(), "doc_id", "text", index) { (rows, id) =>
+      stream.toDF(), "doc_id", "text",
+      Dedup.loadExactIndexPartitioned(spark, path)) { (rows, id) =>
       got.synchronized { got += ((id, rows.collect())) }
     }.start()
     try {
       batches.foreach { b => stream.addData(b); q.processAllAvailable() }
       got.size shouldBe 2
+      // the in-frame serve over the index frame is the reference
       got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
         val twin = Dedup.exactAgainst(rows.toDF(), index, "doc_id", "text").collect()
         streamed.map(_.toString).sorted.toSeq shouldBe twin.map(_.toString).sorted.toSeq
       }
-      val flat = got.sortBy(_._1).flatMap(_._2)
+      val byId = got.sortBy(_._1).flatMap(_._2)
         .map(r => r.getLong(0) -> (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
-      flat(2L) shouldBe Some(10L)  // first-seen survivor, not min id
-      flat(20L) shouldBe None
-      flat(21L) shouldBe None      // static index: batch-1 content unknown
-      flat(22L) shouldBe Some(10L)
+      byId(2L) shouldBe Some(10L)  // first-seen survivor, not min id
+      byId(20L) shouldBe None
+      byId(21L) shouldBe None      // static index: batch-1 content unknown
+      byId(22L) shouldBe Some(10L)
     } finally q.stop()
   }
 
@@ -593,13 +600,16 @@ class StreamingSpec extends SparkSpec with Matchers {
     val history = Seq(
       Doc(2L, base), Doc(4L, "some wholly different text here now"))
     val index = Dedup.withSimhash(history.toDF(), "doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-shstream").toString
+    Dedup.saveSimhashBandIndex(index, path, 4)
     val batches = Seq(
       Seq(Doc(1L, vary(5))),
       Seq(Doc(3L, base), Doc(5L, "unrelated content about other things")))
     val stream = MemoryStream[Doc]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[org.apache.spark.sql.Row])]
     val q = StreamingOps.simhashDedupStream(
-      stream.toDF(), "doc_id", "text", index, maxHamming = 10) { (rows, id) =>
+      stream.toDF(), "doc_id", "text",
+      Dedup.loadSimhashBandIndex(spark, path), 10) { (rows, id) =>
       got.synchronized { got += ((id, rows.collect())) }
     }.start()
     try {
@@ -626,13 +636,16 @@ class StreamingSpec extends SparkSpec with Matchers {
       Doc(2L, s"$copied and some base-only trailing content"),
       Doc(4L, "a wholly different base document with its own words"))
     val index = Dedup.winnowFingerprints(history.toDF(), "doc_id", "text", k = 8, w = 16)
+    val path = java.nio.file.Files.createTempDirectory("graft-wnstream").toString
+    Dedup.saveWinnowFpIndex(index, path, 4)
     val batches = Seq(
       Seq(Doc(1L, s"prefix stolen words: $copied")),
       Seq(Doc(3L, "novel arrival content sharing nothing with the base at all")))
     val stream = MemoryStream[Doc]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[org.apache.spark.sql.Row])]
     val q = StreamingOps.winnowStream(
-      stream.toDF(), "doc_id", "text", index, k = 8, w = 16, minShared = 2) {
+      stream.toDF(), "doc_id", "text",
+      Dedup.loadWinnowFpIndex(spark, path), 2, Int.MaxValue) {
       (rows, id) => got.synchronized { got += ((id, rows.collect())) }
     }.start()
     try {

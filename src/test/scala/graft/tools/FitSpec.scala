@@ -83,6 +83,21 @@ class FitSpec extends SparkSpec with Matchers {
       Seq(2L, 3L)
   }
 
+  test("exact_index: Fit builds the hash-bucketed layout dedup_against serves, 64 buckets by default") {
+    import spark.implicits._
+    val out = scratch("ex")
+    Fit.fit(spark, "exact_index", textCorpus, "doc_id", "body",
+      s"$out/idx", None)
+    graft.ops.Dedup.loadExactIndexPartitioned(spark, s"$out/idx")
+      .hashBuckets shouldBe 64
+    val shared = (1 to 40).map(i => s"word$i").mkString(" ")
+    Transforms.applyAll(
+        Seq((1L, Option(s"  $shared ")), (2L, Option("fresh words")),
+          (3L, None: Option[String])).toDF("id", "bio"),
+        Transforms.parse(s"dedup_against(key=id,col=bio,index=$out/idx)"))
+      .collect().map(_.getLong(0)).sorted.toSeq shouldBe Seq(2L, 3L)
+  }
+
   test("semantic_index: Fit builds the self-contained ann+encoded layout semantic_filter serves") {
     import spark.implicits._
     val dir = scratch("sem")
