@@ -816,22 +816,6 @@ object FeatureStats {
         col("min_val"), col("max_val"), col("domain"))
   }
 
-  /** TFDV ExampleValidator: anomalies of a serving/eval batch against
-    * an [[inferSchema]] table. Per schema feature:
-    *   - `unexpected_null` — NULLs where the reference batch had none;
-    *   - `out_of_range` — numeric values outside the reference
-    *     [min_val, max_val] (features with a numeric range only);
-    *   - `new_category` — values outside the reference domain
-    *     (features with a closed domain only).
-    * Every applicable (feature, anomaly) row is emitted with its bad
-    * count (0 = clean), plus the lexicographically smallest offending
-    * value as the debugging example — deterministic, not "first seen".
-    *
-    * Scale shape: the schema table is COLUMN-count-sized metadata
-    * (collected driver-side, the index-metadata pattern); checks
-    * compile to ONE conditional-aggregation pass over the batch — no
-    * joins, no shuffle beyond the single-row agg; domain membership is
-    * an `isin` over ≤ maxDomain literals inside codegen. */
   /** One column's expectations, collected off an [[inferSchema]] table
     * — column-count-sized driver metadata (the [[DriftModel]] shape),
     * serializable, so streaming monitors collect the schema ONCE and
@@ -852,60 +836,61 @@ object FeatureStats {
         Option(r.getAs[String]("domain"))))
       .sortBy(_.feature).toSeq
 
+  /** [[validate]] against an [[inferSchema]] table. */
   def validateSchema(df: DataFrame, schema: DataFrame): DataFrame =
-    validateWith(df, collectSchema(schema))
+    validate(df, collectSchema(schema))
 
-  /** [[validateSchema]] against pre-collected specs — the fit-once/
-    * serve-many and streaming form. */
-  def validateWith(df: DataFrame, colSpecs: Seq[ColumnSpec]): DataFrame = {
-    val checks = anomalyChecks(df, colSpecs)
+  /** TFDV ExampleValidator: anomalies of a serving/eval batch against
+    * pre-collected [[ColumnSpec]]s (the fit-once/serve-many and
+    * streaming form). Per spec'd feature:
+    *   - `unexpected_null` — NULLs where the reference batch had none;
+    *   - `out_of_range` — numeric values outside the reference
+    *     [min_val, max_val] (features with a numeric range only);
+    *   - `new_category` — values outside the reference domain
+    *     (features with a closed domain only).
+    * Every applicable (feature, anomaly) row is emitted with its bad
+    * count (0 = clean), plus the lexicographically smallest offending
+    * value as the debugging example — deterministic, not "first seen".
+    *
+    * `slice` groups the same checks by a slice column (TFDV sliced
+    * validation: a gate that passes globally can still hide a slice
+    * whose rows are ALL bad) and prefixes a `slice` column. Slices come
+    * from the batch itself (validation covers what arrived;
+    * slice-absence alarms are the drift monitors' job); NULL slice
+    * values are excluded, like the sliced drift fits.
+    *
+    * Scale shape: ONE conditional-aggregation pass — a keyless
+    * `groupBy()` unsliced, a map-side-combined hash-agg on the slice
+    * key sliced, so per-slice validation costs what global validation
+    * costs. Domain membership is an `isin` over ≤ maxDomain literals
+    * inside codegen. */
+  def validate(
+      df: DataFrame, specs: Seq[ColumnSpec],
+      slice: Option[String] = None): DataFrame = {
+    val checks = anomalyChecks(df, specs)
     val aggs = checks.zipWithIndex.flatMap { case ((_, _, cnt, ex), i) =>
       Seq(cnt.as(s"__c$i"), ex.as(s"__e$i"))
     }
-    val one = df.agg(aggs.head, aggs.tail: _*)
+    val grouped = slice.fold(df.groupBy())(s =>
+      df.filter(col(s).isNotNull).groupBy(col(s).cast("string").as("slice")))
     // sum() over a ZERO-ROW batch returns NULL — and streaming
     // monitors see empty micro-batches. A NULL n_bad would make any
     // sink gate (n_bad == 0, n_bad > 0) evaluate to NULL and silently
-    // never fire, so empty batches must report n_bad = 0 explicitly.
+    // never fire, so empty batches must report n_bad = 0 explicitly
+    // (the keyless groupBy still emits its one row).
     val rows = checks.zipWithIndex.map { case ((f, kind, _, _), i) =>
       struct(lit(f).as("feature"), lit(kind).as("anomaly"),
         coalesce(col(s"__c$i"), lit(0L)).as("n_bad"), col(s"__e$i").as("example"))
     }
-    one.select(explode(array(rows: _*)).as("a")).select("a.*")
+    val keys = slice.map(_ => col("slice")).toSeq
+    grouped.agg(aggs.head, aggs.tail: _*)
+      .select(keys :+ explode(array(rows: _*)).as("a"): _*)
+      .select(keys :+ col("a.*"): _*)
   }
 
-  /** Per-SLICE schema validation — [[validateWith]]'s anomaly pass
-    * grouped by a slice column (TFDV sliced validation: a gate that
-    * passes globally can still hide a slice whose rows are ALL bad).
-    * One row per (slice, check); same conditional-agg checks, ONE
-    * map-side-combined hash-agg on the slice key instead of a global
-    * agg — per-slice validation costs exactly what global validation
-    * costs. Slices come from the batch itself (validation covers what
-    * arrived; slice-absence alarms are the drift monitors' job); NULL
-    * slice values are excluded, like the sliced drift fits. */
-  def validateWithSliced(
-      df: DataFrame, sliceCol: String,
-      colSpecs: Seq[ColumnSpec]): DataFrame = {
-    val checks = anomalyChecks(df, colSpecs)
-    val aggs = checks.zipWithIndex.flatMap { case ((_, _, cnt, ex), i) =>
-      Seq(cnt.as(s"__c$i"), ex.as(s"__e$i"))
-    }
-    val per = df.filter(col(sliceCol).isNotNull)
-      .groupBy(col(sliceCol).cast("string").as("slice"))
-      .agg(aggs.head, aggs.tail: _*)
-    val rows = checks.zipWithIndex.map { case ((f, kind, _, _), i) =>
-      struct(lit(f).as("feature"), lit(kind).as("anomaly"),
-        coalesce(col(s"__c$i"), lit(0L)).as("n_bad"), col(s"__e$i").as("example"))
-    }
-    per.select(col("slice"), explode(array(rows: _*)).as("a"))
-      .select(col("slice"), col("a.feature"), col("a.anomaly"),
-        col("a.n_bad"), col("a.example"))
-  }
-
-  /** The shared anomaly-check construction behind [[validateWith]] and
-    * [[validateWithSliced]]: per spec'd feature, the (feature, kind,
-    * count-agg, example-agg) quadruple for unexpected NULLs,
-    * out-of-range numerics, and new categorical values. */
+  /** The anomaly checks behind [[validate]]: per spec'd feature, the
+    * (feature, kind, count-agg, example-agg) quadruple for unexpected
+    * NULLs, out-of-range numerics, and new categorical values. */
   private def anomalyChecks(
       df: DataFrame,
       colSpecs: Seq[ColumnSpec]): Seq[(String, String, Column, Column)] = {
@@ -957,255 +942,6 @@ object FeatureStats {
     }
     out += sb.result()
     out.result()
-  }
-
-  /** Numeric drift between a BASELINE batch and a CURRENT batch — the
-    * TFDV drift comparator for numeric features ([[skewCheck]] covers
-    * the categorical/mean L∞ gate). Bins are equal-width from the
-    * baseline's [min, max] (current values outside clamp into the edge
-    * bins); both sides' bin masses are add-half smoothed
-    * (`(nᵢ + 0.5) / (N + nBins/2)` — no zero bins), and the row
-    * reports the two standard divergences: PSI
-    * `Σ (pᵢ−qᵢ)·ln(pᵢ/qᵢ)` (industry drift gate: <0.1 stable, >0.25
-    * investigate) and Jensen–Shannon `½Σ pᵢ ln(pᵢ/mᵢ) + ½Σ qᵢ ln(qᵢ/mᵢ)`
-    * in nats (TFDV's numeric comparator). Per-bin contributions are
-    * rounded to 9 dp and summed as DECIMAL, so the reduction is
-    * order-independent — bit-identical on any partitioning or engine.
-    *
-    * Scale shape: the baseline range is a 2-value driver aggregate
-    * (the PIT-join min/max-bounds pattern); each side then runs one
-    * map-side-combined hash-agg onto ≤ nBins 4-byte keys, and the
-    * divergence reduces over ≤ nBins rows. NULLs are excluded (drift
-    * in missingness is [[skewCheck]]'s `miss_drift`). */
-  def driftCheck(
-      base: DataFrame, cur: DataFrame, c: String, nBins: Int = 10): DataFrame = {
-    require(nBins >= 2, s"driftCheck: nBins must be >= 2, got $nBins")
-    val bounds = base.agg(
-      min(col(c).cast("double")), max(col(c).cast("double"))).head()
-    require(!bounds.isNullAt(0),
-      s"driftCheck: baseline has no non-NULL '$c' values")
-    val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-    val w = if (mx > mn) (mx - mn) / nBins else 1.0
-    def binned(d: DataFrame, tag: String): DataFrame =
-      d.filter(col(c).isNotNull)
-        .select(binExpr(col(c), mn, w, nBins).as("bin"))
-        .groupBy("bin").agg(count(lit(1)).as(s"n_$tag"))
-    val bins = base.sparkSession.range(nBins).select(col("id").cast("int").as("bin"))
-    // nBins rows — collected once so the totals probe and the
-    // divergence reduction don't each re-run the heavy side aggs.
-    val joined = bins
-      .join(binned(base, "b"), Seq("bin"), "left")
-      .join(binned(cur, "q"), Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"),
-        coalesce(col("n_q"), lit(0L)).as("n_q"))
-    val (local, tb, tq) = collectBins(joined)
-    divergenceRow(local, c, tb, tq, mn, mx, nBins)
-  }
-
-  /** Materialize the ≤nBins-row (bin, n_b, n_q) frame as driver
-    * metadata and rebase it onto a local relation: ONE job runs the
-    * side aggregations; the totals and the divergence reduction then
-    * evaluate over literals. No localCheckpoint — a checkpointed frame
-    * whose returned plan is evaluated later leaves a persisted block
-    * per call until driver GC, which in a foreachBatch monitor
-    * accumulates every micro-batch (the same mechanism Bench isolates
-    * between timings). The reduction is 9-dp DECIMAL-summed and
-    * order-independent, so rebasing is bit-identical. */
-  private def collectBins(joined: DataFrame): (DataFrame, Long, Long) = {
-    val spark = joined.sparkSession
-    import spark.implicits._
-    val rows = joined.collect() // ≤ nBins rows — metadata, not data
-    val local = rows.toSeq.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .toDF("bin", "n_b", "n_q")
-    (local, rows.map(_.getLong(1)).sum, rows.map(_.getLong(2)).sum)
-  }
-
-  /** Shared bin assignment: equal-width from [mn, mn + nBins·w], out-of-
-    * range values clamp into the edge bins. One copy so [[driftCheck]]
-    * and the fitted [[scoreDrift]] path cannot drift apart. */
-  private def binExpr(c: Column, mn: Double, w: Double, nBins: Int): Column =
-    least(lit(nBins - 1), greatest(lit(0),
-      floor((c.cast("double") - lit(mn)) / lit(w)))).cast("int")
-
-  /** Shared divergence reduction over the (bin, n_b, n_q) frame:
-    * add-half smoothing, per-bin PSI/JS contributions rounded to 9 dp
-    * and DECIMAL-summed (order-independent). */
-  private def divergenceRow(
-      joined: DataFrame, feature: String, tb: Long, tq: Long,
-      mn: Double, mx: Double, nBins: Int): DataFrame = {
-    val p = (col("n_b").cast("double") + 0.5) / lit(tb + nBins * 0.5)
-    val q = (col("n_q").cast("double") + 0.5) / lit(tq + nBins * 0.5)
-    val m = (p + q) / 2.0
-    def d9(v: Column): Column = round(v, 9).cast("decimal(28,9)")
-    joined
-      .agg(
-        sum(d9((p - q) * log(p / q))).cast("double").as("psi"),
-        sum(d9(p * log(p / m) / 2.0 + q * log(q / m) / 2.0))
-          .cast("double").as("js_div"))
-      .select(lit(feature).as("feature"), lit(tb).as("n_base"), lit(tq).as("n_cur"),
-        lit(mn).as("bin_min"), lit(mx).as("bin_max"),
-        col("psi"), col("js_div"))
-  }
-
-  /** Fitted drift baseline: bin geometry plus the baseline's bin
-    * counts — nBins longs of driver-held metadata (the
-    * classifier-weights pattern), so serving batches and streaming
-    * micro-batches score against it WITHOUT ever re-aggregating the
-    * baseline data. Serializable; persist alongside the model that
-    * consumes the feature. */
-  final case class DriftModel(
-      feature: String, nBins: Int, binMin: Double, binMax: Double,
-      baseCounts: IndexedSeq[Long]) {
-    require(baseCounts.length == nBins)
-    def binWidth: Double =
-      if (binMax > binMin) (binMax - binMin) / nBins else 1.0
-    def nBase: Long = baseCounts.sum
-  }
-
-  /** Fit a [[DriftModel]] from the baseline batch — one pass: the
-    * 2-value bounds probe plus one map-side-combined hash-agg onto
-    * ≤ nBins keys, collected as metadata. */
-  def fitDrift(base: DataFrame, c: String, nBins: Int = 10): DriftModel = {
-    require(nBins >= 2, s"fitDrift: nBins must be >= 2, got $nBins")
-    val bounds = base.agg(
-      min(col(c).cast("double")), max(col(c).cast("double"))).head()
-    require(!bounds.isNullAt(0),
-      s"fitDrift: baseline has no non-NULL '$c' values")
-    val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-    val w = if (mx > mn) (mx - mn) / nBins else 1.0
-    val counts = base.filter(col(c).isNotNull)
-      .select(binExpr(col(c), mn, w, nBins).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    DriftModel(c, nBins, mn, mx,
-      (0 until nBins).map(b => counts.getOrElse(b, 0L)))
-  }
-
-  /** Score a serving/eval batch against a fitted [[DriftModel]] —
-    * BIT-IDENTICAL to [[driftCheck]](baseline, cur) by construction
-    * (same binExpr, same divergence reduction; spec-asserted), but the
-    * baseline side is a literal array riding the plan: one hash-agg
-    * over the batch, zero baseline scans. This is the fit-once/
-    * serve-many and streaming path. */
-  def scoreDrift(model: DriftModel, cur: DataFrame): DataFrame = {
-    val curBinned = cur.filter(col(model.feature).isNotNull)
-      .select(binExpr(col(model.feature), model.binMin, model.binWidth,
-        model.nBins).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n_q"))
-    val bins = cur.sparkSession.range(model.nBins)
-      .select(col("id").cast("int").as("bin"))
-    val baseArr = array(model.baseCounts.map(lit(_)): _*)
-    val joined = bins
-      .join(curBinned, Seq("bin"), "left")
-      .select(col("bin"),
-        element_at(baseArr, col("bin") + 1).as("n_b"),
-        coalesce(col("n_q"), lit(0L)).as("n_q"))
-    val (local, _, tq) = collectBins(joined)
-    divergenceRow(local, model.feature, model.nBase, tq,
-      model.binMin, model.binMax, model.nBins)
-  }
-
-  /** Equal-MASS drift baseline: interior quantile edges (i/nBins,
-    * i = 1..nBins-1) plus the baseline's per-bucket counts — the bin
-    * geometry TFDV's drift comparator actually uses (quantile buckets,
-    * so every bin carries comparable baseline mass and the statistic
-    * isn't dominated by sparse range tails the way equal-width bins
-    * are when the feature is skewed). Edges are 9-dp-rounded so fit
-    * replays identically across engines. Driver-held metadata like
-    * [[DriftModel]]. */
-  final case class QuantileDriftModel(
-      feature: String, edges: IndexedSeq[Double], baseCounts: IndexedSeq[Long]) {
-    require(edges.nonEmpty && baseCounts.length == edges.length + 1)
-    def nBins: Int = baseCounts.length
-    def nBase: Long = baseCounts.sum
-  }
-
-  /** Bucket = number of edges ≤ x — a ≤nBins-step fold over the edge
-    * literal array, codegen-friendly, clamping implicit (everything
-    * below the first edge is bucket 0, at-or-above the last is bucket
-    * nBins−1; a constant baseline collapses every edge to one value
-    * and both sides land in one bucket together). */
-  private def quantileBinExpr(c: Column, edges: Seq[Double]): Column =
-    aggregate(
-      array(edges.map(lit(_)): _*),
-      lit(0),
-      (acc, e) => acc + when(c.cast("double") >= e, 1).otherwise(0))
-
-  /** Fit a [[QuantileDriftModel]]. `exact = true` computes edges with
-    * the exact (sort-based) percentile — the oracle-able reference
-    * mode, one global sort of the column; `exact = false` reads them
-    * from a mergeable KLL sketch ([[profileQuantiles]]'s aggregate,
-    * ~1.65% rank error at k = 200) — the 100 TB mode: one
-    * map-side-combined pass, no sort. Same model shape either way, so
-    * serving code cannot tell which fit produced it. */
-  def fitDriftQuantile(
-      base: DataFrame, c: String, nBins: Int = 10,
-      exact: Boolean = false): QuantileDriftModel = {
-    require(nBins >= 2, s"fitDriftQuantile: nBins must be >= 2, got $nBins")
-    val edges = fitQuantileEdges(base, c, nBins, exact)
-    val counts = base.filter(col(c).cast("double").isNotNull)
-      .select(quantileBinExpr(col(c), edges).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    QuantileDriftModel(c, edges, (0 until nBins).map(b => counts.getOrElse(b, 0L)))
-  }
-
-  /** The shared equal-mass edge fit (exact percentile or KLL sketch),
-    * 9-dp-rounded — one pass over the FULL baseline, reused by the
-    * global and the per-slice quantile-drift fits so their geometries
-    * cannot diverge. */
-  private def fitQuantileEdges(
-      base: DataFrame, c: String, nBins: Int,
-      exact: Boolean): IndexedSeq[Double] = {
-    val probs = (1 until nBins).map(_.toDouble / nBins)
-    val x = col(c).cast("double")
-    val edgesRow =
-      if (exact)
-        base.agg(percentile(x, typedLit(probs)).as("qs")).head()
-      else
-        // All-NULL baseline: the sketch agg emits an EMPTY buffer (not
-        // NULL) and the quantile reader throws on it — gate the probes
-        // on the non-NULL count so the require below gets its turn
-        base.agg(kll_sketch_agg_double(x, lit(200)).as("sk"), count(x).as("n"))
-          .select(when(col("n") > 0,
-            array(probs.map(p =>
-              kll_sketch_get_quantile_double(col("sk"), lit(p))): _*)).as("qs"))
-          .head()
-    // All-NULL baseline: the exact path returns a NULL array, the
-    // sketch path an array OF nulls — reject both with the message.
-    val raw = if (edgesRow.isNullAt(0)) null else edgesRow.getSeq[Any](0)
-    require(raw != null && raw.forall(_ != null),
-      s"fitDriftQuantile: baseline has no non-NULL '$c' values")
-    // 9-dp rounding: both engines (and both fit modes' consumers)
-    // bucket against identical edge literals — interpolation formula
-    // ulps can't flip a bucket boundary.
-    raw.map(v => BigDecimal(v.asInstanceOf[Double])
-      .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      .toIndexedSeq
-  }
-
-  /** Score a batch against a fitted [[QuantileDriftModel]] — the
-    * equal-mass sibling of [[scoreDrift]]: same add-half smoothing,
-    * same 9-dp DECIMAL-summed PSI/JS reduction (partition-invariant),
-    * baseline riding the plan as literals. Reports the edge span as
-    * bin_min/bin_max. Streaming: wrap in the same foreachBatch shape
-    * as `driftStream` — the plan is identically stateless. */
-  def scoreDriftQuantile(model: QuantileDriftModel, cur: DataFrame): DataFrame = {
-    val curBinned = cur.filter(col(model.feature).isNotNull)
-      .select(quantileBinExpr(col(model.feature), model.edges).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("n_q"))
-    val bins = cur.sparkSession.range(model.nBins)
-      .select(col("id").cast("int").as("bin"))
-    val baseArr = array(model.baseCounts.map(lit(_)): _*)
-    val joined = bins
-      .join(curBinned, Seq("bin"), "left")
-      .select(col("bin"),
-        element_at(baseArr, col("bin") + 1).as("n_b"),
-        coalesce(col("n_q"), lit(0L)).as("n_q"))
-    val (local, _, tq) = collectBins(joined)
-    divergenceRow(local, model.feature, model.nBase, tq,
-      model.edges.head, model.edges.last, model.nBins)
   }
 
   /** TFDV-style schema EVOLUTION diff: compare two [[inferSchema]]
@@ -1268,307 +1004,320 @@ object FeatureStats {
     out.result().sorted.toDF("feature", "change", "detail")
   }
 
-  /** Per-SLICE drift baseline (TFDV's sliced statistics): the global
-    * equal-width bin geometry of [[DriftModel]] plus per-slice bin
-    * counts — geometry is fit on the FULL baseline so PSI values are
-    * comparable across slices; counts are per slice so each slice
-    * drifts against its own history. Driver-held metadata, bounded by
-    * `maxSlices` at fit time. NULL slice values are excluded (slice
-    * membership is a value, not an absence — validateSchema owns NULL
-    * anomalies). */
-  final case class SlicedDriftModel(
-      feature: String, sliceCol: String, nBins: Int,
-      binMin: Double, binMax: Double,
-      baseCounts: Map[String, IndexedSeq[Long]]) {
-    require(baseCounts.nonEmpty && baseCounts.values.forall(_.length == nBins))
-    def binWidth: Double =
-      if (binMax > binMin) (binMax - binMin) / nBins else 1.0
+  /** How [[fitDrift]] bins a feature — the TFDV drift comparator's
+    * three geometries:
+    *   - `EqualWidth` — `nBins` equal-width bins over the baseline's
+    *     [min, max] (current values outside clamp into the edge bins);
+    *   - `Quantile` — equal-MASS bins from the baseline's interior
+    *     quantile edges (i/nBins, i = 1..nBins−1), TFDV's own geometry:
+    *     every bin carries comparable baseline mass, so the statistic
+    *     is not dominated by sparse range tails the way equal-width
+    *     bins are on a skewed feature. `exact = true` computes the edges
+    *     with the exact (sort-based) percentile — the oracle-able mode;
+    *     `exact = false` reads them from a mergeable KLL sketch
+    *     ([[profileQuantiles]]'s aggregate, ~1.65% rank error at
+    *     k = 200) — one map-side-combined pass, no sort;
+    *   - `Categorical` — one bin per distinct value. `maxValues` bounds
+    *     the values of each slice and `maxPairs` the model's total
+    *     (slice, value) rows, so a fitted model stays broadcast-sized
+    *     even when both axes are individually plausible. */
+  sealed trait Binning
+  object Binning {
+    final case class EqualWidth(nBins: Int = 10) extends Binning
+    final case class Quantile(nBins: Int = 10, exact: Boolean = false) extends Binning
+    final case class Categorical(
+        maxValues: Int = 10000, maxPairs: Int = 100000) extends Binning
+  }
+
+  /** A fitted bin geometry: what a [[DriftModel]] maps each value to. */
+  sealed trait Bins
+  object Bins {
+    /** `n` equal-width bins from `min`; a constant baseline has width 1. */
+    final case class Width(min: Double, max: Double, n: Int) extends Bins {
+      def width: Double = if (max > min) (max - min) / n else 1.0
+    }
+    /** Bucket = number of edges ≤ x. Edges are 9-dp-rounded so a fit
+      * replays identically across engines. */
+    final case class Edges(edges: IndexedSeq[Double]) extends Bins {
+      require(edges.nonEmpty)
+    }
+    /** One bin per distinct value (the value cast to string). */
+    case object Values extends Bins
+  }
+
+  /** A fitted drift baseline: the bin geometry plus the baseline's
+    * per-(slice, key) non-NULL counts — driver-held metadata bounded at
+    * fit time (the classifier-weights pattern), so serving batches and
+    * streaming micro-batches score against it WITHOUT ever
+    * re-aggregating the baseline. `key` is the bin index for numeric
+    * bins (every bin of every slice present, zeros included) and the
+    * value for categorical ones. Sliced models (TFDV sliced statistics)
+    * share ONE geometry fit on the full baseline, so PSI is comparable
+    * across slices, while each slice drifts against its own counts; an
+    * unsliced model is one constant slice, `""`. NULL slice values are
+    * excluded (slice membership is a value, not an absence — [[validate]]
+    * owns NULL anomalies). Serializable; persist it alongside the model
+    * that consumes the feature. */
+  final case class DriftModel(
+      feature: String, slice: Option[String], bins: Bins,
+      baseCounts: Seq[(String, String, Long)]) {
+    require(baseCounts.nonEmpty, s"DriftModel: no baseline counts for '$feature'")
+    def nBase: Long = baseCounts.map(_._3).sum
   }
 
   /** Validate a driver-collect LIMIT cap computed in Long: the fit
     * guards multiply user-supplied Ints, and Int arithmetic would wrap
     * (50000 × 50000 → negative) — turning the fail-fast into an opaque
     * `limit()` analysis error or, worse, a silently weakened cap. */
-  private def limitCap(cap: Long, what: String): Int = {
+  private def limitCap(cap: Long): Int = {
     require(cap > 0 && cap <= Int.MaxValue,
-      s"$what: computed LIMIT cap $cap is outside (0, Int.MaxValue] — " +
+      s"fitDrift: computed LIMIT cap $cap is outside (0, Int.MaxValue] — " +
         "lower the limit arguments so their product fits in Int")
     cap.toInt
   }
 
-  /** Fit a [[SlicedDriftModel]]: one global 2-value bounds probe plus
-    * one map-side-combined hash-agg onto ≤ slices×nBins keys,
-    * collected as metadata (capped by `maxSlices` — a slice column is
-    * a low-cardinality dimension by definition; an ID-like slice
-    * column fails fast instead of collecting a corpus). */
-  def fitDriftSliced(
-      base: DataFrame, c: String, sliceCol: String, nBins: Int = 10,
-      maxSlices: Int = 1000): SlicedDriftModel = {
-    require(nBins >= 2, s"fitDriftSliced: nBins must be >= 2, got $nBins")
-    val bounds = base.agg(
-      min(col(c).cast("double")), max(col(c).cast("double"))).head()
-    require(!bounds.isNullAt(0),
-      s"fitDriftSliced: baseline has no non-NULL '$c' values")
-    val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-    val w = if (mx > mn) (mx - mn) / nBins else 1.0
-    // The guard must bound the driver BEFORE it can see the overflow:
-    // an ID-like slice column groups onto a corpus-sized key space, so
-    // the collect is LIMIT-capped at maxSlices×nBins+1 rows — overflow
-    // is detected from the cap being hit, never from materializing the
-    // full frame (the sibling count-gated domain guard in inferSchema).
-    val cap = limitCap(maxSlices.toLong * nBins + 1, "fitDriftSliced")
-    val rows = base
-      .filter(col(c).isNotNull && col(sliceCol).isNotNull)
-      .select(col(sliceCol).cast("string").as("slice"),
-        binExpr(col(c), mn, w, nBins).as("bin"))
-      .groupBy("slice", "bin").agg(count(lit(1)).as("n"))
-      .limit(cap)
-      .collect()
-    require(rows.length < cap,
-      s"fitDriftSliced: '$sliceCol' exceeds $maxSlices slices " +
-        "— a slice column must be a low-cardinality dimension")
-    val bySlice = rows.groupBy(_.getString(0))
-    require(bySlice.size <= maxSlices,
-      s"fitDriftSliced: '$sliceCol' has ${bySlice.size} slices (max $maxSlices) " +
-        "— a slice column must be a low-cardinality dimension")
-    val counts = bySlice.map { case (sl, rs) =>
-      val m = rs.map(r => r.getInt(1) -> r.getLong(2)).toMap
-      sl -> (0 until nBins).map(b => m.getOrElse(b, 0L))
+  /** Fit a [[DriftModel]] on a baseline: the geometry probe (a 2-value
+    * bounds aggregate, the quantile-edge fit, or nothing for
+    * categorical), then ONE map-side-combined hash-agg onto
+    * (slice, key), collected as metadata.
+    *
+    * The collect is LIMIT-capped BEFORE it materializes — at
+    * maxSlices×nBins+1 rows for numeric bins and at
+    * min(maxSlices × maxValues, maxPairs)+1 for categorical ones, all
+    * in Long — so an ID-like slice (or value) column is detected from
+    * the cap being hit, never by materializing a corpus-sized frame on
+    * the driver (the count-gated domain guard in [[inferSchema]]). The
+    * slice count and each slice's value count are then checked on the
+    * rows already collected, with no further job. */
+  def fitDrift(
+      base: DataFrame, c: String, binning: Binning = Binning.EqualWidth(),
+      slice: Option[String] = None, maxSlices: Int = 1000): DriftModel = {
+    require(maxSlices > 0, s"fitDrift: maxSlices must be positive, got $maxSlices")
+    // Each LIMIT cap is checked before its geometry probe runs a job.
+    val (cap, bins): (Int, Bins) = binning match {
+      case Binning.EqualWidth(n) =>
+        nBinsAtLeast2(n, "fitDrift")
+        (limitCap(maxSlices.toLong * n + 1), widthBins(base, c, n, "fitDrift"))
+      case Binning.Quantile(n, exact) =>
+        nBinsAtLeast2(n, "fitDrift")
+        (limitCap(maxSlices.toLong * n + 1),
+          Bins.Edges(fitQuantileEdges(base, c, n, exact)))
+      case Binning.Categorical(maxValues, maxPairs) =>
+        require(maxValues > 0 && maxPairs > 0,
+          s"fitDrift: maxValues/maxPairs must be positive (got $maxValues/$maxPairs)")
+        (limitCap(math.min(maxSlices.toLong * maxValues, maxPairs.toLong) + 1),
+          Bins.Values)
     }
-    SlicedDriftModel(c, sliceCol, nBins, mn, mx, counts)
+    val rows = binCounts(base, c, slice, bins, "n").limit(cap).collect()
+    require(rows.nonEmpty, slice.fold(s"fitDrift: baseline has no non-NULL '$c' values")(s =>
+      s"fitDrift: baseline has no rows with non-NULL '$c' and '$s'"))
+    require(rows.length < cap,
+      s"fitDrift: ${slice.fold(s"'$c'")(s => s"'$s' × '$c'")} exceeds ${cap - 1} " +
+        "(slice, bin) pairs — slice columns and categorical features must be " +
+        "low-cardinality dimensions")
+    val bySlice = rows.groupBy(_.getString(0)).toSeq.sortBy(_._1)
+    require(bySlice.size <= maxSlices,
+      s"fitDrift: '${slice.getOrElse("")}' has ${bySlice.size} slices (max $maxSlices) " +
+        "— a slice column must be a low-cardinality dimension")
+    def zeroFilled(n: Int) = bySlice.flatMap { case (sl, rs) =>
+      val m = rs.map(r => r.getInt(1) -> r.getLong(2)).toMap
+      (0 until n).map(b => (sl, b.toString, m.getOrElse(b, 0L)))
+    }
+    val counts = binning match {
+      case Binning.EqualWidth(n) => zeroFilled(n)
+      case Binning.Quantile(n, _) => zeroFilled(n)
+      case Binning.Categorical(maxValues, _) =>
+        bySlice.foreach { case (sl, rs) =>
+          require(rs.length <= maxValues,
+            s"fitDrift: ${slice.fold("the baseline")(s => s"slice '$sl' of '$s'")} " +
+              s"has ${rs.length} '$c' values (max $maxValues) — a categorical " +
+              "feature must be a low-cardinality dimension")
+        }
+        rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    }
+    DriftModel(c, slice, bins, counts)
   }
 
-  /** Score a batch per slice against a fitted [[SlicedDriftModel]] —
-    * one row per baseline slice: (feature, slice, n_base, n_cur, psi,
-    * js_div), same add-half smoothing and 9-dp DECIMAL-summed
-    * reduction as [[scoreDrift]] applied slice-wise. Fully
-    * distributed: the baseline rides as a slices×nBins literal frame,
-    * the batch contributes ONE map-side-combined hash-agg onto
-    * (slice, bin); per-slice totals and the divergence reduction
-    * are aggs over the small joined frame. Slices absent from the
-    * batch score against an all-smoothed empty side (their PSI flags
-    * the disappearance); batch slices unknown to the baseline are
-    * dropped here — new-category detection is [[validateWith]]'s and
-    * [[categoricalDrift]]'s job. */
-  def scoreDriftSliced(model: SlicedDriftModel, cur: DataFrame): DataFrame = {
-    val curBinned = cur
-      .filter(col(model.feature).isNotNull && col(model.sliceCol).isNotNull)
-      .select(col(model.sliceCol).cast("string").as("slice"),
-        binExpr(col(model.feature), model.binMin, model.binWidth,
-          model.nBins).as("bin"))
-      .groupBy("slice", "bin").agg(count(lit(1)).as("n_q"))
-    slicedDivergence(model.feature, model.baseCounts, model.nBins, curBinned)
+  private def nBinsAtLeast2(n: Int, op: String): Unit =
+    require(n >= 2, s"$op: nBins must be >= 2, got $n")
+
+  /** The equal-width geometry: the baseline's [min, max], one 2-value
+    * aggregate (the PIT-join min/max-bounds pattern). */
+  private def widthBins(base: DataFrame, c: String, n: Int, op: String): Bins.Width = {
+    val x = col(c).cast("double")
+    val bounds = base.agg(min(x), max(x)).head()
+    require(!bounds.isNullAt(0), s"$op: baseline has no non-NULL '$c' values")
+    Bins.Width(bounds.getDouble(0), bounds.getDouble(1), n)
   }
 
-  /** Shared slice-wise divergence reduction over a (slice, bin, n_q)
-    * batch agg: the baseline rides as a slices×nBins literal frame on
-    * the preserved side of a left join (every baseline bin scores, even
-    * one the batch never fills), so it is never the broadcast side —
-    * the planner may broadcast the batch agg instead; per-slice
-    * totals and the 9-dp DECIMAL PSI/JS reduction are aggs over the
-    * small joined frame. One copy so the equal-width and
-    * equal-mass sliced scorers cannot drift apart. */
-  private def slicedDivergence(
-      feature: String, baseCounts: Map[String, IndexedSeq[Long]],
-      nBins: Int, curBinned: DataFrame): DataFrame = {
-    val spark = curBinned.sparkSession
+  /** The equal-mass edge fit (exact percentile or KLL sketch),
+    * 9-dp-rounded — one pass over the FULL baseline, so a sliced
+    * model's edges are the unsliced model's. */
+  private def fitQuantileEdges(
+      base: DataFrame, c: String, nBins: Int,
+      exact: Boolean): IndexedSeq[Double] = {
+    val probs = (1 until nBins).map(_.toDouble / nBins)
+    val x = col(c).cast("double")
+    val edgesRow =
+      if (exact)
+        base.agg(percentile(x, typedLit(probs)).as("qs")).head()
+      else
+        // All-NULL baseline: the sketch agg emits an EMPTY buffer (not
+        // NULL) and the quantile reader throws on it — gate the probes
+        // on the non-NULL count so the require below gets its turn
+        base.agg(kll_sketch_agg_double(x, lit(200)).as("sk"), count(x).as("n"))
+          .select(when(col("n") > 0,
+            array(probs.map(p =>
+              kll_sketch_get_quantile_double(col("sk"), lit(p))): _*)).as("qs"))
+          .head()
+    // All-NULL baseline: the exact path returns a NULL array, the
+    // sketch path an array OF nulls — reject both with the message.
+    val raw = if (edgesRow.isNullAt(0)) null else edgesRow.getSeq[Any](0)
+    require(raw != null && raw.forall(_ != null),
+      s"fitDrift: baseline has no non-NULL '$c' values")
+    // 9-dp rounding: both engines (and both fit modes' consumers)
+    // bucket against identical edge literals — interpolation formula
+    // ulps can't flip a bucket boundary.
+    raw.map(v => BigDecimal(v.asInstanceOf[Double])
+      .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      .toIndexedSeq
+  }
+
+  /** The bin key of each row under `bins`: the clamped equal-width bin
+    * index, the number of quantile edges ≤ x (a ≤nBins-step fold over
+    * the edge literals, codegen-friendly, clamping implicit: a constant
+    * baseline collapses every edge to one value and both sides land in
+    * one bucket together), or the value itself. */
+  private def binKey(bins: Bins, x: Column): Column = bins match {
+    case w: Bins.Width =>
+      least(lit(w.n - 1), greatest(lit(0),
+        floor((x.cast("double") - lit(w.min)) / lit(w.width)))).cast("int")
+    case Bins.Edges(edges) =>
+      aggregate(array(edges.map(lit(_)): _*), lit(0),
+        (acc, e) => acc + when(x.cast("double") >= e, 1).otherwise(0))
+    case Bins.Values => x.cast("string")
+  }
+
+  /** (slice, key, `tag`) counts over the rows with a non-NULL feature
+    * (and slice) — the one map-side-combined hash-agg each side of a
+    * drift comparison runs. Unsliced, the slice is the constant `""`. */
+  private def binCounts(
+      df: DataFrame, c: String, slice: Option[String], bins: Bins,
+      tag: String): DataFrame = {
+    val x = col(c)
+    df.filter(slice.fold(x.isNotNull)(s => x.isNotNull && col(s).isNotNull))
+      .groupBy(slice.fold(lit(""))(s => col(s).cast("string")).as("slice"),
+        binKey(bins, x).as("key"))
+      .agg(count(lit(1)).as(tag))
+  }
+
+  /** Score a serving/eval batch against a fitted [[DriftModel]]. The
+    * baseline rides the plan as a local relation of the model's counts,
+    * the batch contributes one hash-agg onto (slice, key), and the
+    * shared reduction does the rest: building the frame runs no Spark
+    * job and consuming it persists nothing, so it is the per-trigger
+    * arithmetic of [[graft.streaming.StreamingOps.driftStream]].
+    *
+    * One row per BASELINE slice. Slices absent from the batch score
+    * against an all-smoothed empty side (n_cur = 0 — an EMPTY batch
+    * still emits one row per baseline slice, so absence alarms fire
+    * exactly when a slice's traffic stops); batch slices unknown to the
+    * baseline are dropped (new-category detection is [[validate]]'s
+    * job); batch values unknown within a known categorical slice widen
+    * that slice's value union. Columns: numeric (feature, [slice,]
+    * n_base, n_cur, [bin_min, bin_max,] psi, js_div) — the range only
+    * unsliced, the edge span for quantile bins; categorical (feature,
+    * [slice,] n_base, n_cur, n_values, linf, psi, example_value). */
+  def scoreDrift(model: DriftModel, cur: DataFrame): DataFrame = {
+    val spark = cur.sparkSession
     import spark.implicits._
-    val slices = baseCounts.keys.toSeq.sorted
-    val baseDf = slices.flatMap { sl =>
-      baseCounts(sl).zipWithIndex.map { case (n, b) => (sl, b, n) }
-    }.toDF("slice", "bin", "n_b") // slices×nBins literal rows
-    val joined = baseDf
-      .join(curBinned, Seq("slice", "bin"), "left")
-      .select(col("slice"), col("bin"), col("n_b"),
-        coalesce(col("n_q"), lit(0L)).as("n_q"))
-    val totals = joined.groupBy("slice")
-      .agg(sum("n_b").as("tb"), sum("n_q").as("tq"))
-    val half = nBins * 0.5
-    val p = (col("n_b").cast("double") + 0.5) / (col("tb").cast("double") + half)
-    val q = (col("n_q").cast("double") + 0.5) / (col("tq").cast("double") + half)
-    val m = (p + q) / 2.0
-    def d9(v: Column): Column = round(v, 9).cast("decimal(28,9)")
-    joined.join(broadcast(totals), Seq("slice"))
-      .groupBy("slice")
-      .agg(
-        first(col("tb")).as("n_base"), first(col("tq")).as("n_cur"),
-        sum(d9((p - q) * log(p / q))).cast("double").as("psi"),
-        sum(d9(p * log(p / m) / 2.0 + q * log(q / m) / 2.0))
-          .cast("double").as("js_div"))
-      .select(lit(feature).as("feature"), col("slice"),
-        col("n_base"), col("n_cur"), col("psi"), col("js_div"))
+    val base = model.baseCounts.toDF("slice", "key", "n_b")
+    divergence(model.feature, model.slice.isDefined, model.bins,
+      if (model.bins == Bins.Values) base
+      else base.withColumn("key", col("key").cast("int")),
+      binCounts(cur, model.feature, model.slice, model.bins, "n_q"))
   }
 
-  /** Per-slice EQUAL-MASS drift baseline: the global quantile-edge
-    * geometry of [[QuantileDriftModel]] (edges fit ONCE on the full
-    * baseline, so PSI is comparable across slices and TFDV's default
-    * bucket geometry applies slice-wise) plus per-slice bucket counts.
-    * Driver-held metadata, capped by `maxSlices` at fit time like
-    * [[SlicedDriftModel]]. */
-  final case class SlicedQuantileDriftModel(
-      feature: String, sliceCol: String, edges: IndexedSeq[Double],
-      baseCounts: Map[String, IndexedSeq[Long]]) {
-    require(edges.nonEmpty && baseCounts.nonEmpty &&
-      baseCounts.values.forall(_.length == edges.length + 1))
-    def nBins: Int = edges.length + 1
+  /** Numeric drift between a BASELINE batch and a CURRENT batch: PSI
+    * and Jensen–Shannon over equal-width bins from the baseline's range
+    * — the rows of `scoreDrift(fitDrift(base, c, EqualWidth(nBins)),
+    * cur)`, bit for bit (spec-asserted). Only the 2-value bounds probe
+    * runs on the driver: the baseline's counts stay in-plan (plus one
+    * zero row per bin, so every bin scores), so both sides aggregate
+    * in the one query instead of a fit job before it. */
+  def driftCheck(
+      base: DataFrame, cur: DataFrame, c: String, nBins: Int = 10): DataFrame = {
+    nBinsAtLeast2(nBins, "driftCheck")
+    val bins = widthBins(base, c, nBins, "driftCheck")
+    val spark = base.sparkSession
+    import spark.implicits._
+    val everyBin = (0 until nBins).map(b => ("", b, 0L)).toDF("slice", "key", "n_b")
+    divergence(c, sliced = false, bins,
+      binCounts(base, c, None, bins, "n_b").unionByName(everyBin),
+      binCounts(cur, c, None, bins, "n_q"))
   }
 
-  /** Fit a [[SlicedQuantileDriftModel]]: one global edge fit (exact
-    * percentile, or the KLL sketch in the 100 TB mode — same shape,
-    * [[fitQuantileEdges]]) plus one map-side-combined hash-agg onto
-    * ≤ slices×nBins keys, LIMIT-capped before the collect so an
-    * ID-like slice column fails fast without materializing a
-    * corpus-sized frame. */
-  def fitDriftSlicedQuantile(
-      base: DataFrame, c: String, sliceCol: String, nBins: Int = 10,
-      maxSlices: Int = 1000, exact: Boolean = false): SlicedQuantileDriftModel = {
-    require(nBins >= 2, s"fitDriftSlicedQuantile: nBins must be >= 2, got $nBins")
-    val edges = fitQuantileEdges(base, c, nBins, exact)
-    val cap = limitCap(maxSlices.toLong * nBins + 1, "fitDriftSlicedQuantile")
-    val rows = base
-      .filter(col(c).isNotNull && col(sliceCol).isNotNull)
-      .select(col(sliceCol).cast("string").as("slice"),
-        quantileBinExpr(col(c), edges).as("bin"))
-      .groupBy("slice", "bin").agg(count(lit(1)).as("n"))
-      .limit(cap)
-      .collect()
-    require(rows.length < cap,
-      s"fitDriftSlicedQuantile: '$sliceCol' exceeds $maxSlices slices " +
-        "— a slice column must be a low-cardinality dimension")
-    val bySlice = rows.groupBy(_.getString(0))
-    require(bySlice.size <= maxSlices,
-      s"fitDriftSlicedQuantile: '$sliceCol' has ${bySlice.size} slices " +
-        s"(max $maxSlices) — a slice column must be a low-cardinality dimension")
-    val counts = bySlice.map { case (sl, rs) =>
-      val m = rs.map(r => r.getInt(1) -> r.getLong(2)).toMap
-      sl -> (0 until nBins).map(b => m.getOrElse(b, 0L))
-    }
-    SlicedQuantileDriftModel(c, sliceCol, edges, counts)
-  }
-
-  /** Score a batch per slice against a fitted
-    * [[SlicedQuantileDriftModel]] — [[scoreDriftSliced]]'s plan shape
-    * (broadcast literal baseline, one hash-agg over the batch, small
-    * joined reduction) with the equal-mass bucket assignment. */
-  def scoreDriftSlicedQuantile(
-      model: SlicedQuantileDriftModel, cur: DataFrame): DataFrame = {
-    val curBinned = cur
-      .filter(col(model.feature).isNotNull && col(model.sliceCol).isNotNull)
-      .select(col(model.sliceCol).cast("string").as("slice"),
-        quantileBinExpr(col(model.feature), model.edges).as("bin"))
-      .groupBy("slice", "bin").agg(count(lit(1)).as("n_q"))
-    slicedDivergence(model.feature, model.baseCounts, model.nBins, curBinned)
-  }
-
-  /** Categorical drift between a baseline and a current batch — the
-    * L∞ companion to [[driftCheck]]'s numeric PSI (TFDV's comparator
-    * pairing: L-infinity for categorical features, divergence for
-    * numeric). Per distinct value, the frequency gap |pᵥ − qᵥ| over
-    * the two sides' non-NULL rows; the row reports the maximum gap
-    * (`linf`, TFDV's drift statistic), the add-half-smoothed PSI over
-    * the value space (9-dp DECIMAL-summed, order-independent), and the
-    * lexicographically-smallest value attaining the max gap.
+  /** Categorical drift between a baseline and a current batch, both
+    * sides aggregated in-plan — the value space stays uncapped (a
+    * fitted categorical [[DriftModel]] is bounded by its fit limits).
+    * Same rows as `scoreDrift(fitDrift(base, c, Categorical(), slice),
+    * cur)`.
     *
-    * Scale shape: one map-side-combined hash-agg per side on the value
-    * key, a full-outer join of two value-cardinality count tables, one
-    * reduction. A hot value is collapsed by partial aggregation before
-    * the wire; nothing driver-side but the two totals (index-metadata
-    * probe over the checkpointed value table). */
+    * Unsliced, an all-NULL side fails fast with a message (two
+    * `limit 1` probes); sliced, the slice-cardinality guard runs FIRST
+    * as a LIMIT-capped distinct count on the baseline's slice column
+    * alone, so an ID-like slice fails after one cheap hash-agg, before
+    * any corpus-sized (slice, value) frame exists. */
   def categoricalDrift(
-      base: DataFrame, cur: DataFrame, c: String): DataFrame = {
-    def counts(d: DataFrame, tag: String): DataFrame =
-      d.filter(col(c).isNotNull)
-        .groupBy(col(c).cast("string").as("value"))
-        .agg(count(lit(1)).as(s"n_$tag"))
-    // Value-cardinality rows — checkpointed so the totals probe, the
-    // L∞ reduction, and the argmax scan share one computation.
-    val joined = counts(base, "b").join(counts(cur, "q"), Seq("value"), "full_outer")
-      .select(col("value"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"),
-        coalesce(col("n_q"), lit(0L)).as("n_q"))
-      .localCheckpoint(false)
-    // When BOTH sides are all-NULL the joined frame is EMPTY and the
-    // sums come back NULL — read them null-safely so the require
-    // message below fires instead of an opaque NullPointerException.
-    val totals = joined.agg(sum("n_b"), sum("n_q")).head()
-    val tb = if (totals.isNullAt(0)) 0L else totals.getLong(0)
-    val tq = if (totals.isNullAt(1)) 0L else totals.getLong(1)
-    require(tb > 0 && tq > 0,
-      s"categoricalDrift: a side has no non-NULL '$c' values")
-    val p = col("n_b").cast("double") / lit(tb.toDouble)
-    val q = col("n_q").cast("double") / lit(tq.toDouble)
-    val gap = abs(p - q)
-    val nVals = joined.count()
-    val ps = (col("n_b").cast("double") + 0.5) / lit(tb + nVals * 0.5)
-    val qs = (col("n_q").cast("double") + 0.5) / lit(tq + nVals * 0.5)
-    def d9(v: Column): Column = round(v, 9).cast("decimal(28,9)")
-    val linfRow = joined.agg(max(gap).as("linf"),
-      sum(d9((ps - qs) * log(ps / qs))).cast("double").as("psi")).head()
-    val linf = linfRow.getDouble(0)
-    joined.filter(gap === lit(linf))
-      .agg(min(col("value")).as("example_value"))
-      .select(lit(c).as("feature"), lit(tb).as("n_base"), lit(tq).as("n_cur"),
-        lit(nVals).as("n_values"), lit(linf).as("linf"),
-        lit(linfRow.getDouble(1)).as("psi"), col("example_value"))
+      base: DataFrame, cur: DataFrame, c: String,
+      slice: Option[String] = None, maxSlices: Int = 1000): DataFrame = {
+    slice match {
+      case Some(s) =>
+        require(base.filter(col(s).isNotNull && col(c).isNotNull)
+            .select(col(s).cast("string")).distinct()
+            .limit(maxSlices + 1).count() <= maxSlices,
+          s"categoricalDrift: '$s' exceeds $maxSlices slices " +
+            "— a slice column must be a low-cardinality dimension")
+      case None =>
+        Seq(base, cur).foreach(d => require(!d.filter(col(c).isNotNull).isEmpty,
+          s"categoricalDrift: a side has no non-NULL '$c' values"))
+    }
+    divergence(c, slice.isDefined, Bins.Values,
+      binCounts(base, c, slice, Bins.Values, "n_b"),
+      binCounts(cur, c, slice, Bins.Values, "n_q"))
   }
 
-  /** Per-SLICE categorical drift — [[categoricalDrift]]'s L∞/PSI
-    * applied slice-wise (TFDV sliced statistics, the categorical
-    * companion to [[scoreDriftSliced]]). One row per slice PRESENT IN
-    * THE BASELINE: (feature, slice, n_base, n_cur, n_values, linf,
-    * psi, example_value) with the same per-slice value-space union,
-    * add-half smoothing over that slice's union size, and the
-    * lexicographically-smallest value attaining the max gap. Slices
-    * absent from the batch score against an empty side (q = 0, their
-    * L∞ flags the disappearance); batch slices unknown to the
-    * baseline are dropped — new-category detection is
-    * [[validateWith]]'s job, here as everywhere.
-    *
-    * Scale shape: fully distributed — the slice-cardinality guard runs
-    * FIRST as a LIMIT-capped distinct count on the baseline's slice
-    * column alone (an ID-like slice fails after one cheap hash-agg,
-    * before any corpus-sized (slice, value) frame exists); then one
-    * map-side-combined hash-agg per side on (slice, value), a
-    * full-outer join of the two count tables, per-slice totals via
-    * window aggregates over the SAME slice partitioning (the window
-    * and the argmax window share one exchange, so the frame is
-    * consumed once — no checkpoint, no lingering block-manager state,
-    * safe to wrap in a foreachBatch monitor), one per-slice reduction.
-    * Nothing driver-side at all. */
-  def categoricalDriftSliced(
-      base: DataFrame, cur: DataFrame, c: String, sliceCol: String,
-      maxSlices: Int = 1000): DataFrame = {
-    // Pre-guard BEFORE constructing the joined frame: distinct slices
-    // in the baseline (the only side whose slices are scored), capped.
-    require(base.filter(col(sliceCol).isNotNull && col(c).isNotNull)
-        .select(col(sliceCol).cast("string")).distinct()
-        .limit(maxSlices + 1).count() <= maxSlices,
-      s"categoricalDriftSliced: '$sliceCol' exceeds $maxSlices slices " +
-        "— a slice column must be a low-cardinality dimension")
-    def counts(d: DataFrame, tag: String): DataFrame =
-      d.filter(col(c).isNotNull && col(sliceCol).isNotNull)
-        .groupBy(col(sliceCol).cast("string").as("slice"),
-          col(c).cast("string").as("value"))
-        .agg(count(lit(1)).as(s"n_$tag"))
-    val joined = counts(base, "b")
-      .join(counts(cur, "q"), Seq("slice", "value"), "full_outer")
-      .select(col("slice"), col("value"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"),
-        coalesce(col("n_q"), lit(0L)).as("n_q"))
-    categoricalSlicedReduction(c, joined)
-  }
-
-  /** The per-slice L∞/PSI reduction over a joined
-    * (slice, value, n_b, n_q) count frame — shared by
-    * [[categoricalDriftSliced]] (both sides aggregated in-query) and
-    * [[scoreCategoricalDrift]] (baseline side replayed from a fitted
-    * model), so the two paths cannot drift apart. */
-  private def categoricalSlicedReduction(
-      c: String, joined: DataFrame): DataFrame = {
-    // Per-slice totals as window aggregates: same partitioning as the
-    // argmax window below → one exchange, single consumption of
-    // `joined` (this replaced a localCheckpoint + self-join that
-    // leaked a block per call until driver GC).
+  /** The one drift reduction, over a baseline (slice, key, n_b) count
+    * frame and a batch (slice, key, n_q) count frame:
+    *   - the full outer join of the two on (slice, key), as a union
+    *     summed per key after ONE exchange by slice, keeping only slices
+    *     with baseline mass (tb > 0). Both sides are aggregated before
+    *     the union, so the batch scan stays one codegen'd hash-agg, and
+    *     the exchange by slice also serves the per-slice windows and
+    *     the final aggregate. For numeric bins the baseline holds every
+    *     bin and batch keys are clamped into range, so this is a left
+    *     join from the baseline;
+    *   - per-slice totals tb, tq and the value-union size n_values as
+    *     window aggregates — the frame is consumed once, no checkpoint,
+    *     nothing persisted;
+    *   - add-half smoothing over n_values, `(nᵢ + 0.5) / (N + n/2)`, so
+    *     no bin is empty; PSI `Σ (pᵢ−qᵢ)·ln(pᵢ/qᵢ)` (industry drift
+    *     gate: <0.1 stable, >0.25 investigate) and Jensen–Shannon
+    *     `½Σ pᵢ ln(pᵢ/mᵢ) + ½Σ qᵢ ln(qᵢ/mᵢ)` in nats, each per-bin term
+    *     rounded to 9 dp and DECIMAL-summed — order-independent,
+    *     bit-identical on any partitioning or engine;
+    *   - L∞, the largest unsmoothed frequency gap |pᵥ − qᵥ| (TFDV's
+    *     categorical statistic), and the lexicographically-smallest
+    *     value attaining it, by (gap desc, value asc).
+    * An unsliced frame is one constant slice whose column is dropped. */
+  private def divergence(
+      feature: String, sliced: Boolean, bins: Bins,
+      base: DataFrame, cur: DataFrame): DataFrame = {
+    val joined = base.withColumn("n_q", lit(0L))
+      .unionByName(cur.withColumn("n_b", lit(0L)))
+      .repartition(col("slice"))
+      .groupBy("slice", "key")
+      .agg(sum(col("n_b")).as("n_b"), sum(col("n_q")).as("n_q"))
     val ws = Window.partitionBy(col("slice"))
     val withT = joined
       .withColumn("tb", sum(col("n_b")).over(ws))
@@ -1582,10 +1331,10 @@ object FeatureStats {
     val half = col("n_values").cast("double") * 0.5
     val ps = (col("n_b").cast("double") + 0.5) / (col("tb").cast("double") + half)
     val qs = (col("n_q").cast("double") + 0.5) / (col("tq").cast("double") + half)
+    val m = (ps + qs) / 2.0
     def d9(v: Column): Column = round(v, 9).cast("decimal(28,9)")
-    val w = Window.partitionBy(col("slice"))
-      .orderBy(gap.desc, col("value").asc)
-    withT
+    val w = Window.partitionBy(col("slice")).orderBy(gap.desc, col("key").asc)
+    val out = withT
       .withColumn("__gap", gap)
       .withColumn("__rn", row_number().over(w))
       .groupBy("slice")
@@ -1594,98 +1343,22 @@ object FeatureStats {
         first(col("n_values")).as("n_values"),
         max(col("__gap")).as("linf"),
         sum(d9((ps - qs) * log(ps / qs))).cast("double").as("psi"),
-        max(when(col("__rn") === 1, col("value"))).as("example_value"))
-      .select(lit(c).as("feature"), col("slice"), col("n_base"),
-        col("n_cur"), col("n_values"), col("linf"), col("psi"),
-        col("example_value"))
-  }
-
-  /** Fitted baseline for fit-once/serve-many categorical drift: the
-    * baseline's per-(slice, value) non-NULL counts, driver-collected
-    * under a hard cap (categorical drift only makes sense over
-    * low-cardinality dimensions — the cap is the contract, not a
-    * truncation). The GLOBAL (unsliced) comparator is the degenerate
-    * model over a constant slice column. */
-  final case class CategoricalDriftModel(
-      feature: String, sliceCol: String,
-      baseCounts: Seq[(String, String, Long)])
-
-  /** Fit a [[CategoricalDriftModel]] on a baseline — the categorical
-    * companion to [[fitDriftSliced]], closing the fit/score split for
-    * the L∞ comparator so streaming monitors replay the baseline from
-    * literals instead of re-aggregating it every micro-batch.
-    *
-    * Same guard discipline as [[fitDriftSliced]]: the collect is
-    * LIMIT-capped BEFORE materialization, so an ID-like slice (or
-    * value) column is detected from the cap being hit, never by
-    * materializing a corpus-sized frame on the driver. The cap is
-    * min(maxSlices × maxValues, maxPairs) + 1: the per-axis limits
-    * bound WHICH columns qualify, while `maxPairs` bounds the TOTAL
-    * driver-held model so it stays genuinely broadcast-sized even
-    * when both axes are individually plausible (1000 slices × 10000
-    * values would otherwise admit a 10M-row "model"). All arithmetic
-    * in Long — two user-supplied Ints multiplied in Int wrap silently
-    * and would weaken the guard instead of enforcing it. */
-  def fitCategoricalDrift(
-      base: DataFrame, c: String, sliceCol: String,
-      maxSlices: Int = 1000, maxValues: Int = 10000,
-      maxPairs: Int = 100000): CategoricalDriftModel = {
-    require(maxSlices > 0 && maxValues > 0 && maxPairs > 0,
-      s"fitCategoricalDrift: maxSlices/maxValues/maxPairs must be " +
-        s"positive (got $maxSlices/$maxValues/$maxPairs)")
-    val cap = limitCap(
-      math.min(maxSlices.toLong * maxValues, maxPairs.toLong) + 1,
-      "fitCategoricalDrift")
-    val rows = base
-      .filter(col(c).isNotNull && col(sliceCol).isNotNull)
-      .groupBy(col(sliceCol).cast("string").as("slice"),
-        col(c).cast("string").as("value"))
-      .agg(count(lit(1)).as("n_b"))
-      .limit(cap)
-      .collect()
-    require(rows.nonEmpty,
-      s"fitCategoricalDrift: baseline has no rows with non-NULL " +
-        s"'$c' and '$sliceCol'")
-    require(rows.length < cap,
-      s"fitCategoricalDrift: '$sliceCol' × '$c' exceeds " +
-        s"${cap - 1} (slice, value) pairs — both must be " +
-        "low-cardinality dimensions")
-    val slices = rows.map(_.getString(0)).distinct
-    require(slices.length <= maxSlices,
-      s"fitCategoricalDrift: '$sliceCol' has ${slices.length} slices " +
-        s"(max $maxSlices) — a slice column must be a low-cardinality " +
-        "dimension")
-    CategoricalDriftModel(c, sliceCol,
-      rows.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq)
-  }
-
-  /** Score a batch against a fitted [[CategoricalDriftModel]] —
-    * row-for-row equal to
-    * `categoricalDriftSliced(base, cur, c, sliceCol)` (the reduction
-    * is literally shared), but the baseline side is a broadcast-sized
-    * local relation replayed from the model: nothing re-aggregated
-    * per call, no driver reads, monitor-safe. Same semantics:
-    * baseline slices absent from the batch score q = 0 (the vanished-
-    * slice alarm — an EMPTY batch emits one such row per baseline
-    * slice), batch slices unknown to the baseline are dropped, batch
-    * values unknown WITHIN a known slice widen that slice's value
-    * union. */
-  def scoreCategoricalDrift(
-      model: CategoricalDriftModel, cur: DataFrame): DataFrame = {
-    val spark = cur.sparkSession
-    import spark.implicits._
-    val baseDf = model.baseCounts.toDF("slice", "value", "n_b")
-    val curCounts = cur
-      .filter(col(model.feature).isNotNull && col(model.sliceCol).isNotNull)
-      .groupBy(col(model.sliceCol).cast("string").as("slice"),
-        col(model.feature).cast("string").as("value"))
-      .agg(count(lit(1)).as("n_q"))
-    val joined = baseDf
-      .join(curCounts, Seq("slice", "value"), "full_outer")
-      .select(col("slice"), col("value"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"),
-        coalesce(col("n_q"), lit(0L)).as("n_q"))
-    categoricalSlicedReduction(model.feature, joined)
+        sum(d9(ps * log(ps / m) / 2.0 + qs * log(qs / m) / 2.0))
+          .cast("double").as("js_div"),
+        max(when(col("__rn") === 1, col("key"))).as("example_value"))
+    val range = bins match {
+      case _ if sliced => Nil
+      case w: Bins.Width => Seq(lit(w.min).as("bin_min"), lit(w.max).as("bin_max"))
+      case Bins.Edges(e) => Seq(lit(e.head).as("bin_min"), lit(e.last).as("bin_max"))
+      case Bins.Values => Nil
+    }
+    val (stats, tail) =
+      if (bins == Bins.Values) (Seq("n_values", "linf"), "example_value")
+      else (Nil, "js_div")
+    out.select(Seq(lit(feature).as("feature")) ++
+      (if (sliced) Seq(col("slice")) else Nil) ++
+      Seq(col("n_base"), col("n_cur")) ++ range ++
+      (stats :+ "psi" :+ tail).map(col): _*)
   }
 
   /** Mergeable QUANTILE profile — the third leg of the incremental

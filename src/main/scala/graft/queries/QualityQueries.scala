@@ -1360,9 +1360,10 @@ object QualityQueries {
             when(pmod(col("o_orderkey"), lit(13)) === 0, lit(null).cast("string"))
               .otherwise(col("o_orderpriority")))
           .select("o_orderstatus", "o_orderpriority", "o_totalprice")
-        FeatureStats.validateWithSliced(serving, "o_orderstatus",
+        FeatureStats.validate(serving,
           FeatureStats.collectSchema(FeatureStats.inferSchema(
-            baseline, Seq("o_orderpriority", "o_totalprice"))))
+            baseline, Seq("o_orderpriority", "o_totalprice"))),
+          slice = Some("o_orderstatus"))
       },
       Some("""
         WITH bl AS (
@@ -1453,11 +1454,10 @@ object QualityQueries {
 
     // The fit-once/serve-many drift path: fitDrift collects the
     // baseline's nBins bin counts as driver metadata, scoreDrift scores
-    // the later window against the literal array — by construction
-    // (shared binExpr + divergence reduction) the output is
-    // BIT-IDENTICAL to driftCheck, so this query shares
-    // stats_drift_psi's exact SQL mirror. This is also the per-batch
-    // arithmetic of StreamingOps.driftStream.
+    // the later window against them as literals — driftCheck IS this
+    // composition, so this query shares stats_drift_psi's exact SQL
+    // mirror. This is also the per-batch arithmetic of
+    // StreamingOps.driftStream.
     QueryDef(
       "stats_drift_serve",
       (s, dir) => {
@@ -1465,8 +1465,8 @@ object QualityQueries {
         val li = table(s, dir, "lineitem")
         val cut = lit("1997-01-01 00:00:00").cast("timestamp")
         FeatureStats.scoreDrift(
-          FeatureStats.fitDrift(
-            li.filter(col("l_shipdate") < cut), "l_extendedprice", nBins = 10),
+          FeatureStats.fitDrift(li.filter(col("l_shipdate") < cut),
+            "l_extendedprice", FeatureStats.Binning.EqualWidth(10)),
           li.filter(col("l_shipdate") >= cut))
       },
       Some("""
@@ -1511,11 +1511,11 @@ object QualityQueries {
       (s, dir) => {
         val li = table(s, dir, "lineitem")
         val cut = lit("1997-01-01 00:00:00").cast("timestamp")
-        val model = graft.ops.FeatureStats.fitDriftQuantile(
+        import graft.ops.FeatureStats
+        val model = FeatureStats.fitDrift(
           li.filter(col("l_shipdate") < cut), "l_extendedprice",
-          nBins = 10, exact = true)
-        graft.ops.FeatureStats.scoreDriftQuantile(
-          model, li.filter(col("l_shipdate") >= cut))
+          FeatureStats.Binning.Quantile(10, exact = true))
+        FeatureStats.scoreDrift(model, li.filter(col("l_shipdate") >= cut))
       },
       Some("""
         WITH b AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem
@@ -1560,11 +1560,11 @@ object QualityQueries {
       (s, dir) => {
         val li = table(s, dir, "lineitem")
         val cut = lit("1997-01-01 00:00:00").cast("timestamp")
-        val model = graft.ops.FeatureStats.fitDriftSliced(
+        import graft.ops.FeatureStats
+        val model = FeatureStats.fitDrift(
           li.filter(col("l_shipdate") < cut), "l_extendedprice",
-          "l_returnflag", nBins = 10)
-        graft.ops.FeatureStats.scoreDriftSliced(
-          model, li.filter(col("l_shipdate") >= cut))
+          FeatureStats.Binning.EqualWidth(10), slice = Some("l_returnflag"))
+        FeatureStats.scoreDrift(model, li.filter(col("l_shipdate") >= cut))
       },
       Some("""
         WITH b AS (SELECT l_returnflag AS slice, CAST(l_extendedprice AS DOUBLE) AS x
@@ -1616,11 +1616,12 @@ object QualityQueries {
       (s, dir) => {
         val li = table(s, dir, "lineitem")
         val cut = lit("1997-01-01 00:00:00").cast("timestamp")
-        val model = graft.ops.FeatureStats.fitDriftSlicedQuantile(
+        import graft.ops.FeatureStats
+        val model = FeatureStats.fitDrift(
           li.filter(col("l_shipdate") < cut), "l_extendedprice",
-          "l_returnflag", nBins = 10, exact = true)
-        graft.ops.FeatureStats.scoreDriftSlicedQuantile(
-          model, li.filter(col("l_shipdate") >= cut))
+          FeatureStats.Binning.Quantile(10, exact = true),
+          slice = Some("l_returnflag"))
+        FeatureStats.scoreDrift(model, li.filter(col("l_shipdate") >= cut))
       },
       Some("""
         WITH b AS (SELECT l_returnflag AS slice, CAST(l_extendedprice AS DOUBLE) AS x
@@ -1667,17 +1668,17 @@ object QualityQueries {
     // smoothing over that slice's union size, max-gap value with
     // lexicographic tie-break — orders' o_orderpriority sliced by
     // o_orderstatus across the date cut. Fully distributed (window
-    // argmax, broadcast per-slice totals); mirrors categoricalDrift
+    // totals and argmax); mirrors the unsliced categoricalDrift
     // slice-for-slice (spec-pinned).
     QueryDef(
       "stats_drift_categorical_sliced",
       (s, dir) => {
         val ord = table(s, dir, "orders")
         val cut = lit("1997-01-01 00:00:00").cast("timestamp")
-        graft.ops.FeatureStats.categoricalDriftSliced(
+        graft.ops.FeatureStats.categoricalDrift(
           ord.filter(col("o_orderdate") < cut),
           ord.filter(col("o_orderdate") >= cut),
-          "o_orderpriority", "o_orderstatus")
+          "o_orderpriority", slice = Some("o_orderstatus"))
       },
       Some("""
         WITH b AS (SELECT o_orderstatus AS slice, CAST(o_orderpriority AS VARCHAR) AS v

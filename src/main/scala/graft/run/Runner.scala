@@ -228,7 +228,7 @@ object Runner {
     * keys are DATA: one key-discovery job (a single scan, distinct onto
     * the (column, key) space, LIMIT-capped at `maxKeys`+1 so an ID-like
     * key space fails fast without a corpus-sized collect — the
-    * fitDriftSliced guard pattern) fixes the leaf schema; then one
+    * `FeatureStats.fitDrift` guard pattern) fixes the leaf schema; then one
     * codegen projection emits `name.key` = `element_at(name, key)`:
     *   - a key absent from a row's map → NULL leaf (present-but-empty
     *     feature, the NULL-primitive convention)

@@ -430,16 +430,17 @@ object StreamingOps {
   }
 
   /** Streaming drift monitor: every micro-batch is scored against a
-    * fitted [[graft.ops.FeatureStats.DriftModel]] — the baseline is
-    * nBins longs of driver metadata riding the plan as a literal
-    * array, so NOTHING is re-aggregated per trigger (the fit-once/
-    * serve-many contract [[nearDupStream]] has for its index). Each
-    * batch's (feature, n_base, n_cur, psi, js_div, …) row reaches the
-    * sink; per-batch results are BIT-identical to
+    * fitted [[graft.ops.FeatureStats.DriftModel]] of any binning,
+    * sliced or not — the baseline rides the plan as the model's
+    * literal counts, so NOTHING is re-aggregated per trigger (the
+    * fit-once/serve-many contract). Per-batch rows are
     * `FeatureStats.scoreDrift(model, batchDf)` on the same rows (one
-    * shared code path — spec-asserted), which in turn is bit-identical
-    * to the batch `driftCheck`. Alert wiring (PSI > 0.25 paging, say)
-    * belongs in the sink. */
+    * code path, spec-asserted); scoring runs no driver job and persists
+    * nothing, so the monitor is stateless and leaks no block per
+    * batch. An EMPTY micro-batch still emits one n_cur = 0 row per
+    * baseline slice — absence alarms fire exactly when a slice's
+    * traffic stops. Alert wiring (PSI > 0.25 paging, say) belongs in
+    * the sink. */
   def driftStream(
       df: DataFrame, model: graft.ops.FeatureStats.DriftModel)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
@@ -447,89 +448,23 @@ object StreamingOps {
       sink(graft.ops.FeatureStats.scoreDrift(model, batch), batchId)
     }
 
-  /** [[driftStream]] with equal-mass (quantile-bucket) bins — the
-    * TFDV-geometry sibling; per-batch rows equal
-    * `scoreDriftQuantile(model, batchDf)` (shared code path), same
-    * stateless foreachBatch shape. */
-  def driftQuantileStream(
-      df: DataFrame, model: graft.ops.FeatureStats.QuantileDriftModel)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    df.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.FeatureStats.scoreDriftQuantile(model, batch), batchId)
-    }
-
-  /** Per-SLICE drift monitor: each micro-batch scored slice-wise
-    * against the fitted [[graft.ops.FeatureStats.SlicedDriftModel]].
-    * scoreDriftSliced is fully distributed (no driver reads), so an
-    * EMPTY micro-batch still emits one row per baseline slice with
-    * n_cur = 0 — absence alarms keep firing when a slice's traffic
-    * stops, which is exactly when they matter. */
-  def driftSlicedStream(
-      df: DataFrame, model: graft.ops.FeatureStats.SlicedDriftModel)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    df.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.FeatureStats.scoreDriftSliced(model, batch), batchId)
-    }
-
-  /** [[driftSlicedStream]] with equal-mass (quantile-bucket) bins —
-    * the sliced×quantile corner of the monitor matrix. Same stateless
-    * foreachBatch shape, same empty-batch absence-alarm semantics;
-    * per-batch rows equal `scoreDriftSlicedQuantile(model, batchDf)`
-    * (shared code path). */
-  def driftSlicedQuantileStream(
-      df: DataFrame, model: graft.ops.FeatureStats.SlicedQuantileDriftModel)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    df.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.FeatureStats.scoreDriftSlicedQuantile(model, batch), batchId)
-    }
-
-  /** Streaming categorical-drift monitor (L∞ + smoothed PSI), the
-    * categorical corner of the monitor matrix: each micro-batch is
-    * scored against a fitted
-    * [[graft.ops.FeatureStats.CategoricalDriftModel]] — the baseline
-    * replays from model literals, nothing re-aggregated per trigger
-    * (the numeric monitors' fit-once/serve-many contract). Per-batch
-    * rows equal `scoreCategoricalDrift(model, batchDf)` (shared code
-    * path, itself reduction-shared with `categoricalDriftSliced`). An
-    * EMPTY micro-batch still emits one q = 0 row per baseline slice —
-    * the vanished-slice alarm fires exactly when a slice's traffic
-    * stops. Stateless; the GLOBAL comparator is a model fitted over a
-    * constant slice column. */
-  def categoricalDriftStream(
-      df: DataFrame, model: graft.ops.FeatureStats.CategoricalDriftModel)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    df.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.FeatureStats.scoreCategoricalDrift(model, batch), batchId)
-    }
-
   /** Streaming schema-validation monitor: every micro-batch runs the
     * ExampleValidator pass against pre-collected
     * [[graft.ops.FeatureStats.ColumnSpec]] expectations (collect the
     * [[graft.ops.FeatureStats.inferSchema]] table ONCE via
     * `collectSchema` — column-count metadata, nothing re-aggregated
-    * per trigger). Per-batch anomaly rows are bit-identical to
-    * `validateWith(batchDf, specs)` (same code path). Alert wiring
-    * (nonzero n_bad paging) belongs in the sink. */
+    * per trigger), optionally per slice. Per-batch anomaly rows are
+    * `validate(batchDf, specs, slice)` (same code path): unsliced, an
+    * empty micro-batch still reports n_bad = 0 per check; sliced, it
+    * emits zero rows (there are no slices to validate — slice-absence
+    * alarms are the drift monitor's job). Alert wiring (nonzero n_bad
+    * paging) belongs in the sink. */
   def validateStream(
-      df: DataFrame, specs: Seq[graft.ops.FeatureStats.ColumnSpec])(
+      df: DataFrame, specs: Seq[graft.ops.FeatureStats.ColumnSpec],
+      slice: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     df.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.FeatureStats.validateWith(batch, specs), batchId)
-    }
-
-  /** [[validateStream]] grouped by a slice column (TFDV sliced
-    * validation) — per-batch rows equal
-    * `validateWithSliced(batchDf, sliceCol, specs)` (shared code
-    * path); an empty micro-batch emits zero rows (there are no slices
-    * to validate — slice-absence alarms are the drift monitors'
-    * job). */
-  def validateSlicedStream(
-      df: DataFrame, sliceCol: String,
-      specs: Seq[graft.ops.FeatureStats.ColumnSpec])(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    df.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      sink(graft.ops.FeatureStats.validateWithSliced(batch, sliceCol, specs),
-        batchId)
+      sink(graft.ops.FeatureStats.validate(batch, specs, slice), batchId)
     }
 
   /** Streaming OOV-coverage monitor: each micro-batch of documents is

@@ -11,6 +11,23 @@ class FeatureStatsSpec extends SparkSpec with Matchers
   private def statsMap(rows: Array[Row]) =
     rows.map(r => r.getString(0) -> r).toMap
 
+  import FeatureStats.{Binning, Bins, DriftModel}
+
+  private def edgesOf(m: DriftModel): IndexedSeq[Double] = m.bins match {
+    case Bins.Edges(e) => e
+    case other => fail(s"not a quantile model: $other")
+  }
+
+  /** One slice's baseline counts in key order. */
+  private def countsOf(m: DriftModel, slice: String = ""): Seq[Long] =
+    m.baseCounts.filter(_._1 == slice).map(_._3)
+
+  /** The unsliced model a sliced model's slice scores like: same
+    * geometry, that slice's counts. */
+  private def sliceModel(m: DriftModel, slice: String): DriftModel =
+    m.copy(slice = None,
+      baseCounts = m.baseCounts.filter(_._1 == slice).map(t => ("", t._2, t._3)))
+
   test("summarize: one row per feature with exact counts and moments") {
     import spark.implicits._
     val df = Seq(
@@ -535,7 +552,7 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     val specs = FeatureStats.collectSchema(FeatureStats.inferSchema(
       schemaFixture.filter("cat IS NOT NULL"), Seq("cat", "x"), maxDomain = 8))
     val empty = spark.emptyDataset[(String, Double)].toDF("cat", "x")
-    val out = FeatureStats.validateWith(empty, specs).collect()
+    val out = FeatureStats.validate(empty, specs).collect()
     out should not be empty
     // A streaming gate like n_bad > 0 must see 0, not NULL, on an
     // empty micro-batch — NULL would silently never fire the sink.
@@ -590,7 +607,7 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     val base = (1 to 800).map(i => ((i * 31) % 97).toDouble).toDF("v")
     val cur = (1 to 900).map(i => ((i * 13) % 120).toDouble - 5.0).toDF("v")
     val direct = FeatureStats.driftCheck(base, cur, "v", nBins = 12).head()
-    val model = FeatureStats.fitDrift(base, "v", nBins = 12)
+    val model = FeatureStats.fitDrift(base, "v", Binning.EqualWidth(12))
     model.nBase shouldBe 800L
     model.baseCounts.length shouldBe 12
     val served = FeatureStats.scoreDrift(model, cur).head()
@@ -600,35 +617,35 @@ class FeatureStatsSpec extends SparkSpec with Matchers
   test("fitDriftQuantile(exact): equal-mass buckets; identical frames are driftless") {
     import spark.implicits._
     val base = (1 to 1000).map(i => ((i * 37) % 1009).toDouble).toDF("v")
-    val m = FeatureStats.fitDriftQuantile(base, "v", nBins = 10, exact = true)
-    m.edges.length shouldBe 9
-    m.edges shouldBe sorted
+    val m = FeatureStats.fitDrift(base, "v", Binning.Quantile(10, exact = true))
+    edgesOf(m).length shouldBe 9
+    edgesOf(m) shouldBe sorted
     // distinct-ish values: every bucket holds ~n/nBins of the baseline
-    m.baseCounts.sum shouldBe 1000L
-    m.baseCounts.foreach(_ shouldBe 100L +- 5L)
-    val same = FeatureStats.scoreDriftQuantile(m, base).head()
+    m.nBase shouldBe 1000L
+    countsOf(m).foreach(_ shouldBe 100L +- 5L)
+    val same = FeatureStats.scoreDrift(m, base).head()
     same.getAs[Double]("psi") shouldBe 0.0 +- 1e-9
     same.getAs[Double]("js_div") shouldBe 0.0 +- 1e-9
     // a shifted window moves mass across the equal-mass bins
     val cur = (1 to 1000).map(i => ((i * 37) % 1009).toDouble + 700.0).toDF("v")
-    FeatureStats.scoreDriftQuantile(m, cur).head()
+    FeatureStats.scoreDrift(m, cur).head()
       .getAs[Double]("psi") should be > 0.25
   }
 
   test("fitDriftQuantile: KLL-sketch fit agrees with the exact fit within rank tolerance") {
     import spark.implicits._
     val base = (1 to 5000).map(i => ((i * 131) % 9973).toDouble).toDF("v")
-    val exact = FeatureStats.fitDriftQuantile(base, "v", nBins = 10, exact = true)
-    val sketch = FeatureStats.fitDriftQuantile(base, "v", nBins = 10, exact = false)
+    val exact = FeatureStats.fitDrift(base, "v", Binning.Quantile(10, exact = true))
+    val sketch = FeatureStats.fitDrift(base, "v", Binning.Quantile(10, exact = false))
     // k=200 KLL: ~1.65% normalized rank error -> bucket masses within
     // a few percent of exact; the statistic must not change materially
-    sketch.baseCounts.sum shouldBe 5000L
-    exact.edges.zip(sketch.edges).foreach { case (e, s) =>
+    sketch.nBase shouldBe 5000L
+    edgesOf(exact).zip(edgesOf(sketch)).foreach { case (e, s) =>
       math.abs(e - s) should be < 9973.0 * 0.05
     }
     val cur = (1 to 5000).map(i => ((i * 131) % 9973).toDouble * 0.5).toDF("v")
-    val pe = FeatureStats.scoreDriftQuantile(exact, cur).head().getAs[Double]("psi")
-    val ps = FeatureStats.scoreDriftQuantile(sketch, cur).head().getAs[Double]("psi")
+    val pe = FeatureStats.scoreDrift(exact, cur).head().getAs[Double]("psi")
+    val ps = FeatureStats.scoreDrift(sketch, cur).head().getAs[Double]("psi")
     math.abs(pe - ps) should be < 0.15 * math.max(pe, ps)
   }
 
@@ -636,26 +653,26 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     import spark.implicits._
     val base = (1 to 5000).map(i =>
       (if (i % 2 == 0) "a" else "b", ((i * 131) % 9973).toDouble)).toDF("s", "v")
-    val exact = FeatureStats.fitDriftSlicedQuantile(
-      base, "v", "s", nBins = 10, exact = true)
-    val sketch = FeatureStats.fitDriftSlicedQuantile(
-      base, "v", "s", nBins = 10, exact = false)
-    // edges are GLOBAL either way (shared fitQuantileEdges) — the
-    // sketch's differ from exact only by KLL rank error
-    exact.edges.zip(sketch.edges).foreach { case (e, s) =>
+    val exact = FeatureStats.fitDrift(
+      base, "v", Binning.Quantile(10, exact = true), slice = Some("s"))
+    val sketch = FeatureStats.fitDrift(
+      base, "v", Binning.Quantile(10, exact = false), slice = Some("s"))
+    // edges are GLOBAL either way (one edge fit on the full baseline)
+    // — the sketch's differ from exact only by KLL rank error
+    edgesOf(exact).zip(edgesOf(sketch)).foreach { case (e, s) =>
       math.abs(e - s) should be < 9973.0 * 0.05
     }
     // per-slice masses are exact counts against whichever edges were
     // fit, so they always sum to the slice populations
     Seq(exact, sketch).foreach { m =>
-      m.baseCounts("a").sum shouldBe 2500L
-      m.baseCounts("b").sum shouldBe 2500L
+      countsOf(m, "a").sum shouldBe 2500L
+      countsOf(m, "b").sum shouldBe 2500L
     }
     val cur = (1 to 5000).map(i =>
       (if (i % 2 == 0) "a" else "b", ((i * 131) % 9973).toDouble * 0.5)).toDF("s", "v")
-    val pe = FeatureStats.scoreDriftSlicedQuantile(exact, cur).collect()
+    val pe = FeatureStats.scoreDrift(exact, cur).collect()
       .map(r => r.getString(1) -> r.getAs[Double]("psi")).toMap
-    val ps = FeatureStats.scoreDriftSlicedQuantile(sketch, cur).collect()
+    val ps = FeatureStats.scoreDrift(sketch, cur).collect()
       .map(r => r.getString(1) -> r.getAs[Double]("psi")).toMap
     Seq("a", "b").foreach { sl =>
       math.abs(pe(sl) - ps(sl)) should be < 0.15 * math.max(pe(sl), ps(sl))
@@ -665,10 +682,10 @@ class FeatureStatsSpec extends SparkSpec with Matchers
   test("fitDriftQuantile degenerate cases: constant column and all-NULL baseline") {
     import spark.implicits._
     val const = Seq.fill(100)(7.0).toDF("v")
-    val m = FeatureStats.fitDriftQuantile(const, "v", nBins = 4, exact = true)
-    m.edges.foreach(_ shouldBe 7.0)
+    val m = FeatureStats.fitDrift(const, "v", Binning.Quantile(4, exact = true))
+    edgesOf(m).foreach(_ shouldBe 7.0)
     // all mass collapses into ONE bucket on both sides -> zero drift
-    FeatureStats.scoreDriftQuantile(m, const).head()
+    FeatureStats.scoreDrift(m, const).head()
       .getAs[Double]("psi") shouldBe 0.0 +- 1e-9
     import org.apache.spark.sql.{Row, types => T}
     import scala.jdk.CollectionConverters._
@@ -677,7 +694,7 @@ class FeatureStatsSpec extends SparkSpec with Matchers
       T.StructType(Seq(T.StructField("v", T.DoubleType, nullable = true))))
     Seq(true, false).foreach { ex =>
       val e = intercept[IllegalArgumentException] {
-        FeatureStats.fitDriftQuantile(allNull, "v", nBins = 4, exact = ex)
+        FeatureStats.fitDrift(allNull, "v", Binning.Quantile(4, exact = ex))
       }
       e.getMessage should include ("no non-NULL 'v' values")
     }
@@ -685,27 +702,12 @@ class FeatureStatsSpec extends SparkSpec with Matchers
 
   test("driftStream: per-batch rows equal scoreDrift on the same batch rows") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val base = (1 to 600).map(i => (i % 50).toDouble).toDF("v")
-    val model = FeatureStats.fitDrift(base, "v", nBins = 8)
-    val batches = Seq(
-      (1 to 200).map(i => (i % 60).toDouble),
-      (1 to 300).map(i => (i % 20).toDouble + 40.0))
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Row)]
-    val stream = MemoryStream[Double]
-    val q = graft.streaming.StreamingOps.driftStream(
-      stream.toDF().withColumnRenamed("value", "v"), model) { (row, id) =>
-      got.synchronized { got += ((id, row.head())) }
-    }.start()
-    try {
-      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-      got.size shouldBe 2
-      got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
-        val batchTwin = FeatureStats.scoreDrift(model, rows.toDF("v")).head()
-        streamed shouldBe batchTwin
-      }
-    } finally q.stop()
+    val model = FeatureStats.fitDrift(base, "v", Binning.EqualWidth(8))
+    streamTwin(model, Seq("v"), Seq(
+      (1 to 200).map(i => Tuple1((i % 60).toDouble)),
+      (1 to 300).map(i => Tuple1((i % 20).toDouble + 40.0))))
+      .map(_.length) shouldBe Seq(1, 1)
   }
 
   test("diffSchemas: identical schemas diff to empty; every change kind fires once") {
@@ -770,19 +772,15 @@ class FeatureStatsSpec extends SparkSpec with Matchers
       (if (i % 2 == 0) "a" else "b",
         if (i % 2 == 0) (i % 100).toDouble + 80.0 else (i % 100).toDouble)
     }.toDF("s", "v")
-    val model = FeatureStats.fitDriftSliced(base, "v", "s", nBins = 10)
-    model.baseCounts.keySet shouldBe Set("a", "b", "c")
-    val out = FeatureStats.scoreDriftSliced(model, cur).collect()
+    val model = FeatureStats.fitDrift(base, "v", Binning.EqualWidth(10), slice = Some("s"))
+    model.baseCounts.map(_._1).toSet shouldBe Set("a", "b", "c")
+    val out = FeatureStats.scoreDrift(model, cur).collect()
       .map(r => r.getString(1) -> r).toMap
     out.keySet shouldBe Set("a", "b", "c")
-    // cross-check each slice against the unsliced path USING THE
-    // GLOBAL geometry: fit a global model per slice's baseline rows
-    // with identical bounds by construction? No — per-slice equality
-    // holds against a hand-built DriftModel carrying the global
-    // geometry and that slice's counts.
+    // per-slice equality holds against an unsliced model carrying the
+    // global geometry and that slice's counts
     Seq("a", "b", "c").foreach { sl =>
-      val single = FeatureStats.DriftModel("v", 10, model.binMin, model.binMax,
-        model.baseCounts(sl))
+      val single = sliceModel(model, sl)
       val expect = FeatureStats.scoreDrift(single, cur.filter(cur("s") === sl))
         .head()
       val got = out(sl)
@@ -804,7 +802,8 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     import spark.implicits._
     val df = (1 to 500).map(i => (i.toString, i.toDouble)).toDF("s", "v")
     val e = intercept[IllegalArgumentException] {
-      FeatureStats.fitDriftSliced(df, "v", "s", nBins = 4, maxSlices = 100)
+      FeatureStats.fitDrift(df, "v", Binning.EqualWidth(4), slice = Some("s"),
+        maxSlices = 100)
     }
     // "exceeds" is the LIMIT-capped branch's message: the collect was
     // bounded at maxSlices*nBins+1 rows and overflow detected from the
@@ -823,20 +822,19 @@ class FeatureStatsSpec extends SparkSpec with Matchers
       (if (i % 2 == 0) "a" else "b",
         if (i % 2 == 0) (i % 100).toDouble + 80.0 else (i % 100).toDouble)
     }.toDF("s", "v")
-    val model = FeatureStats.fitDriftSlicedQuantile(
-      base, "v", "s", nBins = 10, exact = true)
-    model.baseCounts.keySet shouldBe Set("a", "b", "c")
+    val model = FeatureStats.fitDrift(
+      base, "v", Binning.Quantile(10, exact = true), slice = Some("s"))
+    model.baseCounts.map(_._1).toSet shouldBe Set("a", "b", "c")
     // edges are GLOBAL (fit on the full baseline): identical to the
     // unsliced fit's, so sliced PSI is comparable across slices
-    model.edges shouldBe FeatureStats.fitDriftQuantile(
-      base, "v", nBins = 10, exact = true).edges
-    val out = FeatureStats.scoreDriftSlicedQuantile(model, cur).collect()
+    edgesOf(model) shouldBe edgesOf(FeatureStats.fitDrift(
+      base, "v", Binning.Quantile(10, exact = true)))
+    val out = FeatureStats.scoreDrift(model, cur).collect()
       .map(r => r.getString(1) -> r).toMap
     out.keySet shouldBe Set("a", "b", "c")
     Seq("a", "b", "c").foreach { sl =>
-      val single = FeatureStats.QuantileDriftModel(
-        "v", model.edges, model.baseCounts(sl))
-      val expect = FeatureStats.scoreDriftQuantile(single, cur.filter(cur("s") === sl))
+      val single = sliceModel(model, sl)
+      val expect = FeatureStats.scoreDrift(single, cur.filter(cur("s") === sl))
         .head()
       val got = out(sl)
       got.getAs[Long]("n_base") shouldBe single.nBase
@@ -852,95 +850,72 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     import spark.implicits._
     val df = (1 to 500).map(i => (i.toString, i.toDouble)).toDF("s", "v")
     val e = intercept[IllegalArgumentException] {
-      FeatureStats.fitDriftSlicedQuantile(
-        df, "v", "s", nBins = 4, maxSlices = 100, exact = true)
+      FeatureStats.fitDrift(df, "v", Binning.Quantile(4, exact = true),
+        slice = Some("s"), maxSlices = 100)
     }
     e.getMessage should include ("exceeds")
   }
 
-  test("driftSlicedStream: per-batch slice rows equal scoreDriftSliced; a silent slice keeps alarming") {
+  /** Streams `batches` through `driftStream(model)` and checks each
+    * batch's rows against `scoreDrift(model, batch)`; returns the
+    * per-batch rows in batch order. */
+  private def streamTwin[T <: Product : org.apache.spark.sql.Encoder](
+      model: DriftModel, cols: Seq[String], batches: Seq[Seq[T]]): Seq[Array[Row]] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val base = (1 to 600).map(i =>
-      (if (i % 2 == 0) "a" else "b", (i % 50).toDouble)).toDF("s", "v")
-    val model = FeatureStats.fitDriftSliced(base, "v", "s", nBins = 8)
-    val batches = Seq(
-      Seq(("a", 10.0), ("b", 20.0), ("a", 30.0)),
-      Seq(("a", 5.0), ("a", 45.0))) // slice 'b' goes silent
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Row])]
-    val stream = MemoryStream[(String, Double)]
-    val q = graft.streaming.StreamingOps.driftSlicedStream(
-      stream.toDF().toDF("s", "v"), model) { (rows, id) =>
+    val stream = MemoryStream[T]
+    val q = graft.streaming.StreamingOps.driftStream(
+      stream.toDF().toDF(cols: _*), model) { (rows, id) =>
       got.synchronized { got += ((id, rows.collect())) }
     }.start()
     try {
       batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-      got.size shouldBe 2
-      got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
-        val twin = FeatureStats.scoreDriftSliced(model, rows.toDF("s", "v")).collect()
-        streamed.map(_.toString).sorted.toSeq shouldBe twin.map(_.toString).sorted.toSeq
+      got.size shouldBe batches.size
+      val streamed = got.sortBy(_._1).map(_._2).toSeq
+      streamed.zip(batches).foreach { case (rows, b) =>
+        val twin = FeatureStats.scoreDrift(model, b.toDF(cols: _*)).collect()
+        rows.map(_.toString).sorted.toSeq shouldBe twin.map(_.toString).sorted.toSeq
       }
-      // the silent slice still emits its row, n_cur = 0
-      val last = got.sortBy(_._1).last._2
-        .map(r => r.getString(1) -> r.getAs[Long]("n_cur")).toMap
-      last("b") shouldBe 0L
+      streamed
     } finally q.stop()
+  }
+
+  test("driftSlicedStream: per-batch slice rows equal scoreDriftSliced; a silent slice keeps alarming") {
+    import spark.implicits._
+    val base = (1 to 600).map(i =>
+      (if (i % 2 == 0) "a" else "b", (i % 50).toDouble)).toDF("s", "v")
+    val model = FeatureStats.fitDrift(base, "v", Binning.EqualWidth(8), slice = Some("s"))
+    val got = streamTwin(model, Seq("s", "v"), Seq(
+      Seq(("a", 10.0), ("b", 20.0), ("a", 30.0)),
+      Seq(("a", 5.0), ("a", 45.0)))) // slice 'b' goes silent
+    // the silent slice still emits its row, n_cur = 0
+    got.last.map(r => r.getString(1) -> r.getAs[Long]("n_cur")).toMap
+      .apply("b") shouldBe 0L
   }
 
   test("driftQuantileStream: per-batch rows equal scoreDriftQuantile on the same batch rows") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val base = (1 to 600).map(i => ((i * 53) % 701).toDouble).toDF("v")
-    val model = FeatureStats.fitDriftQuantile(base, "v", nBins = 8, exact = true)
-    val batches = Seq(
-      (1 to 200).map(i => ((i * 53) % 701).toDouble),
-      (1 to 300).map(i => ((i * 53) % 701).toDouble + 300.0))
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Row)]
-    val stream = MemoryStream[Double]
-    val q = graft.streaming.StreamingOps.driftQuantileStream(
-      stream.toDF().withColumnRenamed("value", "v"), model) { (row, id) =>
-      got.synchronized { got += ((id, row.head())) }
-    }.start()
-    try {
-      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-      got.size shouldBe 2
-      got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
-        streamed shouldBe FeatureStats.scoreDriftQuantile(model, rows.toDF("v")).head()
-      }
-    } finally q.stop()
+    val model = FeatureStats.fitDrift(base, "v", Binning.Quantile(8, exact = true))
+    streamTwin(model, Seq("v"), Seq(
+      (1 to 200).map(i => Tuple1(((i * 53) % 701).toDouble)),
+      (1 to 300).map(i => Tuple1(((i * 53) % 701).toDouble + 300.0))))
+      .map(_.length) shouldBe Seq(1, 1)
   }
 
   test("driftSlicedQuantileStream: per-batch slice rows equal scoreDriftSlicedQuantile; silent slice keeps alarming") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val base = (1 to 600).map(i =>
       (if (i % 2 == 0) "a" else "b", ((i * 53) % 701).toDouble)).toDF("s", "v")
-    val model = FeatureStats.fitDriftSlicedQuantile(
-      base, "v", "s", nBins = 8, exact = true)
-    val batches = Seq(
+    val model = FeatureStats.fitDrift(
+      base, "v", Binning.Quantile(8, exact = true), slice = Some("s"))
+    val got = streamTwin(model, Seq("s", "v"), Seq(
       Seq(("a", 10.0), ("b", 200.0), ("a", 300.0)),
-      Seq(("a", 5.0), ("a", 450.0))) // slice 'b' goes silent
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Row])]
-    val stream = MemoryStream[(String, Double)]
-    val q = graft.streaming.StreamingOps.driftSlicedQuantileStream(
-      stream.toDF().toDF("s", "v"), model) { (rows, id) =>
-      got.synchronized { got += ((id, rows.collect())) }
-    }.start()
-    try {
-      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-      got.size shouldBe 2
-      got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
-        val twin = FeatureStats.scoreDriftSlicedQuantile(
-          model, rows.toDF("s", "v")).collect()
-        streamed.map(_.toString).sorted.toSeq shouldBe twin.map(_.toString).sorted.toSeq
-      }
-      val last = got.sortBy(_._1).last._2
-        .map(r => r.getString(1) -> r.getAs[Long]("n_cur")).toMap
-      last("b") shouldBe 0L
-    } finally q.stop()
+      Seq(("a", 5.0), ("a", 450.0)))) // slice 'b' goes silent
+    got.last.map(r => r.getString(1) -> r.getAs[Long]("n_cur")).toMap
+      .apply("b") shouldBe 0L
   }
 
   test("categoricalDrift: hand-computed L-infinity, value-space union, deterministic example") {
@@ -960,19 +935,26 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     same.getAs[Double]("psi") shouldBe 0.0 +- 1e-9
   }
 
-  test("categoricalDriftSliced: per-slice rows equal categoricalDrift; vanished slice alarms, unknown slice dropped") {
+  /** Slices A and B shift, C vanishes from the batch, D is unknown to
+    * the baseline. */
+  private def slicedCategorical = {
     import spark.implicits._
     val base = (
       Seq.fill(6)(("A", "a")) ++ Seq.fill(3)(("A", "b")) ++ Seq(("A", "c")) ++
       Seq.fill(2)(("B", "a")) ++ Seq.fill(8)(("B", "b")) ++
-      Seq.fill(4)(("C", "d"))                       // slice C vanishes from cur
+      Seq.fill(4)(("C", "d"))
     ).toDF("s", "v")
     val cur = (
       Seq.fill(2)(("A", "a")) ++ Seq.fill(6)(("A", "b")) ++ Seq.fill(2)(("A", "d")) ++
       Seq.fill(5)(("B", "a")) ++ Seq.fill(5)(("B", "b")) ++
-      Seq.fill(3)(("D", "z"))                       // slice D unknown to baseline
+      Seq.fill(3)(("D", "z"))
     ).toDF("s", "v")
-    val out = FeatureStats.categoricalDriftSliced(base, cur, "v", "s")
+    (base, cur)
+  }
+
+  test("categoricalDriftSliced: per-slice rows equal categoricalDrift; vanished slice alarms, unknown slice dropped") {
+    val (base, cur) = slicedCategorical
+    val out = FeatureStats.categoricalDrift(base, cur, "v", slice = Some("s"))
       .collect().map(r => r.getString(1) -> r).toMap
     out.keySet shouldBe Set("A", "B", "C") // D dropped, C kept
     Seq("A", "B").foreach { sl =>
@@ -997,7 +979,7 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     import spark.implicits._
     val df = (1 to 500).map(i => (i.toString, "x")).toDF("s", "v")
     val e = intercept[IllegalArgumentException] {
-      FeatureStats.categoricalDriftSliced(df, df, "v", "s", maxSlices = 100)
+      FeatureStats.categoricalDrift(df, df, "v", slice = Some("s"), maxSlices = 100)
     }
     e.getMessage should include ("exceeds")
   }
@@ -1009,114 +991,139 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val base = Seq(("A", "a"), ("A", "b"), ("B", "a")).toDF("s", "v")
     val cur = Seq(("A", "a"), ("B", "b")).toDF("s", "v")
-    FeatureStats.categoricalDriftSliced(base, cur, "v", "s").collect()
-    // The r9 implementation localCheckpoint'ed the joined count frame,
-    // leaking one block-manager RDD per call until driver GC — fatal
-    // inside a foreachBatch monitor (a block per micro-batch). The
-    // window-aggregate rewrite consumes the frame once, unpersisted.
+    FeatureStats.categoricalDrift(base, cur, "v", slice = Some("s")).collect()
+    // The window-aggregate reduction consumes the joined frame once,
+    // unpersisted — a checkpointed frame would leak one block-manager
+    // RDD per call until driver GC, fatal inside a foreachBatch
+    // monitor (a block per micro-batch).
     (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
   }
 
-  test("fitCategoricalDrift/scoreCategoricalDrift: row-for-row equal to categoricalDriftSliced; no baseline re-agg artifacts") {
+  test("scoring a drift model of every binning, sliced or not, runs no job and leaves no block") {
     import spark.implicits._
-    val base = (
-      Seq.fill(6)(("A", "a")) ++ Seq.fill(3)(("A", "b")) ++ Seq(("A", "c")) ++
-      Seq.fill(2)(("B", "a")) ++ Seq.fill(8)(("B", "b")) ++
-      Seq.fill(4)(("C", "d"))                       // slice C vanishes from cur
-    ).toDF("s", "v")
-    val cur = (
-      Seq.fill(2)(("A", "a")) ++ Seq.fill(6)(("A", "b")) ++ Seq.fill(2)(("A", "d")) ++
-      Seq.fill(5)(("B", "a")) ++ Seq.fill(5)(("B", "b")) ++
-      Seq.fill(3)(("D", "z"))                       // slice D unknown to baseline
-    ).toDF("s", "v")
-    val model = FeatureStats.fitCategoricalDrift(base, "v", "s")
+    val base = (1 to 300).map(i => (s"s${i % 3}", (i % 40).toDouble)).toDF("s", "v")
+    val cur = (1 to 200).map(i => (s"s${i % 4}", (i % 55).toDouble)).toDF("s", "v")
+    val binnings = Seq(Binning.EqualWidth(6), Binning.Quantile(6, exact = true),
+      Binning.Quantile(6), Binning.Categorical())
+    for (b <- binnings; slice <- Seq(None, Some("s"))) withClue(s"$b / $slice: ") {
+      val model = FeatureStats.fitDrift(base, "v", b, slice)
+      val (scored, jobs, _) = traced(FeatureStats.scoreDrift(model, cur))
+      jobs shouldBe empty // lazy: the batch is read only when consumed
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      scored.collect().length shouldBe (if (slice.isEmpty) 1 else 3)
+      (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    }
+  }
+
+  test("fitCategoricalDrift/scoreCategoricalDrift: row-for-row equal to categoricalDriftSliced; no baseline re-agg artifacts") {
+    val (base, cur) = slicedCategorical
+    val model = FeatureStats.fitDrift(base, "v", Binning.Categorical(), slice = Some("s"))
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val scored = FeatureStats.scoreCategoricalDrift(model, cur)
-    val twin = FeatureStats.categoricalDriftSliced(base, cur, "v", "s")
+    val scored = FeatureStats.scoreDrift(model, cur)
+    val twin = FeatureStats.categoricalDrift(base, cur, "v", slice = Some("s"))
     scored.exceptAll(twin).count() shouldBe 0L
     twin.exceptAll(scored).count() shouldBe 0L
     // monitor contract: scoring leaves no persisted/checkpointed blocks
     (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
     // an empty batch emits one q = 0 absence row per baseline slice
-    val silent = FeatureStats.scoreCategoricalDrift(model, cur.limit(0))
+    val silent = FeatureStats.scoreDrift(model, cur.limit(0))
       .collect().map(r => r.getString(1) -> r.getAs[Long]("n_cur")).toMap
     silent.keySet shouldBe Set("A", "B", "C")
     silent.values.toSet shouldBe Set(0L)
+    // unsliced: the fitted model scores exactly the two-sided form
+    val whole = FeatureStats.fitDrift(base, "v", Binning.Categorical())
+    FeatureStats.scoreDrift(whole, cur).collect().toSeq shouldBe
+      FeatureStats.categoricalDrift(base, cur, "v").collect().toSeq
   }
 
   test("fitCategoricalDrift fails fast on high-cardinality slice/value columns") {
     import spark.implicits._
     val wide = (1 to 500).map(i => (i.toString, "x")).toDF("s", "v")
     intercept[IllegalArgumentException] {
-      FeatureStats.fitCategoricalDrift(wide, "v", "s", maxSlices = 100)
+      FeatureStats.fitDrift(wide, "v", Binning.Categorical(), slice = Some("s"),
+        maxSlices = 100)
     }.getMessage should include ("slices")
     val wideVals = (1 to 500).map(i => ("A", i.toString)).toDF("s", "v")
     intercept[IllegalArgumentException] {
-      FeatureStats.fitCategoricalDrift(
-        wideVals, "v", "s", maxSlices = 10, maxValues = 20)
+      FeatureStats.fitDrift(wideVals, "v", Binning.Categorical(maxValues = 20),
+        slice = Some("s"), maxSlices = 10)
     }.getMessage should include ("pairs")
+  }
+
+  test("a categorical fit fails naming the slice that holds more than maxValues values") {
+    import spark.implicits._
+    // 50 values in one slice: under the total cap (10 slices × 20
+    // values), but over the per-slice limit of 20
+    val df = ((1 to 50).map(i => ("A", s"v$i")) ++ Seq(("B", "v1"))).toDF("s", "v")
+    val e = intercept[IllegalArgumentException] {
+      FeatureStats.fitDrift(df, "v", Binning.Categorical(maxValues = 20),
+        slice = Some("s"), maxSlices = 10)
+    }
+    e.getMessage should include ("slice 'A' of 's' has 50 'v' values (max 20)")
+    // at the limit the fit is admitted
+    FeatureStats.fitDrift(df, "v", Binning.Categorical(maxValues = 50),
+      slice = Some("s"), maxSlices = 10).baseCounts.length shouldBe 51
+  }
+
+  test("every sliced fit names the feature and slice columns when the slice column is all NULL") {
+    import org.apache.spark.sql.{types => T}
+    import scala.jdk.CollectionConverters._
+    val df = spark.createDataFrame(
+      (1 to 20).map(i => Row(null, i.toDouble)).asJava,
+      T.StructType(Seq(T.StructField("s", T.StringType, nullable = true),
+        T.StructField("v", T.DoubleType, nullable = true))))
+    Seq(Binning.EqualWidth(4), Binning.Quantile(4, exact = true),
+      Binning.Quantile(4), Binning.Categorical()).foreach { b =>
+      withClue(s"$b: ") {
+        intercept[IllegalArgumentException] {
+          FeatureStats.fitDrift(df, "v", b, slice = Some("s"))
+        }.getMessage should include ("no rows with non-NULL 'v' and 's'")
+      }
+    }
   }
 
   test("fitCategoricalDrift: maxPairs bounds the TOTAL model; Long cap math never wraps") {
     import spark.implicits._
     // 30 slices × 20 values = 600 pairs: each axis is under its limit,
-    // but the total exceeds maxPairs — the r10 advisory's exact gap
-    // (default per-axis limits admitted a 10M-row "broadcast" model).
+    // but the total exceeds maxPairs (default per-axis limits would
+    // otherwise admit a 10M-row "broadcast" model).
     val grid = for { s <- 1 to 30; v <- 1 to 20 } yield (s"s$s", s"v$v")
     intercept[IllegalArgumentException] {
-      FeatureStats.fitCategoricalDrift(
-        grid.toDF("s", "v"), "v", "s",
-        maxSlices = 100, maxValues = 100, maxPairs = 500)
+      FeatureStats.fitDrift(grid.toDF("s", "v"), "v",
+        Binning.Categorical(maxValues = 100, maxPairs = 500),
+        slice = Some("s"), maxSlices = 100)
     }.getMessage should include ("pairs")
     // under the total cap the same fit succeeds
-    FeatureStats.fitCategoricalDrift(
-      grid.toDF("s", "v"), "v", "s",
-      maxSlices = 100, maxValues = 100, maxPairs = 1000)
+    FeatureStats.fitDrift(grid.toDF("s", "v"), "v",
+      Binning.Categorical(maxValues = 100, maxPairs = 1000),
+      slice = Some("s"), maxSlices = 100)
       .baseCounts.length shouldBe 600
     // Int-wrapping arguments (50000×50000 overflows Int to a negative)
     // hit the explicit Long-math guard, not an opaque limit() failure
     val tiny = Seq(("A", "a")).toDF("s", "v")
     intercept[IllegalArgumentException] {
-      FeatureStats.fitCategoricalDrift(
-        tiny, "v", "s",
-        maxSlices = 50000, maxValues = 50000, maxPairs = Int.MaxValue)
+      FeatureStats.fitDrift(tiny, "v",
+        Binning.Categorical(maxValues = 50000, maxPairs = Int.MaxValue),
+        slice = Some("s"), maxSlices = 50000)
     }.getMessage should (include ("cap") and include ("Int"))
     intercept[IllegalArgumentException] {
-      FeatureStats.fitDriftSliced(
+      FeatureStats.fitDrift(
         (1 to 5).map(i => ("A", i.toDouble)).toDF("s", "x"),
-        "x", "s", nBins = 1000000, maxSlices = 1000000)
+        "x", Binning.EqualWidth(1000000), slice = Some("s"), maxSlices = 1000000)
     }.getMessage should (include ("cap") and include ("Int"))
   }
 
   test("categoricalDriftStream: per-batch rows equal scoreCategoricalDrift; a silent slice keeps alarming") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val base = (1 to 200).map(i =>
       (if (i % 2 == 0) "a" else "b", "v" + (i % 5))).toDF("s", "v")
-    val model = FeatureStats.fitCategoricalDrift(base, "v", "s")
-    val batches = Seq(
+    val model = FeatureStats.fitDrift(base, "v", Binning.Categorical(), slice = Some("s"))
+    val got = streamTwin(model, Seq("s", "v"), Seq(
       Seq(("a", "v1"), ("b", "v2"), ("a", "v3")),
-      Seq(("a", "v0"), ("a", "v9"))) // slice 'b' goes silent; v9 is new
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Row])]
-    val stream = MemoryStream[(String, String)]
-    val q = graft.streaming.StreamingOps.categoricalDriftStream(
-      stream.toDF().toDF("s", "v"), model) { (rows, id) =>
-      got.synchronized { got += ((id, rows.collect())) }
-    }.start()
-    try {
-      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-      got.size shouldBe 2
-      got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
-        val twin = FeatureStats.scoreCategoricalDrift(
-          model, rows.toDF("s", "v")).collect()
-        streamed.map(_.toString).sorted.toSeq shouldBe twin.map(_.toString).sorted.toSeq
-      }
-      // the silent slice still emits its row, n_cur = 0
-      val last = got.sortBy(_._1).last._2
-        .map(r => r.getString(1) -> r.getAs[Long]("n_cur")).toMap
-      last("b") shouldBe 0L
-    } finally q.stop()
+      Seq(("a", "v0"), ("a", "v9")))) // slice 'b' goes silent; v9 is new
+    // the silent slice still emits its row, n_cur = 0
+    got.last.map(r => r.getString(1) -> r.getAs[Long]("n_cur")).toMap
+      .apply("b") shouldBe 0L
   }
 
   test("validateWithSliced: per-slice rows equal validateWith on each slice's rows; NULL slices excluded") {
@@ -1129,11 +1136,11 @@ class FeatureStatsSpec extends SparkSpec with Matchers
       ("S2", "b", 2.0), ("S2", null, 1.0),          // null cat
       (null, "q", 99.0))                            // NULL slice: excluded
       .toDF("s", "cat", "x")
-    val out = FeatureStats.validateWithSliced(batch, "s", specs)
+    val out = FeatureStats.validate(batch, specs, slice = Some("s"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r).toMap
     out.keys.map(_._1).toSet shouldBe Set("S1", "S2") // NULL slice gone
     Seq("S1", "S2").foreach { sl =>
-      val twin = FeatureStats.validateWith(
+      val twin = FeatureStats.validate(
         batch.filter(batch("s") === sl).drop("s"), specs)
         .collect().map(r => (sl, r.getString(0), r.getString(1)) -> r).toMap
       twin.foreach { case (k, exp) =>
@@ -1146,60 +1153,139 @@ class FeatureStatsSpec extends SparkSpec with Matchers
     out(("S2", "cat", "unexpected_null")).getAs[Long]("n_bad") shouldBe 1L
   }
 
-  test("validateSlicedStream: per-batch rows equal validateWithSliced; empty batch emits zero rows") {
+  /** Streams `batches` through `validateStream(specs, slice)` and checks
+    * each batch's rows against `validate(batch, specs, slice)`. */
+  private def validateTwin[T <: Product : org.apache.spark.sql.Encoder](
+      specs: Seq[FeatureStats.ColumnSpec], slice: Option[String],
+      cols: Seq[String], batches: Seq[Seq[T]]): Seq[Array[Row]] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val baseline = Seq(("a", 1.0), ("b", 2.0)).toDF("cat", "x")
-    val specs = FeatureStats.collectSchema(
-      FeatureStats.inferSchema(baseline, Seq("cat", "x"), maxDomain = 8))
-    val batches = Seq(
-      Seq(("S1", "a", 1.5), ("S1", "z", 9.0), ("S2", "b", 2.0)),
-      Seq(("S2", "w", 0.5)))
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Row])]
-    val stream = MemoryStream[(String, String, Double)]
-    val q = graft.streaming.StreamingOps.validateSlicedStream(
-      stream.toDF().toDF("s", "cat", "x"), "s", specs) { (rows, id) =>
+    val stream = MemoryStream[T]
+    val q = graft.streaming.StreamingOps.validateStream(
+      stream.toDF().toDF(cols: _*), specs, slice) { (rows, id) =>
       got.synchronized { got += ((id, rows.collect())) }
     }.start()
     try {
       batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-      got.size shouldBe 2
-      got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
-        val twin = FeatureStats.validateWithSliced(
-          rows.toDF("s", "cat", "x"), "s", specs).collect()
-        streamed.map(_.toString).sorted.toSeq shouldBe twin.map(_.toString).sorted.toSeq
+      got.size shouldBe batches.size
+      val streamed = got.sortBy(_._1).map(_._2).toSeq
+      streamed.zip(batches).foreach { case (rows, b) =>
+        val twin = FeatureStats.validate(b.toDF(cols: _*), specs, slice).collect()
+        rows.map(_.toString).sorted.toSeq shouldBe twin.map(_.toString).sorted.toSeq
       }
+      streamed
     } finally q.stop()
+  }
+
+  test("validateSlicedStream: per-batch rows equal validateWithSliced; empty batch emits zero rows") {
+    import spark.implicits._
+    val baseline = Seq(("a", 1.0), ("b", 2.0)).toDF("cat", "x")
+    val specs = FeatureStats.collectSchema(
+      FeatureStats.inferSchema(baseline, Seq("cat", "x"), maxDomain = 8))
+    validateTwin(specs, Some("s"), Seq("s", "cat", "x"), Seq(
+      Seq(("S1", "a", 1.5), ("S1", "z", 9.0), ("S2", "b", 2.0)),
+      Seq(("S2", "w", 0.5))))
+    FeatureStats.validate(Seq.empty[(String, String, Double)].toDF("s", "cat", "x"),
+      specs, slice = Some("s")).count() shouldBe 0L
   }
 
   test("validateStream: per-batch anomaly rows equal validateWith on the same batch rows") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val specs = FeatureStats.collectSchema(FeatureStats.inferSchema(
       schemaFixture.filter("cat IS NOT NULL"), Seq("cat", "x"), maxDomain = 8))
-    val batches = Seq(
+    val got = validateTwin(specs, None, Seq("cat", "x"), Seq(
       Seq(("a", 25.0), ("zz", 5.0)),   // new category + below range
-      Seq(("b", 100.0), ("c", 30.0)))  // above range
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[org.apache.spark.sql.Row])]
-    val stream = MemoryStream[(String, Double)]
-    val q = graft.streaming.StreamingOps.validateStream(
-      stream.toDF().toDF("cat", "x"), specs) { (rows, id) =>
-      got.synchronized { got += ((id, rows.collect())) }
-    }.start()
-    try {
-      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-      got.size shouldBe 2
-      got.sortBy(_._1).map(_._2).zip(batches).foreach { case (streamed, rows) =>
-        val twin = FeatureStats.validateWith(rows.toDF("cat", "x"), specs).collect()
-        streamed.map(_.toString).sorted.toSeq shouldBe twin.map(_.toString).sorted.toSeq
+      Seq(("b", 100.0), ("c", 30.0)))) // above range
+    // the planted anomalies actually fired
+    val all = got.flatten.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    all should contain(("cat", "new_category", 1L))
+    all should contain(("x", "out_of_range", 1L))
+  }
+
+  test("DriftModel is the only drift model type and driftStream the only drift monitor") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val walk = Files.walk(main)
+    val sources: Seq[Path] =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally walk.close()
+    withClue(s"main sources not found at $main: ") { sources should not be empty }
+    val modelType = """\b(?:class|trait|object|type)\s+(\w*DriftModel)\b""".r
+    val models = sources.flatMap(f =>
+      modelType.findAllMatchIn(Files.readString(f)).map(m =>
+        s"${main.relativize(f)}:${m.group(1)}"))
+    models shouldBe Seq("graft/ops/FeatureStats.scala:DriftModel")
+    val ops = Files.readString(main.resolve("graft/streaming/StreamingOps.scala"))
+    val monitors = """def\s+(\w+)""".r.findAllMatchIn(ops).map(_.group(1))
+      .filter(_.toLowerCase.contains("drift")).toSeq
+    monitors shouldBe Seq("driftStream")
+    """def\s+(\w+)""".r.findAllMatchIn(ops).map(_.group(1))
+      .filter(_.toLowerCase.contains("validat")).toSeq shouldBe Seq("validateStream")
+  }
+
+  /** The nine drift/validate queries' rows at sf0.001, as computed by
+    * the per-binning implementations the drift core replaced: one
+    * "|"-joined string per row, sorted, doubles written as
+    * `d<doubleToLongBits>` so every bit is compared (the oracle gate
+    * rounds to 6 dp). */
+  private val pinnedRows: Map[String, (String, Seq[String])] = Map(
+    "stats_validate_schema" -> ("feature,anomaly,n_bad,example", Seq(
+      "o_orderpriority|new_category|294|5-LOW",
+      "o_orderpriority|unexpected_null|0|null",
+      "o_orderstatus|new_category|0|null",
+      "o_orderstatus|unexpected_null|137|null",
+      "o_totalprice|out_of_range|900|201251.86",
+      "o_totalprice|unexpected_null|0|null")),
+    "stats_validate_sliced" -> ("slice,feature,anomaly,n_bad,example", Seq(
+      "F|o_orderpriority|new_category|100|5-LOW",
+      "F|o_orderpriority|unexpected_null|35|null",
+      "F|o_totalprice|out_of_range|290|201783.07",
+      "F|o_totalprice|unexpected_null|0|null",
+      "O|o_orderpriority|new_category|94|5-LOW",
+      "O|o_orderpriority|unexpected_null|40|null",
+      "O|o_totalprice|out_of_range|306|201251.86",
+      "O|o_totalprice|unexpected_null|0|null",
+      "P|o_orderpriority|new_category|80|5-LOW",
+      "P|o_orderpriority|unexpected_null|41|null",
+      "P|o_totalprice|out_of_range|304|201903.9",
+      "P|o_totalprice|unexpected_null|0|null")),
+    "stats_drift_psi" -> ("feature,n_base,n_cur,bin_min,bin_max,psi,js_div", Seq(
+      "l_extendedprice|1766|4234|d4651254715122209260|d4681946805681489183|d4577145583695413888|d4563628791350860701")),
+    "stats_drift_serve" -> ("feature,n_base,n_cur,bin_min,bin_max,psi,js_div", Seq(
+      "l_extendedprice|1766|4234|d4651254715122209260|d4681946805681489183|d4577145583695413888|d4563628791350860701")),
+    "stats_drift_quantile" -> ("feature,n_base,n_cur,bin_min,bin_max,psi,js_div", Seq(
+      "l_extendedprice|1766|4234|d4666842788337329111|d4681258563629303726|d4576578482359884863|d4563062669998610592")),
+    "stats_drift_sliced" -> ("feature,slice,n_base,n_cur,psi,js_div", Seq(
+      "l_extendedprice|A|566|1396|d4581396195451185495|d4567877922755420393",
+      "l_extendedprice|N|631|1439|d4581871231969346397|d4568342171963523441",
+      "l_extendedprice|R|569|1399|d4581897388011291036|d4568372143310957201")),
+    "stats_drift_sliced_quantile" -> ("feature,slice,n_base,n_cur,psi,js_div", Seq(
+      "l_extendedprice|A|566|1396|d4582763617137033317|d4569240795877702165",
+      "l_extendedprice|N|631|1439|d4582002419160360720|d4568477259776218225",
+      "l_extendedprice|R|569|1399|d4582105419438200039|d4568580810574075994")),
+    "stats_drift_categorical_sliced" -> ("feature,slice,n_base,n_cur,n_values,linf,psi,example_value", Seq(
+      "o_orderpriority|F|139|354|5|d4589143491479005624|d4586991360406530670|2-HIGH",
+      "o_orderpriority|O|166|348|5|d4589983171199408606|d4586439425465164372|4-NOT SPECIFIED",
+      "o_orderpriority|P|155|338|5|d4590157797845594478|d4587991537249714867|2-HIGH")),
+    "stats_drift_categorical" -> ("feature,n_base,n_cur,n_values,linf,psi,example_value", Seq(
+      "o_orderpriority|460|1040|5|d4596792509024230892|d4597546117441907757|1-URGENT")))
+
+  test("the nine stats_drift/stats_validate queries reproduce their pinned sf0.001 rows bit for bit") {
+    def enc(v: Any): String = v match {
+      case null => "null"
+      case d: Double => s"d${java.lang.Double.doubleToLongBits(d)}"
+      case x => x.toString
+    }
+    pinnedRows.toSeq.sortBy(_._1).foreach { case (name, (cols, rows)) =>
+      withClue(s"$name: ") {
+        val df = graft.SparkEntry.queries(name)(spark, sf("sf0.001"))
+        df.columns.mkString(",") shouldBe cols
+        df.collect().map(_.toSeq.map(enc).mkString("|")).sorted.toSeq shouldBe rows
       }
-      // the planted anomalies actually fired
-      val all = got.flatMap(_._2).map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      all should contain(("cat", "new_category", 1L))
-      all should contain(("x", "out_of_range", 1L))
-    } finally q.stop()
+    }
   }
 
   test("quantile profiles: merged shard sketches answer within rank tolerance; sketch survives parquet") {

@@ -466,7 +466,7 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
     // Model fit ONCE on the first half; the full stream scores against
     // the fitted literal — nothing re-aggregates the baseline.
     val model = FeatureStats.fitDrift(
-      prices.take(prices.size / 2).toDF("v"), "v", nBins = 10)
+      prices.take(prices.size / 2).toDF("v"), "v", FeatureStats.Binning.EqualWidth(10))
     val stream = MemoryStream[Double]
     val scored = new java.util.concurrent.atomic.AtomicLong(0)
     val q = StreamingOps.driftStream(
@@ -489,7 +489,7 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
     } finally q.stop()
   }
 
-  test("driftSlicedQuantileStream soak: 600k (flag, price) rows in 10 batches, stateless, every slice every batch") {
+  test("driftStream soak, sliced quantile model: 600k (flag, price) rows in 10 batches, stateless, every slice every batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.FeatureStats
@@ -498,13 +498,13 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       .as[(String, Double)].collect().toSeq
     // Equal-mass edges + per-slice masses fit ONCE (KLL mode — the
     // 100 TB fit); the stream scores against broadcast literals.
-    val model = FeatureStats.fitDriftSlicedQuantile(
-      rows.take(rows.size / 2).toDF("s", "v"), "v", "s", nBins = 10,
-      exact = false)
-    val nSlices = model.baseCounts.size
+    val model = FeatureStats.fitDrift(
+      rows.take(rows.size / 2).toDF("s", "v"), "v",
+      FeatureStats.Binning.Quantile(10, exact = false), slice = Some("s"))
+    val nSlices = model.baseCounts.map(_._1).distinct.size
     val stream = MemoryStream[(String, Double)]
     val scored = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = StreamingOps.driftSlicedQuantileStream(
+    val q = StreamingOps.driftStream(
       stream.toDF().toDF("s", "v"), model) { (df, _) =>
       df.count() shouldBe nSlices.toLong // one row per baseline slice
       scored.incrementAndGet()
@@ -517,7 +517,7 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       log.size should be >= 10
       scored.get() should be >= 10L
       log.foreach { case (_, _, st) => st.sum shouldBe 0L } // stateless
-      soakLine("driftSlicedQuantileStream", rows.size.toLong, log)
+      soakLine("driftStream(sliced quantile)", rows.size.toLong, log)
     } finally q.stop()
   }
 
