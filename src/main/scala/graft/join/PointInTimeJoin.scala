@@ -1,8 +1,11 @@
 package graft.join
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.expressions.{KnownNotNull, RowOrdering}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.TimestampType
 
 /** A feature view resolved to a concrete DataFrame, ready to join.
   *
@@ -48,32 +51,37 @@ final case class ResolvedView(
   * views — the engine's core operator (SURVEY.md §2.3 J1).
   *
   * Spark-first design, scale notes (100 TB posture):
-  *   - The entity spine gets a unique row id; views are reduced to one
-  *     row per spine id, then stitched back with left joins on the id.
-  *     N views never multiply each other's fan-out.
   *   - Views sharing a (canonicalized source, keys, timestamp) identity
-  *     run ONE candidate join over one scan, and every member reduces in
-  *     one aggregation: scans, aggregations and stitch joins are
-  *     O(distinct sources), not O(views).
+  *     form one group and run ONE pass over one scan: scans, shuffles
+  *     and sorts are O(distinct sources), not O(views).
+  *   - A group's pass is a union of the spine rows with the group's
+  *     pruned view rows, partitioned on the join keys and ordered by
+  *     time, where each view's pick is a running `max|min` over the rows
+  *     before each spine row. The work stays local to each key
+  *     partition: no row id, no materialized spine, and nothing is
+  *     stitched back. The next group runs over this group's output, and
+  *     duplicate spine rows simply each get their own answer.
   *   - TTL scan pruning: the entity's [min(ts), max(ts)] is computed
   *     once (a 2-value aggregate — the only driver-side collect in the
   *     engine) and every view scan is pre-filtered to
   *     [min - ttl, max]. Catalyst pushes that range into the parquet
   *     row-group filter, the single most important physical
   *     optimization here (mirrors the bounded scan CTE Feast generates;
-  *     see SURVEY.md §4).
-  *   - Dedup-to-latest runs as a `max(struct(...))` aggregate: it gets
-  *     map-side partial aggregation (one shuffle of pre-combined rows)
-  *     where a window would shuffle and sort every candidate row.
-  *   - Spine ids are unique, so the dedup shuffle cannot skew; join-key
-  *     skew on hot entities is left to AQE skew-join handling.
+  *     see SURVEY.md §4). An empty spine, or one without timestamps,
+  *     prunes every view to nothing and runs the same plan.
+  *   - A hot entity key lands in one partition and is sorted there
+  *     (spilling as a sort does); skew known a priori is
+  *     [[SaltedJoin]]'s.
   */
 object PointInTimeJoin {
 
-  private[join] val RowId = "__graft_row_id"
-  private val Ets = "__graft_entity_ts"
+  private val Ts = "__graft_ts"
+  private val Tag = "__graft_tag"
+  private val Spine = "__graft_spine"
   private val Vts = "__graft_view_ts"
   private val Vcts = "__graft_view_created_ts"
+  private val Micros = "__graft_micros"
+  private val TsOut = "__graft_matched_ts"
 
   /** Which side of the entity timestamp admits view rows, and which
     * admitted row wins. A view's `ttlSeconds` is its window: the TTL
@@ -88,70 +96,46 @@ object PointInTimeJoin {
   /** Smallest |Δt| either side (ties: earlier row, then least features). */
   private[join] case object Nearest extends Direction
 
-  /** As-of join `entity` against `views`.
+  /** As-of join `entity` against `views`: the entity's columns, then
+    * every view's features under [[ResolvedView.outName]], one output
+    * row per entity row.
     *
     * @param entity   entity spine; must contain `entityTs` and every
     *                 entity-side join key of every view
     * @param entityTs the spine's event-timestamp column
-    * @param rowIdCol a column of `entity` that is already unique per row
-    *                 (used as the stitch key and kept in the output);
-    *                 when None a synthetic id is generated and dropped
-    * @param spineScratchDir when a synthetic id must be materialized,
-    *                 write the id-stamped spine HERE as parquet and
-    *                 read it back, instead of localCheckpoint. This is
-    *                 a DURABILITY trade, not a speed one:
-    *                 localCheckpoint blocks are non-replicated, so on
-    *                 a 1000-executor cluster ANY executor loss kills
-    *                 the job mid-flight, while scratch parquet on the
-    *                 job's storage survives it — but it pays a full
-    *                 codec write plus one read per consumer (measured
-    *                 ~2× slower end-to-end than localCheckpoint on a
-    *                 1.4 GB padded spine with ample RAM, SCALE.md
-    *                 round 9). Prefer `rowIdCol` over either: a
-    *                 natural key skips the materialization entirely
-    *                 (same measurement: 2.5× faster than the
-    *                 checkpoint path at 10×). Ignored when `rowIdCol`
-    *                 is set. Each run's UUID-named spine dir is
-    *                 registered for deletion at JVM exit (Hadoop
-    *                 `FileSystem.deleteOnExit`, any scheme); a crashed
-    *                 driver can still orphan it, so prefer a TTL'd /
-    *                 lifecycle-managed scratch location.
     */
-  def join(
-      entity: DataFrame,
-      entityTs: String,
-      views: Seq[ResolvedView],
-      rowIdCol: Option[String] = None,
-      spineScratchDir: Option[String] = None): DataFrame =
-    asOf(buildSpine(entity, rowIdCol, spineScratchDir), entityTs, views, Backward)
+  def join(entity: DataFrame, entityTs: String, views: Seq[ResolvedView]): DataFrame =
+    asOf(entity, entityTs, views, Backward)
 
   /** The one as-of plan behind [[join]] and every [[DirectionalAsOf]]
-    * entry point. `spine` carries a unique [[RowId]]; the output is the
-    * spine's other columns, then (when `keepViewTs` names it) the first
+    * entry point. The output is the spine's columns (types and
+    * nullability unchanged), then (when `keepViewTs` names it) the first
     * view's matched timestamp, then every view's features under
-    * [[ResolvedView.outName]]. Three steps:
+    * [[ResolvedView.outName]]. One window pass per group of views
+    * sharing (canonicalized source, joinKeys, tsCol, createdTs):
     *
-    *  1. **Candidate join per group**: views sharing (canonicalized
-    *     source, joinKeys, tsCol, createdTs) — e.g. N views over one
-    *     feature table differing only by [[ResolvedView.predicate]] /
-    *     window / feature list — run ONE candidate join over one scan,
-    *     under the widest window of the group.
-    *  2. **One aggregation per group**: each member's pick is a
-    *     `max|min(when(pred && window, orderedStruct))` aggregate over
-    *     the NARROW joined row — the structs exist only inside the
-    *     aggregate buffers (a union-then-aggregate variant measured
-    *     2-3× slower: its aggregation sorted rows carrying one struct
-    *     copy per view), and `max`/`min` skip the `when`'s NULLs, so
-    *     each view reduces over exactly its admissible rows. A view
-    *     whose features are not orderable (a MAP, read from the
-    *     source schema) reduces with `max_by|min_by(struct, gated
-    *     order key)` instead: same winner, except that ties on the
-    *     order key pick an arbitrary row.
-    *  3. **One stitch per group**: a left join on the row id, over the
-    *     spine repartitioned on the row id into the session's shuffle
-    *     partitions (when those are at most one per core), so the
-    *     stitch and everything fused after it run one task per
-    *     partition however small the spine is.
+    *  1. **Union**: the current spine rows (tag 1, carrying all their
+    *     columns as one struct) and the group's pruned view rows (tag
+    *     0), on the join keys. The union widens a key pair of two types
+    *     to the wider one, as `===` would.
+    *  2. **Partition** on the keys, by number (the session's shuffle
+    *     partitions, when those are at most one per core), so the pass
+    *     and everything fused after it (Runner: the encode and the
+    *     write) run one task per partition however small the spine is;
+    *     AQE never coalesces a by-number exchange.
+    *  3. **Pick**: each member's pick is a running
+    *     `max|min(when(tag 0 && pred, struct(orderKey…, features…)))`
+    *     over `ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW`,
+    *     ordered by `(ts, tag)` backward and `(ts desc, tag)` forward —
+    *     so a view row at the entity ts precedes the spine row. Nearest
+    *     takes both orders, the backward side keyed
+    *     `(-unix_micros(ts), ts, …)`, and keeps the nearer pick, the
+    *     earlier one on a |Δt| tie. A view whose features are not
+    *     orderable (a MAP, read from the source schema) picks with
+    *     `max_by|min_by(struct, gated order key)` instead: same winner,
+    *     except that ties on the order key pick an arbitrary row.
+    *  4. **Gate**: keep the tag-1 rows and admit each member's pick
+    *     only inside its own TTL/horizon/tolerance.
     */
   private[join] def asOf(
       spine: DataFrame,
@@ -161,20 +145,12 @@ object PointInTimeJoin {
       keepViewTs: Option[String] = None): DataFrame = {
     require(views.nonEmpty, "at least one feature view required")
     def q(name: String): Column = col(s"`${name.replace("`", "``")}`")
-    val spineCols = spine.columns.toSeq.filter(_ != RowId).map(q)
     def typeOf(v: ResolvedView, c: String) = v.source.schema(c).dataType
-    // Bounded-scan pruning: one tiny job, two values on the driver
-    // (reads the checkpointed spine when one was just materialized).
+    // Bounded-scan pruning: one tiny job, two values on the driver. No
+    // entity timestamp leaves typed NULL bounds, which admit no row.
+    val tsType = spine.select(col(entityTs)).schema.head.dataType
     val bounds = spine.agg(min(col(entityTs)), max(col(entityTs))).head()
-    if (bounds.isNullAt(0)) {
-      // no entity timestamp to match: typed NULL features, same schema
-      val nulls = keepViewTs.map(n =>
-        lit(null).cast(typeOf(views.head, views.head.tsCol)).as(n)).toSeq ++
-        views.flatMap(v => v.features.map(f =>
-          lit(null).cast(typeOf(v, f)).as(v.outName(f))))
-      return spine.select(spineCols ++ nulls: _*)
-    }
-    val (loTs, hiTs) = (bounds.get(0), bounds.get(1))
+    val (loTs, hiTs) = (lit(bounds.get(0)).cast(tsType), lit(bounds.get(1)).cast(tsType))
 
     // A view's window as seconds (before, after) the entity ts: None =
     // unbounded on that side, 0 = the entity ts itself.
@@ -193,14 +169,18 @@ object PointInTimeJoin {
       w._2.map(a => ts <= (if (a == 0) hi else hi + interval(a))).toSeq ++
         w._1.map(b => ts >= (if (b == 0) lo else lo - interval(b)))
 
-    val vCol = views.indices.map(i => s"__graft_v$i")
-    val groupAggs: Seq[DataFrame] = groups(views).map { idxs =>
+    def fCol(j: Int, n: Int) = s"__graft_v${j}_$n"
+    val sess = spine.sparkSession
+    val width = sess.sessionState.conf.numShufflePartitions
+    val byNumber = width <= sess.sparkContext.defaultParallelism
+
+    val joined = groups(views).foldLeft(spine) { (cur, idxs) =>
       val rep = views(idxs.head)
-      val keyAliases =
-        rep.joinKeys.zipWithIndex.map { case (_, i) => s"__graft_k_$i" }
+      val keyNames = rep.joinKeys.indices.map(i => s"__graft_k_$i")
+      val keys = keyNames.map(col)
       // Weakest admission across the group, per side: any unbounded
       // member ⇒ unbounded; else the widest. Each member's own window
-      // is re-checked inside its when() gate below.
+      // is re-checked by its gate below.
       val ws = idxs.map(i => window(views(i)))
       def widest(side: Seq[Option[Long]]) =
         if (side.forall(_.isDefined)) Some(side.flatten.max) else None
@@ -213,90 +193,100 @@ object PointInTimeJoin {
           Some(ps.flatten.map(p => coalesce(p, lit(false))).reduce(_ || _))
         else None
       }
-      val rawFeats = idxs.flatMap(i => views(i).features).distinct
-      val predCols = idxs.flatMap(i => views(i).predicate.map(p =>
-        coalesce(p, lit(false)).as(s"__graft_p_$i")))
       val tsCol0 = col(rep.tsCol)
-      val viewCols =
-        rep.joinKeys.map(_._2).zip(keyAliases).map { case (c, a) => col(c).as(a) } ++
-          Seq(tsCol0.as(Vts)) ++
-          rep.createdTs.map(c => col(c).as(Vcts)).toSeq ++
-          rawFeats.map(f => col(f)) ++ predCols
       val base = anyPred.fold(rep.source)(p => rep.source.filter(p))
-      // Pruned, projected view scan: range filter + needed columns
-      // only, so Catalyst pushes both into the source scan.
-      val pruned = base
-        .filter(within(tsCol0, lit(loTs), lit(hiTs), groupWin).reduce(_ && _))
-        .select(viewCols: _*)
+      // Pruned, projected view scan: range filter, non-NULL keys (an
+      // equi-join never matches a NULL key; a window partition would
+      // group them) and the needed columns only, so Catalyst pushes
+      // all of it into the source scan.
+      val viewRows = base
+        .filter((within(tsCol0, loTs, hiTs, groupWin) ++
+          rep.joinKeys.map(k => col(k._2).isNotNull)).reduce(_ && _))
+        .select(rep.joinKeys.map(_._2).zip(keyNames).map { case (c, a) => col(c).as(a) } ++
+          Seq(tsCol0.as(Ts), lit(0).as(Tag)) ++
+          rep.createdTs.map(c => col(c).as(Vcts)).toSeq ++
+          idxs.flatMap(i => views(i).features).distinct.map(f => col(f)) ++
+          idxs.flatMap(i => views(i).predicate.map(p =>
+            coalesce(p, lit(false)).as(s"__graft_p_$i"))): _*)
+      val carried = cur.columns.toSeq
+      val spineRows = cur.select(
+        rep.joinKeys.map(_._1).zip(keyNames).map { case (c, a) => col(c).as(a) } ++
+          Seq(col(entityTs).as(Ts), lit(1).as(Tag), struct(carried.map(q): _*).as(Spine)): _*)
+      val unioned = spineRows.unionByName(viewRows, allowMissingColumns = true)
+      val parted = if (byNumber) unioned.repartition(width, keys: _*) else unioned
+      def over(desc: Boolean) = Window.partitionBy(keys: _*)
+        .orderBy(if (desc) col(Ts).desc else col(Ts).asc, col(Tag))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-      val left = spine.select(
-        col(RowId) +: col(entityTs).as(Ets) +: rep.joinKeys.map(k => col(k._1)): _*)
-      val keyCond = rep.joinKeys.zip(keyAliases)
-        .map { case ((e, _), a) => left(e) === pruned(a) }
-        .reduce(_ && _)
-      val joined = left.join(pruned,
-        (keyCond +: within(pruned(Vts), left(Ets), left(Ets), groupWin)).reduce(_ && _),
-        "inner")
-
-      val aggExprs = idxs.map { j =>
+      // Per member: the running pick(s), named `__graft_b$j` (the
+      // backward-ordered pass) and `__graft_f$j` (the forward one).
+      val picks: Seq[Column] = idxs.flatMap { j =>
         val w = views(j)
-        val orderKey =
-          (if (dir == Nearest)
-            Seq(abs(unix_micros(col(Vts)) - unix_micros(col(Ets))).as("__graft_diff"))
-          else Nil) ++ (col(Vts) +: w.createdTs.map(_ => col(Vcts)).toSeq)
-        val packed = struct(orderKey ++ w.features.map(f => col(f).as(w.outName(f))): _*)
-        // the member's own predicate and window; a zero bound is the
-        // entity ts itself, which the candidate join already enforces
-        val (before, after) = window(w)
-        val gate = (w.predicate.map(_ => col(s"__graft_p_$j")).getOrElse(lit(true)) +:
-          within(col(Vts), col(Ets), col(Ets), (before.filter(_ > 0), after.filter(_ > 0))))
-          .reduce(_ && _)
+        val admit = w.predicate.fold(col(Tag) === 0)(_ => col(Tag) === 0 && col(s"__graft_p_$j"))
+        val feats = w.features.map(f => col(f).as(w.outName(f)))
         val orderable = w.features.forall(f => RowOrdering.isOrderable(typeOf(w, f)))
-        val pick =
-          if (orderable) {
-            val p = when(gate, packed)
-            if (dir == Backward) max(p) else min(p)
-          } else {
-            val k = when(gate, struct(orderKey: _*))
-            if (dir == Backward) max_by(packed, k) else min_by(packed, k)
-          }
-        pick.as(vCol(j))
+        def pick(key: Seq[Column], desc: Boolean, greatest: Boolean): Column = {
+          val packed = struct(key ++ feats: _*)
+          val agg =
+            if (orderable) {
+              val p = when(admit, packed)
+              if (greatest) max(p) else min(p)
+            } else {
+              val k = when(admit, struct(key: _*))
+              if (greatest) max_by(packed, k) else min_by(packed, k)
+            }
+          agg.over(over(desc))
+        }
+        val byTs = col(Ts).as(Vts) +: rep.createdTs.map(_ => col(Vcts)).toSeq
+        val micros = unix_micros(col(Ts).cast(TimestampType))
+        dir match {
+          case Backward => Seq(pick(byTs, desc = false, greatest = true).as(s"__graft_b$j"))
+          case Forward => Seq(pick(byTs, desc = true, greatest = false).as(s"__graft_f$j"))
+          case Nearest => Seq(
+            pick((-micros).as(Micros) +: byTs, desc = false, greatest = false).as(s"__graft_b$j"),
+            pick(micros.as(Micros) +: byTs, desc = true, greatest = false).as(s"__graft_f$j"))
+        }
       }
-      joined.groupBy(col(RowId)).agg(aggExprs.head, aggExprs.tail: _*)
-    }
 
-    // One stitch join per GROUP (= per distinct source) on the row id.
-    // Left to itself, AQE sizes the spine's stitch exchange by bytes
-    // and folds a small spine into ONE partition; once it turns the
-    // stitch into a broadcast join, that one task also runs everything
-    // downstream (Runner: the encode and the gzip write of every
-    // split). So the spine is repartitioned on the row id BY NUMBER,
-    // which AQE never coalesces. The number is the shuffle width of
-    // the group aggregations: planning re-targets any other count to
-    // it, so it is the stitch's width either way, and the exchange
-    // replaces the implicit one (same rows, same bytes). It is pinned
-    // only while that width is at most one partition per core: a
-    // session that shuffles wider (Spark's default 200) keeps AQE's
-    // coalescing rather than split a small job into 200 tasks.
-    val sess = spine.sparkSession
-    val width = sess.sessionState.conf.numShufflePartitions
-    val base =
-      if (width <= sess.sparkContext.defaultParallelism) spine.repartition(width, col(RowId))
-      else spine
-    val stitched = groupAggs.foldLeft(base) { (acc, g) =>
-      acc.join(g, Seq(RowId), "left")
+      // Keep the spine rows; restore their columns (KnownNotNull: the
+      // union made the struct nullable, its fields keep their own
+      // nullability) and gate each member's pick by its own window.
+      val ets = col(Ts)
+      val spineStruct = Bridge.column(KnownNotNull(Bridge.expression(col(Spine))))
+      val gated = idxs.flatMap { j =>
+        val w = views(j)
+        val (b, f) = (col(s"__graft_b$j"), col(s"__graft_f$j"))
+        val p = dir match {
+          case Backward => b
+          case Forward  => f
+          case Nearest  =>
+            // b keys on -micros(view ts), f on micros(view ts); the
+            // nearer side wins, and a |Δt| tie goes to the earlier row, b
+            val e = unix_micros(ets.cast(TimestampType))
+            when(f.isNull || (b.isNotNull &&
+              e + b.getField(Micros) <= f.getField(Micros) - e), b).otherwise(f)
+        }
+        val (before, after) = window(w)
+        val kept = when((ets.isNotNull +: within(p.getField(Vts), ets, ets,
+          (before.filter(_ > 0), after.filter(_ > 0)))).reduce(_ && _), p)
+        (if (j == 0 && keepViewTs.isDefined) Seq(kept.getField(Vts).as(TsOut)) else Nil) ++
+          w.features.indices.map(n => kept.getField(w.outName(w.features(n))).as(fCol(j, n)))
+      }
+      parted.select(Seq(col(Tag), ets, col(Spine)) ++ picks: _*)
+        .filter(col(Tag) === 1)
+        .select(carried.map(c => spineStruct.getField(c).as(c)) ++ gated: _*)
     }
-    stitched.select(spineCols ++
-      keepViewTs.map(n => col(vCol.head).getField(Vts).as(n)) ++
-      views.zipWithIndex.flatMap { case (v, i) =>
-        v.features.map(f => col(vCol(i)).getField(v.outName(f)).as(v.outName(f)))
+    joined.select(spine.columns.toSeq.map(q) ++
+      keepViewTs.map(n => col(TsOut).cast(typeOf(views.head, views.head.tsCol)).as(n)) ++
+      views.zipWithIndex.flatMap { case (v, j) =>
+        v.features.indices.map(n => col(fCol(j, n)).as(v.outName(v.features(n))))
       }: _*)
   }
 
   /** Group views by source identity (canonicalized plan — reference
     * equality would miss separate loads of the same table), join keys,
     * and timestamp semantics; group order is deterministic. Members of
-    * one group run ONE candidate join over one scan in [[asOf]]. */
+    * one group share one scan and one window pass in [[asOf]]. */
   private def groups(views: Seq[ResolvedView]): Seq[Seq[Int]] =
     views.zipWithIndex
       .groupBy { case (v, _) =>
@@ -304,51 +294,4 @@ object PointInTimeJoin {
           v.joinKeys, v.tsCol, v.createdTs)
       }
       .values.map(_.map(_._2).toSeq).toSeq.sortBy(_.head)
-
-  /** Id-stamped spine, materialized once when the id is synthetic. */
-  private def buildSpine(
-      entity: DataFrame,
-      rowIdCol: Option[String],
-      spineScratchDir: Option[String]): DataFrame =
-    rowIdCol match {
-      case Some(c) => entity.withColumn(RowId, col(c))
-      case None =>
-        // Synthetic ids must come out IDENTICAL in every consumer of
-        // the spine (the stitch base plus each view's entity
-        // projection), but monotonically_increasing_id depends on
-        // partition layout and the spine subtree would otherwise
-        // re-execute once per consumer — shuffle fetch order can
-        // reorder rows between executions and silently reassign ids
-        // (misjoined features at cluster scale). Materializing the ids
-        // once lets every consumer read stored partitions, which also
-        // removes the V+1 recomputes of the upstream entity scan.
-        // Callers with a natural unique key should pass rowIdCol and
-        // skip the materialization entirely.
-        val withId = entity.withColumn(RowId, monotonically_increasing_id())
-        spineScratchDir match {
-          case Some(dir) =>
-            // NOT underscore-prefixed: Hadoop's default path filter
-            // treats `_`/`.`-led names as hidden metadata, so an
-            // underscore-named spine dir is invisible to any listing
-            // of the scratch dir (Spark WARNs "All paths were
-            // ignored" even on the direct read).
-            val p = s"$dir/graft-spine-${java.util.UUID.randomUUID()}"
-            withId.write.mode("overwrite").parquet(p)
-            val sess = entity.sparkSession
-            // The UUID-named spine is only consumed within this JVM
-            // (every consumer is a lazy scan of it), so register it for
-            // deletion at JVM exit — via Hadoop FileSystem.deleteOnExit,
-            // which is scheme-agnostic (local, HDFS, object stores) and
-            // runs inside the FS cache's own ordered shutdown hook,
-            // unlike java.io.File. Without this, every run leaks a
-            // GB-scale suffix-unique dir into the scratch location. A
-            // crashed driver can still orphan the dir: point
-            // spineScratchDir at a TTL'd / lifecycle-managed path.
-            val hp = new org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(sess.sparkContext.hadoopConfiguration)
-              .deleteOnExit(hp): Unit
-            sess.read.parquet(p)
-          case None => withId.localCheckpoint(true)
-        }
-    }
 }

@@ -28,10 +28,10 @@ object SaltedJoin {
     require(Seq("inner", "left", "left_outer", "leftouter").contains(joinType.toLowerCase),
       s"salted join preserves only inner/left semantics, got $joinType")
     // Salt assignment only needs to spread a hot key's rows uniformly —
-    // any per-row value works; a hash of a unique per-row id keeps it
-    // deterministic within the job.
+    // any per-row value works; a seeded rand depends only on the
+    // partition and the row's place in it, as a per-row id would.
     val salted = skewed.withColumn("__graft_salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(saltFactor.toLong)))
+      (rand(17) * saltFactor).cast("long"))
     val replicated = other.withColumn("__graft_salt",
       explode(sequence(lit(0L), lit(saltFactor - 1L))))
     val cond = (keys.map { case (l, r) => salted(l) === replicated(r) } :+

@@ -29,9 +29,8 @@ object Graph {
     * Contributions accumulate through DECIMAL(38,18) — order-free
     * sums, bit-identical ranks under any partitioning.
     *
-    * Durability dial (`scratchDir`) — the same trade the PIT spine
-    * exposes ([[graft.join.PointInTimeJoin]] `spineScratchDir`): the
-    * default `localCheckpoint(true)` blocks are NON-replicated, so on
+    * Durability dial (`scratchDir`): the default
+    * `localCheckpoint(true)` blocks are NON-replicated, so on
     * a real cluster ANY executor loss mid-run kills the whole
     * iteration chain — acceptable for short batch-local runs, not for
     * a long job on 1000 executors. With `scratchDir` set, the node

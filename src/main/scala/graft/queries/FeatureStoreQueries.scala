@@ -163,7 +163,7 @@ object FeatureStoreQueries {
           joinKeys = Seq("user_id" -> "o_custkey"),
           tsCol = "o_orderdate",
           features = Seq("o_totalprice", "o_orderstatus"))
-        PointInTimeJoin.join(entity, "ts", Seq(view), rowIdCol = Some("event_id"))
+        PointInTimeJoin.join(entity, "ts", Seq(view))
       },
       Some("""
         WITH c AS (
@@ -179,12 +179,13 @@ object FeatureStoreQueries {
 
     // Adversarial-skew PIT: one synthetic hot entity key carries ~10%
     // of the spine (every 10th event remaps to user 1), concentrating
-    // the as-of join's equi-key shuffle on one partition — the regime
-    // AqeSkewSpec proves AQE splits at runtime (skew known a priori
-    // would use SaltedJoin instead). Values stay exactly oracle-
-    // checkable: the remap is deterministic arithmetic both engines
-    // compute identically, so this doubles as a bench-weighted canary
-    // that the PIT plan survives a hot key without a wrong answer.
+    // the as-of join's key partitioning on one partition, where the
+    // window pass sorts it (AqeSkewSpec pins the rows on a 10%-hot
+    // spine; skew known a priori would use SaltedJoin). Values stay
+    // exactly oracle-checkable: the remap is deterministic arithmetic
+    // both engines compute identically, so this doubles as a
+    // bench-weighted canary that the PIT plan survives a hot key
+    // without a wrong answer.
     QueryDef(
       "pit_skew_hotkey",
       (s, dir) => {
@@ -199,7 +200,7 @@ object FeatureStoreQueries {
           joinKeys = Seq("user_id" -> "o_custkey"),
           tsCol = "o_orderdate",
           features = Seq("o_totalprice", "o_orderstatus"))
-        PointInTimeJoin.join(entity, "ts", Seq(view), rowIdCol = Some("event_id"))
+        PointInTimeJoin.join(entity, "ts", Seq(view))
       },
       Some("""
         WITH e2 AS (
@@ -272,7 +273,7 @@ object FeatureStoreQueries {
           joinKeys = Seq("user_id" -> "c_custkey"),
           tsCol = "static_ts",
           features = Seq("c_acctbal", "c_mktsegment"))
-        PointInTimeJoin.join(entity, "ts", Seq(orders, customer), rowIdCol = Some("event_id"))
+        PointInTimeJoin.join(entity, "ts", Seq(orders, customer))
       },
       Some("""
         WITH o1 AS (
@@ -290,9 +291,9 @@ object FeatureStoreQueries {
 
     // Bench-weight engine-core query: multi-view TTL PIT join on a
     // lineitem-scale spine (the largest table as entities) — a
-    // time-varying TTL-bounded view plus a broadcastable static
-    // dimension view. PointInTimeJoinSpec asserts the plan shape
-    // (pruned views broadcast, no stray exchanges).
+    // time-varying TTL-bounded view plus a static dimension view.
+    // PointInTimeJoinSpec asserts the plan shape (one window pass per
+    // source, the TTL range pushed into the orders scan).
     QueryDef(
       "pit_lineitem_multiview_ttl",
       (s, dir) => {
@@ -339,24 +340,20 @@ object FeatureStoreQueries {
 
 
     // Eight views over two sources: the join groups them by source —
-    // one candidate join, one aggregation and one row-id stitch per
-    // source, however many views, and no cross-view fan-out
-    // (PointInTimeJoinSpec asserts the plan). Natural unique key
-    // (event_id): no spine materialization needed.
+    // one scan and one window pass per source, however many views, and
+    // no cross-view fan-out (PointInTimeJoinSpec asserts the plan).
     QueryDef(
       "pit_manyviews",
       (s, dir) => {
         val (entity, views) = manyViewsInput(s, dir)
-        PointInTimeJoin.join(entity, "ts", views, rowIdCol = Some("event_id"))
+        PointInTimeJoin.join(entity, "ts", views)
       },
       Some(ManyViewsSql)),
 
-    // Synthetic-id twin: the path a spine WITHOUT a natural unique key
-    // takes (Runner default). The join materializes the id-stamped
-    // spine once via localCheckpoint so every view consumer reads the
-    // same ids — identical output, one extra materialization; the
-    // exchange/materialization delta vs pit_manyviews is the measured
-    // cost of lacking a natural key at scale (SCALE.md).
+    // Twin of pit_manyviews, kept under its declared name: it used to
+    // take a synthetic row id where pit_manyviews took event_id; the
+    // join needs no row id now, so this is the same call, and it shares
+    // the oracle verbatim.
     QueryDef(
       "pit_manyviews_synth",
       (s, dir) => {
@@ -372,7 +369,7 @@ object FeatureStoreQueries {
       "pit_manyviews_fused",
       (s, dir) => {
         val (entity, views) = manyViewsInput(s, dir)
-        PointInTimeJoin.join(entity, "ts", views, rowIdCol = Some("event_id"))
+        PointInTimeJoin.join(entity, "ts", views)
       },
       Some(ManyViewsSql)),
 
@@ -628,7 +625,7 @@ object FeatureStoreQueries {
           viewTs = "ts",
           joinKeys = Seq("user_id" -> "v_user"),
           features = Seq("next_type", "next_value"),
-          horizonSeconds = 48L * 3600, rowIdCol = "event_id",
+          horizonSeconds = 48L * 3600,
           keepViewTs = true)
       },
       Some("""
@@ -668,7 +665,7 @@ object FeatureStoreQueries {
           viewTs = "ts",
           joinKeys = Seq("user_id" -> "v_user"),
           features = Seq("err_value"),
-          toleranceSeconds = 24L * 3600, rowIdCol = "event_id",
+          toleranceSeconds = 24L * 3600,
           keepViewTs = true)
       },
       Some("""
@@ -698,20 +695,20 @@ object FeatureStoreQueries {
       (s, dir) => {
         val e = table(s, dir, "events")
         graft.join.DirectionalAsOf.forwardMulti(
-          forwardMultiEntity(e), "p_ts", forwardMultiViews(e), "event_id")
+          forwardMultiEntity(e), "p_ts", forwardMultiViews(e))
       },
       Some(ForwardMultiSql)),
 
     // Twin of pit_forward_multi, kept under its declared name: the
-    // same call (one candidate join over ONE scan of the shared
-    // source, per-view horizons/predicates gated inside min(when(...))
-    // aggregates), sharing pit_forward_multi's oracle SQL VERBATIM.
+    // same call (one window pass over ONE scan of the shared source,
+    // per-view horizons/predicates gated inside min(when(...))
+    // picks), sharing pit_forward_multi's oracle SQL VERBATIM.
     QueryDef(
       "pit_forward_multi_fused",
       (s, dir) => {
         val e = table(s, dir, "events")
         graft.join.DirectionalAsOf.forwardMulti(
-          forwardMultiEntity(e), "p_ts", forwardMultiViews(e), "event_id")
+          forwardMultiEntity(e), "p_ts", forwardMultiViews(e))
       },
       Some(ForwardMultiSql))
   )

@@ -681,7 +681,7 @@ object ShapingQueries {
           features = Seq("o_orderdate"))
         val stale = (unix_micros(col("ts")) - unix_micros(col("o_orderdate")))
           .cast("double") / 86400000000.0
-        PointInTimeJoin.join(entity, "ts", Seq(view), rowIdCol = Some("event_id"))
+        PointInTimeJoin.join(entity, "ts", Seq(view))
           .withColumn("stale_days", stale)
           .agg(
             count(lit(1)).as("n_events"),

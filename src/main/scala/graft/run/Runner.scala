@@ -25,10 +25,9 @@ import graft.registry.{FeatureRef, Registry}
   *                      entity SQL before execution (X3; the inherited
   *                      TFX driver does this at
   *                      `example/usage_prototype.py:46-48`)
-  * @param entityRowId   a column of the entity SQL result that is
-  *                      already unique per row; when set the PIT join
-  *                      uses it as the stitch key and skips the
-  *                      synthetic-id spine materialization
+  *
+  * The entity SQL result needs no unique key: the PIT join returns one
+  * row per entity row, duplicates included, and materializes nothing.
   */
 final case class JobConfig(
     registry: Registry,
@@ -44,9 +43,7 @@ final case class JobConfig(
     outputFormat: OutputFormat = TfExampleFormat,
     span: Long = 0,
     artifactVersion: Long = 0,
-    transforms: Seq[Transforms.TransformSpec] = Nil,
-    entityRowId: Option[String] = None,
-    spineScratchDir: Option[String] = None)
+    transforms: Seq[Transforms.TransformSpec] = Nil)
 
 /** Payload-format dispatch — total, unlike the reference's C5 dispatch
   * (`executor.py:141-153`) whose SequenceExample branch raised. */
@@ -157,22 +154,7 @@ object Runner {
     if (views.isEmpty) return entity
     // Entity-side join keys: by convention the entity SQL exposes
     // columns named like the view's entity keys.
-    // A natural unique entity key (entityRowId) lets the join skip the
-    // synthetic-id spine materialization — at 100 TB that
-    // materialization is the cost of not having one (measured 2.5×
-    // end-to-end on a wide payload, SCALE.md round 9). Without a
-    // natural key, spineScratchDir trades localCheckpoint's
-    // block-manager rows for durable scratch parquet (see
-    // PointInTimeJoin). Surface the cost when it will actually bite:
-    // a wide entity row makes the materialization O(payload bytes).
-    if (job.entityRowId.isEmpty && entity.schema.fields.length > 8)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"PIT spine has ${entity.schema.fields.length} columns and no " +
-          "entityRowId: the synthetic-id path materializes the FULL wide " +
-          "spine (O(payload bytes)). Pass a unique entity column as " +
-          "entityRowId to skip it (measured 2.5x end-to-end on wide payloads).")
-    PointInTimeJoin.join(entity, job.entityTs, views,
-      rowIdCol = job.entityRowId, spineScratchDir = job.spineScratchDir)
+    PointInTimeJoin.join(entity, job.entityTs, views)
   }
 
   /** Flatten STRUCT columns into dotted-name leaf columns so nested

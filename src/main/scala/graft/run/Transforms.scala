@@ -125,9 +125,9 @@ object Transforms {
     "budget_select" -> Seq("key", "score", "cost", "budget"),
     "sample_weighted" -> Seq("key", "weight", "n"),
     "classifier_filter" -> Seq("key", "col", "label", "min_score"),
-    "forward_label" -> Seq("id", "ts", "source", "source_ts", "keys",
+    "forward_label" -> Seq("ts", "source", "source_ts", "keys",
       "features", "horizon"),
-    "nearest_label" -> Seq("id", "ts", "source", "source_ts", "keys",
+    "nearest_label" -> Seq("ts", "source", "source_ts", "keys",
       "features", "tolerance"),
     "tokenize_against" -> Seq("key", "col", "model", "family"),
     "pack_sequences" -> Seq("key", "col", "max_len"),
@@ -537,8 +537,8 @@ object Transforms {
       // supervised-training pattern "did the user convert within N
       // seconds") or the closest reading within a tolerance
       // (nearest_label) from a persisted label table. Unmatched rows
-      // keep NULL labels (left semantics); `id` names a unique row
-      // column of the frame (the stitch key). `keys` are
+      // keep NULL labels (left semantics), and every row of the frame
+      // comes back once, duplicates included. `keys` are
       // entityCol:labelCol pairs joined with '|'; `prefix` renames the
       // emitted label columns `prefix__feature` so they can never
       // collide with the frame's own.
@@ -560,13 +560,11 @@ object Transforms {
         if (t.name == "forward_label")
           graft.join.DirectionalAsOf.forward(
             df, t.arg("ts"), view, sourceTs, keys, features,
-            t.arg("horizon").toLong, rowIdCol = t.arg("id"),
-            keepViewTs = keepTs)
+            t.arg("horizon").toLong, keepViewTs = keepTs)
         else
           graft.join.DirectionalAsOf.nearest(
             df, t.arg("ts"), view, sourceTs, keys, features,
-            t.arg("tolerance").toLong, rowIdCol = t.arg("id"),
-            keepViewTs = keepTs)
+            t.arg("tolerance").toLong, keepViewTs = keepTs)
       t.args.get("prefix") match {
         case None => labeled
         case Some(p) =>

@@ -127,8 +127,8 @@ object StreamingOps {
     * them as late — use [[pitStreamStreamWithState]] for full batch
     * left-join parity (nulls for feature-less events).
     *
-    * `eventIdCol` must uniquely identify an event row (the stitch key,
-    * like the batch join's rowIdCol). */
+    * `eventIdCol` must uniquely identify an event row (the key of the
+    * per-event argmax state). */
   def pitStreamStream(
       events: DataFrame, eventIdCol: String, eventTsCol: String,
       features: DataFrame, featureTsCol: String,
@@ -402,32 +402,15 @@ object StreamingOps {
     * (a stream-stream as-of join); feature views here are batch tables,
     * matching the reference's offline-store model.
     *
-    * Pass `rowIdCol` whenever the stream HAS a unique event id (it
-    * almost always does): without one, the join must materialize a
-    * synthetic-id spine per micro-batch via localCheckpoint — this
-    * wrapper releases those blocks after the sink consumes the batch
-    * (otherwise one persisted block accumulates PER MICRO-BATCH until
-    * driver GC, the monitor-leak class the drift scorers were purged
-    * of in r9), but the natural key skips the materialization
-    * entirely. Each batch runs the batch runner's plan
-    * ([[PointInTimeJoin.join]]: one candidate join per distinct
-    * source). */
+    * Each batch runs the batch runner's plan ([[PointInTimeJoin.join]]:
+    * one window pass per distinct source), which persists nothing, so
+    * no block outlives its micro-batch. */
   def pitEnrichStream(
-      entities: DataFrame, entityTs: String, views: Seq[ResolvedView],
-      rowIdCol: Option[String] = None)(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+      entities: DataFrame, entityTs: String, views: Seq[ResolvedView])(
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     entities.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      val sc = batch.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val joined = PointInTimeJoin.join(batch.toDF(), entityTs, views, rowIdCol = rowIdCol)
-      // ids persisted DURING join construction = this batch's spine
-      // checkpoint (empty when rowIdCol is set) — never the sink's own
-      val spineBlocks = sc.getPersistentRDDs.keySet -- before
-      sink(joined, batchId)
-      spineBlocks.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      sink(PointInTimeJoin.join(batch.toDF(), entityTs, views), batchId)
     }
-  }
 
   /** Streaming drift monitor: every micro-batch is scored against a
     * fitted [[graft.ops.FeatureStats.DriftModel]] of any binning,

@@ -8,18 +8,21 @@ import PointInTimeJoin.{Backward, Direction, Forward, Nearest}
 /** Naive in-memory as-of oracle for the join specs: collects the entity
   * frame and every view's rows, and for each entity row scans that
   * key's view rows — no Spark join, aggregate or window. Timestamps
-  * compare in microseconds; NULLs order first, as in Spark structs.
+  * compare in microseconds; NULLs order first, as in Spark structs. An
+  * entity row is identified by all of its columns, so neither a unique
+  * id nor distinct rows are assumed.
   *
   * A view's `ttlSeconds` is its window in every direction (the
   * [[PointInTimeJoin.asOf]] contract): the TTL backward (None/0 =
   * unbounded), the horizon forward, the tolerance for nearest. */
 object AsOfOracle {
 
-  /** Entity id → every admissible winner of `v` (several only when rows
-    * tie on the whole order key), each as its feature values. Entity
-    * rows without an admissible view row are absent. */
-  def winners(entity: DataFrame, idCol: String, entityTs: String,
-      v: ResolvedView, dir: Direction): Map[Any, Seq[Seq[Any]]] = {
+  /** Entity row (all its columns) → every admissible winner of `v`
+    * (several only when rows tie on the whole order key), each as its
+    * feature values. Entity rows without an admissible view row are
+    * absent; equal entity rows share one entry. */
+  def winners(entity: DataFrame, entityTs: String,
+      v: ResolvedView, dir: Direction): Map[Seq[Any], Seq[Seq[Any]]] = {
     val keyCols = v.joinKeys.map(_._2)
     val src = v.predicate.fold(v.source)(p => v.source.filter(p))
     val viewRows = src.select((keyCols ++ Seq(v.tsCol) ++ v.createdTs ++ v.features)
@@ -29,11 +32,16 @@ object AsOfOracle {
       .groupBy(_._1).map { case (k, rs) => k -> rs.map(_._2) }
     val nCreated = v.createdTs.size
     val window = v.ttlSeconds.filter(_ > 0).map(_ * 1000000L)
-    entity.select((idCol +: entityTs +: v.joinKeys.map(_._1)).map(c => col(c)): _*)
-      .collect().toSeq.flatMap { e =>
-        val ets = Option(e.get(1)).map(micros)
-        val cands = (for (t <- ets.toSeq; row <- viewRows.getOrElse(e.toSeq.drop(2), Nil)
-            if row.head != null) yield {
+    val tsAt = entity.columns.indexOf(entityTs)
+    val keyAt = v.joinKeys.map(k => entity.columns.indexOf(k._1))
+    // keys compare as numbers across integral types (an Int entity key
+    // equals a Long view key of the same value, as under `===`)
+    def norm(k: Any): Any = k match { case i: Int => i.toLong; case x => x }
+    val byKey = viewRows.map { case (k, rs) => k.map(norm) -> rs }
+    entity.collect().toSeq.map(_.toSeq).distinct.flatMap { e =>
+      val ets = Option(e(tsAt)).map(micros)
+      val cands = (for (t <- ets.toSeq; row <- byKey.getOrElse(keyAt.map(i => norm(e(i))), Nil)
+          if row.head != null) yield {
           val d = micros(row.head) - t
           val admitted = dir match {
             case Backward => d <= 0 && window.forall(-d <= _)
@@ -61,29 +69,34 @@ object AsOfOracle {
               val top = tied.reduce((a, b) => if (sign(a, b) >= 0) a else b)
               tied.filter(compare(_, top) == 0)
             }
-          Some(e.get(0) -> best)
+          Some(e -> best)
         }
       }.toMap
   }
 
-  /** Asserts `out` holds exactly one row per entity row, with each
-    * view's features (under [[ResolvedView.outName]]) equal to an
-    * oracle winner, or NULL where the oracle admits none. */
-  def check(out: DataFrame, entity: DataFrame, idCol: String,
-      entityTs: String, views: Seq[ResolvedView], dir: Direction = Backward): Unit = {
-    val got: Map[Any, Row] = out.collect().map(r => r.getAs[Any](idCol) -> r).toMap
-    val n = entity.count()
-    assert(out.count() == n && got.size == n,
-      s"expected one output row per entity row ($n), got ${out.count()}")
+  /** Asserts `out` holds exactly one row per entity row (duplicates
+    * included: the spine's leading columns, as a multiset, are the
+    * entity's rows), with each view's features (under
+    * [[ResolvedView.outName]]) equal to an oracle winner for that
+    * row, or NULL where the oracle admits none. */
+  def check(out: DataFrame, entity: DataFrame, entityTs: String,
+      views: Seq[ResolvedView], dir: Direction = Backward): Unit = {
+    val n = entity.columns.length
+    val rows = out.collect().toSeq
+    def counts(xs: Seq[Seq[Any]]) = xs.groupBy(identity).map { case (k, v) => k -> v.size }
+    val want = entity.collect().toSeq.map(_.toSeq)
+    assert(counts(rows.map(_.toSeq.take(n))) == counts(want),
+      s"expected one output row per entity row (${want.size}), got ${rows.size}")
     views.foreach { v =>
-      val want = winners(entity, idCol, entityTs, v, dir)
-      got.foreach { case (id, r) =>
+      val ws = winners(entity, entityTs, v, dir)
+      rows.foreach { r =>
+        val e = r.toSeq.take(n)
         val feats = v.features.map(f => r.getAs[Any](v.outName(f)))
-        val ok = want.get(id) match {
+        val ok = ws.get(e) match {
           case None => feats.forall(_ == null)
-          case Some(ws) => ws.contains(feats)
+          case Some(w) => w.contains(feats)
         }
-        assert(ok, s"view ${v.name}, $idCol=$id: got $feats, oracle ${want.get(id)}")
+        assert(ok, s"view ${v.name}, entity row $e: got $feats, oracle ${ws.get(e)}")
       }
     }
   }

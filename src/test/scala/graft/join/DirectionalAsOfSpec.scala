@@ -44,7 +44,7 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
     val out = DirectionalAsOf.forward(
       entities, "ets", feats, "fts",
       joinKeys = Seq("key" -> "fkey"), features = Seq("v"),
-      horizonSeconds = 3600, rowIdCol = "eid", keepViewTs = true)
+      horizonSeconds = 3600, keepViewTs = true)
     out.count() shouldBe 4 // left semantics: every entity survives
     val m = rows(out)
     m(1) shouldBe (Some(t("2024-01-01 10:30:00")), Some(1.0)) // not the 09:00 (past) or 11:00 (later)
@@ -57,7 +57,7 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
     val out = DirectionalAsOf.forward(
       entities.filter(col("eid") === 3), "ets", feats, "fts",
       joinKeys = Seq("key" -> "fkey"), features = Seq("v"),
-      horizonSeconds = 24 * 3600, rowIdCol = "eid", keepViewTs = true)
+      horizonSeconds = 24 * 3600, keepViewTs = true)
     rows(out)(3) shouldBe (Some(t("2024-01-02 10:00:00")), Some(4.0))
   }
 
@@ -65,7 +65,7 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
     val out = DirectionalAsOf.nearest(
       entities, "ets", feats, "fts",
       joinKeys = Seq("key" -> "fkey"), features = Seq("v"),
-      toleranceSeconds = 2 * 3600, rowIdCol = "eid", keepViewTs = true)
+      toleranceSeconds = 2 * 3600, keepViewTs = true)
     val m = rows(out)
     m(1) shouldBe (Some(t("2024-01-01 10:30:00")), Some(1.0)) // 30m beats 60m both sides
     m(2) shouldBe (Some(t("2024-01-01 11:00:00")), Some(2.0)) // backward match admitted
@@ -74,7 +74,7 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
     val tied = DirectionalAsOf.nearest(
       entities.filter(col("eid") === 3), "ets", feats, "fts",
       joinKeys = Seq("key" -> "fkey"), features = Seq("v"),
-      toleranceSeconds = 24 * 3600, rowIdCol = "eid", keepViewTs = true)
+      toleranceSeconds = 24 * 3600, keepViewTs = true)
     rows(tied)(3) shouldBe (Some(t("2023-12-31 10:00:00")), Some(5.0))
   }
 
@@ -87,7 +87,7 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
         col("value").as("next_value"))
     val got = DirectionalAsOf.forward(entity, "p_ts", view, "ts",
       Seq("user_id" -> "v_user"), Seq("next_value"),
-      horizonSeconds = 48 * 3600, rowIdCol = "event_id", keepViewTs = true)
+      horizonSeconds = 48 * 3600, keepViewTs = true)
     // Reference: plain left range join + row_number window.
     val joined = entity.join(view,
       entity("user_id") === view("v_user") && view("ts") >= entity("p_ts") &&
@@ -153,10 +153,10 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
 
   test("forwardMulti: the naive oracle agrees; one scan per source") {
     val (entity, views, _) = multiViewFixture()
-    val out = DirectionalAsOf.forwardMulti(entity, "p_ts", views, "event_id")
+    val out = DirectionalAsOf.forwardMulti(entity, "p_ts", views)
     out.columns.toSeq shouldBe Seq("event_id", "user_id", "p_ts", "nv__next_value",
       "ne__next_value", "na__next_value", "na__etype", "os__any_value")
-    AsOfOracle.check(out, entity, "event_id", "p_ts", views.map(asResolved),
+    AsOfOracle.check(out, entity, "p_ts", views.map(asResolved),
       PointInTimeJoin.Forward)
     // Plan pin: the shared labels source scans ONCE for its three
     // views; the second source scans once.
@@ -166,8 +166,8 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
 
   test("nearestMulti: the naive oracle agrees on mixed tolerances; one scan per source") {
     val (entity, views, _) = multiViewFixture()
-    val out = DirectionalAsOf.nearestMulti(entity, "p_ts", views, "event_id")
-    AsOfOracle.check(out, entity, "event_id", "p_ts", views.map(asResolved),
+    val out = DirectionalAsOf.nearestMulti(entity, "p_ts", views)
+    AsOfOracle.check(out, entity, "p_ts", views.map(asResolved),
       PointInTimeJoin.Nearest)
     scansOf(out, "labels\\.parquet") shouldBe 1
   }
@@ -187,25 +187,25 @@ class DirectionalAsOfSpec extends SparkSpec with Matchers {
         outputPrefix = Some("mv")),
       DirectionalView("scalar", src, "fts", Seq("key" -> "fkey"), Seq("x"), 7200L,
         outputPrefix = Some("sv")))
-    val fwd = DirectionalAsOf.forwardMulti(entity, "ets", views, "eid")
-    AsOfOracle.check(fwd, entity, "eid", "ets", views.map(asResolved), PointInTimeJoin.Forward)
+    val fwd = DirectionalAsOf.forwardMulti(entity, "ets", views)
+    AsOfOracle.check(fwd, entity, "ets", views.map(asResolved), PointInTimeJoin.Forward)
     fwd.filter(col("eid") === 1).select("mv__m").head().getMap[String, Double](0) shouldBe
       Map("a" -> 2.0)
-    val near = DirectionalAsOf.nearestMulti(entity, "ets", views, "eid")
-    AsOfOracle.check(near, entity, "eid", "ets", views.map(asResolved), PointInTimeJoin.Nearest)
+    val near = DirectionalAsOf.nearestMulti(entity, "ets", views)
+    AsOfOracle.check(near, entity, "ets", views.map(asResolved), PointInTimeJoin.Nearest)
   }
 
   test("empty entity frame keeps the directional output columns, typed, with zero rows") {
     val empty = entities.filter(col("eid") < 0)
     def fwd(e: org.apache.spark.sql.DataFrame) = DirectionalAsOf.forward(
       e, "ets", feats, "fts", Seq("key" -> "fkey"), Seq("v"),
-      horizonSeconds = 3600, rowIdCol = "eid", keepViewTs = true)
+      horizonSeconds = 3600, keepViewTs = true)
     def near(e: org.apache.spark.sql.DataFrame) = DirectionalAsOf.nearest(
       e, "ets", feats, "fts", Seq("key" -> "fkey"), Seq("v"),
-      toleranceSeconds = 3600, rowIdCol = "eid", keepViewTs = true)
+      toleranceSeconds = 3600, keepViewTs = true)
     def multi(e: org.apache.spark.sql.DataFrame) = DirectionalAsOf.forwardMulti(
       e, "ets", Seq(DirectionalView("f", feats, "fts", Seq("key" -> "fkey"),
-        Seq("v"), 3600L, outputPrefix = Some("p"))), "eid")
+        Seq("v"), 3600L, outputPrefix = Some("p"))))
     for ((name, run) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
         "forward" -> fwd, "nearest" -> near, "forwardMulti" -> multi)) {
       val got = run(empty)

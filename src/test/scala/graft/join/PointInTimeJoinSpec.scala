@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{lit, map => mapOf}
 import org.apache.spark.sql.types._
+import org.scalatest.matchers.should.Matchers
+
 import graft.SparkSpec
 
 import PointInTimeJoin.Backward
@@ -15,7 +17,7 @@ import PointInTimeJoin.Backward
   * or the naive in-memory [[AsOfOracle]], for orderable features and for
   * views carrying a MAP feature (which reduce through `max_by`).
   */
-class PointInTimeJoinSpec extends SparkSpec {
+class PointInTimeJoinSpec extends SparkSpec with Matchers {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
@@ -64,7 +66,7 @@ class PointInTimeJoinSpec extends SparkSpec {
 
     test(s"asof semantics with ttl, $label") {
       val out = PointInTimeJoin.join(
-        entity, "event_ts", Seq(v(Some(30L * 86400))), rowIdCol = Some("eid"))
+        entity, "event_ts", Seq(v(Some(30L * 86400))))
       val got = vals(out)
       assert(got(1L) == "b2")   // latest <= ts, created tie-break picks b2
       assert(got(2L) == "a")    // boundary: fts == entity ts is admitted
@@ -76,7 +78,7 @@ class PointInTimeJoinSpec extends SparkSpec {
 
     test(s"unbounded ttl admits old rows, $label") {
       val out = PointInTimeJoin.join(
-        entity, "event_ts", Seq(v(None)), rowIdCol = Some("eid"))
+        entity, "event_ts", Seq(v(None)))
       assert(vals(out)(3L) == "stale") // no ttl → the old row matches
     }
   }
@@ -89,7 +91,7 @@ class PointInTimeJoinSpec extends SparkSpec {
       .toDF("key", "fts", "created", "val")
     val v = ResolvedView("v", f, Seq("key" -> "key"), "fts", Some("created"),
       Seq("val"), Some(30L * 86400))
-    val got = PointInTimeJoin.join(e, "event_ts", Seq(v), rowIdCol = Some("eid"))
+    val got = PointInTimeJoin.join(e, "event_ts", Seq(v))
       .select("val").head().getString(0)
     assert(got == "edge")
   }
@@ -103,7 +105,7 @@ class PointInTimeJoinSpec extends SparkSpec {
     ).toDF("key", "fts2", "score")
     val v2 = ResolvedView("v2", extra, Seq("key" -> "key"), "fts2",
       None, Seq("score"), None, outputPrefix = Some("v2"))
-    val out = PointInTimeJoin.join(entity, "event_ts", Seq(v1, v2), rowIdCol = Some("eid"))
+    val out = PointInTimeJoin.join(entity, "event_ts", Seq(v1, v2))
     assert(out.count() == 5)
     val r1 = out.filter($"eid" === 1L).head()
     assert(r1.getAs[String]("val") == "b2")
@@ -113,20 +115,24 @@ class PointInTimeJoinSpec extends SparkSpec {
     assert(r3.getAs[Double]("v2__score") == 9.9) // but v2 matches
   }
 
-  test("lineitem multiview plan: views broadcast, TTL pushed to scan, spine scanned once") {
+  /** Window operators in an (unexecuted) plan: one per view group, two
+    * per nearest group. */
+  private def windows(plan: String) = "Window \\[".r.findAllMatchIn(plan).size
+
+  test("lineitem multiview plan: one window per source, TTL pushed to scan, spine scanned once") {
     val df = graft.SparkEntry.queries("pit_lineitem_multiview_ttl")(spark, sf())
     val plan = df.queryExecution.executedPlan.toString
     withClue(plan.take(4000)) {
-      // both pruned views join by broadcast — no shuffle of the spine
-      // per view beyond the row-id agg
-      assert("BroadcastHashJoin".r.findAllMatchIn(plan).size >= 2)
+      // two sources (orders, supplier): two window passes, no join
+      assert(windows(plan) == 2)
+      assert(!plan.contains("Join"))
       // TTL + as-of bounds reach the orders parquet scan as row-group filters
       assert(plan.contains("PushedFilters: [IsNotNull(o_orderdate), LessThanOrEqual(o_orderdate"))
-      // the synthetic-id spine is materialized once: consumers read the
-      // checkpointed RDD instead of re-running scan+distinct per view
-      assert(!plan.contains("lineitem.parquet"))
-      assert(plan.contains("ExistingRDD"))
-      // row-id exchanges only: stitch base + one per view
+      // the spine flows through the passes: scanned once, never materialized
+      assert(plan.linesIterator.count(l =>
+        l.contains("FileScan parquet") && l.contains("lineitem.parquet")) == 1)
+      assert(!plan.contains("ExistingRDD"))
+      // one key exchange per pass, plus the spine's distinct
       assert("Exchange hashpartitioning".r.findAllMatchIn(plan).size <= 3)
     }
     assert(df.count() > 0)
@@ -135,25 +141,17 @@ class PointInTimeJoinSpec extends SparkSpec {
   test("many-view stitch stays linear: no cross-view fan-out, bounded exchanges") {
     // The 8-view canary (6 time-varying order views + 2 static
     // customer views): views group by source, so the plan holds one
-    // candidate join, one aggregation and one row-id stitch per
-    // SOURCE — two of each here, at any view count — and zero
-    // nested-loop/cartesian joins anywhere.
+    // scan and one window pass per SOURCE — two here, at any view
+    // count — and no join of any kind.
     val df = graft.SparkEntry.queries("pit_manyviews")(spark, sf())
     val plan = df.queryExecution.executedPlan.toString
     val hashEx = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-    val stitchJoins =
-      "SortMergeJoin \\[__graft_row_id".r.findAllMatchIn(plan).size +
-        "BroadcastHashJoin \\[__graft_row_id".r.findAllMatchIn(plan).size
-    withClue(s"hashExchanges=$hashEx stitchJoins=$stitchJoins\n" + plan.take(4000)) {
-      // one agg shuffle per source + the spine shuffle, with room for
-      // AQE variance; independent of the view count
-      assert(hashEx <= 5)
+    withClue(s"hashExchanges=$hashEx windows=${windows(plan)}\n" + plan.take(4000)) {
+      // one key exchange per source, independent of the view count
+      assert(hashEx == 2)
+      assert(windows(plan) == 2)
+      assert(!plan.contains("Join"))
       assert(!plan.contains("CartesianProduct"))
-      assert(!plan.contains("BroadcastNestedLoopJoin"))
-      // exactly one stitch join per source
-      assert(stitchJoins == 2)
-      // per-source candidate generation broadcasts the pruned side
-      assert("BroadcastHashJoin".r.findAllMatchIn(plan).size >= 2)
     }
     val n = df.count()
     assert(n > 0)
@@ -162,67 +160,46 @@ class PointInTimeJoinSpec extends SparkSpec {
       graft.sources.ParquetTables.load(spark, sf() + "/events.parquet").count())
   }
 
-  test("natural-key spine skips the materialization the synthetic-id path needs") {
-    // With rowIdCol the spine feeds every consumer as a plain scan; the
-    // synthetic-id path must localCheckpoint (ExistingRDD in the plan)
-    // so monotonically_increasing_id comes out identical in all
-    // consumers. Same output either way — the delta is one spine
-    // materialization write + read per job, which at 100 TB is the
-    // argument for having a natural unique key (SCALE.md).
-    val natural = graft.SparkEntry.queries("pit_manyviews")(spark, sf())
-    val synth = graft.SparkEntry.queries("pit_manyviews_synth")(spark, sf())
-    val pNat = natural.queryExecution.executedPlan.toString
-    val pSyn = synth.queryExecution.executedPlan.toString
-    withClue(pNat.take(2000)) {
-      // natural path: no checkpointed-RDD scan, events parquet read directly
-      assert(!pNat.contains("ExistingRDD"))
-      assert(pNat.contains("events.parquet"))
+  test("the as-of join persists and writes nothing: join and forwardMulti") {
+    val e = graft.queries.QueryDef.table(spark, sf(), "events")
+    val fwd = () => DirectionalAsOf.forwardMulti(
+      e.filter($"event_type" === "purchase").select($"event_id", $"user_id", $"ts".as("p_ts")),
+      "p_ts",
+      Seq(DirectionalView("next", e.select($"ts", $"user_id".as("v_user"), $"value"),
+        "ts", Seq("user_id" -> "v_user"), Seq("value"), 48L * 3600)))
+    val backward = () => PointInTimeJoin.join(entity, "event_ts", Seq(view(Some(30L * 86400))))
+    for ((name, run) <- Seq("join" -> backward, "forwardMulti" -> fwd)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (rows, _, stages) = traced(run().collect())
+      withClue(name) {
+        assert(rows.nonEmpty)
+        (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+        stages.values.flatMap(s => Option(s.taskMetrics))
+          .map(_.outputMetrics.bytesWritten).sum shouldBe 0L
+      }
     }
-    withClue(pSyn.take(2000)) {
-      // synthetic path: every spine consumer reads the checkpointed RDD
-      assert(pSyn.contains("ExistingRDD"))
-      assert(!pSyn.contains("events.parquet"))
-    }
-    // both stay linear: one stitch join per source, no fan-out
-    Seq(pNat, pSyn).foreach { p =>
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
-    }
-    // identical results row-for-row (the twin shares the oracle too)
-    assert(natural.exceptAll(synth).isEmpty && synth.exceptAll(natural).isEmpty)
   }
 
-  test("scratch-parquet spine: identical results, spine read from scratch, one write-out") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-spine-spec").toString
-    val viaCheckpoint = PointInTimeJoin.join(
-      entity, "event_ts", Seq(view(Some(30L * 86400))))
-    val viaScratch = PointInTimeJoin.join(
-      entity, "event_ts", Seq(view(Some(30L * 86400))),
-      spineScratchDir = Some(dir))
-    // identical rows (synthetic ids are internal either way)
-    assert(viaScratch.exceptAll(viaCheckpoint).isEmpty &&
-      viaCheckpoint.exceptAll(viaScratch).isEmpty)
-    // the spine was written once under the scratch dir and every
-    // consumer scans it back as parquet (no checkpointed-RDD scan).
-    // It must SURVIVE for the JVM's lifetime (consumers are lazy
-    // scans) — cleanup is registered for JVM exit via Hadoop
-    // FileSystem.deleteOnExit, which a running spec cannot observe.
-    val spines = new java.io.File(dir).listFiles()
-    assert(spines != null && spines.count(_.getName.startsWith("graft-spine-")) == 1)
-    val p = viaScratch.queryExecution.executedPlan.toString
-    withClue(p.take(2000)) {
-      assert(p.contains("graft-spine-"))
-      assert(!p.contains("ExistingRDD"))
+  test("src/main names no row id, spine checkpoint or scratch-dir option") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    def hits(dir: java.nio.file.Path, words: Seq[String]): Seq[String] = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if words.exists(line.contains) => s"${main.relativize(f)}:${i + 1}"
+        }
+      } finally walk.close()
     }
-    // ignored when a natural key is present: nothing new written
-    PointInTimeJoin.join(entity, "event_ts", Seq(view(None)),
-      rowIdCol = Some("eid"), spineScratchDir = Some(dir)).count()
-    assert(new java.io.File(dir).listFiles()
-      .count(_.getName.startsWith("graft-spine-")) == 1)
+    assert(java.nio.file.Files.isDirectory(main.resolve("graft/join")), main)
+    hits(main.resolve("graft/join"),
+      Seq("localCheckpoint", "monotonically_increasing_id", "__graft_row_id")) shouldBe empty
+    hits(main, Seq("rowIdCol", "spineScratchDir", "entityRowId")) shouldBe empty
   }
 
   test("empty entity spine yields empty result with full schema") {
     val out = PointInTimeJoin.join(
-      entity.filter($"eid" < 0), "event_ts", Seq(view(None)), rowIdCol = Some("eid"))
+      entity.filter($"eid" < 0), "event_ts", Seq(view(None)))
     assert(out.columns.contains("val"))
     assert(out.count() == 0)
   }
@@ -230,7 +207,7 @@ class PointInTimeJoinSpec extends SparkSpec {
   test("spine rows without an entity timestamp keep every row with typed NULL features") {
     val noTs = entity.withColumn("event_ts", lit(null).cast(TimestampType))
     val out = PointInTimeJoin.join(
-      noTs, "event_ts", Seq(view(None)), rowIdCol = Some("eid"))
+      noTs, "event_ts", Seq(view(None)))
     assert(out.columns.toSeq == Seq("eid", "key", "event_ts", "val"))
     assert(out.schema("val").dataType == StringType)
     assert(out.count() == 5 && out.filter($"val".isNotNull).isEmpty)
@@ -258,14 +235,99 @@ class PointInTimeJoinSpec extends SparkSpec {
     val v = ResolvedView("v", fDf, Seq("key" -> "key"), "fts", Some("created"),
       Seq("val"), Some(7L * 86400))
     // orderable: (fts, created, val) decides every pick exactly
-    AsOfOracle.check(PointInTimeJoin.join(eDf, "event_ts", Seq(v), rowIdCol = Some("eid")),
-      eDf, "eid", "event_ts", Seq(v), Backward)
+    AsOfOracle.check(PointInTimeJoin.join(eDf, "event_ts", Seq(v)),
+      eDf, "event_ts", Seq(v), Backward)
     // with a MAP feature the view reduces through max_by: ties on
     // (fts, created) may pick any tied row, which the oracle admits
     val withMap = v.copy(source = fDf.withColumn("m", mapOf(lit("k"), $"val")),
       features = Seq("val", "m"))
-    AsOfOracle.check(PointInTimeJoin.join(eDf, "event_ts", Seq(withMap), rowIdCol = Some("eid")),
-      eDf, "eid", "event_ts", Seq(withMap), Backward)
+    AsOfOracle.check(PointInTimeJoin.join(eDf, "event_ts", Seq(withMap)),
+      eDf, "event_ts", Seq(withMap), Backward)
+  }
+
+  /** [[randomData]] with the window pass's edge cases on top: NULL
+    * join keys on both sides, NULL entity and view timestamps, and
+    * every fifth spine row repeated whole (its `eid` included). */
+  private def edgeData(seed: Int, nEntity: Int, nFeat: Int) = {
+    val rng = new scala.util.Random(seed)
+    def key() = if (rng.nextInt(10) == 0) None else Some(rng.nextInt(8).toLong)
+    def stamp() = if (rng.nextInt(10) == 0) None
+      else Some(ts(f"2024-01-${1 + rng.nextInt(28)}%02d ${rng.nextInt(24)}%02d:00:00"))
+    val e = (1 to nEntity).map(i => (i.toLong, key(), stamp()))
+    val f = (1 to nFeat).map { i =>
+      (key(), stamp(), ts(f"2024-01-01 00:${i % 60}%02d:00"), i.toLong)
+    }
+    ((e ++ e.filter(_._1 % 5 == 0)).toDF("eid", "key", "event_ts"),
+      f.toDF("key", "fts", "created", "val"))
+  }
+
+  for (dir <- Seq(Backward, PointInTimeJoin.Forward, PointInTimeJoin.Nearest);
+       withMap <- Seq(false, true)) {
+    test(s"property: NULL keys and timestamps, duplicate rows, Int against Long keys, $dir, " +
+        (if (withMap) "map feature" else "orderable features")) {
+      val (eDf, fDf) = edgeData(11, 300, 400)
+      // forward and nearest need a window; backward also runs unbounded
+      val windows = if (dir == Backward) Seq(Some(3L * 86400), None) else Seq(Some(3L * 86400))
+      for (ttl <- windows) {
+        val base = ResolvedView("v", fDf, Seq("key" -> "key"), "fts",
+          if (dir == Backward) Some("created") else None, Seq("val"), ttl)
+        val v = if (withMap) base.copy(
+          source = fDf.withColumn("m", mapOf(lit("k"), $"val")), features = Seq("val", "m"))
+          else base
+        withClue(s"ttl=$ttl: ") {
+          AsOfOracle.check(PointInTimeJoin.asOf(eDf, "event_ts", Seq(v), dir),
+            eDf, "event_ts", Seq(v), dir)
+        }
+      }
+      // An Int spine key meets a Long view key: both widen to Long, as
+      // under `===`. Each view row gets a twin 2^32 above its key, which
+      // a cast to Int would wrap onto the same entity key.
+      val eInt = eDf.withColumn("key", $"key".cast("int"))
+      val wide = fDf.unionByName(fDf.select(($"key" + (1L << 32)).as("key"),
+        $"fts", $"created", ($"val" + 100000L).as("val")))
+      val v = ResolvedView("v", wide, Seq("key" -> "key"), "fts",
+        features = Seq("val"), ttlSeconds = Some(3L * 86400))
+      val out = PointInTimeJoin.asOf(eInt, "event_ts", Seq(v), dir)
+      out.schema("key").dataType shouldBe IntegerType
+      AsOfOracle.check(out, eInt, "event_ts", Seq(v), dir)
+      out.filter($"val" >= 100000L).count() shouldBe 0L
+    }
+  }
+
+  test("a repeated natural id is just another spine row: each keeps its own features") {
+    // three spine rows share eid 1; before, a caller-supplied row id
+    // that repeated crossed their features
+    val e = Seq(
+      (1L, 10L, ts("2024-01-10 00:00:00")),
+      (1L, 20L, ts("2024-01-10 00:00:00")),
+      (1L, 10L, ts("2024-01-01 00:00:00")),
+      (2L, 10L, ts("2024-01-10 00:00:00"))).toDF("eid", "key", "event_ts")
+    val out = PointInTimeJoin.join(e, "event_ts", Seq(view(None)))
+    out.collect().map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2), r.getString(3)))
+      .toSeq.sortBy(r => (r._1, r._2, r._3.getTime)) shouldBe Seq(
+        (1L, 10L, ts("2024-01-01 00:00:00"), "a"),
+        (1L, 10L, ts("2024-01-10 00:00:00"), "b2"),
+        (1L, 20L, ts("2024-01-10 00:00:00"), "stale"),
+        (2L, 10L, ts("2024-01-10 00:00:00"), "b2"))
+  }
+
+  for (dir <- Seq(Backward, PointInTimeJoin.Forward, PointInTimeJoin.Nearest)) {
+    test(s"output schema: the spine's own fields, then nullable features, on an empty and a non-empty spine, $dir") {
+      val m = mapView(Some(30L * 86400)).copy(name = "vm", outputPrefix = Some("vm"))
+      val want = StructType(entity.schema.fields ++ Seq(
+        StructField("fts", TimestampType, nullable = true),
+        StructField("val", StringType, nullable = true),
+        StructField("vm__val", StringType, nullable = true),
+        StructField("vm__m", m.source.schema("m").dataType, nullable = true)))
+      // eid and key are non-nullable Longs: the union must not loosen them
+      assert(!entity.schema("eid").nullable && !entity.schema("key").nullable)
+      for (spine <- Seq(entity, entity.filter($"eid" < 0))) {
+        val out = PointInTimeJoin.asOf(spine, "event_ts",
+          Seq(view(Some(30L * 86400)), m), dir, keepViewTs = Some("fts"))
+        out.schema shouldBe want
+        out.count() shouldBe spine.count()
+      }
+    }
   }
 
   test("two views over two sources: hand-computed rows, and the naive oracle agrees") {
@@ -278,7 +340,7 @@ class PointInTimeJoinSpec extends SparkSpec {
     val v2 = ResolvedView("v2", extra, Seq("key" -> "key"), "fts2",
       None, Seq("score"), None, outputPrefix = Some("v2"))
     val out = PointInTimeJoin.join(
-      entity, "event_ts", Seq(v1, v2), rowIdCol = Some("eid"))
+      entity, "event_ts", Seq(v1, v2))
     assert(out.columns.toSeq == Seq("eid", "key", "event_ts", "val", "v2__score"))
     // hand-computed: ttl NULL, created tie-break, per-view independence
     val want = Set[(Long, String, Option[Double])](
@@ -288,13 +350,13 @@ class PointInTimeJoinSpec extends SparkSpec {
       Option(r.get(r.fieldIndex("v2__score"))).map(_.asInstanceOf[Double]))).toSet
     assert(got == want)
     assert(out.count() == 5)
-    AsOfOracle.check(out, entity, "eid", "event_ts", Seq(v1, v2), Backward)
+    AsOfOracle.check(out, entity, "event_ts", Seq(v1, v2), Backward)
   }
 
   test("empty spine yields an empty result with the full output schema") {
     val m = mapView(None).copy(name = "vm", outputPrefix = Some("vm"))
     val out = PointInTimeJoin.join(
-      entity.filter($"eid" < 0), "event_ts", Seq(view(None), m), rowIdCol = Some("eid"))
+      entity.filter($"eid" < 0), "event_ts", Seq(view(None), m))
     assert(out.schema.map(f => f.name -> f.dataType) == entity.schema.map(f => f.name -> f.dataType) ++
       Seq("val" -> StringType, "vm__val" -> StringType,
         "vm__m" -> m.source.schema("m").dataType))
@@ -320,10 +382,10 @@ class PointInTimeJoinSpec extends SparkSpec {
       ResolvedView("e", fDf, Seq("key" -> "key"), "fts", None,
         Seq("val"), Some(2L * 86400), outputPrefix = Some("e"),
         predicate = Some($"val" > 200)))
-    val out = PointInTimeJoin.join(eDf, "event_ts", views, rowIdCol = Some("eid"))
+    val out = PointInTimeJoin.join(eDf, "event_ts", views)
     assert(out.columns.toSeq == Seq("eid", "key", "event_ts", "a__val", "b__val",
       "c__val", "d__val", "d__created", "e__val"))
-    AsOfOracle.check(out, eDf, "eid", "event_ts", views, Backward)
+    AsOfOracle.check(out, eDf, "event_ts", views, Backward)
   }
 
   test("views group on the CANONICAL source plan: re-loads of one table share a scan, other join keys do not") {
@@ -342,14 +404,14 @@ class PointInTimeJoinSpec extends SparkSpec {
     val v3 = ResolvedView("c", ordersLoad(), Seq("event_id" -> "o_orderkey"),
       "o_orderdate", features = Seq("o_totalprice"), outputPrefix = Some("c"))
     val df = PointInTimeJoin.join(
-      entity, "ts", Seq(v1, v2, v3), rowIdCol = Some("event_id"))
+      entity, "ts", Seq(v1, v2, v3))
     val plan = df.queryExecution.executedPlan.toString
     val ordersScans = plan.linesIterator.count(l =>
       l.contains("FileScan parquet") && l.contains("orders.parquet"))
     withClue(plan.take(3000)) {
       assert(ordersScans == 2) // {v1,v2} share one scan; v3 separate
     }
-    AsOfOracle.check(df, entity, "event_id", "ts", Seq(v1, v2, v3), Backward)
+    AsOfOracle.check(df, entity, "ts", Seq(v1, v2, v3), Backward)
   }
 
   test("a MAP feature in a shared-source group reduces through max_by beside max(struct) members") {
@@ -365,40 +427,36 @@ class PointInTimeJoinSpec extends SparkSpec {
       ResolvedView("b", orders, Seq("user_id" -> "o_custkey"), "o_orderdate",
         features = Seq("m", "o_orderkey"), outputPrefix = Some("b"),
         predicate = Some($"o_orderstatus" === "O")))
-    val df = PointInTimeJoin.join(entity, "ts", views, rowIdCol = Some("event_id"))
+    val df = PointInTimeJoin.join(entity, "ts", views)
     val plan = df.queryExecution.executedPlan.toString
     withClue(plan.take(3000)) {
       assert(plan.linesIterator.count(l =>
         l.contains("FileScan parquet") && l.contains("orders.parquet")) == 1)
       assert(plan.contains("max_by"))
     }
-    AsOfOracle.check(df, entity, "event_id", "ts", views, Backward)
+    AsOfOracle.check(df, entity, "ts", views, Backward)
     // the map and the scalar come from the same picked row
     assert(df.filter($"b__m".isNotNull &&
       $"b__m".getItem("key") =!= $"b__o_orderkey".cast("double")).isEmpty)
     assert(df.filter($"b__m".isNotNull).count() > 0)
   }
 
-  test("8-view plan: per-SOURCE candidate joins, aggs, and stitches (2 groups, not 8 views)") {
+  test("8-view plan: one scan and one window pass per SOURCE (2 groups, not 8 views)") {
     val fused = graft.SparkEntry.queries("pit_manyviews_fused")(spark, sf())
     val plan = fused.queryExecution.executedPlan.toString
     val hashEx = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-    val stitchJoins =
-      "SortMergeJoin \\[__graft_row_id".r.findAllMatchIn(plan).size +
-        "BroadcastHashJoin \\[__graft_row_id".r.findAllMatchIn(plan).size
     // the 8 views span exactly TWO sources (orders, customer): the
     // plan shape is per-source, independent of view count
-    withClue(s"hashExchanges=$hashEx stitchJoins=$stitchJoins\n" + plan.take(4000)) {
-      // one candidate join + one agg + one stitch per GROUP
-      assert(stitchJoins == 2)
-      assert(hashEx <= 5)
-      assert(!plan.contains("CartesianProduct"))
-      assert(!plan.contains("BroadcastNestedLoopJoin"))
-      // per-group candidate joins still broadcast the pruned side
-      assert("BroadcastHashJoin".r.findAllMatchIn(plan).size >= 2)
-      // the orders table is scanned ONCE for all six order views
-      assert(plan.linesIterator.count(l =>
-        l.contains("FileScan parquet") && l.contains("orders.parquet")) == 1)
+    withClue(s"hashExchanges=$hashEx windows=${windows(plan)}\n" + plan.take(4000)) {
+      assert(windows(plan) == 2)
+      assert(hashEx == 2)
+      assert(!plan.contains("Join"))
+      // the orders table is scanned ONCE for all six order views, its
+      // TTL range pushed into the scan
+      val ordersScans = plan.linesIterator.filter(l =>
+        l.contains("FileScan parquet") && l.contains("orders.parquet")).toSeq
+      assert(ordersScans.size == 1)
+      assert(ordersScans.head.contains("LessThanOrEqual(o_orderdate"))
     }
     // left-join semantics: spine cardinality preserved exactly (values
     // are pinned by the query's DuckDB oracle)

@@ -87,9 +87,9 @@ class RunnerSpec extends SparkSpec {
     assert(manifest.contains("\"span\":0"))
   }
 
-  test("retrieve scans a shared source once: one candidate join and one stitch per source") {
+  test("retrieve scans a shared source once: one window pass per source") {
     // three order views + one customer view: the order views share one
-    // scan, one aggregation and one row-id stitch
+    // scan and one window pass
     val manyViewsYaml =
       """project: graft-test
         |views:
@@ -122,18 +122,18 @@ class RunnerSpec extends SparkSpec {
       registry = YamlRegistry.load(manyViewsYaml), dataDir = sf(),
       features = Left(Seq("ord_price:o_totalprice", "ord_status:o_orderstatus",
         "ord_prio:o_orderpriority", "customer_features:c_acctbal")),
-      entityQuery = entitySql, entityRowId = Some("event_id"))
+      entityQuery = entitySql)
     val out = Runner.retrieve(spark, job, entitySql)
     val plan = out.queryExecution.executedPlan.toString
     withClue(plan.take(4000)) {
       assert(plan.linesIterator.count(l =>
         l.contains("FileScan parquet") && l.contains("orders.parquet")) == 1)
-      assert(("SortMergeJoin \\[__graft_row_id".r.findAllMatchIn(plan).size +
-        "BroadcastHashJoin \\[__graft_row_id".r.findAllMatchIn(plan).size) == 2)
+      assert("Window \\[".r.findAllMatchIn(plan).size == 2)
+      assert(!plan.contains("Join"))
     }
     assert(out.columns.toSeq == Seq("event_id", "o_custkey", "c_custkey",
       "event_timestamp", "o_totalprice", "o_orderstatus", "o_orderpriority", "c_acctbal"))
-    graft.join.AsOfOracle.check(out, spark.sql(entitySql), "event_id",
+    graft.join.AsOfOracle.check(out, spark.sql(entitySql),
       "event_timestamp", Runner.resolveViews(spark, job))
   }
 
@@ -181,7 +181,8 @@ class RunnerSpec extends SparkSpec {
     Runner.run(spark, job(tmp())) // warm: the traced run starts no one-off job
     val (res, jobs, stages) = traced(Runner.run(spark, job(out)))
     // the run's last job is writePartitioned's collect, and its result
-    // stage stitches, encodes and writes: each task one shard per split
+    // stage runs the last window pass, encodes and writes: each task
+    // one shard per split
     val write = stages(jobs.last.stageIds.max)
     val shards = splits.map { case (s, _) =>
       new java.io.File(s"$out/$s").list().count(_.endsWith(".tfrecord.gz"))
@@ -189,9 +190,9 @@ class RunnerSpec extends SparkSpec {
     withClue(s"jobs=${jobs.size} writeTasks=${write.numTasks} shards=$shards") {
       assert(write.numTasks >= spark.sparkContext.defaultParallelism)
       assert(shards.forall(_ == write.numTasks))
-      // tables register without schema-inference jobs; then the spine
-      // checkpoint, the bounds, and AQE's stages of the one write
-      assert(jobs.size == 14)
+      // tables register without schema-inference jobs; then the bounds
+      // and AQE's stages of the one write
+      assert(jobs.size == 6)
     }
     val ref = tmp()
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -250,7 +251,7 @@ class RunnerSpec extends SparkSpec {
     // and the picks themselves match the naive oracle
     val entity = spark.sql(job.entityQuery)
     graft.join.AsOfOracle.check(Runner.retrieve(spark, job, job.entityQuery), entity,
-      "event_id", "event_timestamp", Runner.resolveViews(spark, job))
+      "event_timestamp", Runner.resolveViews(spark, job))
   }
 
   test("writeSplits executes the upstream pipeline once for N splits") {
@@ -410,7 +411,7 @@ class RunnerSpec extends SparkSpec {
     ).toDF("u", "lts", "outcome").write.mode("overwrite").parquet(labelsDir)
 
     val fwd = Transforms.applyAll(frame, Transforms.parse(
-      s"forward_label(id=row_id,ts=ets,source=$labelsDir,source_ts=lts," +
+      s"forward_label(ts=ets,source=$labelsDir,source_ts=lts," +
         "keys=user:u,features=outcome,horizon=3600,prefix=label)"))
       .collect()
       .map(r => r.getLong(0) ->
@@ -419,7 +420,7 @@ class RunnerSpec extends SparkSpec {
     assert(fwd == Map(1L -> Some(1.0), 2L -> None, 3L -> None), s"got $fwd")
 
     val near = Transforms.applyAll(frame, Transforms.parse(
-      s"nearest_label(id=row_id,ts=ets,source=$labelsDir,source_ts=lts," +
+      s"nearest_label(ts=ets,source=$labelsDir,source_ts=lts," +
         "keys=user:u,features=outcome,tolerance=1800,keep_ts=true)"))
       .collect()
       .map(r => r.getLong(0) ->
@@ -430,15 +431,15 @@ class RunnerSpec extends SparkSpec {
     // parse-time typing: horizon/tolerance must be positive longs,
     // keep_ts boolean, keys well-formed (apply-time for pair shape)
     intercept[IllegalArgumentException](Transforms.parse(
-      "forward_label(id=a,ts=b,source=c,source_ts=d,keys=k:v,features=f,horizon=0)"))
+      "forward_label(ts=b,source=c,source_ts=d,keys=k:v,features=f,horizon=0)"))
     intercept[IllegalArgumentException](Transforms.parse(
-      "forward_label(id=a,ts=b,source=c,source_ts=d,keys=k:v,features=f,horizon=abc)"))
+      "forward_label(ts=b,source=c,source_ts=d,keys=k:v,features=f,horizon=abc)"))
     intercept[IllegalArgumentException](Transforms.parse(
-      "nearest_label(id=a,ts=b,source=c,source_ts=d,keys=k:v,features=f)"))
+      "nearest_label(ts=b,source=c,source_ts=d,keys=k:v,features=f)"))
     intercept[IllegalArgumentException](Transforms.parse(
-      "forward_label(id=a,ts=b,source=c,source_ts=d,keys=k:v,features=f,horizon=1,keep_ts=yes)"))
+      "forward_label(ts=b,source=c,source_ts=d,keys=k:v,features=f,horizon=1,keep_ts=yes)"))
     intercept[IllegalArgumentException](Transforms.applyAll(frame, Transforms.parse(
-      s"forward_label(id=row_id,ts=ets,source=$labelsDir,source_ts=lts," +
+      s"forward_label(ts=ets,source=$labelsDir,source_ts=lts," +
         "keys=userv,features=outcome,horizon=3600)")))
   }
 
@@ -450,13 +451,72 @@ class RunnerSpec extends SparkSpec {
     Seq((10L, ts("2024-01-01 10:30:00"), 1.0))
       .toDF("u", "lts", "outcome").write.mode("overwrite").parquet(labelsDir)
     val spec = Transforms.parse(
-      s"forward_label(id=row_id,ts=ets,source=$labelsDir,source_ts=lts," +
+      s"forward_label(ts=ets,source=$labelsDir,source_ts=lts," +
         "keys=user:u,features=outcome,horizon=3600,prefix=label,keep_ts=true)")
     val full = Transforms.applyAll(frame, spec)
     val empty = Transforms.applyAll(frame.filter($"row_id" < 0), spec)
     assert(empty.columns.toSeq == Seq("row_id", "user", "ets", "label__lts", "label__outcome"))
     assert(empty.schema == full.schema)
     assert(empty.count() == 0)
+  }
+
+  test("a repeated natural id runs through Runner.run and forward_label with each row's own features") {
+    import spark.implicits._
+    // Runner.run: every third event shares one event_id; the records
+    // equal a unique-id run's, the id aside, and the picks match the
+    // naive oracle row by row
+    val scratch = java.nio.file.Files.createTempDirectory("graft-dupid").toString
+    def job(idExpr: String, out: String) = JobConfig(
+      registry = YamlRegistry.load(registryYaml), dataDir = sf(),
+      features = Right("training_service"),
+      entityQuery = s"SELECT $idExpr AS event_id, user_id AS o_custkey, " +
+        "ts AS event_timestamp FROM events",
+      outputSplits = Seq("train" -> 1), outputPath = out)
+    def show(v: TfExample.FeatureValue) = v match {
+      case TfExample.Bytes(bs) => bs.map(new String(_, "UTF-8")).toString
+      case other => other.toString
+    }
+    def decoded(out: String) = TfRecordSink.readAll(spark, out, "train")
+      .map(TfExample.decode)
+      .map(d => (d - "event_id").toSeq.sortBy(_._1).map { case (k, v) => s"$k=${show(v)}" }.mkString(","))
+      .sorted
+    val dup = job("event_id - pmod(event_id, 3)", s"$scratch/dup")
+    Runner.run(spark, dup)
+    Runner.run(spark, job("event_id", s"$scratch/unique"))
+    assert(spark.sql(dup.entityQuery).select("event_id").distinct().count() <
+      spark.sql(dup.entityQuery).count())
+    assert(decoded(s"$scratch/dup") == decoded(s"$scratch/unique"))
+    graft.join.AsOfOracle.check(Runner.retrieve(spark, dup, dup.entityQuery),
+      spark.sql(dup.entityQuery), "event_timestamp", Runner.resolveViews(spark, dup))
+
+    // forward_label: three rows share row_id 1
+    val ts = (s: String) => java.sql.Timestamp.valueOf(s)
+    val frame = Seq(
+      (1L, 10L, ts("2024-01-01 10:00:00")), // 10:30 within 1h
+      (1L, 10L, ts("2024-01-01 10:40:00")), // 10:45 within 1h
+      (1L, 20L, ts("2024-01-01 10:00:00")), // key absent → NULL
+      (2L, 10L, ts("2024-01-01 12:00:00"))  // nothing within 1h → NULL
+    ).toDF("row_id", "user", "ets")
+    val labelsDir = s"$scratch/labels"
+    Seq(
+      (10L, ts("2024-01-01 10:30:00"), 1.0),
+      (10L, ts("2024-01-01 10:45:00"), 2.0),
+      (10L, ts("2024-01-01 14:00:00"), 3.0)
+    ).toDF("u", "lts", "outcome").write.parquet(labelsDir)
+    val got = Transforms.applyAll(frame, Transforms.parse(
+      s"forward_label(ts=ets,source=$labelsDir,source_ts=lts," +
+        "keys=user:u,features=outcome,horizon=3600)"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2),
+        Option(r.get(3)).map(_.asInstanceOf[Double]))).toSeq
+    assert(got.sortBy(r => (r._1, r._2, r._3.getTime)) == Seq(
+      (1L, 10L, ts("2024-01-01 10:00:00"), Some(1.0)),
+      (1L, 10L, ts("2024-01-01 10:40:00"), Some(2.0)),
+      (1L, 20L, ts("2024-01-01 10:00:00"), None),
+      (2L, 10L, ts("2024-01-01 12:00:00"), None)))
+    // the removed `id` arg is rejected like any unknown arg
+    intercept[IllegalArgumentException](Transforms.parse(
+      s"forward_label(id=row_id,ts=ets,source=$labelsDir,source_ts=lts," +
+        "keys=user:u,features=outcome,horizon=3600)"))
   }
 
   test("dedup_against transform: index dups drop, batch dups collapse, fresh and NULL rows survive") {

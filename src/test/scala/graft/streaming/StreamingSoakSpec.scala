@@ -688,8 +688,7 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
         e, l, horizonSeconds = horizon, watermark = "10 minutes"),
       (s, l) => graft.join.DirectionalAsOf.forward(
         s, "ts", l, "fts", joinKeys = Seq("user_id" -> "key"),
-        features = Seq("score"), horizonSeconds = horizon,
-        rowIdCol = "event_id"))
+        features = Seq("score"), horizonSeconds = horizon))
   }
 
   test("nearestStreamStreamWithState soak: nearest-within-tolerance over the same 40k-row replay") {
@@ -699,8 +698,7 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
         e, l, toleranceSeconds = tol, watermark = "10 minutes"),
       (s, l) => graft.join.DirectionalAsOf.nearest(
         s, "ts", l, "fts", joinKeys = Seq("user_id" -> "key"),
-        features = Seq("score"), toleranceSeconds = tol,
-        rowIdCol = "event_id"))
+        features = Seq("score"), toleranceSeconds = tol))
   }
 
   test("pitStreamStreamWithState soak: backward as-of over the same 40k-row replay") {
@@ -715,8 +713,7 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
         Seq(graft.join.ResolvedView(
           name = "lab", source = l, joinKeys = Seq("user_id" -> "key"),
           tsCol = "fts", createdTs = None, features = Seq("score"),
-          ttlSeconds = Some(ttl))),
-        rowIdCol = Some("event_id")))
+          ttlSeconds = Some(ttl)))))
   }
 
   private def t(s: String) = java.sql.Timestamp.valueOf(s)

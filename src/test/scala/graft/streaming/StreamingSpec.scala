@@ -150,7 +150,7 @@ class StreamingSpec extends SparkSpec with Matchers {
       // inner semantics: matches batch PIT on events that HAVE features
       val view = ResolvedViewForTest(feats.toDF(), ttl)
       val batch = graft.join.PointInTimeJoin.join(
-        evs.toDF(), "ts", Seq(view), rowIdCol = Some("event_id"))
+        evs.toDF(), "ts", Seq(view))
         .filter($"score".isNotNull)
         .collect()
         .map(r => (r.getAs[Long]("event_id"),
@@ -206,7 +206,7 @@ class StreamingSpec extends SparkSpec with Matchers {
 
       val view = ResolvedViewForTest(feats.toDF(), ttl)
       val batch = graft.join.PointInTimeJoin.join(
-        evs.toDF(), "ts", Seq(view), rowIdCol = Some("event_id"))
+        evs.toDF(), "ts", Seq(view))
         .collect()
         .map(r => (r.getAs[Long]("event_id"),
           Option(r.getAs[Any]("score")).map(_.asInstanceOf[Double])))
@@ -262,7 +262,7 @@ class StreamingSpec extends SparkSpec with Matchers {
       val batch = graft.join.DirectionalAsOf.forward(
         evs.toDF(), "ts", labs.toDF(), "fts",
         joinKeys = Seq("user_id" -> "key"), features = Seq("score"),
-        horizonSeconds = horizon, rowIdCol = "event_id")
+        horizonSeconds = horizon)
         .collect()
         .map(r => (r.getAs[Long]("event_id"),
           Option(r.getAs[Any]("score")).map(_.asInstanceOf[Double])))
@@ -317,7 +317,7 @@ class StreamingSpec extends SparkSpec with Matchers {
       val batch = graft.join.DirectionalAsOf.nearest(
         evs.toDF(), "ts", labs.toDF(), "fts",
         joinKeys = Seq("user_id" -> "key"), features = Seq("score"),
-        toleranceSeconds = tol, rowIdCol = "event_id")
+        toleranceSeconds = tol)
         .collect()
         .map(r => (r.getAs[Long]("event_id"),
           Option(r.getAs[Any]("score")).map(_.asInstanceOf[Double])))
@@ -468,7 +468,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     } finally q.stop()
   }
 
-  test("pitEnrichStream: synthetic-spine blocks are released per batch; rows match the batch join") {
+  test("pitEnrichStream: three micro-batches persist and write nothing; rows match the batch join") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.join.ResolvedView
@@ -483,10 +483,10 @@ class StreamingSpec extends SparkSpec with Matchers {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val stream = MemoryStream[Ev]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Double])]
-    // synthetic spine (no rowIdCol): each micro-batch
-    // localCheckpoints a spine; the wrapper must unpersist it after
-    // the sink — across 3 batches NOTHING may accumulate (one block
-    // per micro-batch was the r9 monitor-leak class).
+    // each micro-batch runs the batch join, which materializes
+    // nothing: across 3 batches no block may accumulate (one block
+    // per micro-batch was the r9 monitor-leak class) and no stage of
+    // the batches writes a byte
     val q = StreamingOps.pitEnrichStream(
       stream.toDF().select("user_id", "ts"), "ts", Seq(view)) {
       (batch, _) =>
@@ -496,10 +496,13 @@ class StreamingSpec extends SparkSpec with Matchers {
         }
     }.start()
     try {
-      events.grouped(2).foreach { chunk =>
+      val (_, _, stages) = traced(events.grouped(2).foreach { chunk =>
         stream.addData(chunk); q.processAllAvailable()
-      }
+      })
+      events.grouped(2).size shouldBe 3
       (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+      stages.values.flatMap(s => Option(s.taskMetrics))
+        .map(_.outputMetrics.bytesWritten).sum shouldBe 0L
       val batchTwin = graft.join.PointInTimeJoin
         .join(events.toDF().select("user_id", "ts"), "ts", Seq(view))
         .collect().map(r =>
