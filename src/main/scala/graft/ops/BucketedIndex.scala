@@ -213,12 +213,39 @@ private[graft] object BucketedIndex {
 
   /** Read the one-row parquet sidecar at `dir` that `writer` wrote and
     * check it: each of `fields` present by name, of that type and
-    * non-NULL, and every one of `ranges` holding. A failure names the
-    * writer's contract. */
+    * non-NULL (an `optional` one may be absent or NULL, and is then
+    * left out of the result), and every one of `ranges` holding. A
+    * failure names the writer's contract. */
   def readSidecar(spark: SparkSession, dir: String, writer: String,
-      fields: Seq[(String, DataType)], ranges: Seq[Range] = Nil): Params = {
+      fields: Seq[(String, DataType)], ranges: Seq[Range] = Nil,
+      optional: Set[String] = Set.empty): Params = {
     val fail = contractError(dir, writer, fields, ranges) _
-    checked(sidecarRow(spark, dir)(fail), fields, ranges, Set.empty)(fail)
+    checked(sidecarRow(spark, dir)(fail), fields, ranges, optional)(fail)
+  }
+
+  /** The Spark schema in the footer of the first parquet data file
+    * under `dir` (or under its first partition directory), read on the
+    * driver with no Spark job; None when there is no data file. */
+  def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val p = new Path(dir)
+    val f = fs(spark, p)
+    def first(d: Path): Option[Path] = {
+      val (dirs, files) = f.listStatus(d).partition(_.isDirectory)
+      files.map(_.getPath).find(isData)
+        .orElse(dirs.map(_.getPath).filter(_.getName.contains("="))
+          .sortBy(_.getName).headOption.flatMap(first))
+    }
+    first(p).map { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, HadoopConfs.of(spark)))
+      try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(reader.getFooter.getFileMetaData.getSchema)
+      finally reader.close()
+    }
+  }
+
+  private def isData(q: Path): Boolean = {
+    val n = q.getName
+    n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
   }
 
   private def contractError(dir: String, writer: String,
@@ -253,10 +280,7 @@ private[graft] object BucketedIndex {
     val p = new Path(dir)
     val f = fs(spark, p)
     if (!f.exists(p)) fail(s"no sidecar at $dir")
-    val files = f.listStatus(p).map(_.getPath).filter { q =>
-      val n = q.getName
-      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
+    val files = f.listStatus(p).map(_.getPath).filter(isData)
     val rows = files.toSeq.flatMap { file =>
       try {
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))

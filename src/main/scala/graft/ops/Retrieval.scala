@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructType}
 
 /** Sparse lexical retrieval over the corpus — the BM25 scoring a
   * training-data pipeline uses for decontamination probes, quality
@@ -212,29 +212,38 @@ object Retrieval {
     // the sidecar is the commit marker: gone while the postings change
     val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
     stats.getFileSystem(graft.io.HadoopConfs.of(spark)).delete(stats, true)
-    index.postings
+    val postings = index.postings
       .withColumn(TermBucket, termBucket(col("term"), nTermBuckets))
-      .repartition(nTermBuckets, col(TermBucket))
+    postings.repartition(nTermBuckets, col(TermBucket))
       .write.mode("overwrite").partitionBy(TermBucket)
       .parquet(s"$path/postings")
     import spark.implicits._
-    Seq((index.idCol, index.nDocs, index.avgdl, nTermBuckets))
-      .toDF("id_col", "n_docs", "avgdl", "term_buckets")
+    Seq((index.idCol, index.nDocs, index.avgdl, nTermBuckets, postings.schema.json))
+      .toDF("id_col", "n_docs", "avgdl", "term_buckets", "schema")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
   }
 
   /** Load a [[saveBm25IndexPartitioned]] layout. Its `stats` sidecar
     * is read on the driver with no Spark job and checked by field name
     * ([[BucketedIndex.readSidecar]]); a layout without a positive
-    * `term_buckets` fails naming the writer. */
+    * `term_buckets` fails naming the writer. The postings read with the
+    * stored schema, so the load infers nothing; a sidecar written
+    * before the schema was stored infers it (the
+    * [[BucketedIndex.load]] rule). */
   def loadBm25Index(
       spark: org.apache.spark.sql.SparkSession, path: String): Bm25Index = {
     val st = BucketedIndex.readSidecar(spark, s"$path/stats",
       "saveBm25IndexPartitioned",
       Seq("id_col" -> StringType, "n_docs" -> LongType, "avgdl" -> DoubleType,
-        "term_buckets" -> IntegerType),
-      Seq(BucketedIndex.positive("term_buckets")))
-    Bm25Index(spark.read.parquet(s"$path/postings"),
+        "term_buckets" -> IntegerType, "schema" -> StringType),
+      Seq(BucketedIndex.positive("term_buckets"),
+        "schema parses as a struct" -> (_.get("schema").forall(s =>
+          scala.util.Try(DataType.fromJson(s.toString)).toOption
+            .exists(_.isInstanceOf[StructType])))),
+      optional = Set("schema"))
+    val read = st.get("schema").fold(spark.read)(s =>
+      spark.read.schema(DataType.fromJson(s.toString).asInstanceOf[StructType]))
+    Bm25Index(read.parquet(s"$path/postings"),
       st("id_col").asInstanceOf[String], st("n_docs").asInstanceOf[Long],
       st("avgdl").asInstanceOf[Double], Some(st("term_buckets").asInstanceOf[Int]))
   }

@@ -421,15 +421,14 @@ object Transforms {
       // Persisted-model perplexity gate — the CCNet deployment shape:
       // the Kneser-Ney count tables were fitted ONCE on a clean
       // reference corpus and every ingest batch scores against them
-      // with zero training passes. The model directory knows its own
-      // ORDER: a saveKn3Model
-      // layout (c3/) serves order-3 interpolated KN; a saveKnModel
-      // layout (c12/) serves the bigram family; anything else is an
-      // order-5 model — CCNet's actual configuration — which
-      // loadKn5Model reads in either layout (flat, or key-bucketed with
-      // its meta sidecar) or rejects naming both writers. Order-5
-      // discounts come from the model's own count-of-counts, so the
-      // discount arg is rejected there.
+      // with zero training passes. The model's checked `meta` sidecar
+      // names its ORDER (loadKnModel reads it on the driver, flat or
+      // key-bucketed layout, and rejects a directory holding no model
+      // naming both writers): order 2 serves bigram interpolated KN,
+      // order 3 the trigram recursion, order 5 — CCNet's actual
+      // configuration — modified KN, whose discounts come from the
+      // model's own count-of-counts, so the discount arg is rejected
+      // there.
       // discount/floor_eps are serve-time knobs of the persisted raw
       // counts (the whole point of shipping them) — surfaced with the
       // operators' own defaults (r12 ADVICE). Same NULL-key bypass
@@ -447,52 +446,43 @@ object Transforms {
       // the bulk cascade (right when the frame is corpus-sized). Rows
       // identical either way (plan-spec-pinned).
       val gBroadcast = t.args.get("serve").contains("broadcast")
-      val sess = df.sparkSession
-      def gHas(sub: String): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(t.arg("model"), sub)
-        p.getFileSystem(sess.sparkContext.hadoopConfiguration).exists(p)
-      }
-      val gKn3 = gHas("c3")
-      val gKn5 = !gKn3 && !gHas("c12")
-      require(!gBroadcast || gKn5,
+      val model = graft.ops.LanguageModel.loadKnModel(df.sparkSession, t.arg("model"))
+      require(!gBroadcast || model.order == 5,
         "lm_filter_against: serve=broadcast is the order-5 serve plan " +
-          "— the order-2/3 cascades have no broadcast-semi variant; " +
-          "drop the arg for a c3/c12 model")
+          s"— the order-${model.order} cascade has no broadcast-semi " +
+          "variant; drop the arg for this model")
       val gStaged = df.localCheckpoint(false)
       val gScorable = gStaged.filter(col(gKey).isNotNull)
-      val (gScored, gCeCol) =
-        if (gKn5) {
+      val (gScored, gCeCol) = model.order match {
+        case 5 =>
           require(gDisc.isEmpty,
             "lm_filter_against: an order-5 modified-KN model estimates " +
               "its discounts from its own count-of-counts — drop the " +
               "discount arg (floor_eps still applies)")
-          val model = graft.ops.LanguageModel.loadKn5Model(sess, t.arg("model"))
           // A key-bucketed model serves the partition-pruned
           // broadcast-semi plan by construction — serve=shuffle would
           // contradict it (the bulk cascade reads whole flat tables).
           require(model.keyBuckets.isEmpty ||
               !t.args.get("serve").contains("shuffle"),
-            "lm_filter_against: a key-bucketed kn5 model (meta sidecar) " +
-              "serves the partition-pruned broadcast-semi plan by " +
-              "construction — drop serve=shuffle or point at a flat " +
-              "saveKn5Model layout")
+            "lm_filter_against: a key-bucketed kn5 model " +
+              "(saveKn5ModelPartitioned) serves the partition-pruned " +
+              "broadcast-semi plan by construction — drop serve=shuffle " +
+              "or point at a flat saveKnModel layout")
           (graft.ops.LanguageModel.modifiedKn5Against(
             gScorable, gKey, gText, model,
             floorEps = gEps, broadcastScore = gBroadcast),
             "kn5_cross_entropy")
-        } else if (gKn3) {
+        case 3 =>
           (graft.ops.LanguageModel.kneserNeyTrigramAgainst(
-            gScorable, gKey, gText,
-            graft.ops.LanguageModel.loadKn3Model(sess, t.arg("model")),
+            gScorable, gKey, gText, model,
             discount = gDisc.getOrElse(0.75), floorEps = gEps),
             "kn3_cross_entropy")
-        } else {
+        case _ =>
           (graft.ops.LanguageModel.kneserNeyAgainst(
-            gScorable, gKey, gText,
-            graft.ops.LanguageModel.loadKnModel(sess, t.arg("model")),
+            gScorable, gKey, gText, model,
             discount = gDisc.getOrElse(0.75), floorEps = gEps),
             "kn_cross_entropy")
-        }
+      }
       val gKeep = gScored.filter(col(gCeCol) <= gMax).select(col(gKey))
       gScorable.join(gKeep, Seq(gKey), "left_semi")
         .unionByName(gStaged.filter(col(gKey).isNull))

@@ -679,14 +679,16 @@ object StreamingOps {
   }
 
   /** Streaming perplexity scoring: DOCUMENT batches arrive on the
-    * stream and score against a prebuilt
-    * [[graft.ops.LanguageModel.KnModel]] — the CCNet deployment shape
-    * (KenLM fitted on a clean reference corpus once, served against
-    * every crawl snapshot as it lands). Stateless — the count tables
-    * are the state, persisted for the query's lifetime and RELEASED
+    * stream and score against a prebuilt order-2
+    * [[graft.ops.LanguageModel.KnModel]] (`fitKn`, or `loadKnModel` of
+    * a bigram directory) — the CCNet deployment shape (KenLM fitted on
+    * a clean reference corpus once, served against every crawl
+    * snapshot as it lands). Stateless — the count tables are the
+    * state, persisted for the query's lifetime and RELEASED
     * automatically when the query terminates (a
     * `StreamingQueryListener` keyed to this writer's generated query
-    * name unpersists the four count frames on `onQueryTerminated` —
+    * name unpersists the count frames (c2, p1, t1, stats) on
+    * `onQueryTerminated` —
     * retired scoring queries can no longer leak cached model blocks,
     * the r12 ADVICE item). Two caveats that fall out of the
     * auto-release: the writer's query name is pre-set here (override
@@ -704,12 +706,10 @@ object StreamingOps {
       discount: Double = 0.75, floorEps: Double = 1e-6)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val servable = model.copy(
-      c12 = model.c12.persist(lvl), c1 = model.c1.persist(lvl),
-      n1c = model.n1c.persist(lvl), stats = model.stats.persist(lvl))
+    val servable = model.mapKeyed((_, df) => df.persist(lvl))
+      .copy(stats = model.stats.persist(lvl))
     val queryName = releaseOnTermination(docs.sparkSession,
-      "graft-lm-score",
-      Seq(servable.c12, servable.c1, servable.n1c, servable.stats), lvl)
+      "graft-lm-score", servable.tables :+ servable.stats, lvl)
     docs.writeStream.queryName(queryName)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         sink(graft.ops.LanguageModel.kneserNeyAgainst(
@@ -781,13 +781,14 @@ object StreamingOps {
 
   /** Streaming ORDER-5 modified-KN scoring — the [[lmScoreStream]]
     * deployment shape at KenLM's production order: document batches
-    * score against a [[graft.ops.LanguageModel.Kn5Model]] with zero
-    * training passes, served FROM STORAGE — nothing is persisted for
-    * the query's lifetime and no termination listener is registered,
-    * because there is nothing to release. Discounts come from
-    * `model.disc` (the save-time sidecar) or are estimated ONCE here,
+    * score against an order-5 [[graft.ops.LanguageModel.KnModel]] with
+    * zero training passes, served FROM STORAGE — nothing is persisted
+    * for the query's lifetime and no termination listener is
+    * registered, because there is nothing to release. Discounts come
+    * from `model.disc` (stored in the model's `meta` sidecar by either
+    * writer) or, for a model fitted in place, are estimated ONCE here,
     * at stream build, never per micro-batch. Each micro-batch stages
-    * its nine-key 5-gram projection via withStaged (released after the
+    * its all-keys 5-gram projection via withStaged (released after the
     * sink — the batch path's internal localCheckpoint would leave one
     * lingering block per micro-batch; the soak caught it) and runs the
     * broadcast-semi serve: against a key-bucketed model
@@ -802,7 +803,7 @@ object StreamingOps {
     * (maxFilesPerTrigger / maxOffsetsPerTrigger) accordingly. */
   def lm5ScoreStream(
       docs: DataFrame, idCol: String, textCol: String,
-      model: graft.ops.LanguageModel.Kn5Model,
+      model: graft.ops.LanguageModel.KnModel,
       floorEps: Double = 1e-6)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val serve = graft.ops.LanguageModel.kn5ServeStaged(model, floorEps, idCol)
@@ -815,9 +816,10 @@ object StreamingOps {
   /** Order-5 scoring stream FROM A MODEL DIRECTORY — the deployment
     * entry point: [[lm5ScoreStream]] over
     * [[graft.ops.LanguageModel.loadKn5Model]], which reads either
-    * layout (a `saveKn5ModelPartitioned` directory serves
-    * partition-pruned, a `saveKn5Model` one whole) and fails at stream
-    * build, naming both writers, on a directory that is neither. */
+    * layout through its checked `meta` sidecar (a
+    * `saveKn5ModelPartitioned` directory serves partition-pruned, a
+    * flat `saveKnModel` one whole) and fails at stream build, naming
+    * both writers, on a directory that holds no model. */
   def lm5ScoreStreamFrom(
       docs: DataFrame, idCol: String, textCol: String,
       modelDir: String, floorEps: Double = 1e-6)(

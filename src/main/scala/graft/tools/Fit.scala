@@ -31,6 +31,9 @@ import graft.LocalSession
   *                    validated HERE at fit time). [size = key-bucket
   *                    count for the partition-pruned serve layout
   *                    (saveKn5ModelPartitioned); omit for flat]
+  *                    All three write one model layout (tables plus a
+  *                    `meta` sidecar naming the order; `loadKnModel`
+  *                    reads any of them).
   *   - `exact_index` — hash-bucketed content-hash dedup index
   *                    ([[graft.ops.Dedup.saveExactIndexPartitioned]];
   *                    serves `dedup_against`) [size = nHashBuckets, 64]
@@ -169,9 +172,9 @@ object Fit {
           case Some(b) => validated(
             graft.ops.LanguageModel.saveKn5ModelPartitioned(model, outDir, b))
           case None =>
-            // saveKn5Model estimates the disc sidecar itself (r17) —
-            // it IS the fail-fast gate now; a separate pre-validation
-            // would run the count-of-counts job twice.
+            // saveKn5Model estimates the sidecar discounts itself — it
+            // IS the fail-fast gate; a separate pre-validation would
+            // run the count-of-counts job twice.
             validated(graft.ops.LanguageModel.saveKn5Model(model, outDir))
         }
       case "exact_index" =>

@@ -74,18 +74,14 @@ object Kn5WriteDecomp {
       var best = phases.map(_ -> Double.MaxValue).toMap
       (0 to reps).foreach { rep =>
         release()
-        var model: LanguageModel.Kn5Model = null
+        var model: LanguageModel.KnModel = null
         // FIT: materialize all ten count tables to block storage
         // (lineage-truncated), so the write phase below times parquet
         // + directory metadata, never a recompute.
         val tFit = clock {
           val m = LanguageModel.fitKn5(docs, "text")
-          model = LanguageModel.Kn5Model(
-            m.c5.localCheckpoint(true), m.p4.localCheckpoint(true),
-            m.t4.localCheckpoint(true), m.d4.localCheckpoint(true),
-            m.t3.localCheckpoint(true), m.d3.localCheckpoint(true),
-            m.t2.localCheckpoint(true), m.d2.localCheckpoint(true),
-            m.t1.localCheckpoint(true), m.stats.localCheckpoint(true))
+          model = m.mapKeyed((_, df) => df.localCheckpoint(true))
+            .copy(stats = m.stats.localCheckpoint(true))
         }
         // WRITE: the query's exact save call over the checkpointed
         // model — bucket hash, repartition(16), partitionBy write,

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.matchers.should.Matchers
 
-import graft.SparkSpec
+import graft.{SidecarFaults, SparkSpec}
 
 /** Bigram-LM cross-entropy against hand-computed add-1 probabilities. */
 class LanguageModelSpec extends SparkSpec with Matchers {
@@ -762,12 +762,9 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     val fresh = java.nio.file.Files.createTempDirectory("kn5-disc-fresh").toString
     LanguageModel.saveKn5Model(loaded.copy(disc = None), fresh)
     loaded.disc shouldBe LanguageModel.loadKn5Model(spark, fresh).disc
-    // A pre-sidecar layout (disc/ absent) still loads and estimates.
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "disc"), true)
-    val legacy = LanguageModel.loadKn5Model(spark, dir)
-    legacy.disc shouldBe None
+    // The loaded tables without their stored discounts estimate them
+    // on first use and serve the same rows.
+    val legacy = loaded.copy(disc = None)
     LanguageModel.modifiedKn5Against(docs, "doc_id", "text", legacy)
       .collect().map(_.toString).sorted.toSeq shouldBe
       LanguageModel.modifiedKn5Against(docs, "doc_id", "text", loaded)
@@ -892,7 +889,7 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     // fewer files than the full table (the layout's whole point).
     def filesRead(df: org.apache.spark.sql.DataFrame): Long =
       df.select(input_file_name()).distinct().count()
-    val c5 = part.c5
+    val c5 = part.table("c5")
     val full = filesRead(c5)
     full should be >= 4L // the corpus fills most of 8 buckets
     filesRead(c5.filter(col(LanguageModel.Kn5KeyBucket) === 0)) should
@@ -970,7 +967,7 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     LanguageModel.saveKn5ModelPartitioned(fit, s"$root/part", nKeyBuckets = 8)
     val part = LanguageModel.loadKn5Model(spark, s"$root/part")
     part.keyBuckets shouldBe Some(8)
-    part.c5.columns should contain(LanguageModel.Kn5KeyBucket)
+    part.table("c5").columns should contain(LanguageModel.Kn5KeyBucket)
     // Both writers drop the bucket column of a model loaded bucketed.
     LanguageModel.saveKn5Model(part, s"$root/flat")
     val flat = LanguageModel.loadKn5Model(spark, s"$root/flat")
@@ -1012,44 +1009,38 @@ class LanguageModelSpec extends SparkSpec with Matchers {
       LanguageModel.loadKn5Model(spark, junk)
     }
     e.getMessage should include(junk)
-    e.getMessage should include("saveKn5Model layout (c5/)")
-    e.getMessage should include("saveKn5ModelPartitioned layout (meta/)")
+    e.getMessage should include("saveKnModel (flat)")
+    e.getMessage should include("saveKn5ModelPartitioned (key-bucketed)")
+    e.getMessage should include("no meta/ sidecar")
   }
 
   test("loadKn5Model checks the discount sidecar of both layouts: missing level, NULL double, D1 = 1.5") {
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.lit
     import spark.implicits._
     val docs = kn5Corpus(40).toDF("doc_id", "text")
     val fit = LanguageModel.fitKn5(docs, "text")
     val root = java.nio.file.Files.createTempDirectory("kn5-sidecar").toString
     LanguageModel.saveKn5Model(fit, s"$root/flat")
     LanguageModel.saveKn5ModelPartitioned(fit, s"$root/part", nKeyBuckets = 8)
-    for ((dir, sidecar, writer) <- Seq(
-        (s"$root/flat", "disc", "saveKn5Model"),
-        (s"$root/part", "meta", "saveKn5ModelPartitioned"))) {
-      val path = s"$dir/$sidecar"
+    for (dir <- Seq(s"$root/flat", s"$root/part")) {
+      val path = s"$dir/meta"
       val pristine = spark.read.parquet(path)
       val schema = pristine.schema
       val good = pristine.collect().toSeq
-      def write(rows: Seq[Row]): Unit =
-        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      def restore(): Unit =
+        spark.createDataFrame(spark.sparkContext.parallelize(good, 1), schema)
           .write.mode("overwrite").parquet(path)
-      def set(rows: Seq[Row], level: String, field: String, v: Any): Seq[Row] =
-        rows.map { r =>
-          if (r.getAs[String]("level") != level) r
-          else Row.fromSeq(r.toSeq.updated(schema.fieldIndex(field), v))
-        }
-      val broken = Seq(
-        "levels" -> good.filterNot(_.getAs[String]("level") == "level 2"),
-        "levels" -> (good :+ good.head),
-        "NULL d2 at level 'level 3'" -> set(good, "level 3", "d2", null),
-        "out of bounds at level 'order 5'" -> set(good, "order 5", "d1", 1.5)) ++
-        (if (sidecar == "meta") Seq(
-          "key_buckets [0]" -> good.map(r => Row.fromSeq(
-            r.toSeq.updated(schema.fieldIndex("key_buckets"), 0))))
+      type Fault = (String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      val broken = Seq[Fault](
+        ("missing field d1_2", _.drop("d1_2", "d2_2", "d3_2")),
+        ("holds 2 rows, expected one", df => df.unionByName(df)),
+        ("NULL d2_3", _.withColumn("d2_3", lit(null).cast("double"))),
+        ("out of range: 0 < d1_5 <= 1", _.withColumn("d1_5", lit(1.5)))) ++
+        (if (dir.endsWith("part"))
+          Seq[Fault](("out of range: key_buckets > 0", _.withColumn("key_buckets", lit(0))))
         else Nil)
-      try broken.foreach { case (why, rows) =>
-        write(rows)
+      try broken.foreach { case (why, f) =>
+        SidecarFaults.rewrite(spark, path)(f)
         val e = intercept[IllegalArgumentException] {
           LanguageModel.loadKn5Model(spark, dir)
         }
@@ -1057,11 +1048,88 @@ class LanguageModelSpec extends SparkSpec with Matchers {
           e.getMessage should include(path)
           e.getMessage should include("sidecar contract")
           e.getMessage should include(why)
-          e.getMessage should include(s"re-save the model with $writer")
+          e.getMessage should include("saveKnModel (flat) / saveKn5ModelPartitioned (key-bucketed)")
         }
-      } finally write(good)
+        restore()
+      } finally restore()
       // Restored, the layout loads and serves again.
       LanguageModel.loadKn5Model(spark, dir).disc.map(_.size) shouldBe Some(4)
+    }
+  }
+
+  test("order-2 and order-3 loads check their layout: missing table, drifted table schema, missing, truncated or NULL sidecar") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val train = Seq((1L, "the cat sat on the mat"), (2L, "the dog sat on the rug"))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("kn-faults").toString
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def delete(p: String): Unit = fs.delete(new org.apache.hadoop.fs.Path(p), true): Unit
+    for ((order, top, save, load) <- Seq[(Int, String, String => Unit, String => Any)](
+        (2, "c2", d => LanguageModel.saveKnModel(LanguageModel.fitKn(train, "text"), d),
+          d => LanguageModel.loadKnModel(spark, d)),
+        (3, "c3", d => LanguageModel.saveKn3Model(LanguageModel.fitKn3(train, "text"), d),
+          d => LanguageModel.loadKn3Model(spark, d)))) {
+      def saved(name: String): String = {
+        val d = s"$root/$order-$name"
+        save(d)
+        load(d)
+        d
+      }
+      def refused(d: String, why: String): Unit = {
+        val e = intercept[IllegalArgumentException](load(d))
+        withClue(s"order $order / $why: ") {
+          e.getMessage should include(d)
+          e.getMessage should include("contract")
+          e.getMessage should include("saveKnModel")
+          e.getMessage should include(why)
+        }
+      }
+      val noTable = saved("no-table")
+      delete(s"$noTable/t1")
+      refused(noTable, "missing table directory t1/")
+      val drift = saved("drift")
+      SidecarFaults.rewrite(spark, s"$drift/$top")(_.withColumn(top, col(top).cast("string")))
+      refused(drift, s"table $top/ holds")
+      val noMeta = saved("no-meta")
+      delete(s"$noMeta/meta")
+      refused(noMeta, "no meta/ sidecar")
+      val cut = saved("cut")
+      SidecarFaults.truncate(spark, s"$cut/meta", 16)
+      refused(cut, "unreadable sidecar")
+      val nul = saved("null")
+      SidecarFaults.rewrite(spark, s"$nul/meta")(_.withColumn("order", lit(null).cast("int")))
+      refused(nul, "NULL order")
+    }
+  }
+
+  test("LanguageModel.scala reads parquet only in its checked loader; a flat load of order 2, 3 or 5 runs no Spark job") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val src = java.nio.file.Paths.get(sys.props("user.dir"),
+      "src", "main", "scala", "graft", "ops", "LanguageModel.scala")
+    val lines = java.nio.file.Files.readAllLines(src).asScala.toSeq
+    // the enclosing member of the object (nested defs sit deeper)
+    val defLine = """  (?:private(?:\[\w+\])?\s+)?def (\w+).*""".r
+    val readers = lines.zipWithIndex.collect {
+      case (line, i) if """\.read\b""".r.findFirstIn(line).nonEmpty =>
+        lines.take(i + 1).reverse.collectFirst { case defLine(name) => name }
+          .getOrElse(s"line ${i + 1}")
+    }
+    withClue(s"parquet reads in $src: ") {
+      readers shouldBe Seq("loadKnModel")
+    }
+    val docs = kn5Corpus(40).toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("kn-load-jobs").toString
+    LanguageModel.saveKnModel(LanguageModel.fitKn(docs, "text"), s"$root/2")
+    LanguageModel.saveKnModel(LanguageModel.fitKn3(docs, "text"), s"$root/3")
+    LanguageModel.saveKnModel(LanguageModel.fitKn5(docs, "text"), s"$root/5")
+    for (order <- Seq(2, 3, 5)) {
+      val (model, jobs, _) = traced(LanguageModel.loadKnModel(spark, s"$root/$order"))
+      withClue(s"order $order: ") {
+        model.order shouldBe order
+        jobs.map(_.jobId) shouldBe empty
+      }
     }
   }
 

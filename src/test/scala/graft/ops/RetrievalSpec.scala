@@ -227,4 +227,22 @@ class RetrievalSpec extends SparkSpec with Matchers {
     SidecarFaults.rewrite(spark, s"${saved("missing")}/stats")(_.drop("term_buckets"))
     refused(s"$d/missing", "missing field term_buckets")
   }
+
+  test("bm25 index load reads its postings with the stored schema: one Spark job fewer than a legacy sidecar") {
+    import spark.implicits._
+    val docs = Seq((1L, "spark engine"), (2L, "flink engine")).toDF("doc_id", "text")
+    val d = java.nio.file.Files.createTempDirectory("graft-bm25-schema").toString
+    Retrieval.saveBm25IndexPartitioned(
+      Retrieval.buildBm25Index(docs, "doc_id", "text"), d, 4)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val (stored, storedJobs, _) = traced(Retrieval.loadBm25Index(spark, d))
+    // A sidecar written before the schema was stored infers it.
+    SidecarFaults.rewrite(spark, s"$d/stats")(_.drop("schema"))
+    val (legacy, legacyJobs, _) = traced(Retrieval.loadBm25Index(spark, d))
+    storedJobs.size shouldBe legacyJobs.size - 1
+    stored.postings.schema.map(f => f.name -> f.dataType) shouldBe
+      legacy.postings.schema.map(f => f.name -> f.dataType)
+    rows(stored.postings) shouldBe rows(legacy.postings)
+  }
 }

@@ -1191,6 +1191,63 @@ class RunnerSpec extends SparkSpec {
       .getMessage.contains("key-bucketed"))
   }
 
+  // lm_filter_against takes the order from the model's `meta` sidecar,
+  // not from which table directories exist: one case per order, each
+  // saved through the one flat writer, with the order's argument rules.
+  for (order <- Seq(2, 3, 5))
+    test(s"lm_filter_against reads order $order from the model sidecar and keeps its argument rules") {
+      import spark.implicits._
+      val lm = graft.ops.LanguageModel
+      val reference = graft.Kn5TestCorpus.corpus(40).toDF("doc_id", "bio")
+      val ingest = (Seq((100L, "the cat sat on the mat")) ++
+        (101L to 105L).map(i => (i, s"zz$i qq$i ww$i vv$i uu$i")))
+        .toDF("doc_id", "bio")
+      val dir = java.nio.file.Files.createTempDirectory(s"kn-sidecar-$order").toString
+      val fitted = order match {
+        case 2 => lm.fitKn(reference, "bio")
+        case 3 => lm.fitKn3(reference, "bio")
+        case _ => lm.fitKn5(reference, "bio")
+      }
+      lm.saveKnModel(fitted, dir)
+      val model = lm.loadKnModel(spark, dir)
+      assert(model.order == order)
+      val ce = (order match {
+        case 2 => lm.kneserNeyAgainst(ingest, "doc_id", "bio", model)
+        case 3 => lm.kneserNeyTrigramAgainst(ingest, "doc_id", "bio", model)
+        case _ => lm.modifiedKn5Against(ingest, "doc_id", "bio", model)
+      }).collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val cut = (ce(100L) + ce(101L)) / 2
+      def gate(args: String): Set[Long] = Transforms.applyAll(ingest, Transforms.parse(
+          s"lm_filter_against(key=doc_id,col=bio,model=$dir,max_ce=$cut$args)"))
+        .collect().map(_.getLong(0)).toSet
+      def refused(args: String): String =
+        intercept[IllegalArgumentException](gate(args)).getMessage
+      assert(gate("") == Set(100L), s"order $order")
+      if (order == 5) {
+        assert(refused(",discount=0.5").contains("count-of-counts"))
+        assert(gate(",serve=broadcast") == Set(100L))
+        val part = java.nio.file.Files.createTempDirectory("kn-sidecar-part").toString
+        lm.saveKn5ModelPartitioned(fitted, part, nKeyBuckets = 4)
+        assert(intercept[IllegalArgumentException](Transforms.applyAll(ingest,
+          Transforms.parse(s"lm_filter_against(key=doc_id,col=bio,model=$part," +
+            s"max_ce=$cut,serve=shuffle)"))).getMessage.contains("key-bucketed"))
+      } else {
+        gate(",discount=0.5")
+        assert(refused(",serve=broadcast").contains("order-5"))
+      }
+    }
+
+  test("lm_filter_against on a directory that holds no model fails naming both writers") {
+    import spark.implicits._
+    val empty = java.nio.file.Files.createTempDirectory("kn-none").toString
+    val e = intercept[IllegalArgumentException](Transforms.applyAll(
+      Seq((1L, "the cat sat on the mat")).toDF("doc_id", "bio"),
+      Transforms.parse(s"lm_filter_against(key=doc_id,col=bio,model=$empty,max_ce=9.0)")))
+    assert(e.getMessage.contains(empty))
+    assert(e.getMessage.contains("saveKnModel"))
+    assert(e.getMessage.contains("saveKn5ModelPartitioned"))
+  }
+
   test("corpus-prep job: documents to packed training sequences in ONE JobConfig, TFRecord out") {
     import spark.implicits._
     // No feature refs -> no PIT machinery: the entity SQL is the

@@ -780,8 +780,7 @@ class StreamingSoakSpec extends SparkSpec with Matchers {
       log.foreach { case (_, _, st) => st.sum shouldBe 0L } // stateless
       // Served from storage: the stream persists no model table, and
       // each batch's staged projection is released after its sink.
-      Seq(model.c5, model.p4, model.t4, model.d4, model.t3, model.d3,
-        model.t2, model.d2, model.t1, model.stats).foreach(
+      (model.tables :+ model.stats).foreach(
         _.storageLevel shouldBe org.apache.spark.storage.StorageLevel.NONE)
       (spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore) shouldBe
         empty

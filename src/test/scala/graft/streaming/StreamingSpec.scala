@@ -851,13 +851,12 @@ class StreamingSpec extends SparkSpec with Matchers {
     stream.addData(Seq((10L, "the cat and the dog")))
     q.processAllAvailable()
     // While running, the count tables are pinned...
-    assert(model.c12.storageLevel != StorageLevel.NONE,
+    assert(model.table("c2").storageLevel != StorageLevel.NONE,
       "model must be cached while the query runs")
     q.stop()
     q.awaitTermination()
     // ...and the termination listener releases them (async bus — poll).
-    val frames = Seq("c12" -> model.c12, "c1" -> model.c1,
-      "n1c" -> model.n1c, "stats" -> model.stats)
+    val frames = model.keyedTables :+ ("stats" -> model.stats)
     val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
     while (frames.exists(_._2.storageLevel != StorageLevel.NONE) &&
         System.nanoTime() < deadline) Thread.sleep(100)
@@ -892,7 +891,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     // (The terminated event may still see the stopping query as
     // active; a follow-up no-op query's termination settles it.)
     val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    def released = Seq(model.c12, model.c1, model.n1c, model.stats)
+    def released = (model.tables :+ model.stats)
       .forall(_.storageLevel == StorageLevel.NONE)
     while (!released && System.nanoTime() < deadline) {
       val nudgeStream = MemoryStream[Long]
@@ -936,7 +935,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     nudgeStream.addData(1L)
     nudge.processAllAvailable(); nudge.stop(); nudge.awaitTermination()
     val deadline1 = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    def level = model.c12.storageLevel
+    def level = model.table("c2").storageLevel
     while (level != StorageLevel.NONE && System.nanoTime() < deadline1)
       Thread.sleep(100)
     assert(level == StorageLevel.NONE,
@@ -984,8 +983,7 @@ class StreamingSpec extends SparkSpec with Matchers {
       stream.toDF().toDF("doc_id", "text"), "doc_id", "text", model) {
       (rows, id) => got.synchronized { got += ((id, rows.collect())) }
     }.start()
-    val frames = Seq(model.c5, model.p4, model.t4, model.d4, model.t3,
-      model.d3, model.t2, model.d2, model.t1, model.stats)
+    val frames = model.tables :+ model.stats
     try {
       batches.foreach { b => stream.addData(b); q.processAllAvailable() }
       got.size shouldBe 2
