@@ -223,6 +223,30 @@ private[graft] object BucketedIndex {
     checked(sidecarRow(spark, dir)(fail), fields, ranges, optional)(fail)
   }
 
+  /** Read the parquet sidecar at `dir` that `writer` wrote as one row
+    * per value of its first (string) field: those values are exactly
+    * `keys`, each once, every row is checked as [[readSidecar]] checks
+    * its one (a failure names the row's key), and every row holds the
+    * same value of each `shared` field. Returns the rows by key. */
+  def readSidecarRows(spark: SparkSession, dir: String, writer: String,
+      fields: Seq[(String, DataType)], ranges: Seq[Range],
+      keys: Seq[String], shared: Seq[String] = Nil): Map[String, Params] = {
+    val key = fields.head._1
+    val fail = contractError(dir, writer, fields, ranges,
+      s"one row per $key ${keys.mkString("'", "', '", "'")}" +
+        shared.map(f => s", all with one $f").mkString) _
+    val rows = sidecarRows(spark, dir)(fail).map { r =>
+      val at = r.get(key).flatMap(_._2).fold("")(k => s" at $key '$k'")
+      checked(r, fields, ranges, Set.empty)(why => fail(why + at))
+    }
+    val found = rows.map(_(key).toString)
+    if (found.sorted != keys.sorted) fail(s"${key}s ${found.mkString("[", ", ", "]")}")
+    shared.map(f => f -> rows.map(_(f)).distinct).find(_._2.size > 1).foreach {
+      case (f, vs) => fail(s"$f ${vs.mkString("[", ", ", "]")} differs between rows")
+    }
+    found.zip(rows).toMap
+  }
+
   /** The Spark schema in the footer of the first parquet data file
     * under `dir` (or under its first partition directory), read on the
     * driver with no Spark job; None when there is no data file. */
@@ -235,12 +259,17 @@ private[graft] object BucketedIndex {
         .orElse(dirs.map(_.getPath).filter(_.getName.contains("="))
           .sortBy(_.getName).headOption.flatMap(first))
     }
-    first(p).map { file =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, HadoopConfs.of(spark)))
-      try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-        .convert(reader.getFooter.getFileMetaData.getSchema)
-      finally reader.close()
-    }
+    first(p).map(withFooter(spark, _)((_, types) => types))
+  }
+
+  /** `f` of an open reader of the parquet `file` and its footer's Spark
+    * schema. */
+  private def withFooter[T](spark: SparkSession, file: Path)(
+      f: (ParquetFileReader, StructType) => T): T = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, HadoopConfs.of(spark)))
+    try f(reader, new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(reader.getFooter.getFileMetaData.getSchema))
+    finally reader.close()
   }
 
   private def isData(q: Path): Boolean = {
@@ -249,9 +278,10 @@ private[graft] object BucketedIndex {
   }
 
   private def contractError(dir: String, writer: String,
-      fields: Seq[(String, DataType)], ranges: Seq[Range])(why: String): Nothing =
+      fields: Seq[(String, DataType)], ranges: Seq[Range],
+      shape: String = "one row, written last")(why: String): Nothing =
     throw new IllegalArgumentException(
-      s"$dir breaks the $writer sidecar contract (one row, written last; " +
+      s"$dir breaks the $writer sidecar contract ($shape; " +
         fields.map { case (n, t) => s"$n ${t.simpleString}" }.mkString(", ") +
         ranges.map(r => s"; ${r._1}").mkString + s"): $why")
 
@@ -272,38 +302,36 @@ private[graft] object BucketedIndex {
     p
   }
 
-  /** The single row of the sidecar at `dir`, read on the driver with no
-    * Spark job: column name → (type, value or None for NULL). */
+  /** The single row of the sidecar at `dir`: see [[sidecarRows]]. */
   private def sidecarRow(spark: SparkSession, dir: String)(
-      fail: String => Nothing): Map[String, (DataType, Option[Any])] = {
-    val conf = HadoopConfs.of(spark)
+      fail: String => Nothing): Map[String, (DataType, Option[Any])] =
+    sidecarRows(spark, dir)(fail) match {
+      case Seq(r) => r
+      case rs => fail(s"the sidecar at $dir holds ${rs.size} rows, expected one")
+    }
+
+  /** The rows of the sidecar at `dir`, read on the driver with no Spark
+    * job: column name → (type, value or None for NULL). */
+  private def sidecarRows(spark: SparkSession, dir: String)(
+      fail: String => Nothing): Seq[Map[String, (DataType, Option[Any])]] = {
     val p = new Path(dir)
     val f = fs(spark, p)
     if (!f.exists(p)) fail(s"no sidecar at $dir")
     val files = f.listStatus(p).map(_.getPath).filter(isData)
-    val rows = files.toSeq.flatMap { file =>
-      try {
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-        try {
-          val schema = reader.getFooter.getFileMetaData.getSchema
-          val types = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-            .convert(schema)
-          val io = new ColumnIOFactory().getColumnIO(schema)
-          Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
-            .flatMap { pages =>
-              val rr = io.getRecordReader(pages, new GroupRecordConverter(schema))
-              Iterator.fill(pages.getRowCount.toInt)(rr.read())
-            }
-            .map(g => types.fields.map(t => t.name -> (t.dataType, value(g, t))).toMap)
-            .toList
-        } finally reader.close()
+    files.toSeq.flatMap { file =>
+      try withFooter(spark, file) { (reader, types) =>
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(schema)
+        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
+          .flatMap { pages =>
+            val rr = io.getRecordReader(pages, new GroupRecordConverter(schema))
+            Iterator.fill(pages.getRowCount.toInt)(rr.read())
+          }
+          .map(g => types.fields.map(t => t.name -> (t.dataType, value(g, t))).toMap)
+          .toList
       } catch {
         case NonFatal(e) => fail(s"unreadable sidecar file $file (${e.getMessage})")
       }
-    }
-    rows match {
-      case Seq(r) => r
-      case rs => fail(s"the sidecar at $dir holds ${rs.size} rows, expected one")
     }
   }
 

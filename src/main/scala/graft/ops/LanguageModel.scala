@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 
@@ -229,7 +229,7 @@ object LanguageModel {
     serve(scoreG, fitFrom(trainG, train, textCol, order))
   }
 
-  private def ordered(model: KnModel, order: Int, who: String): KnModel = {
+  private[graft] def ordered(model: KnModel, order: Int, who: String): KnModel = {
     require(model.order == order,
       s"$who serves an order-$order model; this one is order ${model.order}")
     model
@@ -798,15 +798,20 @@ object LanguageModel {
 
   private val Writers = "saveKnModel (flat) / saveKn5ModelPartitioned (key-bucketed)"
 
+  /** The name of level `k`'s row in an order-5 discount sidecar. */
+  private def discLevel(k: Int): String =
+    if (k == MknOrder) s"order $k" else s"level $k"
+
   /** Persist a fitted model of any order FLAT: one parquet directory per
-    * table at its natural partitioning, written as concurrent jobs, then
-    * the `meta` sidecar LAST — the commit marker: a directory without
-    * it never loads. The sidecar stores the order and every table's
-    * schema (so a load infers nothing) and, for an order-5 model, the
-    * per-level discounts, estimated FIRST: that is the fail-fast gate a
-    * corpus without count-class decay hits at serve time anyway, and
-    * its job materializes the numerator checkpoints the concurrent
-    * writes then share. A model loaded key-bucketed is written flat. */
+    * table at its natural partitioning and, for an order-5 model, the
+    * `disc` sidecar (one row per discounted level: level, d1, d2, d3),
+    * written as concurrent jobs; then the one-row `model` sidecar LAST
+    * — the commit marker: it stores the order and every table's schema,
+    * so a load infers nothing. The order-5 discounts are estimated
+    * FIRST: that is the fail-fast gate a corpus without count-class
+    * decay hits at serve time anyway, and its job materializes the
+    * numerator checkpoints the concurrent writes then share. A model
+    * loaded key-bucketed is written flat. */
   def saveKnModel(model: KnModel, path: String): Unit = save(model, path, None)
 
   /** [[saveKnModel]] of an order-3 model. */
@@ -823,10 +828,12 @@ object LanguageModel {
     * ARRIVAL batch's n-gram keys fall into. At real model scale
     * (billions of n-gram types) the flat layout's every-serve scan of
     * all ten tables is exactly the cost partition pruning kills. The
-    * discounts ride the `meta` sidecar with the bucket count, so a
-    * serve never scans the numerator tables for count-of-counts. Size
-    * `nKeyBuckets` to the model (constant per-bucket bytes). A model
-    * loaded key-bucketed is re-bucketed from its unbucketed tables. */
+    * discounts ride the `meta` sidecar (one row per level: level,
+    * key_buckets, d1, d2, d3), so a serve never scans the numerator
+    * tables for count-of-counts; the `model` sidecar comes last as in
+    * [[saveKnModel]]. Size `nKeyBuckets` to the model (constant
+    * per-bucket bytes). A model loaded key-bucketed is re-bucketed
+    * from its unbucketed tables. */
   def saveKn5ModelPartitioned(
       model: KnModel, path: String, nKeyBuckets: Int = 64): Unit = {
     require(nKeyBuckets > 0,
@@ -837,103 +844,142 @@ object LanguageModel {
   private def save(model: KnModel, path: String, keyBuckets: Option[Int]): Unit = {
     val disc = if (model.order == MknOrder) Some(discounts(model)) else None
     val spark = model.stats.sparkSession
-    val meta = new org.apache.hadoop.fs.Path(path, "meta")
-    meta.getFileSystem(graft.io.HadoopConfs.of(spark)).delete(meta, true)
+    import spark.implicits._
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(graft.io.HadoopConfs.of(spark))
+    Seq("model", "disc", "meta").foreach(s =>
+      fs.delete(new org.apache.hadoop.fs.Path(path, s), true))
     val frames = unbucketed(model).keyedTables.zip(tableKeys(model.order)).map {
       case ((name, df), key) => name -> keyBuckets.fold(df)(nb => df
         .withColumn(Kn5KeyBucket, OpsUtil.hashBucket(nb, col(key)))
         .repartition(nb, col(Kn5KeyBucket)))
     } :+ ("stats" -> model.stats.coalesce(1))
-    OpsUtil.runConcurrently(frames.map { case (name, df) => () =>
+    val sidecar = disc.map { d =>
+      val rows = levels(MknOrder).map { l =>
+        val (d1, d2, d3) = d(l.k); (discLevel(l.k), d1, d2, d3)
+      }.toDF("level", "d1", "d2", "d3")
+      keyBuckets.fold("disc" -> rows)(nb => "meta" -> rows.select(col("level"),
+        lit(nb).as("key_buckets"), col("d1"), col("d2"), col("d3")))
+    }
+    OpsUtil.runConcurrently((frames ++ sidecar).map { case (name, df) => () =>
       val w = df.write.mode("overwrite")
-      (if (keyBuckets.isDefined && name != "stats") w.partitionBy(Kn5KeyBucket)
-       else w).parquet(s"$path/$name")
+      (if (keyBuckets.isDefined && tableNames(model.order).contains(name))
+        w.partitionBy(Kn5KeyBucket) else w).parquet(s"$path/$name")
     })
-    val fields: Seq[(String, DataType, Any)] = Seq(
-      ("order", IntegerType, model.order),
-      ("schema", StringType,
-        StructType(frames.map { case (n, df) => StructField(n, df.schema) }).json)) ++
-      keyBuckets.map(b => ("key_buckets", IntegerType, b)) ++
-      disc.toSeq.flatMap(_.toSeq.sortBy(-_._1).flatMap { case (k, (d1, d2, d3)) =>
-        Seq((s"d1_$k", DoubleType, d1), (s"d2_$k", DoubleType, d2),
-          (s"d3_$k", DoubleType, d3))
-      })
-    spark.createDataFrame(
-        java.util.List.of(Row.fromSeq(fields.map(_._3))),
-        StructType(fields.map(f => StructField(f._1, f._2))))
-      .coalesce(1).write.mode("overwrite").parquet(meta.toString)
+    Seq((model.order, StructType(frames.map { case (n, df) => StructField(n, df.schema) }).json))
+      .toDF("order", "schema").coalesce(1).write.mode("overwrite").parquet(s"$path/model")
   }
 
-  /** Load a persisted model — the inverse of BOTH writers, reading the
-    * `meta` sidecar on the driver ([[BucketedIndex.readSidecar]], no
+  /** Column renames of an order-5 layout written before the `model`
+    * sidecar, table → (old → new): those saves named each table's
+    * columns on their own (`fg`, `c4`, `tsum4`, `nt4`, `k1`, …). */
+  private val LegacyKn5Columns: Map[String, Map[String, String]] = {
+    def den(k: Int, named: (String, String)*) =
+      (named ++ (1 to 3).map(j => s"k$j" -> s"k${j}_$k")).toMap
+    Map("c5" -> Map("fg" -> "s12345"), "p4" -> den(5, "c4" -> "sum5"),
+      "d4" -> den(4, "tsum4" -> "sum4", "nt4" -> "n4"),
+      "d3" -> den(3, "tsum3" -> "sum3", "nt3" -> "n3"),
+      "d2" -> den(2, "w4d" -> "p4", "tsum2" -> "sum2", "nt2" -> "n2"),
+      "t1" -> Map("w5c" -> "s5", "n1c" -> "t1"))
+  }
+
+  /** Load a persisted model — the inverse of BOTH writers. Every
+    * sidecar is read on the driver ([[BucketedIndex.readSidecar]], no
     * Spark job) and every table with its stored schema, so a flat load
     * runs no Spark job at all. Checked before any serve trusts it:
-    *   - a directory with no `meta/` holds no committed model (nothing,
-    *     an unfinished save, or a layout older than the sidecar — re-fit
-    *     it with `Fit kn|kn3|kn5`) and fails naming both writers;
-    *   - the sidecar: one row; the order; a schema naming the order's
-    *     tables; for order 5 every level's (D1, D2, D3+) non-NULL and
-    *     inside 0 < D1 ≤ 1, 0 < D2 ≤ 2, 0 < D3+ ≤ 3; `key_buckets`,
-    *     when present, positive;
-    *   - each table directory exists, and its first data file's footer
-    *     holds the stored columns and types.
-    * A failure names the path and the contract, not a serve-time
-    * missing key, NULL read as 0, or division by zero. */
+    *   - `model/`: one row; the order (2, 3 or 5); a schema naming the
+    *     order's tables. Each table directory exists, and its first
+    *     data file's footer holds the stored columns and types.
+    *   - the layout: key-bucketed exactly when `meta/` exists, and then
+    *     every keyed table's stored schema carries `__graft_kb`;
+    *   - order 5: the discounts from `meta/` (key-bucketed) or `disc/`
+    *     (flat): one row per level, non-NULL d1, d2, d3 inside
+    *     0 < D1 ≤ 1, 0 < D2 ≤ 2, 0 < D3+ ≤ 3, and for `meta/` one
+    *     positive `key_buckets`. A flat order-5 layout without `disc/`
+    *     loads with `disc = None` and estimates on first use.
+    * An order-5 directory saved before the `model` sidecar existed (a
+    * `c5/` or `meta/` layout without `model/`) still loads: its tables'
+    * schemas are inferred and its columns renamed to today's. Any
+    * other directory without `model/` holds no committed model and
+    * fails naming both writers. A failure names the path and the
+    * contract, not a serve-time missing key, NULL read as 0, or
+    * division by zero. */
   def loadKnModel(spark: SparkSession, path: String): KnModel = {
     import org.apache.hadoop.fs.Path
-    val dir = s"$path/meta"
     val fs = new Path(path).getFileSystem(graft.io.HadoopConfs.of(spark))
+    def has(sub: String): Boolean = fs.exists(new Path(path, sub))
     def fail(why: String): Nothing = throw new IllegalArgumentException(
-      s"loadKnModel: $path breaks the $Writers layout contract (a meta/ " +
+      s"loadKnModel: $path breaks the $Writers layout contract (a model/ " +
         "sidecar written last stores the order and each table's schema; " +
         s"each table is a parquet directory with that schema): $why")
-    if (!fs.exists(new Path(dir))) fail("it is neither layout: there is " +
-      "no meta/ sidecar, so it holds no committed model — nothing was saved " +
-      "there, or the save did not finish or predates the sidecar; fit and " +
-      "save one (e.g. `Fit kn|kn3|kn5 <corpus> <id> <text> <dir> [keyBuckets]`)")
-    val orderRange: BucketedIndex.Range =
-      "order is 2, 3 or 5" -> (_.get("order").forall(o => nName.contains(o.asInstanceOf[Int])))
-    val order = BucketedIndex.readSidecar(spark, dir, Writers,
-      Seq("order" -> IntegerType), Seq(orderRange))("order").asInstanceOf[Int]
-    val names = tableNames(order) :+ "stats"
-    def schemaOf(p: BucketedIndex.Params): Option[StructType] =
-      scala.util.Try(DataType.fromJson(p("schema").toString)).toOption.collect {
-        case s: StructType if s.fieldNames.toSeq == names &&
-          s.fields.forall(_.dataType.isInstanceOf[StructType]) => s
-      }
-    val dl = if (order == MknOrder) levels(order).map(_.k) else Nil
-    def d(j: Int, k: Int) = s"d${j}_$k"
-    val p = BucketedIndex.readSidecar(spark, dir, Writers,
-      Seq("order" -> IntegerType, "schema" -> StringType,
-        "key_buckets" -> IntegerType) ++
-        dl.flatMap(k => (1 to 3).map(j => d(j, k) -> DoubleType)),
-      Seq(orderRange, BucketedIndex.positive("key_buckets"),
-        s"schema names the tables ${names.mkString(", ")}" ->
-          ((q: BucketedIndex.Params) => schemaOf(q).nonEmpty)) ++
-        dl.map(k => s"0 < ${d(1, k)} <= 1, 0 < ${d(2, k)} <= 2, 0 < ${d(3, k)} <= 3" ->
-          ((q: BucketedIndex.Params) => mknInBounds(q(d(1, k)).asInstanceOf[Double],
-            q(d(2, k)).asInstanceOf[Double], q(d(3, k)).asInstanceOf[Double]))),
-      optional = Set("key_buckets"))
-    val frames = schemaOf(p).get.fields.toSeq.map { f =>
-      val stored = f.dataType.asInstanceOf[StructType]
-      val table = s"$path/${f.name}"
-      if (!fs.exists(new Path(table))) fail(s"missing table directory ${f.name}/")
-      val found =
-        try BucketedIndex.footerSchema(spark, table)
-        catch { case scala.util.control.NonFatal(e) =>
-          fail(s"unreadable table ${f.name}/ (${e.getMessage})") }
-      def cols(s: Seq[StructField]) =
-        s.filterNot(_.name == Kn5KeyBucket).map(c => s"${c.name} ${c.dataType.simpleString}")
-      found.filter(h => cols(h.fields) != cols(stored.fields)).foreach(h =>
-        fail(s"table ${f.name}/ holds (${cols(h.fields).mkString(", ")}), " +
-          s"the sidecar stores (${cols(stored.fields).mkString(", ")})"))
-      spark.read.schema(stored).parquet(table)
+    val committed = has("model")
+    val bucketed = has("meta")
+    if (!committed && !bucketed && !has("c5")) fail("it is neither layout: " +
+      "there is no model/ sidecar, so it holds no committed model — nothing " +
+      "was saved there or the save did not finish — and it is no order-5 " +
+      "layout written before that sidecar either (a saveKn5Model layout " +
+      "(c5/) or a saveKn5ModelPartitioned layout (meta/)); fit and save one (e.g. " +
+      "`Fit kn|kn3|kn5 <corpus> <id> <text> <dir> [keyBuckets]`)")
+    val stored = Option.when(committed) {
+      val orderRange: BucketedIndex.Range =
+        "order is 2, 3 or 5" -> (p => nName.contains(p("order").asInstanceOf[Int]))
+      def schemaOf(p: BucketedIndex.Params): Option[StructType] =
+        scala.util.Try(DataType.fromJson(p("schema").toString)).toOption.collect {
+          case s: StructType if s.fieldNames.toSeq ==
+              tableNames(p("order").asInstanceOf[Int]) :+ "stats" &&
+            s.fields.forall(_.dataType.isInstanceOf[StructType]) => s
+        }
+      val p = BucketedIndex.readSidecar(spark, s"$path/model", Writers,
+        Seq("order" -> IntegerType, "schema" -> StringType),
+        Seq(orderRange, "schema names the order's tables" -> (schemaOf(_).nonEmpty)))
+      p("order").asInstanceOf[Int] -> schemaOf(p).get
     }
-    val disc = if (dl.isEmpty) None else Some(dl.map(k => k ->
-      (p(d(1, k)).asInstanceOf[Double], p(d(2, k)).asInstanceOf[Double],
-        p(d(3, k)).asInstanceOf[Double])).toMap)
-    KnModel(order, frames.init, frames.last, disc,
-      p.get("key_buckets").map(_.asInstanceOf[Int]))
+    val order = stored.fold(MknOrder)(_._1)
+    val names = tableNames(order) :+ "stats"
+    def schema(name: String): Option[StructType] =
+      stored.map(_._2(name).dataType.asInstanceOf[StructType])
+    if (stored.nonEmpty && tableNames(order).exists(n =>
+        schema(n).get.fieldNames.contains(Kn5KeyBucket)) != bucketed)
+      fail(if (bucketed) "it holds a meta/ sidecar, but its tables are not key-bucketed"
+        else s"its tables carry $Kn5KeyBucket, but it holds no meta/ sidecar")
+    val frames = names.map { name =>
+      val table = s"$path/$name"
+      if (!has(name)) fail(s"missing table directory $name/")
+      schema(name).foreach { s =>
+        val found =
+          try BucketedIndex.footerSchema(spark, table)
+          catch { case scala.util.control.NonFatal(e) =>
+            fail(s"unreadable table $name/ (${e.getMessage})") }
+        def cols(t: StructType) = t.fields.toSeq.filterNot(_.name == Kn5KeyBucket)
+          .map(c => s"${c.name} ${c.dataType.simpleString}")
+        found.filter(h => cols(h) != cols(s)).foreach(h =>
+          fail(s"table $name/ holds (${cols(h).mkString(", ")}), " +
+            s"the sidecar stores (${cols(s).mkString(", ")})"))
+      }
+      val read = spark.read
+      val df = schema(name).fold(read)(read.schema).parquet(table)
+      if (stored.nonEmpty) df else LegacyKn5Columns.get(name).fold(df)(df.withColumnsRenamed)
+    }
+    val sub = if (bucketed) "meta" else "disc"
+    val rows = Option.when(order == MknOrder && has(sub)) {
+      val dl = levels(MknOrder).map(l => discLevel(l.k))
+      BucketedIndex.readSidecarRows(spark, s"$path/$sub",
+        if (bucketed) "saveKn5ModelPartitioned" else "saveKn5Model",
+        Seq("level" -> StringType, "d1" -> DoubleType, "d2" -> DoubleType,
+          "d3" -> DoubleType) ++
+          (if (bucketed) Seq("key_buckets" -> IntegerType) else Nil),
+        Seq("0 < d1 <= 1, 0 < d2 <= 2, 0 < d3 <= 3" -> ((p: BucketedIndex.Params) =>
+          mknInBounds(p("d1").asInstanceOf[Double], p("d2").asInstanceOf[Double],
+            p("d3").asInstanceOf[Double]))) ++
+          (if (bucketed) Seq(BucketedIndex.positive("key_buckets")) else Nil),
+        dl, shared = if (bucketed) Seq("key_buckets") else Nil)
+    }
+    val keyBuckets = rows.filter(_ => bucketed)
+      .map(_.values.head("key_buckets").asInstanceOf[Int])
+    val disc = rows.map(r => levels(MknOrder).map { l =>
+      def d(f: String) = r(discLevel(l.k))(f).asInstanceOf[Double]
+      l.k -> (d("d1"), d("d2"), d("d3"))
+    }.toMap)
+    KnModel(order, frames.init, frames.last, disc, keyBuckets)
   }
 
   /** [[loadKnModel]] of a directory that must hold an order-3 model. */

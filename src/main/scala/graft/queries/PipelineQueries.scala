@@ -2181,7 +2181,7 @@ object PipelineQueries {
 
     // Persisted order-5 model serving — ten count tables fitted once,
     // saved, loaded, scored with zero training passes; the per-level
-    // discounts ride the flat layout's save-time `meta` sidecar (r17
+    // discounts ride the flat layout's save-time `disc` sidecar (r17
     // — integer counts round-trip parquet exactly, so sidecar and
     // re-estimation are the same bits). The serve keeps the DEFAULT
     // shuffle cascade: self-scoring the corpus is exactly the

@@ -421,7 +421,7 @@ object Transforms {
       // Persisted-model perplexity gate — the CCNet deployment shape:
       // the Kneser-Ney count tables were fitted ONCE on a clean
       // reference corpus and every ingest batch scores against them
-      // with zero training passes. The model's checked `meta` sidecar
+      // with zero training passes. The model's checked `model` sidecar
       // names its ORDER (loadKnModel reads it on the driver, flat or
       // key-bucketed layout, and rejects a directory holding no model
       // naming both writers): order 2 serves bigram interpolated KN,

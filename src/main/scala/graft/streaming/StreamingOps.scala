@@ -681,7 +681,8 @@ object StreamingOps {
   /** Streaming perplexity scoring: DOCUMENT batches arrive on the
     * stream and score against a prebuilt order-2
     * [[graft.ops.LanguageModel.KnModel]] (`fitKn`, or `loadKnModel` of
-    * a bigram directory) — the CCNet deployment shape (KenLM fitted on
+    * a bigram directory; a model of another order fails here, at stream
+    * build, before anything is persisted) — the CCNet deployment shape (KenLM fitted on
     * a clean reference corpus once, served against every crawl
     * snapshot as it lands). Stateless — the count tables are the
     * state, persisted for the query's lifetime and RELEASED
@@ -706,7 +707,8 @@ object StreamingOps {
       discount: Double = 0.75, floorEps: Double = 1e-6)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val servable = model.mapKeyed((_, df) => df.persist(lvl))
+    val servable = graft.ops.LanguageModel.ordered(model, 2, "lmScoreStream")
+      .mapKeyed((_, df) => df.persist(lvl))
       .copy(stats = model.stats.persist(lvl))
     val queryName = releaseOnTermination(docs.sparkSession,
       "graft-lm-score", servable.tables :+ servable.stats, lvl)
@@ -785,8 +787,8 @@ object StreamingOps {
     * zero training passes, served FROM STORAGE — nothing is persisted
     * for the query's lifetime and no termination listener is
     * registered, because there is nothing to release. Discounts come
-    * from `model.disc` (stored in the model's `meta` sidecar by either
-    * writer) or, for a model fitted in place, are estimated ONCE here,
+    * from `model.disc` (stored in the model's `disc` or `meta` sidecar
+    * by either writer) or, for a model fitted in place, are estimated ONCE here,
     * at stream build, never per micro-batch. Each micro-batch stages
     * its all-keys 5-gram projection via withStaged (released after the
     * sink — the batch path's internal localCheckpoint would leave one
@@ -816,7 +818,7 @@ object StreamingOps {
   /** Order-5 scoring stream FROM A MODEL DIRECTORY — the deployment
     * entry point: [[lm5ScoreStream]] over
     * [[graft.ops.LanguageModel.loadKn5Model]], which reads either
-    * layout through its checked `meta` sidecar (a
+    * layout through its checked `model` sidecar (a
     * `saveKn5ModelPartitioned` directory serves partition-pruned, a
     * flat `saveKnModel` one whole) and fails at stream build, naming
     * both writers, on a directory that holds no model. */

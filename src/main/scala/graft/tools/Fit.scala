@@ -32,7 +32,7 @@ import graft.LocalSession
   *                    count for the partition-pruned serve layout
   *                    (saveKn5ModelPartitioned); omit for flat]
   *                    All three write one model layout (tables plus a
-  *                    `meta` sidecar naming the order; `loadKnModel`
+  *                    `model` sidecar naming the order; `loadKnModel`
   *                    reads any of them).
   *   - `exact_index` — hash-bucketed content-hash dedup index
   *                    ([[graft.ops.Dedup.saveExactIndexPartitioned]];
@@ -167,7 +167,7 @@ object Fit {
         size match {
           // size = key-bucket count -> the partition-pruned serve
           // layout (saveKn5ModelPartitioned; loadKn5Model reads its
-          // meta sidecar, so lm_filter_against, kn5ServeAuto and
+          // meta and model sidecars, so lm_filter_against, kn5ServeAuto and
           // lm5ScoreStreamFrom serve it broadcast-semi + pruned).
           case Some(b) => validated(
             graft.ops.LanguageModel.saveKn5ModelPartitioned(model, outDir, b))

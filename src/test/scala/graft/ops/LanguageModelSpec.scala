@@ -762,9 +762,12 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     val fresh = java.nio.file.Files.createTempDirectory("kn5-disc-fresh").toString
     LanguageModel.saveKn5Model(loaded.copy(disc = None), fresh)
     loaded.disc shouldBe LanguageModel.loadKn5Model(spark, fresh).disc
-    // The loaded tables without their stored discounts estimate them
-    // on first use and serve the same rows.
-    val legacy = loaded.copy(disc = None)
+    // A pre-sidecar layout (disc/ absent) still loads and estimates.
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(dir, "disc"), true)
+    val legacy = LanguageModel.loadKn5Model(spark, dir)
+    legacy.disc shouldBe None
     LanguageModel.modifiedKn5Against(docs, "doc_id", "text", legacy)
       .collect().map(_.toString).sorted.toSeq shouldBe
       LanguageModel.modifiedKn5Against(docs, "doc_id", "text", loaded)
@@ -1009,52 +1012,137 @@ class LanguageModelSpec extends SparkSpec with Matchers {
       LanguageModel.loadKn5Model(spark, junk)
     }
     e.getMessage should include(junk)
-    e.getMessage should include("saveKnModel (flat)")
-    e.getMessage should include("saveKn5ModelPartitioned (key-bucketed)")
-    e.getMessage should include("no meta/ sidecar")
+    e.getMessage should include("saveKn5Model layout (c5/)")
+    e.getMessage should include("saveKn5ModelPartitioned layout (meta/)")
   }
 
   test("loadKn5Model checks the discount sidecar of both layouts: missing level, NULL double, D1 = 1.5") {
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
     import spark.implicits._
     val docs = kn5Corpus(40).toDF("doc_id", "text")
     val fit = LanguageModel.fitKn5(docs, "text")
     val root = java.nio.file.Files.createTempDirectory("kn5-sidecar").toString
     LanguageModel.saveKn5Model(fit, s"$root/flat")
     LanguageModel.saveKn5ModelPartitioned(fit, s"$root/part", nKeyBuckets = 8)
-    for (dir <- Seq(s"$root/flat", s"$root/part")) {
-      val path = s"$dir/meta"
+    for ((dir, sidecar, writer) <- Seq(
+        (s"$root/flat", "disc", "saveKn5Model"),
+        (s"$root/part", "meta", "saveKn5ModelPartitioned"))) {
+      val path = s"$dir/$sidecar"
       val pristine = spark.read.parquet(path)
       val schema = pristine.schema
       val good = pristine.collect().toSeq
-      def restore(): Unit =
-        spark.createDataFrame(spark.sparkContext.parallelize(good, 1), schema)
+      def write(rows: Seq[Row], s: StructType = schema): Unit =
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), s)
           .write.mode("overwrite").parquet(path)
-      type Fault = (String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      val broken = Seq[Fault](
-        ("missing field d1_2", _.drop("d1_2", "d2_2", "d3_2")),
-        ("holds 2 rows, expected one", df => df.unionByName(df)),
-        ("NULL d2_3", _.withColumn("d2_3", lit(null).cast("double"))),
-        ("out of range: 0 < d1_5 <= 1", _.withColumn("d1_5", lit(1.5)))) ++
-        (if (dir.endsWith("part"))
-          Seq[Fault](("out of range: key_buckets > 0", _.withColumn("key_buckets", lit(0))))
-        else Nil)
-      try broken.foreach { case (why, f) =>
-        SidecarFaults.rewrite(spark, path)(f)
+      def set(rows: Seq[Row], level: String, field: String, v: Any): Seq[Row] =
+        rows.map { r =>
+          if (r.getAs[String]("level") != level) r
+          else Row.fromSeq(r.toSeq.updated(schema.fieldIndex(field), v))
+        }
+      val broken = Seq(
+        "levels" -> (() => write(good.filterNot(_.getAs[String]("level") == "level 2"))),
+        "levels" -> (() => write(good :+ good.head)),
+        "NULL d2 at level 'level 3'" -> (() => write(set(good, "level 3", "d2", null))),
+        "does not hold at level 'order 5'" -> (() => write(set(good, "order 5", "d1", 1.5)))) ++
+        (if (sidecar == "meta") {
+          val kb = schema.fieldIndex("key_buckets")
+          Seq(
+            "key_buckets > 0 does not hold" -> (() =>
+              write(good.map(r => Row.fromSeq(r.toSeq.updated(kb, 0))))),
+            "NULL key_buckets at level 'level 3'" -> (() =>
+              write(set(good, "level 3", "key_buckets", null))),
+            "missing field key_buckets" -> (() =>
+              write(good.map(r => Row.fromSeq(r.toSeq.patch(kb, Nil, 1))),
+                StructType(schema.fields.toSeq.patch(kb, Nil, 1)))),
+            "differs between rows" -> (() =>
+              write(set(good, "level 2", "key_buckets", 4))))
+        } else Nil)
+      try broken.foreach { case (why, corrupt) =>
+        corrupt()
         val e = intercept[IllegalArgumentException] {
           LanguageModel.loadKn5Model(spark, dir)
         }
         withClue(s"$path / $why: ") {
           e.getMessage should include(path)
-          e.getMessage should include("sidecar contract")
+          e.getMessage should include(s"the $writer sidecar contract")
           e.getMessage should include(why)
-          e.getMessage should include("saveKnModel (flat) / saveKn5ModelPartitioned (key-bucketed)")
         }
-        restore()
-      } finally restore()
+      } finally write(good)
       // Restored, the layout loads and serves again.
       LanguageModel.loadKn5Model(spark, dir).disc.map(_.size) shouldBe Some(4)
     }
+    // The layout follows meta/, and the stored table schemas must agree:
+    // a meta/ sidecar beside flat tables, or bucketed tables without it,
+    // fails instead of serving unpruned or pruning flat tables.
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$root/part/meta"),
+      fs, new org.apache.hadoop.fs.Path(s"$root/flat/meta"), false, spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$root/part/meta"), true)
+    for ((dir, why) <- Seq(
+        s"$root/flat" -> "it holds a meta/ sidecar, but its tables are not key-bucketed",
+        s"$root/part" -> s"its tables carry ${LanguageModel.Kn5KeyBucket}, but it holds no meta/ sidecar")) {
+      val e = intercept[IllegalArgumentException](LanguageModel.loadKn5Model(spark, dir))
+      e.getMessage should include(dir)
+      e.getMessage should include(why)
+    }
+  }
+
+  test("order-5 layouts saved before the model/ sidecar still load and serve the same rows") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    import spark.implicits._
+    val docs = kn5Corpus(40).toDF("doc_id", "text")
+    val fit = LanguageModel.fitKn5(docs, "text")
+    val root = java.nio.file.Files.createTempDirectory("kn5-legacy").toString
+    LanguageModel.saveKn5Model(fit, s"$root/flat")
+    LanguageModel.saveKn5ModelPartitioned(fit, s"$root/part", nKeyBuckets = 8)
+    // Before the model/ sidecar, the order-5 writers named each table's
+    // columns on their own and stored no schema; the discount sidecars
+    // (disc/, meta/) had today's shape.
+    def k(l: Int) = (1 to 3).map(j => s"k${j}_$l" -> s"k$j")
+    val legacyNames: Map[String, Seq[(String, String)]] = Map(
+      "c5" -> Seq("s12345" -> "fg"), "p4" -> (Seq("sum5" -> "c4") ++ k(5)),
+      "d4" -> (Seq("sum4" -> "tsum4", "n4" -> "nt4") ++ k(4)),
+      "d3" -> (Seq("sum3" -> "tsum3", "n3" -> "nt3") ++ k(3)),
+      "d2" -> (Seq("p4" -> "w4d", "sum2" -> "tsum2", "n2" -> "nt2") ++ k(2)),
+      "t1" -> Seq("s5" -> "w5c", "t1" -> "n1c"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    def legacy(src: String, sidecar: String): String = {
+      val dst = s"$src-legacy"
+      for (t <- fit.keyedTables.map(_._1) :+ "stats") {
+        val w = spark.read.parquet(s"$src/$t")
+          .withColumnsRenamed(legacyNames.getOrElse(t, Nil).toMap)
+          .write.mode("overwrite")
+        (if (sidecar == "meta" && t != "stats") w.partitionBy(LanguageModel.Kn5KeyBucket)
+         else w).parquet(s"$dst/$t")
+      }
+      FileUtil.copy(fs, new Path(s"$src/$sidecar"), fs, new Path(s"$dst/$sidecar"), false, conf)
+      dst
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val expected = rows(LanguageModel.modifiedKn5Against(docs, "doc_id", "text", fit))
+    val disc = LanguageModel.loadKn5Model(spark, s"$root/flat").disc
+    disc shouldBe defined
+    val flat = legacy(s"$root/flat", "disc")
+    val part = legacy(s"$root/part", "meta")
+    val lf = LanguageModel.loadKn5Model(spark, flat)
+    val lp = LanguageModel.loadKn5Model(spark, part)
+    lf.disc shouldBe disc
+    lp.disc shouldBe disc
+    lf.keyBuckets shouldBe None
+    lp.keyBuckets shouldBe Some(8)
+    fit.keyedTables.zip(lf.keyedTables).foreach { case ((name, want), (_, got)) =>
+      withClue(name)(got.columns.toSeq shouldBe want.columns.toSeq)
+    }
+    rows(LanguageModel.modifiedKn5Against(docs, "doc_id", "text", lf)) shouldBe expected
+    rows(LanguageModel.modifiedKn5Against(docs, "doc_id", "text", lp)) shouldBe expected
+    // A flat layout from before the disc/ sidecar estimates on first use.
+    fs.delete(new Path(flat, "disc"), true)
+    val bare = LanguageModel.loadKn5Model(spark, flat)
+    bare.disc shouldBe None
+    rows(LanguageModel.modifiedKn5Against(docs, "doc_id", "text", bare)) shouldBe expected
   }
 
   test("order-2 and order-3 loads check their layout: missing table, drifted table schema, missing, truncated or NULL sidecar") {
@@ -1091,14 +1179,14 @@ class LanguageModelSpec extends SparkSpec with Matchers {
       val drift = saved("drift")
       SidecarFaults.rewrite(spark, s"$drift/$top")(_.withColumn(top, col(top).cast("string")))
       refused(drift, s"table $top/ holds")
-      val noMeta = saved("no-meta")
-      delete(s"$noMeta/meta")
-      refused(noMeta, "no meta/ sidecar")
+      val noMeta = saved("no-model")
+      delete(s"$noMeta/model")
+      refused(noMeta, "no model/ sidecar")
       val cut = saved("cut")
-      SidecarFaults.truncate(spark, s"$cut/meta", 16)
+      SidecarFaults.truncate(spark, s"$cut/model", 16)
       refused(cut, "unreadable sidecar")
       val nul = saved("null")
-      SidecarFaults.rewrite(spark, s"$nul/meta")(_.withColumn("order", lit(null).cast("int")))
+      SidecarFaults.rewrite(spark, s"$nul/model")(_.withColumn("order", lit(null).cast("int")))
       refused(nul, "NULL order")
     }
   }

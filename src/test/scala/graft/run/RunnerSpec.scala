@@ -1191,7 +1191,7 @@ class RunnerSpec extends SparkSpec {
       .getMessage.contains("key-bucketed"))
   }
 
-  // lm_filter_against takes the order from the model's `meta` sidecar,
+  // lm_filter_against takes the order from the model's `model` sidecar,
   // not from which table directories exist: one case per order, each
   // saved through the one flat writer, with the order's argument rules.
   for (order <- Seq(2, 3, 5))

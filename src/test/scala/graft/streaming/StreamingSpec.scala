@@ -834,6 +834,30 @@ class StreamingSpec extends SparkSpec with Matchers {
     } finally q.stop()
   }
 
+  test("lmScoreStream: a model of another order fails at stream build and persists nothing") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.ops.LanguageModel
+    import org.apache.spark.storage.StorageLevel
+    val train = Seq(
+      (1L, "the cat sat on the mat"), (2L, "the dog sat on the rug"))
+      .toDF("doc_id", "text")
+    val stream = MemoryStream[(Long, String)]
+    for (model <- Seq(LanguageModel.fitKn3(train, "text"), LanguageModel.fitKn5(train, "text"))) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[IllegalArgumentException] {
+        StreamingOps.lmScoreStream(
+          stream.toDF().toDF("doc_id", "text"), "doc_id", "text", model) {
+          (rows, _) => rows.collect(): Unit
+        }
+      }
+      e.getMessage should include(
+        s"lmScoreStream serves an order-2 model; this one is order ${model.order}")
+      (model.tables :+ model.stats).foreach(_.storageLevel shouldBe StorageLevel.NONE)
+      (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    }
+  }
+
   test("lmScoreStream: the model cache releases when the query terminates") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
