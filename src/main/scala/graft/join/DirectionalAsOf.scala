@@ -21,7 +21,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     via one 2-value driver aggregate — the same bounded-scan pattern
   *     as the PIT join's TTL pruning.
   *   - The plan is the backward join's ([[PointInTimeJoin.asOf]]): one
-  *     window pass per source, ordered by descending time forward (both
+  *     window pass per entity key, ordered by descending time forward (both
   *     orders for nearest), with `min` for `max`. Unmatched rows keep
   *     NULL features; every entity row comes back once, duplicates
   *     included, with no unique row id asked of the caller.
@@ -86,8 +86,9 @@ object DirectionalAsOf {
   /** Multi-view FORWARD as-of join: per view, exactly the single-view
     * operator's semantics (own horizon, predicate, ties on (viewTs,
     * features…)), features emitted under [[DirectionalView.outName]].
-    * Views sharing a source run one window pass over one scan
-    * (the multi-label shape: N label views over one event table). */
+    * Views sharing a source share one scan, and views keyed on one
+    * entity key one window pass (the multi-label shape: N label views
+    * over one event table). */
   def forwardMulti(
       entity: DataFrame, entityTs: String,
       views: Seq[DirectionalView]): DataFrame =

@@ -1,7 +1,8 @@
 package graft.join
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{KnownNotNull, RowOrdering}
+import org.apache.spark.sql.catalyst.expressions.{Alias, KnownNotNull, RowOrdering}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -52,15 +53,16 @@ final case class ResolvedView(
   *
   * Spark-first design, scale notes (100 TB posture):
   *   - Views sharing a (canonicalized source, keys, timestamp) identity
-  *     form one group and run ONE pass over one scan: scans, shuffles
-  *     and sorts are O(distinct sources), not O(views).
-  *   - A group's pass is a union of the spine rows with the group's
-  *     pruned view rows, partitioned on the join keys and ordered by
-  *     time, where each view's pick is a running `max|min` over the rows
-  *     before each spine row. The work stays local to each key
-  *     partition: no row id, no materialized spine, and nothing is
-  *     stitched back. The next group runs over this group's output, and
-  *     duplicate spine rows simply each get their own answer.
+  *     form one group over one scan, and the groups keyed on the same
+  *     spine values share ONE pass: scans are O(distinct sources), and
+  *     shuffles and sorts O(distinct entity keys), not O(views).
+  *   - A pass is a union of the spine rows with its groups' pruned view
+  *     rows, partitioned on the join keys and ordered by time, where
+  *     each view's pick is a running `max|min` over the rows before each
+  *     spine row. The work stays local to each key partition: no row id,
+  *     no materialized spine, and nothing is stitched back. The next
+  *     pass runs over this one's output, and duplicate spine rows simply
+  *     each get their own answer.
   *   - TTL scan pruning: the entity's [min(ts), max(ts)] is computed
   *     once (a 2-value aggregate — the only driver-side collect in the
   *     engine) and every view scan is pre-filtered to
@@ -111,20 +113,25 @@ object PointInTimeJoin {
     * entry point. The output is the spine's columns (types and
     * nullability unchanged), then (when `keepViewTs` names it) the first
     * view's matched timestamp, then every view's features under
-    * [[ResolvedView.outName]]. One window pass per group of views
-    * sharing (canonicalized source, joinKeys, tsCol, createdTs):
+    * [[ResolvedView.outName]]. Views sharing (canonicalized source,
+    * joinKeys, tsCol, createdTs) form a group over one scan. One window
+    * pass per entity key: groups whose entity-side key columns resolve to
+    * one expression of the spine's top projection, aliases stripped, and
+    * whose view key and ts types agree (so the union widens as each
+    * group's own pass would) share a pass:
     *
-    *  1. **Union**: the current spine rows (tag 1, carrying all their
-    *     columns as one struct) and the group's pruned view rows (tag
-    *     0), on the join keys. The union widens a key pair of two types
-    *     to the wider one, as `===` would.
+    *  1. **Union**: the current spine rows (tagged n, the number of
+    *     groups, carrying all their columns as one struct) and each
+    *     group g's pruned view rows (tagged g, its features and created
+    *     ts under names private to g), on the join keys. The union widens
+    *     a key pair of two types to the wider one, as `===` would.
     *  2. **Partition** on the keys, by number (the session's shuffle
     *     partitions, when those are at most one per core), so the pass
     *     and everything fused after it (Runner: the encode and the
     *     write) run one task per partition however small the spine is;
     *     AQE never coalesces a by-number exchange.
     *  3. **Pick**: each member's pick is a running
-    *     `max|min(when(tag 0 && pred, struct(orderKey…, features…)))`
+    *     `max|min(when(tag = g && pred, struct(orderKey…, features…)))`
     *     over `ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW`,
     *     ordered by `(ts, tag)` backward and `(ts desc, tag)` forward —
     *     so a view row at the entity ts precedes the spine row. Nearest
@@ -134,7 +141,7 @@ object PointInTimeJoin {
     *     orderable (a MAP, read from the source schema) picks with
     *     `max_by|min_by(struct, gated order key)` instead: same winner,
     *     except that ties on the order key pick an arbitrary row.
-    *  4. **Gate**: keep the tag-1 rows and admit each member's pick
+    *  4. **Gate**: keep the spine rows and admit each member's pick
     *     only inside its own TTL/horizon/tolerance.
     */
   private[join] def asOf(
@@ -170,14 +177,13 @@ object PointInTimeJoin {
         w._1.map(b => ts >= (if (b == 0) lo else lo - interval(b)))
 
     def fCol(j: Int, n: Int) = s"__graft_v${j}_$n"
+    def xName(g: Int, f: String) = s"__graft_x${g}_$f"
     val sess = spine.sparkSession
     val width = sess.sessionState.conf.numShufflePartitions
     val byNumber = width <= sess.sparkContext.defaultParallelism
 
-    val joined = groups(views).foldLeft(spine) { (cur, idxs) =>
+    val scans = groups(views).zipWithIndex.map { case (idxs, g) =>
       val rep = views(idxs.head)
-      val keyNames = rep.joinKeys.indices.map(i => s"__graft_k_$i")
-      val keys = keyNames.map(col)
       // Weakest admission across the group, per side: any unbounded
       // member ⇒ unbounded; else the widest. Each member's own window
       // is re-checked by its gate below.
@@ -199,20 +205,38 @@ object PointInTimeJoin {
       // equi-join never matches a NULL key; a window partition would
       // group them) and the needed columns only, so Catalyst pushes
       // all of it into the source scan.
-      val viewRows = base
+      (idxs, g, base
         .filter((within(tsCol0, loTs, hiTs, groupWin) ++
           rep.joinKeys.map(k => col(k._2).isNotNull)).reduce(_ && _))
-        .select(rep.joinKeys.map(_._2).zip(keyNames).map { case (c, a) => col(c).as(a) } ++
-          Seq(tsCol0.as(Ts), lit(0).as(Tag)) ++
-          rep.createdTs.map(c => col(c).as(Vcts)).toSeq ++
-          idxs.flatMap(i => views(i).features).distinct.map(f => col(f)) ++
+        .select(rep.joinKeys.map(_._2).zipWithIndex.map { case (c, i) => col(c).as(s"__graft_k_$i") } ++
+          Seq(tsCol0.as(Ts), lit(g).as(Tag)) ++
+          rep.createdTs.map(c => col(c).as(xName(g, Vcts))).toSeq ++
+          idxs.flatMap(i => views(i).features).distinct.map(f => col(f).as(xName(g, f))) ++
           idxs.flatMap(i => views(i).predicate.map(p =>
-            coalesce(p, lit(false)).as(s"__graft_p_$i"))): _*)
+            coalesce(p, lit(false)).as(s"__graft_p_$i"))): _*))
+    }
+    // a key column's identity (a non-deterministic expression is its own)
+    val plan = spine.queryExecution.analyzed
+    val top = plan match { case Project(list, _) => list; case p => p.output }
+    def keyOf(c: String): Any = plan.resolveQuoted(c, sess.sessionState.conf.resolver)
+      .flatMap(a => top.find(_.exprId == a.exprId)).fold[Any](c) {
+        case Alias(e, _) if e.deterministic => e.canonicalized
+        case e => e.toAttribute.canonicalized
+      }
+    val passes = scans.groupBy { case (idxs, _, rows) =>
+      val ks = views(idxs.head).joinKeys.map(k => keyOf(k._1))
+      (ks, rows.schema.take(ks.size + 1).map(_.dataType))
+    }.values.toSeq.sortBy(_.head._2)
+    val joined = passes.foldLeft(spine) { (cur, pass) =>
+      val rep = views(pass.head._1.head)
+      val keyNames = rep.joinKeys.indices.map(i => s"__graft_k_$i")
+      val keys = keyNames.map(col)
+      // the spine's tag follows every group's: at one ts view rows sort first
       val carried = cur.columns.toSeq
       val spineRows = cur.select(
         rep.joinKeys.map(_._1).zip(keyNames).map { case (c, a) => col(c).as(a) } ++
-          Seq(col(entityTs).as(Ts), lit(1).as(Tag), struct(carried.map(q): _*).as(Spine)): _*)
-      val unioned = spineRows.unionByName(viewRows, allowMissingColumns = true)
+          Seq(col(entityTs).as(Ts), lit(scans.size).as(Tag), struct(carried.map(q): _*).as(Spine)): _*)
+      val unioned = pass.map(_._3).foldLeft(spineRows)(_.unionByName(_, allowMissingColumns = true))
       val parted = if (byNumber) unioned.repartition(width, keys: _*) else unioned
       def over(desc: Boolean) = Window.partitionBy(keys: _*)
         .orderBy(if (desc) col(Ts).desc else col(Ts).asc, col(Tag))
@@ -220,10 +244,10 @@ object PointInTimeJoin {
 
       // Per member: the running pick(s), named `__graft_b$j` (the
       // backward-ordered pass) and `__graft_f$j` (the forward one).
-      val picks: Seq[Column] = idxs.flatMap { j =>
+      val picks: Seq[Column] = pass.flatMap { case (idxs, g, _) => idxs.flatMap { j =>
         val w = views(j)
-        val admit = w.predicate.fold(col(Tag) === 0)(_ => col(Tag) === 0 && col(s"__graft_p_$j"))
-        val feats = w.features.map(f => col(f).as(w.outName(f)))
+        val admit = w.predicate.fold(col(Tag) === g)(_ => col(Tag) === g && col(s"__graft_p_$j"))
+        val feats = w.features.map(f => q(xName(g, f)).as(w.outName(f)))
         val orderable = w.features.forall(f => RowOrdering.isOrderable(typeOf(w, f)))
         def pick(key: Seq[Column], desc: Boolean, greatest: Boolean): Column = {
           val packed = struct(key ++ feats: _*)
@@ -237,7 +261,7 @@ object PointInTimeJoin {
             }
           agg.over(over(desc))
         }
-        val byTs = col(Ts).as(Vts) +: rep.createdTs.map(_ => col(Vcts)).toSeq
+        val byTs = col(Ts).as(Vts) +: w.createdTs.map(_ => q(xName(g, Vcts)).as(Vcts)).toSeq
         val micros = unix_micros(col(Ts).cast(TimestampType))
         dir match {
           case Backward => Seq(pick(byTs, desc = false, greatest = true).as(s"__graft_b$j"))
@@ -246,14 +270,14 @@ object PointInTimeJoin {
             pick((-micros).as(Micros) +: byTs, desc = false, greatest = false).as(s"__graft_b$j"),
             pick(micros.as(Micros) +: byTs, desc = true, greatest = false).as(s"__graft_f$j"))
         }
-      }
+      } }
 
       // Keep the spine rows; restore their columns (KnownNotNull: the
       // union made the struct nullable, its fields keep their own
       // nullability) and gate each member's pick by its own window.
       val ets = col(Ts)
       val spineStruct = Bridge.column(KnownNotNull(Bridge.expression(col(Spine))))
-      val gated = idxs.flatMap { j =>
+      val gated = pass.flatMap(_._1).flatMap { j =>
         val w = views(j)
         val (b, f) = (col(s"__graft_b$j"), col(s"__graft_f$j"))
         val p = dir match {
@@ -273,7 +297,7 @@ object PointInTimeJoin {
           w.features.indices.map(n => kept.getField(w.outName(w.features(n))).as(fCol(j, n)))
       }
       parted.select(Seq(col(Tag), ets, col(Spine)) ++ picks: _*)
-        .filter(col(Tag) === 1)
+        .filter(col(Tag) === scans.size)
         .select(carried.map(c => spineStruct.getField(c).as(c)) ++ gated: _*)
     }
     joined.select(spine.columns.toSeq.map(q) ++

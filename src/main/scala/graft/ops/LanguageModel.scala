@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 
@@ -884,8 +884,9 @@ object LanguageModel {
 
   /** Load a persisted model — the inverse of BOTH writers. Every
     * sidecar is read on the driver ([[BucketedIndex.readSidecar]], no
-    * Spark job) and every table with its stored schema, so a flat load
-    * runs no Spark job at all. Checked before any serve trusts it:
+    * Spark job) and every table with its stored schema (a key-bucketed
+    * one by its bucket directories), so a load of either layout runs no
+    * Spark job at all. Checked before any serve trusts it:
     *   - `model/`: one row; the order (2, 3 or 5); a schema naming the
     *     order's tables. Each table directory exists, and its first
     *     data file's footer holds the stored columns and types.
@@ -941,24 +942,6 @@ object LanguageModel {
         schema(n).get.fieldNames.contains(Kn5KeyBucket)) != bucketed)
       fail(if (bucketed) "it holds a meta/ sidecar, but its tables are not key-bucketed"
         else s"its tables carry $Kn5KeyBucket, but it holds no meta/ sidecar")
-    val frames = names.map { name =>
-      val table = s"$path/$name"
-      if (!has(name)) fail(s"missing table directory $name/")
-      schema(name).foreach { s =>
-        val found =
-          try BucketedIndex.footerSchema(spark, table)
-          catch { case scala.util.control.NonFatal(e) =>
-            fail(s"unreadable table $name/ (${e.getMessage})") }
-        def cols(t: StructType) = t.fields.toSeq.filterNot(_.name == Kn5KeyBucket)
-          .map(c => s"${c.name} ${c.dataType.simpleString}")
-        found.filter(h => cols(h) != cols(s)).foreach(h =>
-          fail(s"table $name/ holds (${cols(h).mkString(", ")}), " +
-            s"the sidecar stores (${cols(s).mkString(", ")})"))
-      }
-      val read = spark.read
-      val df = schema(name).fold(read)(read.schema).parquet(table)
-      if (stored.nonEmpty) df else LegacyKn5Columns.get(name).fold(df)(df.withColumnsRenamed)
-    }
     val sub = if (bucketed) "meta" else "disc"
     val rows = Option.when(order == MknOrder && has(sub)) {
       val dl = levels(MknOrder).map(l => discLevel(l.k))
@@ -975,6 +958,39 @@ object LanguageModel {
     }
     val keyBuckets = rows.filter(_ => bucketed)
       .map(_.values.head("key_buckets").asInstanceOf[Int])
+    val frames = names.map { name =>
+      val table = s"$path/$name"
+      if (!has(name)) fail(s"missing table directory $name/")
+      schema(name).foreach { s =>
+        val found =
+          try BucketedIndex.footerSchema(spark, table)
+          catch { case scala.util.control.NonFatal(e) =>
+            fail(s"unreadable table $name/ (${e.getMessage})") }
+        def cols(t: StructType) = t.fields.toSeq.filterNot(_.name == Kn5KeyBucket)
+          .map(c => s"${c.name} ${c.dataType.simpleString}")
+        found.filter(h => cols(h) != cols(s)).foreach(h =>
+          fail(s"table $name/ holds (${cols(h).mkString(", ")}), " +
+            s"the sidecar stores (${cols(s).mkString(", ")})"))
+      }
+      val read = spark.read
+      val df = (schema(name), keyBuckets.filter(_ => tableNames(order).contains(name))) match {
+        // A keyed table is read by its bucket directories, named from the
+        // sidecar's key_buckets, at most the parallel-listing threshold of
+        // paths per read: Spark lists a root over more bucket directories,
+        // or a longer path list, with a Spark job.
+        case (Some(s), Some(nb)) =>
+          val present = fs.listStatus(new Path(table)).map(_.getPath.getName).toSet
+          val dirs = (0 until nb).map(b => s"$Kn5KeyBucket=$b").filter(present)
+            .map(d => s"$table/$d")
+          val perRead = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+          dirs.grouped(perRead.toInt max 1)
+            .map(g => read.option("basePath", table).schema(s).parquet(g: _*))
+            .reduceOption(_ union _)
+            .getOrElse(spark.createDataFrame(java.util.List.of[Row](), s))
+        case (s, _) => s.fold(read)(read.schema).parquet(table)
+      }
+      if (stored.nonEmpty) df else LegacyKn5Columns.get(name).fold(df)(df.withColumnsRenamed)
+    }
     val disc = rows.map(r => levels(MknOrder).map { l =>
       def d(f: String) = r(discLevel(l.k))(f).asInstanceOf[Double]
       l.k -> (d("d1"), d("d2"), d("d3"))

@@ -293,7 +293,7 @@ object FeatureStoreQueries {
     // lineitem-scale spine (the largest table as entities) — a
     // time-varying TTL-bounded view plus a static dimension view.
     // PointInTimeJoinSpec asserts the plan shape (one window pass per
-    // source, the TTL range pushed into the orders scan).
+    // entity key, two here, the TTL range pushed into the orders scan).
     QueryDef(
       "pit_lineitem_multiview_ttl",
       (s, dir) => {
@@ -340,8 +340,9 @@ object FeatureStoreQueries {
 
 
     // Eight views over two sources: the join groups them by source —
-    // one scan and one window pass per source, however many views, and
-    // no cross-view fan-out (PointInTimeJoinSpec asserts the plan).
+    // one scan per source and, both keyed on user_id, one window pass,
+    // however many views, and no cross-view fan-out (PointInTimeJoinSpec
+    // asserts the plan).
     QueryDef(
       "pit_manyviews",
       (s, dir) => {

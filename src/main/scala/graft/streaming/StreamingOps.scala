@@ -403,7 +403,7 @@ object StreamingOps {
     * matching the reference's offline-store model.
     *
     * Each batch runs the batch runner's plan ([[PointInTimeJoin.join]]:
-    * one window pass per distinct source), which persists nothing, so
+    * one window pass per distinct entity key), which persists nothing, so
     * no block outlives its micro-batch. */
   def pitEnrichStream(
       entities: DataFrame, entityTs: String, views: Seq[ResolvedView])(

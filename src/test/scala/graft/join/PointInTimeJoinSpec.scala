@@ -115,15 +115,16 @@ class PointInTimeJoinSpec extends SparkSpec with Matchers {
     assert(r3.getAs[Double]("v2__score") == 9.9) // but v2 matches
   }
 
-  /** Window operators in an (unexecuted) plan: one per view group, two
-    * per nearest group. */
+  /** Window operators in an (unexecuted) plan: one per pass (one pass
+    * per distinct entity key), two per nearest pass. */
   private def windows(plan: String) = "Window \\[".r.findAllMatchIn(plan).size
 
   test("lineitem multiview plan: one window per source, TTL pushed to scan, spine scanned once") {
     val df = graft.SparkEntry.queries("pit_lineitem_multiview_ttl")(spark, sf())
     val plan = df.queryExecution.executedPlan.toString
     withClue(plan.take(4000)) {
-      // two sources (orders, supplier): two window passes, no join
+      // two sources keyed on two entity keys (l_orderkey, l_suppkey):
+      // they stay unfused, two window passes, no join
       assert(windows(plan) == 2)
       assert(!plan.contains("Join"))
       // TTL + as-of bounds reach the orders parquet scan as row-group filters
@@ -141,15 +142,15 @@ class PointInTimeJoinSpec extends SparkSpec with Matchers {
   test("many-view stitch stays linear: no cross-view fan-out, bounded exchanges") {
     // The 8-view canary (6 time-varying order views + 2 static
     // customer views): views group by source, so the plan holds one
-    // scan and one window pass per SOURCE — two here, at any view
-    // count — and no join of any kind.
+    // scan per SOURCE, and both sources key on user_id, so they share
+    // ONE window pass, at any view count, with no join of any kind.
     val df = graft.SparkEntry.queries("pit_manyviews")(spark, sf())
     val plan = df.queryExecution.executedPlan.toString
     val hashEx = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
     withClue(s"hashExchanges=$hashEx windows=${windows(plan)}\n" + plan.take(4000)) {
-      // one key exchange per source, independent of the view count
-      assert(hashEx == 2)
-      assert(windows(plan) == 2)
+      // one key exchange per entity key, independent of the view count
+      assert(hashEx == 1)
+      assert(windows(plan) == 1)
       assert(!plan.contains("Join"))
       assert(!plan.contains("CartesianProduct"))
     }
@@ -441,15 +442,15 @@ class PointInTimeJoinSpec extends SparkSpec with Matchers {
     assert(df.filter($"b__m".isNotNull).count() > 0)
   }
 
-  test("8-view plan: one scan and one window pass per SOURCE (2 groups, not 8 views)") {
+  test("8-view plan: one scan per SOURCE, one window pass per entity key (2 groups, 1 pass)") {
     val fused = graft.SparkEntry.queries("pit_manyviews_fused")(spark, sf())
     val plan = fused.queryExecution.executedPlan.toString
     val hashEx = "Exchange hashpartitioning".r.findAllMatchIn(plan).size
-    // the 8 views span exactly TWO sources (orders, customer): the
-    // plan shape is per-source, independent of view count
+    // the 8 views span exactly TWO sources (orders, customer), both
+    // keyed on user_id: two scans, one pass, independent of view count
     withClue(s"hashExchanges=$hashEx windows=${windows(plan)}\n" + plan.take(4000)) {
-      assert(windows(plan) == 2)
-      assert(hashEx == 2)
+      assert(windows(plan) == 1)
+      assert(hashEx == 1)
       assert(!plan.contains("Join"))
       // the orders table is scanned ONCE for all six order views, its
       // TTL range pushed into the scan
@@ -462,5 +463,73 @@ class PointInTimeJoinSpec extends SparkSpec with Matchers {
     // are pinned by the query's DuckDB oracle)
     assert(fused.count() ==
       graft.sources.ParquetTables.load(spark, sf() + "/events.parquet").count())
+  }
+  /** Two sources on one entity key, named twice in the spine (`key` and
+    * its alias `key2`), over [[edgeData]] (NULL keys and timestamps,
+    * duplicate spine rows): `fDf` (Long `val`, `created`) and `b`, its
+    * rows re-keyed under another ts column with a String `val` and a
+    * MAP `m`. */
+  private def fusedData(seed: Int) = {
+    val (eDf, fDf) = edgeData(seed, 300, 400)
+    val b = fDf.select($"key".as("k2"), $"fts".as("ts2"),
+      ($"val" * 7 % 50).cast("string").as("val")).withColumn("m", mapOf(lit("k"), $"val"))
+    (eDf.select($"eid", $"key", $"key".as("key2"), $"event_ts"), fDf, b)
+  }
+
+  for (dir <- Seq(Backward, PointInTimeJoin.Forward, PointInTimeJoin.Nearest)) {
+    test(s"property: two sources on one entity key share one pass: one feature name of two " +
+        s"types, created ts and a predicate view in one group, a MAP in the other, $dir") {
+      val (eDf, fDf, bDf) = fusedData(23)
+      val created = if (dir == Backward) Some("created") else None
+      val views = Seq(
+        ResolvedView("a", fDf, Seq("key" -> "key"), "fts", created, Seq("val"), Some(3L * 86400)),
+        ResolvedView("b", bDf, Seq("key2" -> "k2"), "ts2", None, Seq("val", "m"),
+          Some(2L * 86400), outputPrefix = Some("b")),
+        ResolvedView("p", fDf, Seq("key" -> "key"), "fts", created, Seq("val"),
+          Some(86400L), outputPrefix = Some("p"), predicate = Some($"val" % 3 === 0)))
+      // backward through join, the others through their multi-view entry points
+      lazy val directional = views.map(v => DirectionalView(v.name, v.source, v.tsCol,
+        v.joinKeys, v.features, v.ttlSeconds.get, v.outputPrefix, v.predicate))
+      val out = dir match {
+        case Backward => PointInTimeJoin.join(eDf, "event_ts", views)
+        case PointInTimeJoin.Forward => DirectionalAsOf.forwardMulti(eDf, "event_ts", directional)
+        case _ => DirectionalAsOf.nearestMulti(eDf, "event_ts", directional)
+      }
+      val plan = out.queryExecution.executedPlan.toString
+      withClue(plan.take(3000)) {
+        windows(plan) shouldBe (if (dir == PointInTimeJoin.Nearest) 2 else 1)
+        "Exchange hashpartitioning".r.findAllMatchIn(plan).size shouldBe 1
+      }
+      out.schema("val").dataType shouldBe LongType
+      out.schema("b__val").dataType shouldBe StringType
+      AsOfOracle.check(out, eDf, "event_ts", views, dir)
+    }
+  }
+
+  test("groups on one entity key whose view ts is DATE in one and TIMESTAMP in the other run as 2 passes") {
+    val (eDf, fDf, bDf) = fusedData(5)
+    val views = Seq(
+      ResolvedView("a", fDf, Seq("key" -> "key"), "fts", Some("created"), Seq("val"),
+        Some(3L * 86400)),
+      ResolvedView("b", bDf.withColumn("ts2", $"ts2".cast(DateType)), Seq("key2" -> "k2"),
+        "ts2", None, Seq("val"), Some(3L * 86400), outputPrefix = Some("b")))
+    val out = PointInTimeJoin.join(eDf, "event_ts", views)
+    val plan = out.queryExecution.executedPlan.toString
+    withClue(plan.take(3000)) { windows(plan) shouldBe 2 }
+    AsOfOracle.check(out, eDf, "event_ts", views, Backward)
+  }
+
+  test("plan receipt: every multi-view pit_* query runs one window pass per entity key") {
+    // Window operators of each declared pit_* query with more than one
+    // view (one pick per view): the number of distinct entity keys
+    val want = Map("pit_multiview" -> 1, "pit_manyviews" -> 1, "pit_manyviews_synth" -> 1,
+      "pit_manyviews_fused" -> 1, "pit_forward_multi" -> 1, "pit_forward_multi_fused" -> 1,
+      "pit_lineitem_multiview_ttl" -> 2)
+    val got = graft.SparkEntry.queries.keys.filter(_.startsWith("pit_")).toSeq.flatMap { q =>
+      val plan = graft.SparkEntry.queries(q)(spark, sf()).queryExecution.executedPlan.toString
+      val views = "__graft_[bf](\\d+)#".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
+      Option.when(views > 1)(q -> windows(plan))
+    }.toMap
+    got shouldBe want
   }
 }

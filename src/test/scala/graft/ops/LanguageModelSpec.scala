@@ -1221,6 +1221,27 @@ class LanguageModelSpec extends SparkSpec with Matchers {
     }
   }
 
+  test("a key-bucketed load of 64 buckets runs no Spark job and holds the flat layout's rows") {
+    import spark.implicits._
+    val docs = kn5Corpus(60).toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("kn5-load-64").toString
+    val model = LanguageModel.fitKn5(docs, "text")
+    LanguageModel.saveKn5ModelPartitioned(model, s"$root/part", nKeyBuckets = 64)
+    LanguageModel.saveKn5Model(model, s"$root/flat")
+    // more bucket directories than Spark lists without a job (32)
+    new java.io.File(s"$root/part/c5").list().count(_.startsWith(s"${LanguageModel.Kn5KeyBucket}=")) should be > 32
+    val (part, jobs, _) = traced(LanguageModel.loadKnModel(spark, s"$root/part"))
+    jobs.map(_.jobId) shouldBe empty
+    part.keyBuckets shouldBe Some(64)
+    val flat = LanguageModel.loadKnModel(spark, s"$root/flat")
+    for ((name, df) <- part.keyedTables) withClue(s"table $name: ") {
+      df.columns should contain(LanguageModel.Kn5KeyBucket)
+      val rows = df.drop(LanguageModel.Kn5KeyBucket)
+      rows.count() shouldBe flat.table(name).count()
+      rows.exceptAll(flat.table(name)).isEmpty shouldBe true
+    }
+  }
+
   test("order-5 MKN fails fast on corpora without count-class decay") {
     import spark.implicits._
     // Every doc identical: only one 5-gram count class exists.
